@@ -1539,11 +1539,10 @@ def _pq_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dask_glm_spark.operators import dedup as D
     from dask_glm_spark.sources.glm_source import load_table
 
-    # arrow path: bit-identical shingles/signatures/bands to the
-    # expression chain the DuckDB oracle replicates (parity pytest-pinned),
-    # ~40% faster derivation
+    # shingles/signatures/bands are bit-identical to the expression chain
+    # the DuckDB oracle replicates (parity pytest-pinned)
     return D.minhash_dedup_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.5, path="arrow"
+        load_table(spark, sf_dir, "documents"), threshold=0.5
     )
 
 
@@ -1667,7 +1666,7 @@ def _pq_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dask_glm_spark.sources.glm_source import load_table
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 2000)
-    pairs = D.simhash_dedup_pairs(docs, max_hamming=3, path="arrow")
+    pairs = D.simhash_dedup_pairs(docs, max_hamming=3)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     ).orderBy("id_a", "id_b")
@@ -1702,7 +1701,7 @@ def _pq_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("source").isin("src6", "src7")
     )
-    pairs = D.ngram_jaccard_pairs(docs, "source", threshold=0.5, path="arrow")
+    pairs = D.ngram_jaccard_pairs(docs, "source", threshold=0.5)
     # round 9: + the overlap coefficient (asymmetric containment) under
     # the same hash gate — the oracle re-derives |A∩B|/min(|A|,|B|)
     return pairs.select(
@@ -1720,7 +1719,7 @@ def _pq_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dask_glm_spark.sources.glm_source import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_dedup_pairs(docs, threshold=0.5, path="arrow")
+    pairs = D.minhash_dedup_pairs(docs, threshold=0.5)
     cc = G.connected_components(pairs)
     return cc.select(
         F.col("id").cast("long").alias("doc_id"),
@@ -1734,7 +1733,7 @@ def _pq_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dask_glm_spark.sources.glm_source import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_dedup_pairs(docs, threshold=0.5, path="arrow")
+    pairs = D.minhash_dedup_pairs(docs, threshold=0.5)
     return (
         G.neardup_survivors(docs, pairs)
         .select("doc_id", "lang", "source")
@@ -1919,7 +1918,7 @@ def _pq_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.token_count_expr("text").cast("long").alias("n_tok"),
     )
     surv = G.neardup_survivors(
-        meta, D.minhash_dedup_pairs(curc, threshold=0.5, path="arrow")
+        meta, D.minhash_dedup_pairs(curc, threshold=0.5)
     )
     return (
         surv.groupBy("source")

@@ -10,7 +10,9 @@ the 100 TB design hinges on:
   already share a bucket (LSH guarantees that's a vanishing fraction of
   n²/2 at any realistic threshold).
 - **Narrow until the join.** Shingling, hashing, signatures are per-row
-  expressions (codegen'd, no Python). The band explode multiplies rows by
+  maps: the pair operators run one vectorized Arrow (mapInPandas) pass,
+  bit-identical to the built-in expression chain that the incremental
+  variants and the DuckDB oracle use. The band explode multiplies rows by
   BANDS (a small constant), then one shuffle on the band key. Skewed
   buckets (e.g. a boilerplate header shared by millions of docs) are
   handled by AQE skew-join plus the ``max_bucket`` guard that drops
@@ -445,49 +447,36 @@ def minhash_dedup_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.8,
     k: int = SHINGLE_K,
-    path: str = "expr",
+    path: str = "arrow",
 ) -> DataFrame:
     """Verified near-duplicate pairs: LSH candidates whose exact shingle
     Jaccard >= threshold. Verification joins shingle sets back by id (two
     broadcast-or-shuffle hash joins on the id key), touching only
     candidates — never n².
 
-    The expensive derivations are computed ONCE and reused: the
-    ``(id, shingles)`` projection is persisted and feeds both the signature
-    path and the two verification join sides; the ``(id, band_key)``
-    explode is persisted so the bucket-size count and both self-join sides
-    of candidate generation read it from cache instead of re-running the
-    NUM_PERM minhash fold. Both caches are O(n·small) — shingle arrays and
-    two longs per band row — and are left to Spark's LRU (the returned
-    DataFrame is lazy and still reads them).
-
-    ``path``: "expr" (default) derives shingles/signatures/bands through
-    the oracle-shared SQL expressions; "arrow" uses the vectorized
-    ``minhash_rows_arrow`` twin — bit-identical values (parity
-    pytest-pinned over the real corpus), ~2-3x faster derivation on
-    CPU-bound corpora."""
-    if path not in ("expr", "arrow"):
-        raise ValueError(f"path must be expr|arrow, got {path!r}")
-    # Spread first: the shingle/signature maps are the expensive interpreted
-    # work, and a single-row-group input would otherwise compute them all in
-    # one task (no-op at scale — see plans/layout.py).
-    if path == "arrow":
-        rows = minhash_rows_arrow(
-            ensure_min_parallelism(df), text_col, id_col, k
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sh = rows.select(id_col, "sh")
-        banded = rows.select(
-            F.col(id_col), F.explode("bands").alias("band_key")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        sh = ensure_min_parallelism(df).select(
-            # shingles_expr already returns array_distinct output — no second pass
-            F.col(id_col), shingles_expr(text_col, k).alias("sh")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sig = minhash_signature_from_hashes(F.transform(F.col("sh"), polyhash_expr))
-        banded = sh.select(
-            F.col(id_col), F.explode(band_keys_expr(sig)).alias("band_key")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    Shingles and band keys come from ONE vectorized ``minhash_rows_arrow``
+    pass (bit-identical to the oracle-shared ``shingles_expr`` /
+    ``minhash_signature_expr`` / ``band_keys_expr`` chain, pytest-pinned
+    over the real corpus). That projection is persisted and feeds both the
+    band explode and the two verification join sides; the ``(id,
+    band_key)`` explode is persisted so the bucket-size count and both
+    self-join sides of candidate generation read it from cache. Both
+    caches are O(n·small) — shingle arrays and one long per band row — and
+    are left to Spark's LRU (the returned DataFrame is lazy and still
+    reads them)."""
+    # `path` stays only because glmbench/workloads.py passes path="arrow".
+    if path != "arrow":
+        raise ValueError(f"path must be 'arrow', got {path!r}")
+    # Spread first: the shingle/signature map is the expensive work, and a
+    # single-row-group input would otherwise compute it all in one task
+    # (no-op at scale — see plans/layout.py).
+    rows = minhash_rows_arrow(
+        ensure_min_parallelism(df), text_col, id_col, k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = rows.select(id_col, "sh")
+    banded = rows.select(
+        F.col(id_col), F.explode("bands").alias("band_key")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     cands = lsh_candidates(id_col=id_col, banded=banded)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
@@ -606,27 +595,18 @@ def simhash_dedup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bits: int = SIMHASH_BITS,
-    path: str = "expr",
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, banded: the `bits`-bit
     hash splits into (max_hamming+1) bands; any pair within `max_hamming`
     shares at least one exact band (pigeonhole), so candidates come from a
-    bucketed equi-join on (band_idx, band_value), never all-pairs."""
+    bucketed equi-join on (band_idx, band_value), never all-pairs. Hashes
+    come from the vectorized ``simhash_rows_arrow`` (bit-identical to
+    ``simhash_expr``, pytest-pinned)."""
     n_bands = max_hamming + 1
     band_bits = bits // n_bands
-    # Spread (no-op at scale) THEN hash: the 32 interpreted bit-fold
-    # expressions dominate; both join sides below reuse the persisted
-    # banded projection instead of re-hashing every doc.
-    if path not in ("expr", "arrow"):
-        raise ValueError(f"path must be expr|arrow, got {path!r}")
-    if path == "arrow":
-        sh = simhash_rows_arrow(
-            ensure_min_parallelism(df), text_col, id_col, bits
-        )
-    else:
-        sh = ensure_min_parallelism(df).select(
-            F.col(id_col), simhash_expr(text_col, bits).alias("simhash")
-        )
+    # Spread (no-op at scale) THEN hash; both join sides below reuse the
+    # persisted banded projection instead of re-hashing every doc.
+    sh = simhash_rows_arrow(ensure_min_parallelism(df), text_col, id_col, bits)
     mask = (1 << band_bits) - 1
     bands = F.array(
         *[
@@ -676,7 +656,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     k: int = SHINGLE_K,
     threshold: float = 0.0,
-    path: str = "expr",
 ) -> DataFrame:
     """Exact shingle-Jaccard for every within-block pair. For corpora with
     a natural partition key (source, domain, date bucket) this is the
@@ -699,32 +678,22 @@ def ngram_jaccard_pairs(
     ``threshold=0.0`` pairs with Jaccard exactly 0 are OMITTED rather than
     emitted as zero rows.
 
-    ``path``: "expr" (default, oracle-shared expressions) or "arrow"
-    (vectorized ``shingle_rows_arrow`` — bit-identical shingles,
-    pytest-pinned)."""
-    if path not in ("expr", "arrow"):
-        raise ValueError(f"path must be expr|arrow, got {path!r}")
-    if path == "arrow":
-        sh = (
-            shingle_rows_arrow(
-                ensure_min_parallelism(df),
-                text_col,
-                id_col,
-                k,
-                keep_cols=(block_col,),
-            )
-            .select(F.col(block_col).alias("blk"), id_col, "sh")
-            .withColumn("n", F.size("sh"))
+    Shingles come from the vectorized ``shingle_rows_arrow`` pass
+    (bit-identical to ``shingles_expr``, pytest-pinned)."""
+    sh = (
+        shingle_rows_arrow(
+            ensure_min_parallelism(df),
+            text_col,
+            id_col,
+            k,
+            keep_cols=(block_col,),
         )
-    else:
-        sh = ensure_min_parallelism(df).select(
-            F.col(block_col).alias("blk"),
-            F.col(id_col),
-            shingles_expr(text_col, k).alias("sh"),  # already distinct
-        ).withColumn("n", F.size("sh"))
+        .select(F.col(block_col).alias("blk"), id_col, "sh")
+        .withColumn("n", F.size("sh"))
+    )
     # Persisted: BOTH sides of the inverted-index self-join read this
-    # projection — without the cache the interpreted shingle build runs
-    # twice over the corpus.
+    # projection — without the cache the shingle build runs twice over
+    # the corpus.
     ex = sh.select(
         "blk", F.col(id_col), "n", F.explode("sh").alias("s")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -887,7 +856,7 @@ def minhash_dedup_incremental(
         newf = newf.join(hits, id_col, "left_anti")
 
     fresh = newf.drop("_sig", "_bands")
-    pairs = minhash_dedup_pairs(fresh, threshold=threshold, path="arrow")
+    pairs = minhash_dedup_pairs(fresh, threshold=threshold)
     survivors = neardup_survivors(fresh, pairs, id_col=id_col)
     new_rows = newf.join(
         survivors.select(id_col), id_col, "left_semi"

@@ -4,9 +4,10 @@ Beyond-reference surface (SURVEY.md §7 step 10; the reference dask-glm has
 no text layer — these operators exist so a 100 TB document corpus can be
 filtered/featurized and fed into the GLM ``features`` path end-to-end).
 
-Everything here is **built-in Spark SQL functions only** — no Python UDFs
-anywhere, so the whole layer stays inside whole-stage codegen and scales as
-a narrow map over the scan (zero shuffles except the TF-IDF doc-frequency
+The per-row expressions are **built-in Spark SQL functions only** — no
+Python UDFs — so they stay inside whole-stage codegen and scale as a narrow
+map over the scan. The hashed-TF featurizers run one narrow Arrow
+(mapInPandas) pass instead (zero shuffles except the TF-IDF doc-frequency
 aggregate, which is a broadcast-sized k-row table).
 
 Operators:
@@ -269,20 +270,18 @@ def token_percentiles(
 # ---------------------------------------------------------------------------
 # Hashed TF / TF-IDF featurization -> GLM `features array<double>`
 #
-# Two physical paths with identical results (pytest-pinned):
-#   path="arrow" (default): ONE narrow mapInPandas tokenizes, hashes (with a
-#     capped task-lifetime memo — Zipf head tokens hash once, not per
-#     occurrence) and aggregates each doc's bucket counts in a single pass.
-#     hashing_tf is then ZERO-shuffle end-to-end; tfidf adds only the tiny
-#     O(num_features) doc-frequency aggregate. Replaces the sql path's
-#     explode -> groupBy(id,tok) -> vocab join -> groupBy(id,bucket) chain
-#     (4 shuffles of occurrence-/vocab-sized data) at 100 TB.
-#   path="sql": the pure-codegen shape kept as the cross-engine parity
-#     surface (no Python anywhere; mirrors the DuckDB oracle text).
+# One physical path: ONE narrow mapInPandas tokenizes, hashes (with a
+# capped task-lifetime memo — Zipf head tokens hash once, not per
+# occurrence) and aggregates each doc's bucket counts in a single pass.
+# hashing_tf is then ZERO-shuffle end-to-end; tfidf adds only the tiny
+# O(num_features) doc-frequency aggregate. The Python tokenizer/hash twins
+# below equal ``tokens_expr`` + ``polyhash_expr`` bit-for-bit (pytest
+# compares them over the real multilingual corpus), so the bucket of a
+# token is the one the DuckDB oracle derives.
 # ---------------------------------------------------------------------------
 # Exactly Java regex \s (NON-unicode): Spark's split(text, '\\s+') without
 # UNICODE_CHARACTER_CLASS. Python's re \s is unicode-aware and would also
-# split on e.g.   — pin the ASCII class so arrow == sql bit-for-bit.
+# split on e.g. \xa0 — pin the ASCII class so the twin equals tokens_expr.
 _JAVA_WS = None  # compiled lazily (keep module import cheap)
 
 
@@ -317,7 +316,7 @@ def _sparse_rows(
     doc's complete hashed-TF in sparse form, built in ONE narrow
     mapInPandas pass (a doc lives in exactly one Arrow batch, so its
     aggregation completes in-batch; no shuffle). Token-less docs emit
-    empty arrays (callers filter to match the sql path's semantics).
+    empty arrays (callers filter them out: a token-less doc has no row).
     ``carry_cols`` ride through unchanged (output rows are 1:1 with input
     rows) — the r13 job-shape fix that lets ``fit_text_classifier`` keep
     the label on the featurized row instead of joining it back on doc id
@@ -443,119 +442,9 @@ def _dense_from_sparse_rows(
     )
 
 
-def _bucket_counts(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_features: int,
-) -> DataFrame:
-    """Sparse per-doc bucket counts (id, bucket, tf) — the shared first
-    stage of hashing_tf / tfidf_features.
-
-    Plan shape at scale: explode (narrow) -> wordcount groupBy(id, tok)
-    with map-side combine -> the (interpreted, per-char) polyhash runs on
-    the DISTINCT-TOKEN table only — |vocab| evaluations instead of one per
-    token occurrence (a Zipf-distributed corpus repeats its head tokens
-    millions of times; hashing occurrences re-pays the hash per repeat) —
-    joined back on ``tok`` (AQE broadcasts the vocab side when it is
-    small; at web-corpus vocab sizes it degrades to a plain shuffle join,
-    still dwarfed by the occurrence explode either way) -> groupBy(id,
-    bucket). Per-doc state is O(num_features), never vocabulary-sized.
-    """
-    from dask_glm_spark.plans.layout import ensure_min_parallelism
-
-    tok = ensure_min_parallelism(df).select(
-        F.col(id_col),
-        F.explode(tokens_expr(text_col)).alias("tok"),
-    ).where(F.length("tok") > 0)
-    tok_counts = tok.groupBy(id_col, "tok").agg(
-        F.count("*").cast("double").alias("tf")
-    )
-    vocab = (
-        tok_counts.select("tok")
-        .distinct()
-        .withColumn("bucket", polyhash_expr(F.col("tok")) % num_features)
-    )
-    return (
-        tok_counts.join(vocab, "tok")
-        .groupBy(id_col, "bucket")
-        .agg(F.sum("tf").cast("double").alias("tf"))
-    )
-
-
-# Above this many buckets the manual pivot's O(num_features) codegen
-# aggregate columns hit Janino method-size limits / quadratic planning
-# (ADVICE r4): switch to a grouped pandas scatter, which is O(nnz) per doc
-# regardless of dimensionality.
-DENSE_PIVOT_MAX = 256
-
-
-def _dense_pivot(
-    counts: DataFrame,
-    id_col: str,
-    num_features: int,
-    scale: list[float] | tuple | None = None,
-) -> DataFrame:
-    """(id, features array<double>) from sparse counts, as a manual pivot:
-    num_features conditional sums inside ONE codegen'd HashAggregate, then
-    an array constructor — no interpreted map_from_entries/element_at
-    pass. ``scale`` (e.g. per-bucket idf) folds into the same aggregate as
-    literal factors, so scaling costs zero extra passes.
-
-    Above ``DENSE_PIVOT_MAX`` buckets the codegen shape is infeasible
-    (hundreds of thousands of aggregate expressions at hashed-TF dims like
-    2^18); the same groupBy shuffle then feeds an applyInPandas numpy
-    scatter instead — one shuffle either way, parity-pinned in tests."""
-    if num_features > DENSE_PIVOT_MAX:
-        import numpy as np
-        import pandas as pd
-
-        id_type = counts.schema[id_col].dataType.simpleString()
-        nf = int(num_features)
-        scale_bc = None
-        scale_arr = None
-        if isinstance(scale, tuple):  # sparse (buckets, idf) broadcast form
-            scale_bc = counts.sparkSession.sparkContext.broadcast(scale)
-        elif scale is not None:
-            scale_arr = np.asarray(scale, dtype=np.float64)
-
-        def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            v = np.zeros(nf, dtype=np.float64)
-            b_arr = pdf["bucket"].to_numpy(dtype=np.int64)
-            t_arr = pdf["tf"].to_numpy(dtype=np.float64)
-            if scale_bc is not None:
-                ks, vs = scale_bc.value
-                t_arr = t_arr * vs[np.searchsorted(ks, b_arr)]
-            v[b_arr] = t_arr
-            if scale_arr is not None:
-                v *= scale_arr
-            return pd.DataFrame({id_col: [key[0]], "features": [v.tolist()]})
-
-        return counts.groupBy(id_col).applyInPandas(
-            build, f"{id_col} {id_type}, features array<double>"
-        )
-    aggs = [
-        (
-            F.coalesce(F.sum(F.when(F.col("bucket") == i, F.col("tf"))), F.lit(0.0))
-            * F.lit(1.0 if scale is None else float(scale[i]))
-        ).alias(f"_b{i}")
-        for i in range(num_features)
-    ]
-    per_doc = counts.groupBy(id_col).agg(*aggs)
-    return per_doc.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_b{i}") for i in range(num_features)]).alias("features"),
-    )
-
-
-def _check_tf_path(path: str) -> None:
-    if path not in ("arrow", "sql"):
-        raise ValueError(f"path must be arrow|sql, got {path!r}")
-
-
 def _idf_literals(n_docs: int, idf_map: dict[int, float], num_features: int) -> list[float]:
-    """Smoothed idf factors ln((N+1)/(df+1)) — ONE definition for both
-    physical paths (the pytest-pinned arrow/sql parity depends on it)."""
+    """Smoothed idf factors ln((N+1)/(df+1)) over every bucket — the dense
+    ``scale`` form (``_sparse_idf`` is the high-dim broadcast form)."""
     import math
 
     return [
@@ -596,24 +485,18 @@ def hashing_tf_sparse(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_features: int = 64,
-    path: str = "arrow",
 ) -> DataFrame:
     """Sparse hashed-TF: (id, bucket long, tf double), nonzero entries only
-    — the q26 surface. arrow: one narrow pass + an in-row array unzip;
-    sql: the codegen explode/join shape."""
-    _check_tf_path(path)
-    if path == "arrow":
-        s = _sparse_rows(df, text_col, id_col, num_features)
-        z = s.select(
-            F.col(id_col), F.explode(F.arrays_zip("buckets", "tfs")).alias("z")
-        )
-        return z.select(
-            id_col,
-            F.col("z.buckets").cast("long").alias("bucket"),
-            F.col("z.tfs").cast("double").alias("tf"),
-        )
-    return _bucket_counts(df, text_col, id_col, num_features).select(
-        id_col, F.col("bucket").cast("long").alias("bucket"), "tf"
+    — the q26 surface: one narrow ``_sparse_rows`` pass + an in-row array
+    unzip."""
+    s = _sparse_rows(df, text_col, id_col, num_features)
+    z = s.select(
+        F.col(id_col), F.explode(F.arrays_zip("buckets", "tfs")).alias("z")
+    )
+    return z.select(
+        id_col,
+        F.col("z.buckets").cast("long").alias("bucket"),
+        F.col("z.tfs").cast("double").alias("tf"),
     )
 
 
@@ -622,33 +505,21 @@ def hashing_tf(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_features: int = 64,
-    path: str = "arrow",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Hashed term-frequency vectors: (id_col, features array<double>).
 
-    arrow (default): ONE narrow mapInPandas pass — tokenize, memo-hash,
-    scatter to dense — ZERO shuffles end-to-end. sql: the pure-codegen
-    ``_bucket_counts`` + pivot shape (see those docstrings). Docs with no
-    tokens emit no row (both paths). ``carry_cols`` (arrow only, r14)
-    ride the featurizing pass 1:1 — the seam that lets a caller keep its
-    label/metadata on the featurized row instead of joining it back on
-    doc id (guide §2.4: that join is two exchanges of doc-scale rows)."""
-    _check_tf_path(path)
-    if path == "arrow":
-        sparse = _sparse_rows(
-            df, text_col, id_col, num_features, carry_cols=carry_cols
-        ).where(F.size("buckets") > 0)
-        return _dense_from_sparse_rows(
-            sparse, id_col, num_features, carry_cols=carry_cols
-        )
-    if carry_cols:
-        raise NotImplementedError(
-            "carry_cols requires path='arrow' (the sql pivot aggregates "
-            "away non-key columns)"
-        )
-    return _dense_pivot(
-        _bucket_counts(df, text_col, id_col, num_features), id_col, num_features
+    ONE narrow mapInPandas pass tokenizes and memo-hashes, then a second
+    narrow pass scatters to dense — ZERO shuffles end-to-end. Docs with no
+    tokens emit no row. ``carry_cols`` (r14) ride the featurizing pass
+    1:1 — the seam that lets a caller keep its label/metadata on the
+    featurized row instead of joining it back on doc id (guide §2.4: that
+    join is two exchanges of doc-scale rows)."""
+    sparse = _sparse_rows(
+        df, text_col, id_col, num_features, carry_cols=carry_cols
+    ).where(F.size("buckets") > 0)
+    return _dense_from_sparse_rows(
+        sparse, id_col, num_features, carry_cols=carry_cols
     )
 
 
@@ -657,86 +528,56 @@ def tfidf_features(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_features: int = 64,
-    path: str = "arrow",
 ) -> DataFrame:
     """TF-IDF vectors: tf(d, b) * ln((N + 1) / (df(b) + 1)).
 
-    The raw corpus is scanned exactly ONCE on either path: the sparse
-    per-doc aggregate is persisted, and everything else derives from it
-    with O(num_features)-sized jobs — N = docs with >= 1 token (token-less
-    docs carry no TF mass, so excluding them is the self-consistent
-    definition), df(b) = one tiny aggregate on the same cache. The idf
-    factors fold as literals INTO the dense build (P8
-    broadcast-as-constant), so the scaled vectors cost no extra pass.
-
-    arrow (default): sparse rows come from the single narrow mapInPandas
-    pass; the only shuffle in the whole operator is the O(nnz)->O(k)
-    doc-frequency aggregate. sql: the codegen ``_bucket_counts`` shape.
-    The cache is left to Spark's LRU (the returned projection reads it).
+    The raw corpus is scanned exactly ONCE: the sparse per-doc rows from
+    the single narrow ``_sparse_rows`` pass are persisted, and everything
+    else derives from them — N = docs with >= 1 token (token-less docs
+    carry no TF mass, so excluding them is the self-consistent
+    definition) and df(b) come from one tiny aggregate on the same cache,
+    the only shuffle in the whole operator (O(nnz) -> O(k)). The idf
+    factors fold INTO the dense build (P8 broadcast-as-constant), so the
+    scaled vectors cost no extra pass. The cache is left to Spark's LRU
+    (the returned projection reads it).
     """
     from pyspark import StorageLevel
 
-    _check_tf_path(path)
-    if path == "arrow":
-        sparse = (
-            _sparse_rows(df, text_col, id_col, num_features)
-            .where(F.size("buckets") > 0)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # N and df(b) in ONE job: each doc contributes a -1 sentinel plus
-        # its distinct buckets, so the same tiny groupBy yields the doc
-        # count (sentinel row) and every doc-frequency.
-        # AQE-bypass scale audit (r14, VERDICT r13 #6): the groupBy keys
-        # are BOUNDED (num_features+1 buckets) and the built-in agg
-        # partial-aggregates map-side, so the exchange carries at most
-        # O(partitions × nf) rows at any corpus scale; the sparse cache
-        # itself materializes through a NARROW chain (mapInPandas over
-        # the scan — zero exchanges), which AQE never touches. Bounded
-        # exchange + tiny result = in-scope for kernel_exec.
-        with kernel_exec(df.sparkSession):
-            idf_map = {
-                int(r["bucket"]): float(r["df"])
-                for r in sparse.select(
-                    F.explode(
-                        F.concat(F.array(F.lit(-1)), F.col("buckets"))
-                    ).alias("bucket")
-                )
-                .groupBy("bucket")
-                .agg(F.count("*").cast("double").alias("df"))
-                .collect()
-            }
-        # default 0: an all-empty corpus yields no sentinel rows at all
-        n_docs = int(idf_map.pop(-1, 0))
-        idf = (
-            _sparse_idf(n_docs, idf_map)
-            if num_features > IDF_DENSE_MAX
-            else _idf_literals(n_docs, idf_map, num_features)
-        )
-        return _dense_from_sparse_rows(sparse, id_col, num_features, scale=idf)
-
-    counts = _bucket_counts(df, text_col, id_col, num_features).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sparse = (
+        _sparse_rows(df, text_col, id_col, num_features)
+        .where(F.size("buckets") > 0)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # r14 (VERDICT r13 #6): the distinct-doc count shuffles DOC-scale ids
-    # (unbounded key set) and additionally materializes the counts cache
-    # through _bucket_counts' own (id, token)-scale shuffle — data-scale
-    # exchanges stay under the session AQE config. Only the bucket
-    # doc-frequency groupBy (bounded nf keys, map-side combined, reading
-    # the now-warm cache) keeps the bypass.
-    n_docs = counts.select(id_col).distinct().count()
+    # N and df(b) in ONE job: each doc contributes a -1 sentinel plus
+    # its distinct buckets, so the same tiny groupBy yields the doc
+    # count (sentinel row) and every doc-frequency.
+    # AQE-bypass scale audit (r14, VERDICT r13 #6): the groupBy keys
+    # are BOUNDED (num_features+1 buckets) and the built-in agg
+    # partial-aggregates map-side, so the exchange carries at most
+    # O(partitions × nf) rows at any corpus scale; the sparse cache
+    # itself materializes through a NARROW chain (mapInPandas over
+    # the scan — zero exchanges), which AQE never touches. Bounded
+    # exchange + tiny result = in-scope for kernel_exec.
     with kernel_exec(df.sparkSession):
         idf_map = {
             int(r["bucket"]): float(r["df"])
-            for r in counts.groupBy("bucket")
+            for r in sparse.select(
+                F.explode(
+                    F.concat(F.array(F.lit(-1)), F.col("buckets"))
+                ).alias("bucket")
+            )
+            .groupBy("bucket")
             .agg(F.count("*").cast("double").alias("df"))
             .collect()
         }
+    # default 0: an all-empty corpus yields no sentinel rows at all
+    n_docs = int(idf_map.pop(-1, 0))
     idf = (
         _sparse_idf(n_docs, idf_map)
         if num_features > IDF_DENSE_MAX
         else _idf_literals(n_docs, idf_map, num_features)
     )
-    return _dense_pivot(counts, id_col, num_features, scale=idf)
+    return _dense_from_sparse_rows(sparse, id_col, num_features, scale=idf)
 
 
 def tokens_projection(

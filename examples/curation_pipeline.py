@@ -64,8 +64,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     n1 = gated.count()
 
     # 2. near-dedup: MinHash pairs -> components -> keep one per cluster
-    # (arrow path: bit-identical to the expression chain, ~40% faster)
-    pairs = D.minhash_dedup_pairs(gated, threshold=0.7, path="arrow")
+    pairs = D.minhash_dedup_pairs(gated, threshold=0.7)
     survivors = G.neardup_survivors(gated, pairs)
     # Materialize the stage boundary: at 100 TB each curation stage lands
     # in parquet; here localCheckpoint plays that role. Without the cut,

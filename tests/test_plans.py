@@ -212,6 +212,31 @@ def test_load_glm_top_is_take_ordered_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_load_table_schema_memo_sees_overwrite(spark, tmp_path):
+    """The schema memo replays a path's schema with no footer-read job
+    while the files are unchanged, and notices an overwrite that adds a
+    column instead of replaying the old schema and dropping it."""
+    sc = spark.sparkContext
+    d = str(tmp_path)
+    spark.createDataFrame([(1, "a")], "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(f"{d}/t.parquet")
+    assert load_table(spark, d, "t").columns == ["doc_id", "text"]
+    sc.setJobGroup("memo_hit", "memo_hit")
+    try:
+        assert load_table(spark, d, "t").columns == ["doc_id", "text"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("memo_hit") == []
+
+    spark.createDataFrame(
+        [(2, "b", 0.5)], "doc_id long, text string, score double"
+    ).write.mode("overwrite").parquet(f"{d}/t.parquet")
+    again = load_table(spark, d, "t")
+    assert again.columns == ["doc_id", "text", "score"]
+    assert [tuple(r) for r in again.collect()] == [(2, "b", 0.5)]
+
+
 def test_minhash_arrow_rows_zero_shuffle(spark):
     """Round-6 plan pin: the arrow MinHash derivation is ONE narrow
     python map over the scan — zero exchanges before the band explode."""

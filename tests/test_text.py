@@ -135,16 +135,44 @@ def _tf_dict(rows, key="doc_id", val="features"):
     return {r[key]: list(r[val]) for r in rows}
 
 
-@pytest.mark.parametrize("nf", [32, 512])
+def _reference_counts(docs, nf):
+    """{(doc_id, bucket): tf} from Spark's own ``tokens_expr`` +
+    ``polyhash_expr``: explode, drop empty tokens, count per (doc,
+    bucket). The featurizers' Python tokenizer/hash twins must match it."""
+    tok = docs.select(
+        "doc_id", F.explode(T.tokens_expr("text")).alias("tok")
+    ).where(F.length("tok") > 0)
+    counts = tok.groupBy(
+        "doc_id", (T.polyhash_expr(F.col("tok")) % nf).alias("bucket")
+    ).agg(F.count("*").cast("double").alias("tf"))
+    return {(r["doc_id"], r["bucket"]): r["tf"] for r in counts.collect()}
+
+
+def _reference_dense(counts, nf, idf=False):
+    """Dense per-doc vectors from ``_reference_counts``, optionally scaled
+    by the smoothed idf ln((N + 1) / (df + 1)) over token-bearing docs."""
+    scale = [1.0] * nf
+    if idf:
+        n_docs = len({d for d, _ in counts})
+        df = [0] * nf
+        for _, b in counts:
+            df[b] += 1
+        scale = [math.log((n_docs + 1.0) / (df[b] + 1.0)) for b in range(nf)]
+    out = {}
+    for (d, b), tf in counts.items():
+        out.setdefault(d, [0.0] * nf)[b] = tf * scale[b]
+    return out
+
+
+@pytest.mark.parametrize("nf", [32])
 def test_hashing_tf_arrow_sql_parity(spark, tiny_corpus, nf):
-    """The one-pass Arrow path and the pure-codegen SQL path are the same
-    operator (nf=512 also exercises the applyInPandas pivot fallback that
-    replaces the codegen pivot above DENSE_PIVOT_MAX)."""
-    a = _tf_dict(T.hashing_tf(tiny_corpus, num_features=nf, path="arrow").collect())
-    s = _tf_dict(T.hashing_tf(tiny_corpus, num_features=nf, path="sql").collect())
-    assert a.keys() == s.keys()
+    """The one-pass Arrow featurizer equals the Spark-SQL reference built
+    from ``tokens_expr`` + ``polyhash_expr``."""
+    a = _tf_dict(T.hashing_tf(tiny_corpus, num_features=nf).collect())
+    ref = _reference_dense(_reference_counts(tiny_corpus, nf), nf)
+    assert a.keys() == ref.keys()
     for k in a:
-        assert a[k] == pytest.approx(s[k], abs=1e-12)
+        assert a[k] == pytest.approx(ref[k], abs=1e-12)
 
 
 def test_hashing_tf_arrow_sql_parity_real_corpus(spark):
@@ -156,30 +184,27 @@ def test_hashing_tf_arrow_sql_parity_real_corpus(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     a = {
         (r["doc_id"], r["bucket"]): r["tf"]
-        for r in T.hashing_tf_sparse(docs, num_features=64, path="arrow").collect()
+        for r in T.hashing_tf_sparse(docs, num_features=64).collect()
     }
-    s = {
-        (r["doc_id"], r["bucket"]): r["tf"]
-        for r in T.hashing_tf_sparse(docs, num_features=64, path="sql").collect()
-    }
-    assert a == s
+    assert a == _reference_counts(docs, 64)
 
 
 @pytest.mark.parametrize("nf", [32, 4096])
 def test_tfidf_arrow_sql_parity(spark, tiny_corpus, nf):
-    a = _tf_dict(T.tfidf_features(tiny_corpus, num_features=nf, path="arrow").collect())
-    s = _tf_dict(T.tfidf_features(tiny_corpus, num_features=nf, path="sql").collect())
-    assert a.keys() == s.keys()
+    """TF-IDF equals the Spark-SQL reference counts scaled by the smoothed
+    idf, at a dense-literal and a wide bucket count."""
+    a = _tf_dict(T.tfidf_features(tiny_corpus, num_features=nf).collect())
+    ref = _reference_dense(_reference_counts(tiny_corpus, nf), nf, idf=True)
+    assert a.keys() == ref.keys()
     for k in a:
-        assert a[k] == pytest.approx(s[k], abs=1e-12)
+        assert a[k] == pytest.approx(ref[k], abs=1e-12)
 
 
 def test_tfidf_empty_corpus_both_paths(spark):
-    """Review r5: an all-empty corpus returns an empty frame on BOTH
-    physical paths (the arrow path's sentinel aggregate yields no rows)."""
+    """Review r5: an all-empty corpus returns an empty frame (the
+    sentinel aggregate yields no rows, so N = 0)."""
     df = spark.createDataFrame([(0, ""), (1, "   ")], "doc_id long, text string")
-    assert T.tfidf_features(df, num_features=8, path="arrow").count() == 0
-    assert T.tfidf_features(df, num_features=8, path="sql").count() == 0
+    assert T.tfidf_features(df, num_features=8).count() == 0
 
 
 def test_marker_words_found_across_punctuation(spark):
@@ -214,41 +239,34 @@ def test_elastic_net_corrected_reachable_by_name():
     assert not np.allclose(out, [1.0, -1.0, 0.01])  # actually shrinks
 
 
-def test_tf_path_validated(spark, tiny_corpus):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="arrow\\|sql"):
-        T.hashing_tf(tiny_corpus, path="Arrow")
-
-
 def test_tfidf_sparse_idf_broadcast_parity(spark, tiny_corpus, monkeypatch):
     """ADVICE r5: above IDF_DENSE_MAX hashed dims the idf ships as a
     sparse (buckets, idf) broadcast instead of a dense per-task list.
-    Forcing the sparse form at 4096 dims must reproduce the dense path's
-    vectors exactly, on both physical paths."""
+    Forcing the sparse form at 4096 dims must reproduce the dense form's
+    vectors exactly, and both must equal the Spark-SQL reference."""
     dense_a = _tf_dict(
-        T.tfidf_features(tiny_corpus, num_features=4096, path="arrow").collect()
+        T.tfidf_features(tiny_corpus, num_features=4096).collect()
     )
     monkeypatch.setattr(T, "IDF_DENSE_MAX", 8)  # force sparse broadcast
     sparse_a = _tf_dict(
-        T.tfidf_features(tiny_corpus, num_features=4096, path="arrow").collect()
+        T.tfidf_features(tiny_corpus, num_features=4096).collect()
     )
-    sparse_s = _tf_dict(
-        T.tfidf_features(tiny_corpus, num_features=4096, path="sql").collect()
+    ref = _reference_dense(
+        _reference_counts(tiny_corpus, 4096), 4096, idf=True
     )
     assert dense_a == sparse_a
-    assert dense_a.keys() == sparse_s.keys()
+    assert dense_a.keys() == ref.keys()
     for k in dense_a:
-        assert dense_a[k] == pytest.approx(sparse_s[k], abs=1e-12)
+        assert dense_a[k] == pytest.approx(ref[k], abs=1e-12)
 
 
 def test_tfidf_high_dim_smoke(spark):
     """2^18 hashed dims stay runnable (sparse idf path; no 2 MB dense
-    literal in the closure): arrow path over the real documents table."""
+    literal in the closure) over the real documents table."""
     from dask_glm_spark.sources.glm_source import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    out = T.tfidf_features(docs, num_features=1 << 18, path="arrow")
+    out = T.tfidf_features(docs, num_features=1 << 18)
     row = out.select(F.size("features").alias("n")).first()
     assert row["n"] == 1 << 18
 
