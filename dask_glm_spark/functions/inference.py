@@ -438,7 +438,7 @@ def _score_meat(
     OBJECTIVE score (u = family residual, w-scaled for weighted fits) —
     one Arrow Gram-shaped scan, p² partials under the bytes-aware tree
     merge like every other Gram job."""
-    from dask_glm_spark.functions.kernels import _arrow_partials
+    from dask_glm_spark.functions.kernels import _arrow_partials, _dense
 
     def partial(X, y, w=None, o=None):
         xb = X @ beta if o is None else X @ beta + o
@@ -448,15 +448,10 @@ def _score_meat(
         Xu = X * u[:, None]
         return {"meat": (Xu.T @ Xu).ravel()}
 
-    rows = _arrow_partials(
-        df, features_col, label_col, partial, "meat array<double>",
-        weight_col=weight_col, offset_col=offset_col,
-        partial_doubles=p * p,
-    )
-    meat = np.zeros(p * p)
-    for r_ in rows:
-        meat += np.asarray(r_["meat"], dtype=np.float64)
-    return meat.reshape(p, p)
+    return _arrow_partials(
+        df, _dense(features_col), {"meat": np.zeros(p * p)},
+        [(partial, label_col, "")], weight_col, offset_col,
+    )["meat"].reshape(p, p)
 
 
 def glm_summary(
@@ -753,51 +748,35 @@ def _sparse_coef_se_body(
 
     # dispersion: fixed 1 for logistic/poisson; Pearson χ²/(n−p) else —
     # one O(nnz) scan (the sparse twin of _pearson_and_n)
-    from dask_glm_spark.functions.kernels import _arrow_partials_generic
-    from dask_glm_spark.functions.kernels_sparse import _batch_csr
+    from dask_glm_spark.functions.kernels import _arrow_partials
+    from dask_glm_spark.functions.kernels_sparse import _csr
 
     sand_diag = None
     if robust:
         # HC0 sandwich diagonal for ALL coordinates in ONE O(nnz) scan:
-        # per batch, T[i, j] = x_iᵀ·solve_j (scatter-add of the stacked
-        # solves), s_iᵀ·solve_j = u_i·T[i, j] with u the (w-scaled)
+        # per batch, T[i, j] = x_iᵀ·solve_j (one scatter per stacked
+        # solve), s_iᵀ·solve_j = u_i·T[i, j] with u the (w-scaled)
         # objective score residual — partial is Σᵢ (u_i·T[i, :])².
         XC = np.column_stack(solves)  # (p, n_coords)
-        m_coords = XC.shape[1]
 
-        def meat_partial(pdf) -> dict:
-            flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-            xb = np.bincount(
-                row_ids, weights=flat_val * beta[flat_idx], minlength=n
-            )
-            if offset_col is not None:
-                xb = xb + pdf[offset_col].to_numpy(dtype=np.float64)
-            y = pdf[label_col].to_numpy(dtype=np.float64)
+        def meat_partial(X, y, w=None, o=None) -> dict:
+            xb = X @ beta if o is None else X @ beta + o
             u = family.residual_np(xb, y)
-            if weight_col is not None:
-                u = u * pdf[weight_col].to_numpy(dtype=np.float64)
-            T = np.zeros((n, m_coords))
-            np.add.at(T, row_ids, flat_val[:, None] * XC[flat_idx])
+            if w is not None:
+                u = u * w
+            # row-major, so the column sums below accumulate row by row
+            T = np.ascontiguousarray(X @ XC)
             return {"sand": ((u[:, None] * T) ** 2).sum(axis=0)}
 
-        rows_ = _arrow_partials_generic(
-            df, meat_partial, "sand array<double>",
-            partial_doubles=m_coords,
-        )
-        sand_diag = np.zeros(m_coords)
-        for r_ in rows_:
-            sand_diag += np.asarray(r_["sand"], dtype=np.float64)
+        sand_diag = _arrow_partials(
+            df, _csr(idx_col, val_col, p), {"sand": np.zeros(XC.shape[1])},
+            [(meat_partial, label_col, "")], weight_col, offset_col,
+        )["sand"]
 
     var_power = float(getattr(family, "var_power", 0.0) or 0.0)
 
-    def pearson_partial(pdf) -> dict:
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        xb = np.bincount(
-            row_ids, weights=flat_val * beta[flat_idx], minlength=n
-        )
-        if offset_col is not None:
-            xb = xb + pdf[offset_col].to_numpy(dtype=np.float64)
-        y = pdf[label_col].to_numpy(dtype=np.float64)
+    def pearson_partial(X, y, w=None, o=None) -> dict:
+        xb = X @ beta if o is None else X @ beta + o
         if name == "normal":
             mu, v = xb, np.ones_like(xb)
         elif name == "gamma":
@@ -811,9 +790,9 @@ def _sparse_coef_se_body(
                 f"no Pearson variance function for family {name!r}"
             )
         term = (y - mu) ** 2 / v
-        if weight_col is not None:
-            term = term * pdf[weight_col].to_numpy(dtype=np.float64)
-        return {"pearson": float(term.sum()), "n": float(n)}
+        if w is not None:
+            term = term * w
+        return {"pearson": float(term.sum()), "n": float(len(xb))}
 
     if name in _FIXED_DISPERSION:
         # z statistics: df_resid is reporting-only (clamped — a hashed
@@ -834,12 +813,11 @@ def _sparse_coef_se_body(
                 "register its mean/variance in the sparse Pearson scan "
                 "or add it to _FIXED_DISPERSION"
             )
-        rows = _arrow_partials_generic(
-            df, pearson_partial, "pearson double, n double",
-            partial_doubles=2,
+        acc = _arrow_partials(
+            df, _csr(idx_col, val_col, p), {"pearson": 0.0, "n": 0.0},
+            [(pearson_partial, label_col, "")], weight_col, offset_col,
         )
-        pearson = sum(r_["pearson"] for r_ in rows)
-        n = sum(r_["n"] for r_ in rows)
+        pearson, n = acc["pearson"], acc["n"]
         df_resid = n - p
         if df_resid <= 0:
             raise ValueError(
@@ -936,23 +914,15 @@ def _softmax_information(
     partition under the bytes-aware tree merge (the Gram-job shape,
     (k−1)² times over). The label column is NOT read — the multinomial
     information depends only on X and P."""
-    from dask_glm_spark.functions.kernels import _arrow_partials_generic
+    from dask_glm_spark.functions.kernels import _arrow_partials, _dense
 
     m = p * (k - 1)
 
-    def batch_partial(pdf) -> dict:
-        from dask_glm_spark.functions.kernels import _features_matrix
-
-        X = _features_matrix(pdf, features_col)
+    def batch_partial(X, y, w=None) -> dict:
         Z = X @ B
         Z -= Z.max(axis=1, keepdims=True)
         P = np.exp(Z)
         P /= P.sum(axis=1, keepdims=True)
-        w = (
-            pdf[weight_col].to_numpy(dtype=np.float64)
-            if weight_col is not None
-            else None
-        )
         info = np.empty((m, m))
         for c in range(k - 1):
             for d in range(c, k - 1):
@@ -965,16 +935,11 @@ def _softmax_information(
                     info[d * p:(d + 1) * p, c * p:(c + 1) * p] = blk.T
         return {"info": info.ravel(), "n": float(len(X))}
 
-    rows = _arrow_partials_generic(
-        df, batch_partial, "info array<double>, n double",
-        partial_doubles=m * m + 1,
+    acc = _arrow_partials(
+        df, _dense(features_col), {"info": np.zeros(m * m), "n": 0.0},
+        [(batch_partial, None, "")], weight_col,
     )
-    info = np.zeros(m * m)
-    n = 0.0
-    for r_ in rows:
-        info += np.asarray(r_["info"], dtype=np.float64)
-        n += r_["n"]
-    return info.reshape(m, m), n
+    return acc["info"].reshape(m, m), acc["n"]
 
 
 def softmax_summary(
@@ -1165,7 +1130,7 @@ def sparse_predict_interval(
     interval algebra is then the SAME narrow SQL tail the dense path
     uses. One scan, no shuffle, no p² bytes leaving any executor —
     Σ travels one broadcast closure."""
-    from dask_glm_spark.functions.kernels_sparse import _batch_csr
+    from dask_glm_spark.functions.kernels_sparse import CSRMatrix, _batch_csr
 
     q = _interval_quantile(summary, level)
     beta = np.asarray(summary.coefficients, dtype=np.float64).ravel()
@@ -1187,28 +1152,25 @@ def sparse_predict_interval(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
+            X = _batch_csr(pdf, idx_col, val_col, p)
+            n = X.shape[0]
             if fit_intercept:
                 # the fit's constant-1 coordinate at index p−1
-                flat_idx = np.concatenate(
-                    [flat_idx, np.full(n, p - 1, dtype=flat_idx.dtype)]
+                X = CSRMatrix(
+                    np.concatenate([X.indices, np.full(n, p - 1)]),
+                    np.concatenate([X.values, np.ones(n)]),
+                    np.concatenate([X.row_ids, np.arange(n)]),
+                    X.shape,
                 )
-                flat_val = np.concatenate([flat_val, np.ones(n)])
-                row_ids = np.concatenate(
-                    [row_ids, np.arange(n, dtype=row_ids.dtype)]
-                )
-            xb = np.bincount(
-                row_ids, weights=flat_val * beta[flat_idx], minlength=n
-            )
+            xb = X @ beta
             if offset_col is not None:
                 xb = xb + pdf[offset_col].to_numpy(dtype=np.float64)
-            # Σ·x per row: scatter-add the selected Σ rows, then contract
-            # with x again — O(nnz·p) per batch, never a dense (n, p) X
-            Sx = np.zeros((n, p))
-            np.add.at(Sx, row_ids, flat_val[:, None] * Sigma[flat_idx])
+            # Σ·x per row: one scatter per Σ column, then contract with x
+            # again — O(nnz·p) per batch, never a dense (n, p) X
+            Sx = X @ Sigma
             quad = np.bincount(
-                row_ids,
-                weights=flat_val * Sx[row_ids, flat_idx],
+                X.row_ids,
+                weights=X.values * Sx[X.row_ids, X.indices],
                 minlength=n,
             )
             out = pdf.copy()

@@ -20,11 +20,16 @@ Each aggregation kernel has two physical paths:
   partial+final HashAggregate, zero Python in the loop. Best for small p
   (the unroll produces p (+p²/2) sum columns). This is also the
   DuckDB-checkable form (SURVEY §2.6 queries).
-- ``arrow``: ``mapInPandas`` partials — each partition computes its numpy
-  BLAS partial (``X.T @ r``: one GEMV per Arrow batch), emits ONE row of
-  ``(pid, partials...)``; the driver sums partials **in sorted partition
-  order** (bit-deterministic across runs, replicating dask's deterministic
-  chunk-tree reductions — needed by the reference determinism tests,
+- ``arrow``: ONE partial-aggregation body (``_arrow_partials``), shared
+  with the wide-sparse kernels of ``kernels_sparse``. Each kernel's
+  per-batch closure is written against ``X @ …`` / ``X.T @ …`` only, so
+  it runs unchanged on a dense ndarray (``mapInPandas`` batches: one
+  BLAS GEMV/GEMM per batch) or on a ``kernels_sparse.CSRMatrix``
+  (``mapInArrow`` batches: O(nnz) bincounts) — only the batch reader
+  differs. Each partition emits ONE row of ``(pid, partials...)``; the
+  driver sums partials **in sorted partition order** (a run-invariant
+  reduction order, replicating dask's deterministic chunk-tree
+  reductions — needed by the reference determinism tests,
   ``tests/test_algos_families.py:141-160``). Scales to wide p where
   unrolling would blow up codegen.
 
@@ -259,12 +264,15 @@ DRIVER_PULL_BUDGET_BYTES = 256 * 1024 * 1024
 
 
 def _sum_partial_rows(
-    rows: Iterable, columns: list[str], merges: dict | None = None
+    rows: Iterable, columns: list[str], merges: dict | None = None,
+    init: dict | None = None,
 ) -> dict:
     """Fold partial rows (already sorted by pid) column-wise: arrays sum
     element-wise, scalars add; a per-column entry in ``merges`` overrides
-    the combine (e.g. np.minimum for a running min)."""
-    acc: dict = {}
+    the combine (e.g. np.minimum for a running min). ``init`` seeds every
+    column (the driver fold starts from the caller's zeros); without it
+    the first row does."""
+    acc: dict = dict(init) if init is not None else {}
     for r in rows:
         for c in columns:
             v = r[c]
@@ -284,8 +292,6 @@ def _arrow_field_type(ddl: str):
     ddl = ddl.strip()
     if ddl == "double":
         return pa.float64()
-    if ddl == "int":
-        return pa.int32()
     if ddl == "array<double>":
         return pa.list_(pa.float64())
     raise ValueError(f"unsupported partial field type {ddl!r}")
@@ -295,34 +301,56 @@ def _arrow_partials_generic(
     df: DataFrame,
     batch_partial_fn,
     out_fields: str,
+    zeros: dict,
     tree_threshold: int | None = None,
     merges: dict | None = None,
     partial_doubles: int | None = None,
     arrow_batches: bool = False,
-) -> list:
-    """Run ``batch_partial_fn(pdf) -> dict`` per Arrow batch, sum within the
-    partition, one output row per partition.
+) -> dict:
+    """Run ``batch_partial_fn(batch) -> dict`` per Arrow batch, sum within
+    the partition, one partial row per partition; return the driver fold
+    of those rows, seeded with ``zeros`` (one entry per ``out_fields``
+    column — a scalar seed broadcasts onto an array column whose width
+    the caller does not know).
 
-    Partials are merged on the driver in sorted partition-id order so the
-    float reduction order is run-invariant. Above ``tree_threshold``
-    partitions a two-level (tree) merge combines ~TREE_FANIN partials per
-    group executor-side first — the driver then folds #groups rows instead
-    of #partitions (what MLlib's treeAggregate does for the same reason).
-    Grouping is pid-deterministic (``pid // TREE_FANIN``) and group-internal
-    order is sorted-pid, so tree results are also run-invariant.
-
-    Shared by the dense kernels here and functions/kernels_sparse.py.
+    Partials are folded on the driver in sorted partition-id order so the
+    float reduction order is run-invariant (``_partial_rows`` has the
+    tree merge above ``tree_threshold`` partitions).
 
     ``arrow_batches=True`` (round 13) runs the scan stage through
     ``mapInArrow`` instead of ``mapInPandas``: ``batch_partial_fn``
     receives a ``pyarrow.RecordBatch``. For list-typed columns the
     arrow→pandas conversion allocates one small ndarray PER ROW (measured
     ~300× the cost of reading the flat Arrow buffers directly), so the
-    sparse CSR kernels read offsets/values zero-copy via
-    ``kernels_sparse._batch_csr_arrow``. Identical batch boundaries and
-    identical flat arrays → partials are bit-identical to the pandas
-    mode; only the conversion cost changes.
+    sparse reader (``kernels_sparse._batch_csr``) reads offsets/values
+    zero-copy. Identical batch boundaries and identical flat arrays →
+    partials are bit-identical to the pandas mode; only the conversion
+    cost changes.
     """
+    rows = _partial_rows(
+        df, batch_partial_fn, out_fields, tree_threshold, merges,
+        partial_doubles, arrow_batches,
+    )
+    return _sum_partial_rows(rows, list(zeros), merges, init=zeros)
+
+
+def _partial_rows(
+    df: DataFrame,
+    batch_partial_fn,
+    out_fields: str,
+    tree_threshold: int | None = None,
+    merges: dict | None = None,
+    partial_doubles: int | None = None,
+    arrow_batches: bool = False,
+) -> list:
+    """The pid-sorted partial rows behind ``_arrow_partials_generic``.
+
+    Above ``tree_threshold`` partitions a two-level (tree) merge combines
+    ~TREE_FANIN partials per group executor-side first — the driver then
+    folds #groups rows instead of #partitions (what MLlib's
+    treeAggregate does for the same reason). Grouping is pid-deterministic
+    (``pid // TREE_FANIN``) and group-internal order is sorted-pid, so
+    tree results are also run-invariant."""
     from pyspark import TaskContext
 
     value_cols = [f.split()[0] for f in out_fields.split(",")]
@@ -477,35 +505,61 @@ def _arrow_partials_generic(
         return rows
 
 
+def _dense(features_col: str):
+    """The dense batch reader of ``_arrow_partials``: ``mapInPandas``
+    batches stacked into an (n, p) ndarray."""
+    return False, lambda pdf: _features_matrix(pdf, features_col)
+
+
 def _arrow_partials(
     df: DataFrame,
-    features_col: str,
-    label_col: str,
-    partial_fn,
-    out_fields: str,
-    tree_threshold: int | None = None,
+    reader,
+    zeros: dict,
+    parts: list,
     weight_col: str | None = None,
     offset_col: str | None = None,
-    partial_doubles: int | None = None,
-) -> list:
-    """Dense-features wrapper: ``partial_fn(X, y) -> dict`` per batch;
-    ``weight_col`` appends a positional w argument (weighted GLM) and
-    ``offset_col`` a keyword ``o=`` offset vector (both round 10)."""
+) -> dict:
+    """The Arrow kernel body shared by dense and sparse features: one
+    scan running the per-batch closures in ``parts`` on one read of X,
+    folded into sums seeded with ``zeros``.
 
-    def batch_partial(pdf: pd.DataFrame) -> dict:
-        X = _features_matrix(pdf, features_col)
-        y = pdf[label_col].to_numpy(dtype=np.float64)
-        args = [X, y]
-        if weight_col is not None:
-            args.append(pdf[weight_col].to_numpy(dtype=np.float64))
-        kw = {}
-        if offset_col is not None:
-            kw["o"] = pdf[offset_col].to_numpy(dtype=np.float64)
-        return partial_fn(*args, **kw)
+    ``reader`` is ``(arrow_batches, read)`` with ``read(batch) -> X`` —
+    ``_dense(features_col)`` (``mapInPandas``, an ndarray) or
+    ``kernels_sparse._csr(idx_col, val_col, p)`` (``mapInArrow``, a
+    ``CSRMatrix``); the closures only use ``X @`` and ``X.T @``, so they
+    run unchanged on either, and the pandas-vs-Arrow batch choice is made
+    here only. Each ``parts`` entry is ``(fn, label_col, prefix)``:
+    ``fn(X, y[, w][, o=...]) -> dict`` gets the float64 label column
+    (None when ``label_col`` is None), ``weight_col`` as a positional w
+    and ``offset_col`` as keyword ``o=`` (both round 10); its outputs land
+    under ``prefix + key``. Several parts make a fused multi-kernel scan
+    (``fused_softmax_hvp``, ``kernels_sparse.fused_sparse_gate``) whose
+    values are bit-identical to the standalone jobs: same closures, batch
+    boundaries fixed by row count, same fold. The partial-row schema and
+    its width (for the byte-aware tree merge) come from ``zeros``."""
+    from dask_glm_spark.functions.kernels_sparse import _f64
 
+    arrow_batches, read = reader
+
+    def batch_partial(batch) -> dict:
+        X = read(batch)
+        args = [] if weight_col is None else [_f64(batch, weight_col)]
+        kw = {} if offset_col is None else {"o": _f64(batch, offset_col)}
+        out = {}
+        for fn, label_col, prefix in parts:
+            y = None if label_col is None else _f64(batch, label_col)
+            for key, v in fn(X, y, *args, **kw).items():
+                out[prefix + key] = v
+        return out
+
+    out_fields = ", ".join(
+        f"{c} {'array<double>' if np.ndim(z) else 'double'}"
+        for c, z in zeros.items()
+    )
     return _arrow_partials_generic(
-        df, batch_partial, out_fields, tree_threshold,
-        partial_doubles=partial_doubles,
+        df, batch_partial, out_fields, zeros,
+        partial_doubles=sum(int(np.size(z)) for z in zeros.values()),
+        arrow_batches=arrow_batches,
     )
 
 
@@ -597,6 +651,18 @@ def loss_gradient(
             row = df.select(F.col(features_col), *proj).agg(*aggs).collect()[0]
         return float(row["loss"]), np.array([row[f"g{j}"] for j in range(p)])
 
+    return _loss_gradient_arrow(
+        df, _dense(features_col), family, beta, p, label_col, weight_col,
+        offset_col,
+    )
+
+
+def _loss_gradient_partial(family, beta: np.ndarray):
+    """Per-batch closure of ``loss_gradient``'s arrow path (dense or
+    sparse X) as a factory, so a fused multi-kernel scan evaluates the
+    byte-identical arithmetic the standalone kernel job runs."""
+    beta = np.asarray(beta, dtype=np.float64)
+
     def partial(X, y, w=None, o=None):
         xb = X @ beta if o is None else X @ beta + o
         if w is None:
@@ -607,17 +673,18 @@ def loss_gradient(
             r = w * family.residual_np(xb, y)
         return {"loss": loss, "grad": X.T @ r}
 
-    rows = _arrow_partials(
-        df, features_col, label_col, partial,
-        "loss double, grad array<double>", weight_col=weight_col,
-        offset_col=offset_col, partial_doubles=1 + p,
+    return partial
+
+
+def _loss_gradient_arrow(
+    df, reader, family, beta, p, label_col, weight_col, offset_col
+) -> tuple[float, np.ndarray]:
+    acc = _arrow_partials(
+        df, reader, {"loss": 0.0, "grad": np.zeros(p)},
+        [(_loss_gradient_partial(family, beta), label_col, "")],
+        weight_col, offset_col,
     )
-    loss = 0.0
-    grad = np.zeros(p)
-    for r_ in rows:
-        loss += r_["loss"]
-        grad += np.asarray(r_["grad"], dtype=np.float64)
-    return loss, grad
+    return float(acc["loss"]), acc["grad"]
 
 
 def gradient(df, family, beta, **kw) -> np.ndarray:
@@ -737,17 +804,12 @@ def gradient_hessian(
             "hess": (X.T @ (hw[:, None] * X)).ravel(),
         }
 
-    rows = _arrow_partials(
-        df, features_col, label_col, partial,
-        "grad array<double>, hess array<double>", weight_col=weight_col,
-        offset_col=offset_col, partial_doubles=p + p * p,
+    acc = _arrow_partials(
+        df, _dense(features_col),
+        {"grad": np.zeros(p), "hess": np.zeros(p * p)},
+        [(partial, label_col, "")], weight_col, offset_col,
     )
-    grad = np.zeros(p)
-    hess = np.zeros(p * p)
-    for r_ in rows:
-        grad += np.asarray(r_["grad"], dtype=np.float64)
-        hess += np.asarray(r_["hess"], dtype=np.float64)
-    return grad, hess.reshape(p, p)
+    return acc["grad"], acc["hess"].reshape(p, p)
 
 
 # ---------------------------------------------------------------------------
@@ -758,9 +820,9 @@ def gradient_hessian(
 # carries lbfgs's byte shape while CG recovers Newton's curvature. One
 # fused scan per CG iteration (xb, hw, X·v, and the Xᵀ reduce share it).
 # ---------------------------------------------------------------------------
-def _hvp_arrow_partial(family, beta: np.ndarray, v: np.ndarray):
+def _hvp_partial(family, beta: np.ndarray, v: np.ndarray):
     """Per-batch closure of ``hessian_vector_product``'s arrow path as a
-    factory (see ``_softmax_lg_partial``)."""
+    factory (see ``_loss_gradient_partial``); the label is never read."""
     beta = np.asarray(beta, dtype=np.float64)
     v = np.asarray(v, dtype=np.float64)
 
@@ -822,16 +884,18 @@ def hessian_vector_product(
             row = pre.agg(*aggs).collect()[0]
         return np.array([row[f"hv{j}"] for j in range(p)])
 
-    partial = _hvp_arrow_partial(family, beta, v)
-
-    rows = _arrow_partials(
-        df, features_col, label_col, partial, "hv array<double>",
-        weight_col=weight_col, offset_col=offset_col, partial_doubles=p,
+    return _hvp_arrow(
+        df, _dense(features_col), family, beta, v, p, weight_col, offset_col
     )
-    hv = np.zeros(p)
-    for r_ in rows:
-        hv += np.asarray(r_["hv"], dtype=np.float64)
-    return hv
+
+
+def _hvp_arrow(
+    df, reader, family, beta, v, p, weight_col, offset_col
+) -> np.ndarray:
+    return _arrow_partials(
+        df, reader, {"hv": np.zeros(p)},
+        [(_hvp_partial(family, beta, v), None, "")], weight_col, offset_col,
+    )["hv"]
 
 
 # ---------------------------------------------------------------------------
@@ -910,21 +974,16 @@ def multi_loss(
             out["denom"] = float(w.sum() if w is not None else len(y))
         return out
 
-    fields = "losses array<double>" + (", denom double" if with_denom else "")
-    rows = _arrow_partials(
-        df, features_col, label_col, partial, fields,
-        weight_col=weight_col, offset_col=offset_col,
-        partial_doubles=k + (1 if with_denom else 0),
-    )
-    out = np.zeros(k)
-    denom = 0.0
-    for r_ in rows:
-        out += np.asarray(r_["losses"], dtype=np.float64)
-        if with_denom:
-            denom += float(r_["denom"])
+    zeros = {"losses": np.zeros(k)}
     if with_denom:
-        return out, denom
-    return out
+        zeros["denom"] = 0.0
+    acc = _arrow_partials(
+        df, _dense(features_col), zeros, [(partial, label_col, "")],
+        weight_col, offset_col,
+    )
+    if with_denom:
+        return acc["losses"], float(acc["denom"])
+    return acc["losses"]
 
 
 def multi_loss_gradient(
@@ -1016,7 +1075,17 @@ def multi_loss_gradient(
                     grads[j, i] = r_[f"g{j}"]
         return losses, grads
 
+    return _multi_loss_gradient_arrow(
+        df, _dense(features_col), family, betas, p, label_col, weight_col,
+        offset_col,
+    )
+
+
+def _multi_loss_gradient_partial(family, betas: list[np.ndarray]):
+    """Per-batch closure of ``multi_loss_gradient``'s arrow path as a
+    factory (see ``_loss_gradient_partial``)."""
     B = np.column_stack([np.asarray(b, dtype=np.float64) for b in betas])
+    k = B.shape[1]
 
     def partial(X, y, w=None, o=None):
         # Extreme line-search candidates legitimately overflow exp
@@ -1045,18 +1114,19 @@ def multi_loss_gradient(
                 )
             return {"losses": losses, "grads": (X.T @ R).ravel()}
 
-    rows = _arrow_partials(
-        df, features_col, label_col, partial,
-        "losses array<double>, grads array<double>",
-        weight_col=weight_col, offset_col=offset_col,
-        partial_doubles=k + k * p,
+    return partial
+
+
+def _multi_loss_gradient_arrow(
+    df, reader, family, betas, p, label_col, weight_col, offset_col
+) -> tuple[np.ndarray, np.ndarray]:
+    k = len(betas)
+    acc = _arrow_partials(
+        df, reader, {"losses": np.zeros(k), "grads": np.zeros(p * k)},
+        [(_multi_loss_gradient_partial(family, betas), label_col, "")],
+        weight_col, offset_col,
     )
-    losses = np.zeros(k)
-    grads = np.zeros(p * k)
-    for r_ in rows:
-        losses += np.asarray(r_["losses"], dtype=np.float64)
-        grads += np.asarray(r_["grads"], dtype=np.float64)
-    return losses, grads.reshape(p, k)
+    return acc["losses"], acc["grads"].reshape(p, k)
 
 
 def loss(df, family, beta, **kw) -> float:
@@ -1070,23 +1140,31 @@ def loss(df, family, beta, **kw) -> float:
 # (dask_glm/estimators.py:146) with a true jointly-normalized softmax
 # instead of k one-vs-rest re-scans (VERDICT r6 gap #1).
 # ---------------------------------------------------------------------------
+def _softmax_nll(X, B: np.ndarray, yi: np.ndarray):
+    """Row scores ``Z = X·B``, the max-shifted ``exp(Z − m)``, its row
+    sums and the per-row negative log-likelihood ``logsumexp(Z) − Z_y``.
+    Z is made row-contiguous for the row reductions (a no-op for the
+    dense GEMM result; a sparse ``X @ B`` comes back column-major)."""
+    Z = np.ascontiguousarray(X @ B)
+    m = Z.max(axis=1, keepdims=True)
+    ez = np.exp(Z - m)
+    se = ez.sum(axis=1)
+    lse = m[:, 0] + np.log(se)
+    return Z, ez, se, lse - Z[np.arange(len(yi)), yi]
+
+
 def _softmax_lg_partial(B: np.ndarray):
-    """Per-batch closure of ``softmax_loss_gradient`` as a factory, so a
-    fused multi-kernel scan (``fused_softmax_hvp``) evaluates the
-    byte-identical arithmetic the standalone kernel job runs."""
+    """Per-batch closure of ``softmax_loss_gradient`` (dense or sparse X)
+    as a factory, so a fused multi-kernel scan (``fused_softmax_hvp``)
+    and the multi-candidate kernel evaluate the byte-identical arithmetic
+    the standalone kernel job runs."""
     B = np.ascontiguousarray(B, dtype=np.float64)
 
     def _batch(X, y, w=None):
-        Z = X @ B
-        m = Z.max(axis=1, keepdims=True)
-        ez = np.exp(Z - m)
-        se = ez.sum(axis=1)
-        lse = m[:, 0] + np.log(se)
         yi = y.astype(np.int64)
-        rows = np.arange(len(yi))
-        ll = lse - Z[rows, yi]
+        _, ez, se, ll = _softmax_nll(X, B, yi)
         P = ez / se[:, None]
-        P[rows, yi] -= 1.0
+        P[np.arange(len(yi)), yi] -= 1.0
         if w is not None:
             loss = float(np.dot(w, ll))
             P = P * w[:, None]
@@ -1113,22 +1191,20 @@ def softmax_loss_gradient(
     fold order is pid-sorted (run-invariant) like every other kernel.
     ``weight_col`` applies per-row sample weights: loss Σ w·ll and the
     per-row probability residual scales by w before the gradient GEMM."""
-    B = np.ascontiguousarray(B, dtype=np.float64)
-    p, k = B.shape
-
-    partial = _softmax_lg_partial(B)
-
-    rows_ = _arrow_partials(
-        df, features_col, label_col, partial,
-        "loss double, grad array<double>", weight_col=weight_col,
-        partial_doubles=1 + p * k,
+    return _softmax_lg_arrow(
+        df, _dense(features_col), B, label_col, weight_col
     )
-    loss = 0.0
-    grad = np.zeros(p * k)
-    for r_ in rows_:
-        loss += r_["loss"]
-        grad += np.asarray(r_["grad"], dtype=np.float64)
-    return loss, grad.reshape(p, k)
+
+
+def _softmax_lg_arrow(
+    df, reader, B, label_col, weight_col
+) -> tuple[float, np.ndarray]:
+    p, k = np.shape(B)
+    acc = _arrow_partials(
+        df, reader, {"loss": 0.0, "grad": np.zeros(p * k)},
+        [(_softmax_lg_partial(B), label_col, "")], weight_col,
+    )
+    return float(acc["loss"]), acc["grad"].reshape(p, k)
 
 
 def fused_softmax_hvp(
@@ -1143,42 +1219,28 @@ def fused_softmax_hvp(
     features_col: str = "features",
 ) -> tuple[float, np.ndarray, np.ndarray]:
     """``softmax_loss_gradient`` (over ``softmax_label_col``) +
-    ``hessian_vector_product(path='arrow')`` (over ``label_col``) in ONE
-    scan of the same frame (r14 pass 3, guide §2.4: two jobs sharing a
-    cached source become one — q48's dense arrow gate section).
+    ``hessian_vector_product(path='arrow')`` in ONE scan of the same
+    frame (r14 pass 3, guide §2.4: two jobs sharing a cached source
+    become one — q48's dense arrow gate section). ``label_col`` is kept
+    for callers; the Hessian-vector product never reads a label.
 
     Returns ``(smloss, smgrad (p,k), hv (p,))``, bit-identical to the two
     standalone jobs: each value's per-batch arithmetic is the unchanged
-    factory closure (``_softmax_lg_partial`` / ``_hvp_arrow_partial``)
-    fed the same ``_features_matrix`` X and the same float64 label pulls
-    the ``_arrow_partials`` wrapper performs, batch boundaries are fixed
-    by row count, and fold/merge are the shared machinery. Pinned by
+    factory closure (``_softmax_lg_partial`` / ``_hvp_partial``) fed the
+    same X, and batch boundaries and fold are the shared
+    ``_arrow_partials`` machinery. Pinned by
     tests/test_kernels.py::test_fused_softmax_hvp_matches_separate."""
-    B = np.ascontiguousarray(B, dtype=np.float64)
-    pB, k = B.shape
+    pB, k = np.shape(B)
     p = p or pB
-    smb = _softmax_lg_partial(B)
-    hvb = _hvp_arrow_partial(family, beta, v)
-
-    def batch_partial(pdf: pd.DataFrame) -> dict:
-        X = _features_matrix(pdf, features_col)
-        d1 = smb(X, pdf[softmax_label_col].to_numpy(dtype=np.float64))
-        d2 = hvb(X, pdf[label_col].to_numpy(dtype=np.float64))
-        return {"smloss": d1["loss"], "smgrad": d1["grad"], "hv": d2["hv"]}
-
-    rows = _arrow_partials_generic(
-        df, batch_partial,
-        "smloss double, smgrad array<double>, hv array<double>",
-        partial_doubles=1 + pB * k + p,
+    acc = _arrow_partials(
+        df, _dense(features_col),
+        {"smloss": 0.0, "smgrad": np.zeros(pB * k), "hv": np.zeros(p)},
+        [
+            (_softmax_lg_partial(B), softmax_label_col, "sm"),
+            (_hvp_partial(family, beta, v), None, ""),
+        ],
     )
-    smloss = 0.0
-    smgrad = np.zeros(pB * k)
-    hv = np.zeros(p)
-    for r_ in rows:
-        smloss += r_["smloss"]
-        smgrad += np.asarray(r_["smgrad"], dtype=np.float64)
-        hv += np.asarray(r_["hv"], dtype=np.float64)
-    return float(smloss), smgrad.reshape(pB, k), hv
+    return float(acc["smloss"]), acc["smgrad"].reshape(pB, k), acc["hv"]
 
 
 def softmax_multi_loss(
@@ -1195,39 +1257,38 @@ def softmax_multi_loss(
     (n,p)×(p,k) GEMM and one stable logsumexp per candidate; partials are
     c doubles per partition. ``with_denom=True`` fuses the Σw / row-count
     denominator into the same scan (r13, the ``multi_loss`` twin)."""
+    return _softmax_multi_loss_arrow(
+        df, _dense(features_col), Bs, label_col, weight_col, with_denom
+    )
+
+
+def _softmax_multi_loss_arrow(
+    df, reader, Bs, label_col, weight_col, with_denom=False
+):
     mats = [np.ascontiguousarray(b, dtype=np.float64) for b in Bs]
     c = len(mats)
 
     def partial(X, y, w=None):
         yi = y.astype(np.int64)
-        rows = np.arange(len(yi))
         losses = np.empty(c)
         with np.errstate(over="ignore", invalid="ignore"):
             for i, B in enumerate(mats):
-                Z = X @ B
-                m = Z.max(axis=1, keepdims=True)
-                lse = m[:, 0] + np.log(np.exp(Z - m).sum(axis=1))
-                ll = lse - Z[rows, yi]
+                ll = _softmax_nll(X, B, yi)[3]
                 losses[i] = np.dot(w, ll) if w is not None else ll.sum()
         out = {"losses": losses}
         if with_denom:
             out["denom"] = float(w.sum() if w is not None else len(y))
         return out
 
-    fields = "losses array<double>" + (", denom double" if with_denom else "")
-    rows_ = _arrow_partials(
-        df, features_col, label_col, partial, fields,
-        weight_col=weight_col, partial_doubles=c + (1 if with_denom else 0),
-    )
-    out = np.zeros(c)
-    denom = 0.0
-    for r_ in rows_:
-        out += np.asarray(r_["losses"], dtype=np.float64)
-        if with_denom:
-            denom += float(r_["denom"])
+    zeros = {"losses": np.zeros(c)}
     if with_denom:
-        return out, denom
-    return out
+        zeros["denom"] = 0.0
+    acc = _arrow_partials(
+        df, reader, zeros, [(partial, label_col, "")], weight_col
+    )
+    if with_denom:
+        return acc["losses"], float(acc["denom"])
+    return acc["losses"]
 
 
 def softmax_multi_loss_gradient(
@@ -1240,48 +1301,28 @@ def softmax_multi_loss_gradient(
     """(losses (c,), gradients (p·k, c)) for c candidate (p, k) softmax
     matrices in ONE scan — the multinomial twin of ``multi_loss_gradient``
     (round 13: the batched-λ FISTA path evaluates every λ's extrapolated
-    point together). Per candidate the arithmetic is byte-for-byte
-    ``softmax_loss_gradient``'s (two GEMMs + stable logsumexp), so the
-    c=1 column is bit-identical to the single-candidate kernel; partials
-    are c·(1 + p·k) doubles per partition."""
-    mats = [np.ascontiguousarray(b, dtype=np.float64) for b in Bs]
-    c = len(mats)
-    p, k = mats[0].shape
+    point together). Per candidate the arithmetic is
+    ``softmax_loss_gradient``'s closure (two GEMMs + stable logsumexp),
+    so the c=1 column is bit-identical to the single-candidate kernel;
+    partials are c·(1 + p·k) doubles per partition."""
+    parts = [_softmax_lg_partial(b) for b in Bs]
+    c = len(parts)
+    p, k = np.shape(Bs[0])
 
     def partial(X, y, w=None):
-        yi = y.astype(np.int64)
-        rows = np.arange(len(yi))
-        losses = np.empty(c)
-        grads = np.empty((c, p * k))
         with np.errstate(over="ignore", invalid="ignore"):
-            for i, B in enumerate(mats):
-                Z = X @ B
-                m = Z.max(axis=1, keepdims=True)
-                ez = np.exp(Z - m)
-                se = ez.sum(axis=1)
-                lse = m[:, 0] + np.log(se)
-                ll = lse - Z[rows, yi]
-                P = ez / se[:, None]
-                P[rows, yi] -= 1.0
-                if w is not None:
-                    losses[i] = float(np.dot(w, ll))
-                    P = P * w[:, None]
-                else:
-                    losses[i] = float(ll.sum())
-                grads[i] = (X.T @ P).ravel()
-        return {"losses": losses, "grads": grads.ravel()}
+            ds = [f(X, y, w) for f in parts]
+        return {
+            "losses": np.array([d["loss"] for d in ds]),
+            "grads": np.concatenate([d["grad"] for d in ds]),
+        }
 
-    rows_ = _arrow_partials(
-        df, features_col, label_col, partial,
-        "losses array<double>, grads array<double>",
-        weight_col=weight_col, partial_doubles=c * (1 + p * k),
+    acc = _arrow_partials(
+        df, _dense(features_col),
+        {"losses": np.zeros(c), "grads": np.zeros(c * p * k)},
+        [(partial, label_col, "")], weight_col,
     )
-    losses = np.zeros(c)
-    grads = np.zeros(c * p * k)
-    for r_ in rows_:
-        losses += np.asarray(r_["losses"], dtype=np.float64)
-        grads += np.asarray(r_["grads"], dtype=np.float64)
-    return losses, grads.reshape(c, p * k).T
+    return acc["losses"], acc["grads"].reshape(c, p * k).T
 
 
 def softmax_hessian_vector_product(
@@ -1302,29 +1343,30 @@ def softmax_hessian_vector_product(
     per partition, no (p·k)² object anywhere. Shift-invariance note: the
     output columns sum to zero per feature (range(H) ⊥ the softmax null
     space), so CG iterates started at the gradient stay identified."""
+    return _softmax_hvp_arrow(df, _dense(features_col), B, V, weight_col)
+
+
+def _softmax_hvp_arrow(df, reader, B, V, weight_col) -> np.ndarray:
     B = np.ascontiguousarray(B, dtype=np.float64)
     V = np.ascontiguousarray(V, dtype=np.float64)
     p, k = B.shape
 
-    def batch_partial(pdf) -> dict:
-        X = _features_matrix(pdf, features_col)
-        Z = X @ B
+    def partial(X, y, w=None):
+        # row-contiguous scores (see _softmax_nll)
+        Z = np.ascontiguousarray(X @ B)
         Z -= Z.max(axis=1, keepdims=True)
         P = np.exp(Z)
         P /= P.sum(axis=1, keepdims=True)
-        A = X @ V
+        A = np.ascontiguousarray(X @ V)
         M = P * (A - (A * P).sum(axis=1, keepdims=True))
-        if weight_col is not None:
-            M = M * pdf[weight_col].to_numpy(dtype=np.float64)[:, None]
+        if w is not None:
+            M = M * w[:, None]
         return {"hv": (X.T @ M).ravel()}
 
-    rows_ = _arrow_partials_generic(
-        df, batch_partial, "hv array<double>", partial_doubles=p * k
-    )
-    hv = np.zeros(p * k)
-    for r_ in rows_:
-        hv += np.asarray(r_["hv"], dtype=np.float64)
-    return hv.reshape(p, k)
+    return _arrow_partials(
+        df, reader, {"hv": np.zeros(p * k)}, [(partial, None, "")],
+        weight_col,
+    )["hv"].reshape(p, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1385,28 +1427,24 @@ def column_moments_full(
         }
 
     cols = [features_col] if weight_col is None else [features_col, weight_col]
-    rows = _arrow_partials_generic(
+    # p is discovered from the vectors: scalar seeds broadcast onto the
+    # array columns; rows arrive pid-sorted (deterministic fold order)
+    acc = _arrow_partials_generic(
         df.select(*cols),
         batch_partial,
         "n double, sw double, s array<double>, ss array<double>, "
         "mn array<double>, mx array<double>",
+        {
+            "n": 0.0, "sw": 0.0, "s": 0.0, "ss": 0.0,
+            "mn": np.inf, "mx": -np.inf,
+        },
         merges={"mn": np.minimum, "mx": np.maximum},
     )
-    if not rows:
+    if acc["n"] == 0:
         raise ValueError("empty input DataFrame")
-    n = 0.0
-    sw = 0.0
-    s = np.zeros(len(rows[0]["s"]))
-    ss = np.zeros_like(s)
-    mn = np.full_like(s, np.inf)
-    mx = np.full_like(s, -np.inf)
-    for r in rows:  # rows arrive pid-sorted: deterministic fold order
-        n += r["n"]
-        sw += r["sw"]
-        s += np.asarray(r["s"], dtype=np.float64)
-        ss += np.asarray(r["ss"], dtype=np.float64)
-        mn = np.minimum(mn, np.asarray(r["mn"], dtype=np.float64))
-        mx = np.maximum(mx, np.asarray(r["mx"], dtype=np.float64))
+    n, sw, s, ss, mn, mx = (
+        acc[c] for c in ("n", "sw", "s", "ss", "mn", "mx")
+    )
     mean = s / sw
     var = np.maximum(ss / sw - mean * mean, 0.0)
     std = np.sqrt(var)

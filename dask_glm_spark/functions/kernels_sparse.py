@@ -1,16 +1,18 @@
 """Sparse kernel layer: loss/gradient over (indices, values) columns.
 
-Wide-sparse counterpart of ``functions.kernels`` (P1/P2/P5 for one-hot /
+Wide-sparse entry points of ``functions.kernels`` (P1/P2/P5 for one-hot /
 hashed text features with p up to 10^6, where densifying each row would
-multiply bytes-on-wire by p/nnz). Same physical shape as the dense arrow
-path — one scan, one partial row per partition, driver merge in
-sorted-pid order — but the scan is ``mapInArrow`` (round 13: the
-arrow→pandas conversion of list columns allocates one ndarray per row;
-reading the flat Arrow buffers is ~300× cheaper) and the per-batch math
-is CSR-style numpy:
+multiply bytes-on-wire by p/nnz). There is no sparse kernel arithmetic
+here: each public ``*_sparse`` function runs the SAME per-batch closure
+as its dense Arrow twin, through the same partial-aggregation scan (one
+partial row per partition, driver fold in sorted-pid order). Only the
+batch reader differs — ``_csr`` reads the flat Arrow list buffers of a
+``mapInArrow`` batch (round 13: the arrow→pandas conversion of list
+columns allocates one ndarray per row; the flat buffers are ~300×
+cheaper) into a ``CSRMatrix``, whose ``@`` is an O(nnz) bincount:
 
-    xb   = bincount(row_ids, weights = values * beta[indices])   O(nnz)
-    grad = bincount(indices, weights = r[row_ids] * values)      O(nnz)
+    X @ beta = bincount(row_ids, weights = values * beta[indices])   O(nnz)
+    X.T @ r  = bincount(indices, weights = r[row_ids] * values)      O(nnz)
 
 Bytes leaving each executor stay O(p) (the gradient partial); X is never
 densified on either side of the Arrow boundary.
@@ -22,6 +24,9 @@ path itself under the DuckDB hash gate — q48's sloss/sgrad/shvp/
 smlgl1/smlgg1 columns run loss_gradient_sparse,
 hessian_vector_product_sparse, and multi_loss_gradient_sparse over a
 ragged masked view and hash against symbolic SQL recomputation.
+
+The public ``*_sparse`` names are load-bearing beyond the solvers:
+glmbench's layer trace wraps every one of them by name.
 """
 
 from __future__ import annotations
@@ -30,18 +35,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from dask_glm_spark.functions.kernels import _arrow_partials_generic
+from dask_glm_spark.functions import kernels as _k
 
 
-def _batch_csr(batch, idx_col: str, val_col: str):
-    """Flatten a batch of (indices, values) lists into CSR-ish arrays:
-    (flat_idx int64, flat_val float64, row_ids int64, n_rows).
+def _batch_csr(batch, idx_col: str, val_col: str, p: int) -> "CSRMatrix":
+    """A batch of (indices, values) lists as an (n, p) ``CSRMatrix``.
 
     Accepts a pandas batch (``mapInPandas`` — one small ndarray per row,
     bulk-concatenated) or a ``pyarrow.RecordBatch`` (``mapInArrow`` —
     round 13: the flat value/offset buffers are read directly, no per-row
     allocation; measured ~300× cheaper than the arrow→pandas conversion
-    of the same list columns). Identical outputs either way."""
+    of the same list columns). Identical arrays either way."""
     if not isinstance(batch, pd.DataFrame):
         import pyarrow.compute as pc
 
@@ -56,26 +60,27 @@ def _batch_csr(batch, idx_col: str, val_col: str):
         lens = pc.list_value_length(ic).to_numpy(zero_copy_only=False).astype(
             np.int64, copy=False
         )
-        row_ids = np.repeat(np.arange(len(lens)), lens)
-        return flat_idx, flat_val, row_ids, len(lens)
-    idx_lists = batch[idx_col].to_numpy()
-    val_lists = batch[val_col].to_numpy()
-    lens = np.fromiter((len(v) for v in idx_lists), dtype=np.int64, count=len(idx_lists))
-    # bulk concatenate over the object array (C-side loop over row
-    # buffers) — the per-row np.asarray listcomp it replaces was ~3× the
-    # cost at typical batch sizes (round 13)
-    flat_idx = (
-        np.concatenate(idx_lists).astype(np.int64, copy=False)
-        if len(idx_lists)
-        else np.zeros(0, dtype=np.int64)
-    )
-    flat_val = (
-        np.concatenate(val_lists).astype(np.float64, copy=False)
-        if len(val_lists)
-        else np.zeros(0)
-    )
+    else:
+        idx_lists = batch[idx_col].to_numpy()
+        val_lists = batch[val_col].to_numpy()
+        lens = np.fromiter(
+            (len(v) for v in idx_lists), dtype=np.int64, count=len(idx_lists)
+        )
+        # bulk concatenate over the object array (C-side loop over row
+        # buffers) — the per-row np.asarray listcomp it replaces was ~3×
+        # the cost at typical batch sizes (round 13)
+        flat_idx = (
+            np.concatenate(idx_lists).astype(np.int64, copy=False)
+            if len(idx_lists)
+            else np.zeros(0, dtype=np.int64)
+        )
+        flat_val = (
+            np.concatenate(val_lists).astype(np.float64, copy=False)
+            if len(val_lists)
+            else np.zeros(0)
+        )
     row_ids = np.repeat(np.arange(len(lens)), lens)
-    return flat_idx, flat_val, row_ids, len(lens)
+    return CSRMatrix(flat_idx, flat_val, row_ids, (len(lens), p))
 
 
 def _f64(batch, col: str) -> np.ndarray:
@@ -89,14 +94,27 @@ def _f64(batch, col: str) -> np.ndarray:
     )
 
 
-class CSRMatrix:
-    """Minimal scipy-free sparse row matrix for executor-local solves.
+def _csr(idx_col: str, val_col: str, p: int):
+    """The sparse batch reader of ``kernels._arrow_partials``:
+    ``mapInArrow`` batches read into a ``CSRMatrix``."""
+    return True, lambda rb: _batch_csr(rb, idx_col, val_col, p)
 
-    Duck-types the two numpy operations the family math uses
-    (``X.dot(v)`` and ``X.T.dot(r)`` — families.py ``pointwise_loss`` /
-    ``pointwise_gradient``), both as O(nnz) bincount scatter-adds, so the
-    ADMM local update runs unchanged on sparse blocks. Stored as
-    COO-with-row-ids (three flat arrays) — 24 bytes/nnz, never densified.
+
+class CSRMatrix:
+    """Minimal scipy-free sparse row matrix for executor-local math.
+
+    Duck-types the numpy products the kernels and the family math use —
+    ``X @ v`` / ``X @ B`` and ``X.T @ r`` / ``X.T @ R`` (``.dot`` is the
+    same operator, for families.py ``pointwise_loss`` /
+    ``pointwise_gradient``) — so the dense Arrow per-batch closures and
+    the ADMM local update run unchanged on sparse batches. A 1-D operand
+    is one O(nnz) bincount scatter (``X @``) or gather (``X.T @``); a 2-D
+    ``(·, k)`` operand is one bincount per column. ``X @ B`` is returned
+    column-major (each column one contiguous scatter result, so
+    ``XB[:, i]`` reductions see contiguous memory); callers that reduce
+    along rows take ``np.ascontiguousarray`` of it, a no-op for a dense
+    GEMM result. Stored as COO-with-row-ids (three flat arrays) — 24
+    bytes/nnz, never densified.
     """
 
     __slots__ = ("indices", "values", "row_ids", "shape")
@@ -107,11 +125,18 @@ class CSRMatrix:
         self.row_ids = row_ids
         self.shape = shape
 
-    def dot(self, v):
-        v = np.ravel(v)
+    def __matmul__(self, B):
+        if np.ndim(B) == 2:
+            out = np.empty((B.shape[1], self.shape[0]))
+            for c in range(B.shape[1]):
+                out[c] = self @ B[:, c]
+            return out.T
         return np.bincount(
-            self.row_ids, weights=self.values * v[self.indices], minlength=self.shape[0]
+            self.row_ids, weights=self.values * B[self.indices],
+            minlength=self.shape[0],
         )
+
+    dot = __matmul__
 
     @property
     def T(self):
@@ -124,47 +149,18 @@ class _CSRTranspose:
     def __init__(self, m: CSRMatrix):
         self.m = m
 
-    def dot(self, r):
-        r = np.ravel(r)
+    def __matmul__(self, R):
+        if np.ndim(R) == 2:
+            out = np.empty((self.m.shape[1], R.shape[1]))
+            for c in range(R.shape[1]):
+                out[:, c] = self @ R[:, c]
+            return out
         return np.bincount(
-            self.m.indices,
-            weights=r[self.m.row_ids] * self.m.values,
+            self.m.indices, weights=R[self.m.row_ids] * self.m.values,
             minlength=self.m.shape[1],
         )
 
-
-def _loss_gradient_sparse_partial(
-    family,
-    beta: np.ndarray,
-    p: int,
-    idx_col: str,
-    val_col: str,
-    label_col: str,
-    weight_col: str | None = None,
-    offset_col: str | None = None,
-):
-    """The per-batch closure of ``loss_gradient_sparse`` as a factory, so
-    a fused multi-kernel scan (``fused_sparse_gate``) evaluates the
-    byte-identical arithmetic the standalone kernel job runs."""
-    beta = np.asarray(beta, dtype=np.float64)
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        y = _f64(pdf, label_col)
-        xb = np.bincount(row_ids, weights=flat_val * beta[flat_idx], minlength=n)
-        if offset_col is not None:
-            xb = xb + _f64(pdf, offset_col)
-        r = family.residual_np(xb, y)
-        if weight_col is not None:
-            w = _f64(pdf, weight_col)
-            loss = float(np.dot(w, family.loglike_terms_np(xb, y)))
-            r = w * r
-        else:
-            loss = family.loglike_np(xb, y)
-        grad = np.bincount(flat_idx, weights=r[row_ids] * flat_val, minlength=p)
-        return {"loss": loss, "grad": grad}
-
-    return batch_partial
+    dot = __matmul__
 
 
 def loss_gradient_sparse(
@@ -182,109 +178,10 @@ def loss_gradient_sparse(
     ``weight_col`` applies per-row sample weights (round 10): loss
     Σ w·ll, gradient scatter of (w⊙r); ``offset_col`` adds a fixed
     per-row term to xb — same O(nnz) scan either way."""
-    batch_partial = _loss_gradient_sparse_partial(
-        family, beta, p, idx_col, val_col, label_col, weight_col, offset_col
+    return _k._loss_gradient_arrow(
+        df, _csr(idx_col, val_col, p), family, beta, p, label_col,
+        weight_col, offset_col,
     )
-
-    rows = _arrow_partials_generic(
-        df, batch_partial, "loss double, grad array<double>",
-        partial_doubles=1 + p, arrow_batches=True,
-    )
-    loss = 0.0
-    grad = np.zeros(p)
-    for r_ in rows:
-        loss += r_["loss"]
-        grad += np.asarray(r_["grad"], dtype=np.float64)
-    return float(loss), grad
-
-
-def multi_loss_sparse(
-    df: DataFrame,
-    family,
-    betas: list[np.ndarray],
-    p: int,
-    idx_col: str = "findices",
-    val_col: str = "fvalues",
-    label_col: str = "label",
-) -> np.ndarray:
-    """k candidate betas in one scan (sparse line-search probe)."""
-    B = np.column_stack([np.asarray(b, dtype=np.float64) for b in betas])
-    k = B.shape[1]
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        y = _f64(pdf, label_col)
-        # One bincount per candidate — the same O(nnz) scatter the fused
-        # loss_gradient uses. (np.add.at on the (n, k) target was the slow
-        # buffered-ufunc path AND materialized an (nnz, k) temporary, in
-        # the line-search hot loop of both sparse solvers — review r5.)
-        losses = np.empty(k)
-        for i in range(k):
-            xb = np.bincount(
-                row_ids, weights=flat_val * B[flat_idx, i], minlength=n
-            )
-            losses[i] = family.loglike_np(xb, y)
-        return {"losses": losses}
-
-    rows = _arrow_partials_generic(
-        df, batch_partial, "losses array<double>", partial_doubles=k
-    , arrow_batches=True)
-    out = np.zeros(k)
-    for r_ in rows:
-        out += np.asarray(r_["losses"], dtype=np.float64)
-    return out
-
-
-def _multi_loss_gradient_sparse_partial(
-    family,
-    betas: list[np.ndarray],
-    p: int,
-    idx_col: str,
-    val_col: str,
-    label_col: str,
-    weight_col: str | None = None,
-    offset_col: str | None = None,
-):
-    """Per-batch closure of ``multi_loss_gradient_sparse`` as a factory
-    (see ``_loss_gradient_sparse_partial``)."""
-    B = np.column_stack([np.asarray(b, dtype=np.float64) for b in betas])
-    k = B.shape[1]
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        y = _f64(pdf, label_col)
-        w = (
-            _f64(pdf, weight_col)
-            if weight_col is not None
-            else None
-        )
-        o = (
-            _f64(pdf, offset_col)
-            if offset_col is not None
-            else None
-        )
-        losses = np.empty(k)
-        grads = np.empty((p, k))
-        # extreme candidates overflow exp by design — no warning spam
-        with np.errstate(over="ignore", invalid="ignore"):
-            for i in range(k):
-                xb = np.bincount(
-                    row_ids, weights=flat_val * B[flat_idx, i], minlength=n
-                )
-                if o is not None:
-                    xb = xb + o
-                r = family.residual_np(xb, y)
-                if w is None:
-                    losses[i] = family.loglike_np(xb, y)
-                else:
-                    losses[i] = np.dot(w, family.loglike_terms_np(xb, y))
-                    r = w * r
-                grads[:, i] = np.bincount(
-                    flat_idx, weights=r[row_ids] * flat_val, minlength=p
-                )
-        return {"losses": losses, "grads": grads.ravel()}
-
-    return batch_partial
 
 
 def multi_loss_gradient_sparse(
@@ -302,55 +199,10 @@ def multi_loss_gradient_sparse(
     the sparse twin of ``kernels.multi_loss_gradient`` (fused line-search
     probe: the accepted candidate's gradient feeds the next iteration, so
     the separate per-iteration loss_gradient job disappears)."""
-    k = len(betas)
-    batch_partial = _multi_loss_gradient_sparse_partial(
-        family, betas, p, idx_col, val_col, label_col, weight_col, offset_col
+    return _k._multi_loss_gradient_arrow(
+        df, _csr(idx_col, val_col, p), family, betas, p, label_col,
+        weight_col, offset_col,
     )
-
-    rows = _arrow_partials_generic(
-        df, batch_partial, "losses array<double>, grads array<double>",
-        partial_doubles=k + k * p, arrow_batches=True,
-    )
-    losses = np.zeros(k)
-    grads = np.zeros(p * k)
-    for r_ in rows:
-        losses += np.asarray(r_["losses"], dtype=np.float64)
-        grads += np.asarray(r_["grads"], dtype=np.float64)
-    return losses, grads.reshape(p, k)
-
-
-def _hvp_sparse_partial(
-    family,
-    beta: np.ndarray,
-    v: np.ndarray,
-    p: int,
-    idx_col: str,
-    val_col: str,
-    weight_col: str | None = None,
-    offset_col: str | None = None,
-):
-    """Per-batch closure of ``hessian_vector_product_sparse`` as a factory
-    (see ``_loss_gradient_sparse_partial``)."""
-    beta = np.asarray(beta, dtype=np.float64)
-    v = np.asarray(v, dtype=np.float64)
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        xb = np.bincount(row_ids, weights=flat_val * beta[flat_idx], minlength=n)
-        if offset_col is not None:
-            xb = xb + _f64(pdf, offset_col)
-        hw = family.hess_weight_np(xb)
-        if weight_col is not None:
-            hw = hw * _f64(pdf, weight_col)
-        xv = np.bincount(row_ids, weights=flat_val * v[flat_idx], minlength=n)
-        t = hw * xv
-        return {
-            "hv": np.bincount(
-                flat_idx, weights=t[row_ids] * flat_val, minlength=p
-            )
-        }
-
-    return batch_partial
 
 
 def hessian_vector_product_sparse(
@@ -367,22 +219,15 @@ def hessian_vector_product_sparse(
 ) -> np.ndarray:
     """Sparse Hessian-vector product ``Hv = Xᵀ(hw(xb)⊙(X·v))`` — the
     O(nnz) twin of ``kernels.hessian_vector_product`` (round 12): two
-    bincount scatters per batch (xb and X·v share the flattened triplets),
-    O(p) doubles per partition. Gives wide-sparse fits a second-order
-    solver (``newton_cg_sparse``) — plain newton is excluded from sparse
-    because its p² Gram is the wrong object there; the Hvp never forms
-    it."""
-    batch_partial = _hvp_sparse_partial(
-        family, beta, v, p, idx_col, val_col, weight_col, offset_col
+    bincount scatters and one gather per batch, O(p) doubles per
+    partition, the label column never read. Gives wide-sparse fits a
+    second-order solver (``newton_cg_sparse``) — plain newton is excluded
+    from sparse because its p² Gram is the wrong object there; the Hvp
+    never forms it."""
+    return _k._hvp_arrow(
+        df, _csr(idx_col, val_col, p), family, beta, v, p, weight_col,
+        offset_col,
     )
-
-    rows = _arrow_partials_generic(
-        df, batch_partial, "hv array<double>", partial_doubles=p
-    , arrow_batches=True)
-    hv = np.zeros(p)
-    for r_ in rows:
-        hv += np.asarray(r_["hv"], dtype=np.float64)
-    return hv
 
 
 def softmax_multi_loss_sparse(
@@ -397,109 +242,9 @@ def softmax_multi_loss_sparse(
     """Negative log-likelihoods of c candidate (p, k) softmax matrices in
     one O(c·k·nnz) scan — the sparse twin of ``kernels.softmax_multi_loss``
     (the multinomial FISTA backtracking probe, round 12)."""
-    mats = [np.ascontiguousarray(b, dtype=np.float64) for b in Bs]
-    c = len(mats)
-    k = mats[0].shape[1]
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        y = _f64(pdf, label_col).astype(np.int64)
-        w = (
-            _f64(pdf, weight_col)
-            if weight_col is not None
-            else None
-        )
-        rows = np.arange(n)
-        losses = np.empty(c)
-        Z = np.empty((n, k))
-        with np.errstate(over="ignore", invalid="ignore"):
-            for i, B in enumerate(mats):
-                for cc in range(k):
-                    Z[:, cc] = np.bincount(
-                        row_ids, weights=flat_val * B[flat_idx, cc],
-                        minlength=n,
-                    )
-                m = Z.max(axis=1, keepdims=True)
-                lse = m[:, 0] + np.log(np.exp(Z - m).sum(axis=1))
-                ll = lse - Z[rows, y]
-                losses[i] = np.dot(w, ll) if w is not None else ll.sum()
-        return {"losses": losses}
-
-    rows_ = _arrow_partials_generic(
-        df, batch_partial, "losses array<double>", partial_doubles=c
-    , arrow_batches=True)
-    out = np.zeros(c)
-    for r_ in rows_:
-        out += np.asarray(r_["losses"], dtype=np.float64)
-    return out
-
-
-def softmax_multi_loss_gradient_sparse(
-    df: DataFrame,
-    Bs: list[np.ndarray],
-    p: int,
-    idx_col: str = "findices",
-    val_col: str = "fvalues",
-    label_col: str = "label",
-    weight_col: str | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """(losses (c,), gradients (p·k, c)) for c candidate (p, k) softmax
-    matrices in one O(c·k·nnz) scan — the sparse twin of
-    ``kernels.softmax_multi_loss_gradient`` (round 13, the batched-λ
-    FISTA evaluation). Per candidate the arithmetic is byte-for-byte
-    ``softmax_loss_gradient_sparse``'s (k bincount scatters for Z, k
-    gathers for G), so the c=1 column is bit-identical to the
-    single-candidate kernel."""
-    mats = [np.ascontiguousarray(b, dtype=np.float64) for b in Bs]
-    c = len(mats)
-    k = mats[0].shape[1]
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        yi = _f64(pdf, label_col).astype(np.int64)
-        rows = np.arange(n)
-        w = _f64(pdf, weight_col) if weight_col is not None else None
-        losses = np.empty(c)
-        grads = np.empty((c, p * k))
-        Z = np.empty((n, k))
-        with np.errstate(over="ignore", invalid="ignore"):
-            for i, B in enumerate(mats):
-                for cc in range(k):
-                    Z[:, cc] = np.bincount(
-                        row_ids, weights=flat_val * B[flat_idx, cc],
-                        minlength=n,
-                    )
-                m = Z.max(axis=1, keepdims=True)
-                ez = np.exp(Z - m)
-                se = ez.sum(axis=1)
-                lse = m[:, 0] + np.log(se)
-                ll = lse - Z[rows, yi]
-                P = ez / se[:, None]
-                P[rows, yi] -= 1.0
-                if w is not None:
-                    losses[i] = float(np.dot(w, ll))
-                    P = P * w[:, None]
-                else:
-                    losses[i] = float(ll.sum())
-                G = np.empty((p, k))
-                for cc in range(k):
-                    G[:, cc] = np.bincount(
-                        flat_idx, weights=P[row_ids, cc] * flat_val,
-                        minlength=p,
-                    )
-                grads[i] = G.ravel()
-        return {"losses": losses, "grads": grads.ravel()}
-
-    rows_ = _arrow_partials_generic(
-        df, batch_partial, "losses array<double>, grads array<double>",
-        partial_doubles=c * (1 + p * k), arrow_batches=True,
+    return _k._softmax_multi_loss_arrow(
+        df, _csr(idx_col, val_col, p), Bs, label_col, weight_col
     )
-    losses = np.zeros(c)
-    grads = np.zeros(c * p * k)
-    for r_ in rows_:
-        losses += np.asarray(r_["losses"], dtype=np.float64)
-        grads += np.asarray(r_["grads"], dtype=np.float64)
-    return losses, grads.reshape(c, p * k).T
 
 
 def softmax_loss_gradient_sparse(
@@ -514,54 +259,13 @@ def softmax_loss_gradient_sparse(
     """Sparse twin of ``kernels.softmax_loss_gradient``: (negative
     log-likelihood, (p, k) gradient) for multinomial logistic over
     (indices, values) rows — ALL k class scores and gradients from one
-    O(k·nnz) scan, partials (1 + p·k) doubles per partition, pid-sorted
-    driver fold. ``label_col`` must hold class indices in [0, k).
-
-    Z columns come from k bincount scatters (the multi_loss pattern —
-    no (nnz, k) temporary), the row logsumexp is max-shifted, and each
-    gradient column is one bincount of (softmax − onehot) residuals."""
-    B = np.ascontiguousarray(B, dtype=np.float64)
-    k = B.shape[1]
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        y = _f64(pdf, label_col).astype(np.int64)
-        Z = np.empty((n, k))
-        for c in range(k):
-            Z[:, c] = np.bincount(
-                row_ids, weights=flat_val * B[flat_idx, c], minlength=n
-            )
-        m = Z.max(axis=1, keepdims=True)
-        ez = np.exp(Z - m)
-        se = ez.sum(axis=1)
-        lse = m[:, 0] + np.log(se)
-        rows = np.arange(n)
-        ll = lse - Z[rows, y]
-        P = ez / se[:, None]
-        P[rows, y] -= 1.0
-        if weight_col is not None:
-            w = _f64(pdf, weight_col)
-            loss = float(np.dot(w, ll))
-            P = P * w[:, None]
-        else:
-            loss = float(ll.sum())
-        G = np.empty((p, k))
-        for c in range(k):
-            G[:, c] = np.bincount(
-                flat_idx, weights=P[row_ids, c] * flat_val, minlength=p
-            )
-        return {"loss": loss, "grad": G.ravel()}
-
-    rows_ = _arrow_partials_generic(
-        df, batch_partial, "loss double, grad array<double>",
-        partial_doubles=1 + p * k, arrow_batches=True,
+    O(k·nnz) scan (k scatters for Z, k gathers for the gradient),
+    partials (1 + p·k) doubles per partition. ``label_col`` must hold
+    class indices in [0, k)."""
+    return _k._softmax_lg_arrow(
+        df, _csr(idx_col, val_col, p), B, label_col, weight_col
     )
-    loss = 0.0
-    grad = np.zeros(p * k)
-    for r_ in rows_:
-        loss += r_["loss"]
-        grad += np.asarray(r_["grad"], dtype=np.float64)
-    return float(loss), grad.reshape(p, k)
+
 
 def softmax_hessian_vector_product_sparse(
     df: DataFrame,
@@ -574,46 +278,11 @@ def softmax_hessian_vector_product_sparse(
 ) -> np.ndarray:
     """Sparse twin of ``kernels.softmax_hessian_vector_product``:
     ``H(B)·V`` as (p, k) over (indices, values) rows — the wide-sparse
-    multinomial Newton-CG primitive (round 13). Per batch: k bincount
-    scatters each for Z = X·B and A = X·V, the per-row curvature action
-    ``M = w ⊙ P ⊙ (A − Σ_c P_c·A_c)``, then k bincount gathers for
-    Xᵀ·M — O(k·nnz) work, p·k doubles per partition, the label column
-    never read (canonical link: observed = expected information)."""
-    B = np.ascontiguousarray(B, dtype=np.float64)
-    V = np.ascontiguousarray(V, dtype=np.float64)
-    k = B.shape[1]
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        flat_idx, flat_val, row_ids, n = _batch_csr(pdf, idx_col, val_col)
-        Z = np.empty((n, k))
-        A = np.empty((n, k))
-        for c in range(k):
-            Z[:, c] = np.bincount(
-                row_ids, weights=flat_val * B[flat_idx, c], minlength=n
-            )
-            A[:, c] = np.bincount(
-                row_ids, weights=flat_val * V[flat_idx, c], minlength=n
-            )
-        Z -= Z.max(axis=1, keepdims=True)
-        P = np.exp(Z)
-        P /= P.sum(axis=1, keepdims=True)
-        M = P * (A - (A * P).sum(axis=1, keepdims=True))
-        if weight_col is not None:
-            M = M * _f64(pdf, weight_col)[:, None]
-        HV = np.empty((p, k))
-        for c in range(k):
-            HV[:, c] = np.bincount(
-                flat_idx, weights=M[row_ids, c] * flat_val, minlength=p
-            )
-        return {"hv": HV.ravel()}
-
-    rows_ = _arrow_partials_generic(
-        df, batch_partial, "hv array<double>", partial_doubles=p * k
-    , arrow_batches=True)
-    hv = np.zeros(p * k)
-    for r_ in rows_:
-        hv += np.asarray(r_["hv"], dtype=np.float64)
-    return hv.reshape(p, k)
+    multinomial Newton-CG primitive (round 13): O(k·nnz) work per batch,
+    p·k doubles per partition, the label column never read."""
+    return _k._softmax_hvp_arrow(
+        df, _csr(idx_col, val_col, p), B, V, weight_col
+    )
 
 
 def fused_sparse_gate(
@@ -630,54 +299,28 @@ def fused_sparse_gate(
     """``loss_gradient_sparse`` + ``hessian_vector_product_sparse`` +
     ``multi_loss_gradient_sparse`` over ONE scan of the same frame (r14
     pass 3, guide §2.4: three jobs sharing a cached source become one —
-    q48's sparse gate section).
+    q48's sparse gate section). Each batch's CSR arrays are read once
+    and fed to all three per-batch closures.
 
-    Returns ``((loss, grad), hv, (mlosses, mgrads))``. Every output is
-    bit-identical to the three standalone kernel jobs: each value's
-    per-batch arithmetic is the unchanged factory closure
-    (``_loss_gradient_sparse_partial`` / ``_hvp_sparse_partial`` /
-    ``_multi_loss_gradient_sparse_partial``), batch boundaries are fixed
-    by row count (``arrow.maxRecordsPerBatch``) so they match the
-    standalone scans, and per-batch fold, per-partition row emission and
-    the pid-sorted driver merge are the shared ``_arrow_partials_generic``
-    machinery. Pinned by
+    Returns ``((loss, grad), hv, (mlosses, mgrads))``, bit-identical to
+    the three standalone kernel jobs (same closures, same batch
+    boundaries, same fold — see ``kernels._arrow_partials``). Pinned by
     tests/test_kernels.py::test_fused_sparse_gate_matches_separate."""
     k = len(betas)
-    p_lg = _loss_gradient_sparse_partial(
-        family, beta, p, idx_col, val_col, label_col
+    acc = _k._arrow_partials(
+        df, _csr(idx_col, val_col, p),
+        {
+            "loss": 0.0, "grad": np.zeros(p), "hv": np.zeros(p),
+            "mlosses": np.zeros(k), "mgrads": np.zeros(p * k),
+        },
+        [
+            (_k._loss_gradient_partial(family, beta), label_col, ""),
+            (_k._hvp_partial(family, beta, v), None, ""),
+            (_k._multi_loss_gradient_partial(family, betas), label_col, "m"),
+        ],
     )
-    p_hv = _hvp_sparse_partial(family, beta, v, p, idx_col, val_col)
-    p_ml = _multi_loss_gradient_sparse_partial(
-        family, betas, p, idx_col, val_col, label_col
+    return (
+        (float(acc["loss"]), acc["grad"]),
+        acc["hv"],
+        (acc["mlosses"], acc["mgrads"].reshape(p, k)),
     )
-
-    def batch_partial(pdf) -> dict:  # pyarrow.RecordBatch (arrow_batches=True)
-        d1 = p_lg(pdf)
-        d2 = p_hv(pdf)
-        d3 = p_ml(pdf)
-        return {
-            "loss": d1["loss"],
-            "grad": d1["grad"],
-            "hv": d2["hv"],
-            "mlosses": d3["losses"],
-            "mgrads": d3["grads"],
-        }
-
-    rows = _arrow_partials_generic(
-        df, batch_partial,
-        "loss double, grad array<double>, hv array<double>, "
-        "mlosses array<double>, mgrads array<double>",
-        partial_doubles=1 + p + p + k + k * p, arrow_batches=True,
-    )
-    loss = 0.0
-    grad = np.zeros(p)
-    hv = np.zeros(p)
-    mlosses = np.zeros(k)
-    mgrads = np.zeros(p * k)
-    for r_ in rows:
-        loss += r_["loss"]
-        grad += np.asarray(r_["grad"], dtype=np.float64)
-        hv += np.asarray(r_["hv"], dtype=np.float64)
-        mlosses += np.asarray(r_["mlosses"], dtype=np.float64)
-        mgrads += np.asarray(r_["mgrads"], dtype=np.float64)
-    return (float(loss), grad), hv, (mlosses, mgrads.reshape(p, k))

@@ -45,20 +45,15 @@ def embedding_moments(
             "ss": (X.T @ X).ravel(),
         }
 
-    rows = _arrow_partials_generic(
+    acc = _arrow_partials_generic(
         df.select(vec_col), batch_partial,
         "n double, s array<double>, ss array<double>",
+        {"n": 0.0, "s": 0.0, "ss": 0.0},  # d is discovered from the vectors
     )
-    if not rows:
+    n, s, ss = acc["n"], acc["s"], acc["ss"]
+    if n == 0:
         raise ValueError("empty input DataFrame")
-    d = len(rows[0]["s"])
-    n = 0.0
-    s = np.zeros(d)
-    ss = np.zeros(d * d)
-    for r in rows:
-        n += r["n"]
-        s += np.asarray(r["s"], dtype=np.float64)
-        ss += np.asarray(r["ss"], dtype=np.float64)
+    d = len(s)
     mean = s / n
     cov = ss.reshape(d, d) / n - np.outer(mean, mean)
     cov = (cov + cov.T) / 2.0

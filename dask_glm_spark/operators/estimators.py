@@ -484,13 +484,8 @@ class _GLM(BaseEstimator):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                flat_idx, flat_val, row_ids, n = _batch_csr(pdf, "findices", "fvalues")
-                xb = (
-                    np.bincount(
-                        row_ids, weights=flat_val * beta[flat_idx], minlength=n
-                    )
-                    + icpt
-                )
+                X = _batch_csr(pdf, "findices", "fvalues", len(beta))
+                xb = X @ beta + icpt
                 if offset_col is not None:
                     xb = xb + pdf[offset_col].to_numpy(dtype=np.float64)
                 out = pdf.copy()
@@ -845,22 +840,12 @@ class MulticlassLogisticRegression(_GLM):
 
         Bmat = self.coefs_.T.copy()  # (p, k), intercept split out
         icpt = np.asarray(self.intercepts_, dtype=np.float64)
-        k = Bmat.shape[1]
 
         def op(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                flat_idx, flat_val, row_ids, n = _batch_csr(
-                    pdf, "findices", "fvalues"
-                )
-                Z = np.empty((n, k))
-                for c in range(k):
-                    Z[:, c] = np.bincount(
-                        row_ids,
-                        weights=flat_val * Bmat[flat_idx, c],
-                        minlength=n,
-                    )
+                Z = _batch_csr(pdf, "findices", "fvalues", len(Bmat)) @ Bmat
                 Z += icpt
                 out = pdf.copy()
                 out[col] = [r.tolist() for r in Z]

@@ -318,7 +318,7 @@ def test_multi_level_merge_generic_sum(spark, monkeypatch):
     def bp(pdf: pd.DataFrame) -> dict:
         return {"s": float(pdf["v"].sum()), "c": float(len(pdf))}
 
-    rows = kernels._arrow_partials_generic(
+    rows = kernels._partial_rows(
         df, bp, "s double, c double", partial_doubles=2
     )
     assert len(rows) <= 3
@@ -328,6 +328,10 @@ def test_multi_level_merge_generic_sum(spark, monkeypatch):
     assert total_s == pytest.approx(
         sum(float(i % 7) for i in range(160))
     )
+    acc = kernels._arrow_partials_generic(
+        df, bp, "s double, c double", {"s": 0.0, "c": 0.0}, partial_doubles=2
+    )
+    assert acc == {"s": total_s, "c": total_c}
 
 
 def test_loss_gradient_fused_matches_separate(data):

@@ -181,29 +181,22 @@ def test_softmax_multi_loss_kernels_match(data):
 
 def test_softmax_multi_loss_gradient_kernels_match(data):
     # round 13: the fused multi-candidate loss+gradient (the batched-λ
-    # FISTA evaluation kernel) — dense and sparse twins against the
-    # numpy oracle, and the c=1 column against the single-candidate
-    # kernels (same per-candidate arithmetic → exact equality)
-    from dask_glm_spark.functions import kernels, kernels_sparse
+    # FISTA evaluation kernel) against the numpy oracle, and the c=1
+    # column against the single-candidate kernel (same per-candidate
+    # arithmetic → exact equality)
+    from dask_glm_spark.functions import kernels
 
     df, X, y = data
-    sd = V.to_sparse_columns(df)
     rng = np.random.RandomState(11)
     cands = [rng.standard_normal((P, K)) * 0.2 for _ in range(3)]
     dl, dg = kernels.softmax_multi_loss_gradient(df, cands)
-    sl, sg = kernels_sparse.softmax_multi_loss_gradient_sparse(sd, cands, P)
     for i, c in enumerate(cands):
         el, eg = _np_softmax_loss_grad(np.ravel(c), X, y)
         np.testing.assert_allclose(dl[i], el, rtol=1e-10)
         np.testing.assert_allclose(dg[:, i], eg, rtol=1e-8)
-        np.testing.assert_allclose(sl[i], el, rtol=1e-10)
-        np.testing.assert_allclose(sg[:, i], eg, rtol=1e-8)
     l1, g1 = kernels.softmax_loss_gradient(df, cands[0])
     assert dl[0] == l1
     assert np.array_equal(dg[:, 0], np.ravel(g1))
-    sl1, sg1 = kernels_sparse.softmax_loss_gradient_sparse(sd, cands[0], P)
-    assert sl[0] == sl1
-    assert np.array_equal(sg[:, 0], np.ravel(sg1))
 
 
 def test_softmax_path_batched_matches_sequential(data):

@@ -7,9 +7,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 from pyspark.sql import functions as F
 
 from dask_glm_spark.functions import kernels, kernels_sparse
@@ -87,13 +86,7 @@ def test_sparse_loss_gradient_matches_dense(dense_df, sparse_df, sparse_data):
     np.testing.assert_allclose(sl, Logistic.pointwise_loss(beta, X, y), rtol=1e-9)
 
 
-def test_multi_loss_sparse_matches_dense(dense_df, sparse_df):
-    betas = [np.linspace(-0.5, 0.5, P), np.zeros(P)]
-    d = kernels.multi_loss(dense_df, Logistic, betas, path="arrow")
-    s = kernels_sparse.multi_loss_sparse(sparse_df, Logistic, betas, p=P)
-    np.testing.assert_allclose(s, d, rtol=1e-12)
-
-
+@pytest.mark.slow
 def test_lbfgs_sparse_matches_dense_fit(dense_df, sparse_df):
     dense_lr = LogisticRegression(
         solver="lbfgs", regularizer=None, fit_intercept=False
@@ -104,6 +97,7 @@ def test_lbfgs_sparse_matches_dense_fit(dense_df, sparse_df):
     np.testing.assert_allclose(sparse_lr.coef_, dense_lr.coef_, rtol=1e-5, atol=1e-6)
 
 
+@pytest.mark.slow
 def test_proximal_grad_sparse_matches_dense_fit(dense_df, sparse_df):
     """VERDICT r2 #4: L1 prox-grad on sparse features — the canonical
     hashed-text workload — must agree with the dense solver exactly (same
@@ -116,6 +110,7 @@ def test_proximal_grad_sparse_matches_dense_fit(dense_df, sparse_df):
     np.testing.assert_allclose(sparse_lr.coef_, dense_lr.coef_, rtol=1e-8, atol=1e-10)
 
 
+@pytest.mark.slow
 def test_fista_sparse_matches_dense_fit(dense_df, sparse_df):
     """Round 8: the accelerated (FISTA) loop runs the same control flow
     over both kernel surfaces — sparse must equal dense bit-tight."""
@@ -129,6 +124,7 @@ def test_fista_sparse_matches_dense_fit(dense_df, sparse_df):
     np.testing.assert_allclose(sparse_lr.coef_, dense_lr.coef_, rtol=1e-8, atol=1e-10)
 
 
+@pytest.mark.slow
 def test_gradient_descent_sparse_matches_dense_fit(dense_df, sparse_df):
     kw = dict(max_iter=25, fit_intercept=False)
     dense_lr = LogisticRegression(solver="gradient_descent", **kw).fit(
@@ -138,6 +134,7 @@ def test_gradient_descent_sparse_matches_dense_fit(dense_df, sparse_df):
     np.testing.assert_allclose(sparse_lr.coef_, dense_lr.coef_, rtol=1e-8, atol=1e-10)
 
 
+@pytest.mark.slow
 def test_admm_sparse_matches_dense_fit(dense_df, sparse_df):
     """ADMM on CSR blocks: identical consensus rounds to the dense path
     (same block partitioning via nblocks=0 on the co-partitioned frames),
@@ -163,7 +160,36 @@ def test_csr_matrix_duck_type(sparse_data):
     r = np.linspace(0, 1, N)
     np.testing.assert_allclose(m.T.dot(r), X.T @ r, rtol=1e-12)
 
+    # `@` against dense numpy, exactly: the test matrix has at most two
+    # nonzeros per row (and per column), a row with none, and small
+    # integer values, so every sum is exact in any order
+    Xs = np.zeros((6, 5))
+    Xs[0, [1, 3]] = [2.0, -1.0]
+    Xs[1, 4] = 3.0
+    Xs[3, [0, 2]] = [1.0, 4.0]
+    Xs[4, 1] = -2.0
+    Xs[5, 3] = 5.0  # row 2 has no nonzeros
+    nz = np.nonzero(Xs)
+    ms = CSRMatrix(nz[1], Xs[nz], nz[0], Xs.shape)
+    vs = np.arange(5.0) - 2.0
+    Bs = np.arange(15.0).reshape(5, 3) - 7.0
+    rs = np.arange(6.0) - 1.0
+    Rs = np.arange(12.0).reshape(6, 2) - 5.0
+    assert np.array_equal(ms @ vs, Xs @ vs)
+    assert np.array_equal(ms @ Bs, Xs @ Bs)
+    assert np.array_equal(ms.T @ rs, Xs.T @ rs)
+    assert np.array_equal(ms.T @ Rs, Xs.T @ Rs)
+    assert np.array_equal(ms.dot(vs), ms @ vs)
+    # a batch with zero nonzeros: products are exact zeros of full shape
+    e = np.zeros(0, dtype=np.int64)
+    m0 = CSRMatrix(e, np.zeros(0), e, (4, 5))
+    assert np.array_equal(m0 @ vs, np.zeros(4))
+    assert np.array_equal(m0 @ Bs, np.zeros((4, 3)))
+    assert np.array_equal(m0.T @ np.ones(4), np.zeros(5))
+    assert np.array_equal(m0.T @ np.ones((4, 2)), np.zeros((5, 2)))
 
+
+@pytest.mark.slow
 def test_sparse_intercept_matches_dense_lbfgs(dense_df, sparse_df):
     """fit_intercept over sparse features (round 12; the reference xfails
     this combination, tests/test_estimators.py:47-54, but it's the normal
@@ -185,6 +211,7 @@ def test_sparse_intercept_matches_dense_lbfgs(dense_df, sparse_df):
     assert acc_s == acc_d
 
 
+@pytest.mark.slow
 def test_sparse_intercept_matches_dense_admm(dense_df, sparse_df):
     kw = dict(regularizer="l2", lamduh=0.1, fit_intercept=True, max_iter=20)
     dense_lr = LogisticRegression(solver="admm", **kw).fit(
@@ -199,6 +226,7 @@ def test_sparse_intercept_matches_dense_admm(dense_df, sparse_df):
     )
 
 
+@pytest.mark.slow
 def test_sparse_intercept_mllib_oracle(spark, dense_df, sparse_df):
     """MLlib LogisticRegression (standardization off, no penalty) is an
     independent optimizer for the same intercept-extended MLE."""
@@ -228,6 +256,7 @@ def test_sparse_non_lbfgs_raises(sparse_df):
         LogisticRegression(solver="newton", fit_intercept=False).fit(sparse_df)
 
 
+@pytest.mark.slow
 def test_sparse_predict_matches_dense(dense_df, sparse_df):
     dense_lr = LogisticRegression(
         solver="lbfgs", regularizer=None, fit_intercept=False
@@ -273,6 +302,7 @@ def test_from_coo_matches_to_sparse_columns(spark, sparse_data):
         np.testing.assert_allclose(vals, X[i, nz], rtol=1e-12)
 
 
+@pytest.mark.slow
 def test_from_coo_feeds_sparse_fit(spark, sparse_data, dense_df):
     """End-to-end: COO ingest -> lbfgs_sparse == the dense fit (the
     reference's sparse.COO -> solver path, re-expressed)."""
@@ -293,6 +323,7 @@ def test_from_coo_feeds_sparse_fit(spark, sparse_data, dense_df):
     np.testing.assert_allclose(beta_sp, beta_dn, atol=1e-5)
 
 
+@pytest.mark.slow
 def test_softmax_sparse_matches_dense_fit(spark, dense_df, sparse_df):
     """Sparse softmax kernel + solver + estimator routing: identical
     (p, k) coefficients to the dense softmax fit of the same L2 objective
@@ -332,6 +363,7 @@ def test_softmax_sparse_matches_dense_fit(spark, dense_df, sparse_df):
     assert probs_d == probs_s
 
 
+@pytest.mark.slow
 def test_softmax_sparse_intercept_matches_dense(dense_df, sparse_df):
     """Sparse softmax + intercept (round 12): same constant-1 coordinate
     trick — joint coefficients, intercepts, and probabilities match the
@@ -362,6 +394,7 @@ def test_softmax_sparse_intercept_matches_dense(dense_df, sparse_df):
     assert probs_d == probs_s
 
 
+@pytest.mark.slow
 def test_sparse_intercept_proba_roundtrip(dense_df, sparse_df):
     """predict_proba on the sparse frame uses the stored intercept — the
     probabilities match the dense intercept fit row-for-row."""
@@ -385,6 +418,7 @@ def test_sparse_intercept_proba_roundtrip(dense_df, sparse_df):
 # ---------------------------------------------------------------------------
 # round 12: matrix-free per-coordinate Wald SEs for sparse fits
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_sparse_coef_se_matches_dense_summary(dense_df, sparse_df):
     """summary(coords=...) on a sparse MLE fit equals the dense full
     summary's SEs/p-values at the same coordinates (CG solves of
@@ -440,6 +474,7 @@ def test_sparse_coef_se_penalized_rejected(sparse_df):
         lr.summary(sparse_df, coords=[0])
 
 
+@pytest.mark.slow
 def test_sparse_coef_se_gaussian_dispersion(spark, sparse_data):
     """The t/dispersion path: gaussian sparse fit — SEs and Pearson
     dispersion match the dense summary (sparse Pearson scan + CG)."""
@@ -475,6 +510,7 @@ def test_sparse_coef_se_gaussian_dispersion(spark, sparse_data):
 # round 13: HC0 robust SEs for sparse coords, per-row residuals and
 # mean-response intervals over wide-sparse scoring rows (VERDICT r12 #2/#3)
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_sparse_coef_se_robust_matches_dense_hc0(dense_df, sparse_df):
     """summary(coords=..., robust=True) on a sparse MLE fit equals the
     dense glm_summary(robust=True) sandwich SEs at the same coordinates —
@@ -496,6 +532,7 @@ def test_sparse_coef_se_robust_matches_dense_hc0(dense_df, sparse_df):
     )
 
 
+@pytest.mark.slow
 def test_sparse_coef_se_robust_gaussian_scale(spark, sparse_data):
     """Gaussian HC0 via the sparse path: exercises the objective-Hessian
     rescale (the SSE objective is 2x the unit information) — any scale
@@ -530,6 +567,7 @@ def _rid_frames(dense_df):
     return dd, V.to_sparse_columns(dd)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize(
     "kind", ["deviance", "pearson", "response", "working"]
 )
@@ -553,6 +591,7 @@ def test_sparse_residuals_match_dense(dense_df, kind):
         assert got[rid] == pytest.approx(v, rel=1e-8, abs=1e-10)
 
 
+@pytest.mark.slow
 def test_sparse_residuals_no_intercept(dense_df):
     kw = dict(
         solver="lbfgs", regularizer=None, fit_intercept=False,
@@ -566,6 +605,7 @@ def test_sparse_residuals_no_intercept(dense_df):
         assert got[rid] == pytest.approx(v, rel=1e-8, abs=1e-10)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("scale", ["mean", "link"])
 def test_sparse_predict_interval_matches_dense(dense_df, scale):
     """predict_interval() over wide-sparse scoring rows == the dense
@@ -591,6 +631,7 @@ def test_sparse_predict_interval_matches_dense(dense_df, scale):
             assert g == pytest.approx(w, rel=1e-8, abs=1e-10)
 
 
+@pytest.mark.slow
 def test_sparse_predict_interval_needs_covariance(dense_df):
     """A coords-only sparse summary carries no covariance — the sparse
     interval surface refuses it loudly instead of guessing."""
@@ -606,6 +647,7 @@ def test_sparse_predict_interval_needs_covariance(dense_df):
 # ---------------------------------------------------------------------------
 # round 13: wide-sparse one-vs-rest multiclass (VERDICT r12 #4)
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_sparse_ovr_matches_dense(dense_df):
     """Sparse OvR multiclass == dense OvR: per-class coefficients (unique
     L2 optimum), predictions, and OvR probabilities row-for-row."""
@@ -646,6 +688,7 @@ def test_sparse_ovr_matches_dense(dense_df):
     assert ms.score(sd) == pytest.approx(md.score(dd), abs=1e-12)
 
 
+@pytest.mark.slow
 def test_sparse_ovr_fit_intercept_false(dense_df):
     from dask_glm_spark.operators.estimators import (
         MulticlassLogisticRegression,
@@ -665,6 +708,7 @@ def test_sparse_ovr_fit_intercept_false(dense_df):
     assert list(ms.intercepts_) == [0.0, 0.0, 0.0]
 
 
+@pytest.mark.slow
 def test_sparse_ovr_summary_guard(dense_df):
     from dask_glm_spark.operators.estimators import (
         MulticlassLogisticRegression,
