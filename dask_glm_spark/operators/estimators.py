@@ -131,7 +131,26 @@ class _GLM(BaseEstimator):
             return kernels.add_intercept(df, self.features_col)
         return df
 
+    # wide-sparse fits: every solver except newton (whose p x p Gram is
+    # wrong for wide-sparse p); each routes to solvers.<solver>_sparse
+    _SPARSE_SOLVERS = (
+        "admm", "gradient_descent", "lbfgs", "newton_cg", "proximal_grad",
+    )
+
     def fit(self, df: DataFrame, y=None, **extra):
+        """Fit on a dense features array column or wide-sparse
+        (findices, fvalues) columns; the solver's ``*_sparse`` twin runs
+        the latter (ADMM blocks are scipy-free CSR, never densified).
+
+        Sparse fit_intercept (round 12; the reference xfails this
+        combination, ``dask_glm/tests/test_estimators.py:47-54``, but a
+        hashed text classifier WITH an intercept is the normal
+        configuration and MLlib supports it): a constant-1 coordinate is
+        appended at index p_base to every row (``_sparse_design``) — one
+        extra (int, double) pair per row, never a densification — exactly
+        mirroring the dense path's ``add_intercept`` column append. The
+        penalty then covers the intercept coordinate too, the same
+        (reference-parity) behavior as the dense intercept-extended fit."""
         from dask_glm_spark.sources import vectors as V
 
         if V.is_vector_column(df, self.features_col):
@@ -140,10 +159,22 @@ class _GLM(BaseEstimator):
             # parity for sparse inputs (dask_glm/estimators.py:82-83)
             df = V.from_vector_column(df, self.features_col)
             extra.setdefault("normalize", False)
-        if V.is_sparse_columns(df):
-            return self._fit_sparse(df, **extra)
-        df_ = self._maybe_add_intercept(df)
         kw = self._routed_kwargs()
+        kw["label_col"] = self.label_col
+        if V.is_sparse_columns(df):
+            if self.solver not in self._SPARSE_SOLVERS:
+                raise NotImplementedError(
+                    "sparse features support solver in "
+                    f"{list(self._SPARSE_SOLVERS)} (lbfgs recommended), "
+                    f"got {self.solver!r}"
+                )
+            extra.pop("normalize", None)  # sparse path never standardizes
+            df = self._sparse_design(df, extra)
+            name = self.solver + "_sparse"
+        else:
+            df = self._maybe_add_intercept(df)
+            kw["features_col"] = self.features_col
+            name = self.solver
         kw.update(extra)
         if self.warm_start and self._coef is not None:
             # _coef lives in the intercept-extended original feature space —
@@ -157,14 +188,10 @@ class _GLM(BaseEstimator):
         # their own fit_info through **extra, so diagnostics land in the
         # dict the solver actually filled (ADVICE r10)
         info = kw.setdefault("fit_info", {})
+        # looked up through the module at call time (a profiler's layer
+        # trace wraps the public solvers by name)
         self._coef = np.asarray(
-            solvers._solvers[self.solver](
-                df_,
-                family=self.family,
-                features_col=self.features_col,
-                label_col=self.label_col,
-                **kw,
-            )
+            getattr(solvers, name)(df, family=self.family, **kw)
         )
         self.n_iter_ = info.get("n_iter")
         self.converged_ = info.get("converged")
@@ -175,79 +202,22 @@ class _GLM(BaseEstimator):
             self.coef_ = self._coef
         return self
 
-    _SPARSE_SOLVERS = {
-        "lbfgs": "lbfgs_sparse",
-        "proximal_grad": "proximal_grad_sparse",
-        "gradient_descent": "gradient_descent_sparse",
-        "admm": "admm_sparse",
-        "newton_cg": "newton_cg_sparse",
-    }
+    def _sparse_design(self, df: DataFrame, extra: dict) -> DataFrame:
+        """The wide-sparse design a fit runs on: with fit_intercept, the
+        constant-1 coordinate appended at index p_base (probed when the
+        caller passed no ``p``); ``extra["p"]`` is set to the fit width.
+        ``_sparse_xb`` scoring splits the stored intercept back out."""
+        from dask_glm_spark.sources import vectors as V
 
-    def _fit_sparse(self, df: DataFrame, **extra):
-        """Wide-sparse (findices/fvalues) fit path — every solver except
-        newton (whose p x p Gram is wrong for wide-sparse p). ADMM blocks
-        are scipy-free CSR (kernels_sparse.CSRMatrix), never densified.
-
-        fit_intercept (round 12; the reference xfails this combination,
-        ``dask_glm/tests/test_estimators.py:47-54``, but a hashed text
-        classifier WITH an intercept is the normal configuration and
-        MLlib supports it): append a constant-1 coordinate at index
-        p_base to every row — one extra (int, double) pair per row, never
-        a densification — so all four O(nnz) sparse solvers run unchanged
-        on p_base+1 coordinates, exactly mirroring the dense path's
-        ``add_intercept`` column append. The penalty then covers the
-        intercept coordinate too, the same (reference-parity) behavior as
-        the dense intercept-extended fit. ``_sparse_xb`` scoring already
-        splits the stored intercept back out."""
-        if self.solver not in self._SPARSE_SOLVERS:
-            raise NotImplementedError(
-                "sparse features support solver in "
-                f"{sorted(self._SPARSE_SOLVERS)} (lbfgs recommended), got {self.solver!r}"
-            )
-        extra.pop("normalize", None)  # sparse path never standardizes
         p_base = extra.pop("p", None)
         if self.fit_intercept:
-            from dask_glm_spark.sources.vectors import append_intercept_coord, sparse_p
-
             if p_base is None:
-                p_base = sparse_p(df)
-            df = append_intercept_coord(df, p_base)
+                p_base = V.sparse_p(df)
+            df = V.append_intercept_coord(df, p_base)
             extra["p"] = int(p_base) + 1
         elif p_base is not None:
             extra["p"] = int(p_base)
-        kw = {"max_iter": self.max_iter}
-        if self.solver == "admm":
-            kw.update(
-                regularizer=self.regularizer, lamduh=self.lamduh, rho=self.rho,
-                over_relax=self.over_relax, abstol=self.abstol, reltol=self.reltol,
-            )
-        else:
-            kw["tol"] = self.tol
-            if self.solver in ("lbfgs", "proximal_grad"):
-                kw.update(regularizer=self.regularizer, lamduh=self.lamduh)
-        kw.update(extra)
-        if self.warm_start and self._coef is not None:
-            kw.setdefault("init_beta", self._coef)
-        if self.weight_col is not None:
-            kw.setdefault("weight_col", self.weight_col)
-        if self.offset_col is not None:
-            kw.setdefault("offset_col", self.offset_col)
-        # setdefault RETURNS the existing dict when the caller passed
-        # their own fit_info through **extra, so diagnostics land in the
-        # dict the solver actually filled (ADVICE r10)
-        info = kw.setdefault("fit_info", {})
-        solver_fn = getattr(solvers, self._SPARSE_SOLVERS[self.solver])
-        self._coef = np.asarray(
-            solver_fn(df, family=self.family, label_col=self.label_col, **kw)
-        )
-        self.n_iter_ = info.get("n_iter")
-        self.converged_ = info.get("converged")
-        if self.fit_intercept:
-            self.coef_ = self._coef[:-1]
-            self.intercept_ = self._coef[-1]
-        else:
-            self.coef_ = self._coef
-        return self
+        return df
 
     def summary(self, df: DataFrame, robust: bool = False, coords=None):
         """Wald inference at the fitted coefficients — beyond-reference
@@ -704,8 +674,9 @@ class MulticlassLogisticRegression(_GLM):
 
     Wide-sparse features (round 13, VERDICT r12 #4): the same design —
     the (findices, fvalues) input is persisted ONCE and each per-class
-    binary fit runs through ``_SPARSE_SOLVERS`` over a lazily relabeled
-    view of that cache (``persist=False`` so k classes never means k
+    binary fit runs the solver's ``solvers.<solver>_sparse`` twin (the
+    binary ``fit``'s sparse branch) over a lazily relabeled view of that
+    cache (``persist=False`` so k classes never means k
     cached copies; ``sparse_p`` resolves the width once, not per class).
     Scoring composes from the ``_sparse_scores_df`` O(k·nnz) Arrow pass.
     """
@@ -773,7 +744,7 @@ class MulticlassLogisticRegression(_GLM):
             if sparse_in:
                 from dask_glm_spark.sources.vectors import sparse_p
 
-                # resolve the width ONCE — each per-class _fit_sparse would
+                # resolve the width ONCE — each per-class sparse fit would
                 # otherwise rerun the max-index scan
                 sparse_p_once = extra.pop("p", None) or sparse_p(df)
             # per-class warm start only when the class set is unchanged —
@@ -1039,12 +1010,26 @@ class SoftmaxRegression(MulticlassLogisticRegression):
             features_col=self.features_col, weight_col=self.weight_col,
         )
 
+    # estimator solver -> solvers.<name> (dense) / <name>_sparse
+    _SOFTMAX_SOLVERS = {
+        "lbfgs": "softmax_lbfgs",
+        "proximal_grad": "softmax_proximal",
+        "newton_cg": "softmax_newton_cg",
+    }
+
     def fit(self, df: DataFrame, y=None, **extra):
+        """Joint fit over a dense features array or wide-sparse
+        (findices, fvalues) columns (one O(k·nnz) fused scan per
+        evaluation, ``solvers.softmax_*_sparse``). Sparse fit_intercept
+        (round 12) appends a constant-1 coordinate at index p_base per row
+        — the binary ``_sparse_design``; standardization never applies to
+        sparse input (it would densify)."""
+        from dask_glm_spark.plans.layout import right_size_kernel_cache
         from dask_glm_spark.sources import vectors as V
 
         if V.is_vector_column(df, self.features_col):
             df = V.from_vector_column(df, self.features_col)
-        if self.solver not in ("lbfgs", "proximal_grad", "newton_cg"):
+        if self.solver not in self._SOFTMAX_SOLVERS:
             raise NotImplementedError(
                 "SoftmaxRegression supports solver in ('lbfgs', "
                 f"'proximal_grad', 'newton_cg'), got {self.solver!r}"
@@ -1056,34 +1041,53 @@ class SoftmaxRegression(MulticlassLogisticRegression):
                 "SoftmaxRegression does not support offset_col (an equal "
                 "per-class offset cancels in the softmax)"
             )
-        if V.is_sparse_columns(df):
-            return self._fit_softmax_sparse(df, **extra)
-        from pyspark import StorageLevel
-
-        from dask_glm_spark.plans.layout import ensure_min_parallelism
-
-        # Persist BEFORE class discovery (r14, guide §5/§2.4 — same
-        # rationale as the OvR parent and the sparse twin): an uncached
-        # featurizer input otherwise pays one derivation pass for the
-        # classes-distinct and another when the solver materializes its
-        # own cache. The solver is told persist=False; the relabel/
-        # intercept/standardize views scan this cache narrowly.
-        we_persisted = False
-        if not df.is_cached:
-            df = ensure_min_parallelism(df).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            we_persisted = True
-            extra.setdefault("persist", False)
-        try:
-            with kernels.kernel_exec(df.sparkSession):
-                classes = [
-                    r[0]
-                    for r in df.select(self.label_col)
-                    .distinct()
-                    .orderBy(self.label_col)
-                    .collect()
-                ]
+        sparse = V.is_sparse_columns(df)
+        # Persist BEFORE class discovery (r14, guide §5/§2.4): the input is
+        # typically an uncached featurizer derivation (fit_text_classifier's
+        # mapInPandas scan), which would otherwise run once for the
+        # classes job, once for a sparse width probe, and once more when
+        # the solver materializes its own cache. Persisting here makes the
+        # first of those jobs materialize the cache, so the featurize runs
+        # exactly once; the solver is told persist=False (the relabel /
+        # intercept / standardize views scan this cache through narrow
+        # projections — the OvR "k classes never means k cached copies"
+        # contract).
+        with solvers._cached(df) as (df, owned):
+            if owned:
+                extra["persist"] = False
+            if sparse:
+                df = self._sparse_design(df, extra)
+                extra.pop("normalize", None)
+                # class discovery as a grouped COUNT (same single job,
+                # same class set/order as a distinct) so the row count
+                # comes out for free — it sizes the kernel-cache coalesce
+                # view below (r14 pass 3, guide §2.2)
+                with kernels.kernel_exec(df.sparkSession):
+                    _crows = (
+                        df.groupBy(self.label_col)
+                        .agg(F.count("*").alias("_n"))
+                        .orderBy(self.label_col)
+                        .collect()
+                    )
+                classes = [r[0] for r in _crows]
+                if owned:
+                    # every evaluation is a python-boundary scan of this
+                    # cache — at small n each of its (core-count)
+                    # partitions is a separate python-worker round trip
+                    # (measured 0.40 -> 0.21 s/eval at bench shape). View
+                    # only; the cache itself is what gets unpersisted.
+                    df = right_size_kernel_cache(
+                        df, sum(r["_n"] for r in _crows)
+                    )
+            else:
+                with kernels.kernel_exec(df.sparkSession):
+                    classes = [
+                        r[0]
+                        for r in df.select(self.label_col)
+                        .distinct()
+                        .orderBy(self.label_col)
+                        .collect()
+                    ]
             if len(classes) < 2:
                 raise ValueError(f"need >= 2 classes, got {classes!r}")
             k = len(classes)
@@ -1097,160 +1101,25 @@ class SoftmaxRegression(MulticlassLogisticRegression):
                     "double"
                 ),
             )
-            dfi = self._maybe_add_intercept(dfi)
+            kw = dict(max_iter=self.max_iter, tol=self.tol,
+                      label_col=self.label_col)
+            if not sparse:
+                dfi = self._maybe_add_intercept(dfi)
+                kw["features_col"] = self.features_col
+            if self.solver != "newton_cg":
+                # newton_cg is pure MLE (the binary newton/newton_cg
+                # routing contract: no regularizer reaches it)
+                kw.update(regularizer=self.regularizer, lamduh=self.lamduh)
+            kw.update(extra)
             if self.warm_start and getattr(self, "classes_", None) == classes:
-                extra.setdefault("init_beta", np.column_stack(self._coefs))
+                kw.setdefault("init_beta", np.column_stack(self._coefs))
             if self.weight_col is not None:
-                extra.setdefault("weight_col", self.weight_col)
-            info = extra.setdefault("fit_info", {})
-            if self.solver == "newton_cg":
-                # pure-MLE path (the binary newton/newton_cg routing
-                # contract: no regularizer reaches these solvers)
-                B = solvers.softmax_newton_cg(
-                    dfi, k, max_iter=self.max_iter, tol=self.tol,
-                    features_col=self.features_col, label_col=self.label_col,
-                    **extra,
-                )
-            else:
-                solver_fn = (
-                    solvers.softmax_proximal
-                    if self.solver == "proximal_grad"
-                    else solvers.softmax_lbfgs
-                )
-                B = solver_fn(
-                    dfi,
-                    k,
-                    regularizer=self.regularizer,
-                    lamduh=self.lamduh,
-                    max_iter=self.max_iter,
-                    tol=self.tol,
-                    features_col=self.features_col,
-                    label_col=self.label_col,
-                    **extra,
-                )
-        finally:
-            if we_persisted:
-                df.unpersist()
-        self.classes_ = classes
-        self.n_iter_ = info.get("n_iter")
-        self.converged_ = info.get("converged")
-        self._coefs = [np.asarray(B[:, c]) for c in range(k)]
-        if self.fit_intercept:
-            self.coefs_ = np.stack([b[:-1] for b in self._coefs])
-            self.intercepts_ = np.array([b[-1] for b in self._coefs])
-        else:
-            self.coefs_ = np.stack(self._coefs)
-            self.intercepts_ = np.zeros(k)
-        return self
-
-    def _fit_softmax_sparse(self, df: DataFrame, **extra):
-        """Wide-sparse (findices/fvalues) multinomial fit: one O(k·nnz)
-        fused scan per L-BFGS evaluation (``solvers.softmax_lbfgs_sparse``).
-        fit_intercept (round 12) appends a constant-1 coordinate at index
-        p_base per row — the same densification-free trick as the binary
-        ``_fit_sparse``; standardization never applies (it would densify)."""
-        from pyspark import StorageLevel
-
-        from dask_glm_spark.plans.layout import ensure_min_parallelism
-
-        # Persist the (findices, fvalues, label) frame BEFORE class
-        # discovery and width probing (r14, guide §5/§2.4): the input is
-        # typically an uncached featurizer derivation (fit_text_classifier's
-        # mapInPandas scan), and the old order paid that derivation once
-        # for the classes-distinct, once for sparse_p when probing, and
-        # once more when _run_sparse materialized its own cache for the
-        # L-BFGS evaluations. Persisting here makes the first of those
-        # jobs materialize the cache, so the featurize runs exactly once;
-        # the solvers are told persist=False (intercept/relabel views
-        # scan this cache through narrow projections — the OvR "k classes
-        # never means k cached copies" contract).
-        base = df
-        we_persisted = False
-        if not df.is_cached:
-            base = ensure_min_parallelism(df).persist(
-                StorageLevel.MEMORY_AND_DISK
+                kw.setdefault("weight_col", self.weight_col)
+            info = kw.setdefault("fit_info", {})
+            name = self._SOFTMAX_SOLVERS[self.solver]
+            B = getattr(solvers, name + "_sparse" if sparse else name)(
+                dfi, k, **kw
             )
-            df = base
-            we_persisted = True
-            extra["persist"] = False
-        try:
-            p_base = extra.pop("p", None)
-            if self.fit_intercept:
-                from dask_glm_spark.sources.vectors import (
-                    append_intercept_coord,
-                    sparse_p,
-                )
-
-                if p_base is None:
-                    p_base = sparse_p(df)
-                df = append_intercept_coord(df, p_base)
-                extra["p"] = int(p_base) + 1
-            elif p_base is not None:
-                extra["p"] = int(p_base)
-            # class discovery as a grouped COUNT (same single job, same
-            # class set/order as the old distinct) so the row count comes
-            # out for free — it sizes the kernel-cache coalesce view below
-            # (r14 pass 3, guide §2.2)
-            with kernels.kernel_exec(df.sparkSession):
-                _crows = (
-                    df.groupBy(self.label_col)
-                    .agg(F.count("*").alias("_n"))
-                    .orderBy(self.label_col)
-                    .collect()
-                )
-            classes = [r[0] for r in _crows]
-            n_rows = int(sum(r["_n"] for r in _crows))
-            if len(classes) < 2:
-                raise ValueError(f"need >= 2 classes, got {classes!r}")
-            if we_persisted:
-                # every L-BFGS evaluation is a python-boundary scan of this
-                # cache — at small n each of its (core-count) partitions is
-                # a separate python-worker round trip (measured 0.40 ->
-                # 0.21 s/eval at bench shape). View only; `base` is still
-                # what gets unpersisted (r14 pass 3, guide §2.2).
-                from dask_glm_spark.plans.layout import (
-                    right_size_kernel_cache,
-                )
-
-                df = right_size_kernel_cache(df, n_rows)
-            k = len(classes)
-            cls_arr = F.array(*[F.lit(c) for c in classes])
-            dfi = df.withColumn(
-                self.label_col,
-                (F.array_position(cls_arr, F.col(self.label_col)) - 1).cast(
-                    "double"
-                ),
-            )
-            extra.pop("normalize", None)  # sparse path never standardizes
-            if self.warm_start and getattr(self, "classes_", None) == classes:
-                extra.setdefault("init_beta", np.column_stack(self._coefs))
-            if self.weight_col is not None:
-                extra.setdefault("weight_col", self.weight_col)
-            info = extra.setdefault("fit_info", {})
-            if self.solver == "newton_cg":
-                B = solvers.softmax_newton_cg_sparse(
-                    dfi, k, max_iter=self.max_iter, tol=self.tol,
-                    label_col=self.label_col, **extra,
-                )
-            else:
-                solver_fn = (
-                    solvers.softmax_proximal_sparse
-                    if self.solver == "proximal_grad"
-                    else solvers.softmax_lbfgs_sparse
-                )
-                B = solver_fn(
-                    dfi,
-                    k,
-                    regularizer=self.regularizer,
-                    lamduh=self.lamduh,
-                    max_iter=self.max_iter,
-                    tol=self.tol,
-                    label_col=self.label_col,
-                    **extra,
-                )
-        finally:
-            if we_persisted:
-                base.unpersist()
         self.classes_ = classes
         self.n_iter_ = info.get("n_iter")
         self.converged_ = info.get("converged")

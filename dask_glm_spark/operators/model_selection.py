@@ -46,6 +46,8 @@ def regularization_path(
     dense fit through the wrapper's ``_moments`` hook — the identical
     floats each per-fit scan would have produced, so standardization is
     bit-equal to a standalone call (pinned in tests/test_model_selection).
+    Wide-sparse (findices, fvalues) input runs the solver's ``*_sparse``
+    twin per λ (width probed once, never standardized).
 
     ``batched=True`` (round 13, proximal_grad only) runs every λ's ISTA
     state machine SIMULTANEOUSLY — one fused ``multi_loss_gradient``
@@ -63,52 +65,41 @@ def regularization_path(
     pinned bit-exactly against the sequential loops with shared numpy
     closures). Standardization is hoisted to ONE
     moments pass shared by all λ (same transform the per-fit pass would
-    compute — it is λ-independent). Dense and wide-sparse inputs.
+    compute — it is λ-independent). Dense and wide-sparse inputs in
+    both modes.
     """
     if solver not in _PATH_SOLVERS:
         raise ValueError(
             f"regularization_path supports solver in {_PATH_SOLVERS}, "
             f"got {solver!r}"
         )
-    if batched:
-        if solver != "proximal_grad":
-            raise ValueError(
-                "batched=True supports solver='proximal_grad' only, "
-                f"got {solver!r}"
-            )
-        lams_b = [float(v) for v in lamduhs]
-        if not lams_b:
-            raise ValueError("lamduhs must be non-empty")
-        if any(v < 0 for v in lams_b):
-            raise ValueError("lamduhs must be >= 0")
-        return _regularization_path_batched(
-            df, lams_b, regularizer, family, **kwargs
+    if batched and solver != "proximal_grad":
+        raise ValueError(
+            "batched=True supports solver='proximal_grad' only, "
+            f"got {solver!r}"
         )
-    lams = [float(v) for v in lamduhs]
-    if not lams:
-        raise ValueError("lamduhs must be non-empty")
-    if any(v < 0 for v in lams):
-        raise ValueError("lamduhs must be >= 0")
-    fn = solvers._solvers[solver]
+    lams = _lamduh_list(lamduhs)
+    if batched:
+        return _regularization_path_batched(
+            df, lams, regularizer, family, **kwargs
+        )
+    from dask_glm_spark.functions import kernels
+    from dask_glm_spark.plans.layout import right_size_kernel_cache
+    from dask_glm_spark.sources import vectors as V
 
-    from pyspark import StorageLevel
-
-    we_persisted = False
-    cached = None  # unpersist handle (df may be re-bound to a coalesce view)
-    if not df.is_cached:
-        # spread BEFORE caching (round 13) — the solvers' own @normalize
-        # persist is skipped on an already-cached frame, so a 3-split
-        # parquet would otherwise run every iteration scan 3-wide
-        df = ensure_min_parallelism(df)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = df
-        we_persisted = True
+    idx_col = kwargs.get("idx_col", "findices")
+    sparse = V.is_sparse_columns(df, idx_col, kwargs.get("val_col", "fvalues"))
+    # the solver for the input's layout, resolved through the module
+    fn = getattr(solvers, solver + "_sparse" if sparse else solver)
     # a caller-supplied fit_info would be shared (and silently
     # overwritten) by every per-λ fit — collect per-λ dicts instead,
     # returned in INPUT order under "per_lamduh"
     caller_info = kwargs.pop("fit_info", None)
     infos: list[dict] = [{} for _ in lams]
-    try:
+    # spread BEFORE caching (round 13) — the solvers' own persist is
+    # skipped on an already-cached frame, so a 3-split parquet would
+    # otherwise run every iteration scan 3-wide
+    with solvers._cached(df) as (df, owned):
         # r13 (guide §2.1: don't run identical passes twice): the per-fit
         # @normalize moments job is λ-INDEPENDENT — same cached frame, same
         # weight column — so ONE fused moments scan here seeds every fit
@@ -116,26 +107,24 @@ def regularization_path(
         # identical floats each per-fit scan would produce (the sweep goes
         # from len(lams) moments jobs to 1); copies are passed per fit
         # because the wrapper zeroes the intercept coordinate in place.
+        # Sparse fits never standardize; their width is probed once here.
         moments = None
-        if kwargs.get("normalize", True):
-            from dask_glm_spark.functions import kernels
-            from dask_glm_spark.sources import vectors as V
-
-            if not V.is_sparse_columns(df):
-                moments = kernels.column_moments_full(
-                    df,
-                    kwargs.get("features_col", "features"),
-                    weight_col=kwargs.get("weight_col"),
-                )
+        if sparse:
+            if not kwargs.get("p"):
+                kwargs["p"] = V.sparse_p(df, idx_col)
+        elif kwargs.get("normalize", True):
+            moments = kernels.column_moments_full(
+                df,
+                kwargs.get("features_col", "features"),
+                weight_col=kwargs.get("weight_col"),
+            )
         # r14 pass 3 (guide §2.2): the shared moments job materialized the
         # cache and yields n_rows — every per-λ fit's kernel evaluations
         # then run over a right-sized coalesce VIEW of it (see
         # plans.layout.right_size_kernel_cache; no-op at scale). persist is
         # forced off for the fits: a view is not ``is_cached``, and the
         # wrapper would otherwise build a second cache over this one.
-        if we_persisted and moments is not None:
-            from dask_glm_spark.plans.layout import right_size_kernel_cache
-
+        if owned and moments is not None:
             df = right_size_kernel_cache(df, moments[0])
             kwargs.setdefault("persist", False)
         order = sorted(range(len(lams)), key=lambda i: -lams[i])
@@ -165,9 +154,15 @@ def regularization_path(
         if caller_info is not None:
             caller_info["per_lamduh"] = infos
         return np.stack(betas)
-    finally:
-        if we_persisted:
-            cached.unpersist()
+
+
+def _lamduh_list(lamduhs) -> list[float]:
+    lams = [float(v) for v in lamduhs]
+    if not lams:
+        raise ValueError("lamduhs must be non-empty")
+    if any(v < 0 for v in lams):
+        raise ValueError("lamduhs must be >= 0")
+    return lams
 
 
 # Candidate budget per batched probe scan, spread across the λs still
@@ -375,16 +370,13 @@ def _batched_fista_core(multi_lg, p, lams, regularizer, max_iter, tol,
 
 
 def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
-    """Dispatch + standardization wrapper for the batched λ-path: persist
+    """Layout + standardization wrapper for the batched λ-path: persist
     once, hoist ONE moments pass (λ-independent — the same transform every
-    per-fit ``@normalize`` pass would compute), run the batched core in
-    the standardized space, back-transform every row exactly as
-    ``solvers.normalize`` does per fit. Wide-sparse (findices, fvalues)
-    input runs the O(k·nnz) sparse probe kernel and never standardizes
-    (the sparse-path contract)."""
-    from pyspark import StorageLevel
-
-    from dask_glm_spark.functions import kernels, kernels_sparse
+    per-fit ``@normalize`` pass would compute), run the batched core on
+    the input's layout in the standardized space, and back-transform
+    every row. Wide-sparse (findices, fvalues) input runs the O(k·nnz)
+    sparse probe kernel and never standardizes (the sparse-path
+    contract)."""
     from dask_glm_spark.sources import vectors as V
 
     features_col = kwargs.pop("features_col", "features")
@@ -407,89 +399,29 @@ def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
     infos: list[dict] = [{} for _ in lams]
     core = _batched_fista_core if accelerate else _batched_prox_core
     sparse = V.is_sparse_columns(df, idx_col, val_col)
-
-    we_persisted = False
-    if not df.is_cached:
-        df = ensure_min_parallelism(df)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        we_persisted = True
-    try:
+    with solvers._cached(df) as (df, _):
         if sparse:
-            pp = int(p) if p else V.sparse_p(df, idx_col)
-
-            def multi_lg(cands):
-                return kernels_sparse.multi_loss_gradient_sparse(
-                    df, family, cands, pp, idx_col, val_col, label_col,
-                    weight_col=weight_col, offset_col=offset_col,
-                )
-
-            out = core(
-                multi_lg, pp, lams, regularizer, max_iter, tol,
-                init_beta, infos,
+            # identity transform: sparse input never standardizes
+            stdz = solvers._Standardizer(
+                df, None, False, p=p or V.sparse_p(df, idx_col)
             )
-        elif not do_norm:
-            pp = int(p) if p else kernels.infer_p(df, features_col)
-
-            def multi_lg(cands):
-                return kernels.multi_loss_gradient(
-                    df, family, cands, features_col, label_col,
-                    weight_col=weight_col, offset_col=offset_col,
-                )
-
-            out = core(
-                multi_lg, pp, lams, regularizer, max_iter, tol,
-                init_beta, infos,
-            )
+            layout = dict(idx_col=idx_col, val_col=val_col)
         else:
-            # solvers.normalize's exact quirks, hoisted once: population
-            # std, >1 constant column raises, no-constant-column means
-            # scale-only standardization
-            _, mean, std = kernels.column_moments_full(
-                df, features_col, weight_col=weight_col
+            stdz = solvers._Standardizer(
+                df, features_col, do_norm, weight_col, p=p
             )
-            pp = len(mean)
-            intercept_idx = np.where(std == 0)[0]
-            if len(intercept_idx) > 1:
-                raise ValueError("Multiple constant columns detected!")
-            mean[intercept_idx] = 0
-            std[intercept_idx] = 1
-            if len(intercept_idx) == 0:
-                mean = np.zeros_like(mean)
-            ib = init_beta
-            if ib is not None:
-                ib = np.asarray(ib, dtype=np.float64).ravel()
-                if ib.shape != std.shape:
-                    raise ValueError(
-                        f"init_beta must have shape {std.shape}, got {ib.shape}"
-                    )
-                ib_std = ib * std
-                ib_std[intercept_idx] += np.sum(ib * mean)
-                ib = ib_std
-            dfn = df.withColumn(
-                features_col,
-                kernels.standardize_expr(mean, std, features_col),
-            )
-
-            def multi_lg(cands):
-                return kernels.multi_loss_gradient(
-                    dfn, family, cands, features_col, label_col,
-                    weight_col=weight_col, offset_col=offset_col,
-                )
-
-            out = core(
-                multi_lg, pp, lams, regularizer, max_iter, tol, ib, infos,
-            )
-            # per-row inverse of solvers.normalize's back-transform
-            for b in out:
-                i_adj = np.sum(b * mean / std)
-                b[intercept_idx] -= i_adj
-                b /= std
+            layout = dict(features_col=features_col)
+        lay = solvers._Layout(
+            stdz.view, stdz.p, label_col, family, weight_col, offset_col,
+            **layout,
+        )
+        out = core(
+            lay.multi_loss_grad, lay.p, lams, regularizer, max_iter, tol,
+            stdz.forward(init_beta), infos,
+        )
         if caller_info is not None:
             caller_info["per_lamduh"] = infos
-        return out
-    finally:
-        if we_persisted:
-            df.unpersist()
+        return np.stack([stdz.backward(b) for b in out])
 
 
 def softmax_regularization_path(
@@ -516,27 +448,13 @@ def softmax_regularization_path(
     ``solvers._fista_loop``'s (the loop ``softmax_proximal`` runs), so
     each row lands on the cold standalone fit's optimum; ``warm`` is
     ignored. Dense features only (the ``softmax_proximal`` scope)."""
-    lams = [float(v) for v in lamduhs]
-    if not lams:
-        raise ValueError("lamduhs must be non-empty")
-    if any(v < 0 for v in lams):
-        raise ValueError("lamduhs must be >= 0")
+    lams = _lamduh_list(lamduhs)
     if batched:
         return _softmax_path_batched(df, lams, k, regularizer, **kwargs)
-
-    from pyspark import StorageLevel
-
-    we_persisted = False
-    if not df.is_cached:
-        # spread BEFORE caching (round 13) — the solvers' own @normalize
-        # persist is skipped on an already-cached frame, so a 3-split
-        # parquet would otherwise run every iteration scan 3-wide
-        df = ensure_min_parallelism(df)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        we_persisted = True
     caller_info = kwargs.pop("fit_info", None)
     infos: list[dict] = [{} for _ in lams]
-    try:
+    # spread BEFORE caching (see regularization_path)
+    with solvers._cached(df) as (df, _):
         order = sorted(range(len(lams)), key=lambda i: -lams[i])
         betas: list[np.ndarray | None] = [None] * len(lams)
         prev = None
@@ -556,23 +474,17 @@ def softmax_regularization_path(
         if caller_info is not None:
             caller_info["per_lamduh"] = infos
         return np.stack(betas)
-    finally:
-        if we_persisted:
-            df.unpersist()
 
 
 def _softmax_path_batched(df, lams, k, regularizer, **kwargs):
-    """Batched multinomial λ-path: one ``_SoftmaxStandardizer`` pass
-    hoisted for all λ (the same λ-independent transform each
-    ``softmax_proximal`` call would compute), then ``_batched_fista_core``
-    over the flattened (p·k) vectors with ONE
-    ``softmax_multi_loss_gradient`` scan per evaluation round. Probe
-    scans ride the same kernel (gradients along unused — the sparse
-    sequential FISTA convention), so the per-scan partial is
+    """Batched multinomial λ-path: one ``_Standardizer`` pass hoisted for
+    all λ (the same λ-independent transform each ``softmax_proximal`` call
+    would compute), then ``_batched_fista_core`` over the flattened (p·k)
+    vectors with ONE ``softmax_multi_loss_gradient`` scan per evaluation
+    round. Probe scans ride the same kernel (gradients along unused — the
+    sparse sequential FISTA convention), so the per-scan partial is
     c·(1 + p·k) doubles; the candidate budget caps c at
     ``_BATCH_PROBE_TOTAL``."""
-    from pyspark import StorageLevel
-
     from dask_glm_spark.functions import kernels
 
     features_col = kwargs.pop("features_col", "features")
@@ -588,41 +500,29 @@ def _softmax_path_batched(df, lams, k, regularizer, **kwargs):
             f"unexpected keyword arguments for batched path: {sorted(kwargs)}"
         )
     infos: list[dict] = [{} for _ in lams]
-    we_persisted = False
-    if not df.is_cached:
-        df = ensure_min_parallelism(df)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        we_persisted = True
-    try:
-        stdz = solvers._SoftmaxStandardizer(
-            df, features_col, weight_col, normalize
+    with solvers._cached(df) as (df, _):
+        stdz = solvers._Standardizer(
+            df, features_col, normalize, weight_col
         )
-        p, dfn = stdz.p, stdz.dfn
-        b0 = stdz.forward(init_beta, k)
+        p = stdz.p
 
         def multi_lg(cands):
             return kernels.softmax_multi_loss_gradient(
-                dfn,
+                stdz.view,
                 [np.asarray(c, dtype=np.float64).reshape(p, k) for c in cands],
                 features_col, label_col, weight_col=weight_col,
             )
 
         flat = _batched_fista_core(
-            multi_lg, p * k, lams, regularizer, max_iter, tol, b0, infos,
+            multi_lg, p * k, lams, regularizer, max_iter, tol,
+            stdz.forward(init_beta, k), infos,
         )
         if caller_info is not None:
             caller_info["per_lamduh"] = infos
-        return np.stack(
-            [
-                stdz.backward(
-                    np.asarray(v, dtype=np.float64).reshape(p, k)
-                )
-                for v in flat
-            ]
-        )
-    finally:
-        if we_persisted:
-            df.unpersist()
+        return np.stack([
+            stdz.backward(np.asarray(v, dtype=np.float64).reshape(p, k))
+            for v in flat
+        ])
 
 
 def cv_fold_column(
@@ -679,9 +579,7 @@ def cv_lamduh(
 
     from dask_glm_spark.functions import kernels
 
-    lams = [float(v) for v in lamduhs]
-    if not lams:
-        raise ValueError("lamduhs must be non-empty")
+    lams = _lamduh_list(lamduhs)
 
     # held-out scoring must use the SAME objective the fits minimize
     # (review r12): weighted fits score by the weighted per-unit NLL
@@ -771,9 +669,7 @@ def softmax_cv_lamduh(
 
     from dask_glm_spark.functions import kernels
 
-    lams = [float(v) for v in lamduhs]
-    if not lams:
-        raise ValueError("lamduhs must be non-empty")
+    lams = _lamduh_list(lamduhs)
     weight_col = kwargs.get("weight_col")
     folded = ensure_min_parallelism(
         cv_fold_column(df, n_folds, features_col, label_col)

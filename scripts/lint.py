@@ -13,7 +13,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAX_LINE = 100
 # Directories holding first-party python worth linting.
-SCOPES = ["dask_glm_spark", "tests", "examples", "scripts"]
+SCOPES = ["dask_glm_spark", "tests", "examples", "scripts", "glmbench"]
 TOP_FILES = ["bench.py", "__spark_entry__.py", "setup.py"]
 
 

@@ -6,9 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 
 from dask_glm_spark import (
     LogisticRegression,
@@ -33,7 +32,9 @@ def data(spark):
 @pytest.mark.parametrize(
     "name,kw",
     [
-        ("gradient_descent", dict(max_iter=50)),
+        pytest.param(
+            "gradient_descent", dict(max_iter=50), marks=pytest.mark.slow
+        ),
         ("newton", dict(max_iter=50)),
         ("lbfgs", dict(regularizer=None, max_iter=200)),
         ("proximal_grad", dict(regularizer="l2", lamduh=0.1, max_iter=200)),
@@ -41,7 +42,10 @@ def data(spark):
             "proximal_grad",
             dict(regularizer="l2", lamduh=0.1, max_iter=200, accelerate=True),
         ),
-        ("admm", dict(regularizer="l2", lamduh=0.1, max_iter=100)),
+        pytest.param(
+            "admm", dict(regularizer="l2", lamduh=0.1, max_iter=100),
+            marks=pytest.mark.slow,
+        ),
     ],
 )
 def test_solver_fit_info(data, name, kw):
@@ -61,6 +65,7 @@ def test_budget_exhausted_reports_not_converged(data):
     assert info == {"n_iter": 1, "converged": False}
 
 
+@pytest.mark.slow
 def test_estimator_diagnostics(data):
     est = LogisticRegression(solver="lbfgs", regularizer=None,
                              max_iter=200).fit(data)
@@ -70,6 +75,7 @@ def test_estimator_diagnostics(data):
     assert est.converged_ is True and est.n_iter_ >= 1
 
 
+@pytest.mark.slow
 def test_multiclass_diagnostics(spark):
     df, *_ = make_classification(
         spark, n_samples=300, n_features=3, seed=99, npartitions=3
@@ -89,6 +95,7 @@ def test_multiclass_diagnostics(spark):
         df.unpersist()
 
 
+@pytest.mark.slow
 def test_lamduh_max_kills_all_coefficients(data):
     lmax = lamduh_max(data)
     assert lmax > 0

@@ -6,9 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 
 from dask_glm_spark.operators import solvers
 from dask_glm_spark.operators.model_selection import regularization_path
@@ -25,6 +24,7 @@ def data(spark):
     df.unpersist()
 
 
+@pytest.mark.slow
 def test_path_matches_cold_fits(data):
     lams = [2.0, 0.5, 0.1]
     path = regularization_path(
@@ -40,6 +40,7 @@ def test_path_matches_cold_fits(data):
         np.testing.assert_allclose(warm_beta, cold, atol=5e-4, rtol=0)
 
 
+@pytest.mark.slow
 def test_path_l1_sparsity_monotone(data):
     # heavier λ → no fewer zeros; a big-enough λ kills every coefficient
     lams = [1000.0, 5.0, 0.01]
@@ -52,6 +53,7 @@ def test_path_l1_sparsity_monotone(data):
     assert nnz[0] <= nnz[1] <= nnz[2]
 
 
+@pytest.mark.slow
 def test_path_input_order_preserved(data):
     lams = [0.1, 2.0]  # ascending input; fits run descending internally
     path = regularization_path(
@@ -63,6 +65,7 @@ def test_path_input_order_preserved(data):
     np.testing.assert_allclose(path[0], direct_01, atol=1e-3, rtol=0)
 
 
+@pytest.mark.slow
 def test_path_hoisted_moments_bit_exact(data):
     """r13: regularization_path seeds every fit's @normalize with ONE
     shared moments scan (the ``_moments`` hook) instead of a per-fit
@@ -93,6 +96,7 @@ def test_path_validation(data):
         regularization_path(data, [-1.0])
 
 
+@pytest.mark.slow
 def test_path_warm_equals_cold_sweep(data):
     # warm=False is the A/B face: same answers, independent starts
     lams = [1.0, 0.2]
@@ -110,6 +114,7 @@ def test_path_warm_equals_cold_sweep(data):
 # ---------------------------------------------------------------------------
 # round 12: CV λ selection (cv.glmnet analogue)
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_cv_lamduh_selects_small_lambda_on_informative_data(data):
     """On clearly informative data, a tiny λ must beat a CRUSHING one on
     held-out NLL, and the returned artifacts have the declared shapes.
@@ -135,6 +140,7 @@ def test_cv_lamduh_selects_small_lambda_on_informative_data(data):
     assert np.abs(out["betas"][1]).max() > 1e-3
 
 
+@pytest.mark.slow
 def test_cv_lamduh_deterministic_across_partitionings(data):
     """Content-hash folds: identical losses regardless of layout."""
     from dask_glm_spark.operators.model_selection import cv_lamduh
@@ -151,6 +157,7 @@ def test_cv_lamduh_deterministic_across_partitionings(data):
     assert a["best_lamduh"] == b["best_lamduh"]
 
 
+@pytest.mark.slow
 def test_cv_lamduh_wiring_matches_manual_loop(spark, data):
     """Integration twin: the per-fold held-out losses equal a manual
     regularization_path + kernels.multi_loss loop over the same
@@ -194,6 +201,7 @@ def test_cv_lamduh_validation(data):
         cv_lamduh(data, [0.1], n_folds=1)
 
 
+@pytest.mark.slow
 def test_cv_lamduh_weighted_scoring(spark, data):
     """Review r12: held-out scoring must use the SAME weighted objective
     the fits minimize — fold losses equal the manual weighted
@@ -234,6 +242,7 @@ def test_cv_lamduh_weighted_scoring(spark, data):
         )
 
 
+@pytest.mark.slow
 def test_softmax_regularization_path(spark):
     """Multinomial λ-path: monotone sparsity along descending λ, warm ≡
     cold endpoints, input order preserved."""
@@ -305,6 +314,7 @@ def softmax_cv_data(spark):
     df.unpersist()
 
 
+@pytest.mark.slow
 def test_softmax_cv_lamduh_selects_small_lambda(softmax_cv_data):
     from dask_glm_spark.operators.model_selection import softmax_cv_lamduh
 
@@ -323,6 +333,7 @@ def test_softmax_cv_lamduh_selects_small_lambda(softmax_cv_data):
     assert np.abs(out["betas"][1]).max() > 1e-3
 
 
+@pytest.mark.slow
 def test_softmax_cv_lamduh_deterministic_across_layouts(softmax_cv_data):
     from dask_glm_spark.operators.model_selection import softmax_cv_lamduh
 
@@ -339,6 +350,7 @@ def test_softmax_cv_lamduh_deterministic_across_layouts(softmax_cv_data):
     assert a["best_lamduh"] == b["best_lamduh"]
 
 
+@pytest.mark.slow
 def test_softmax_cv_lamduh_matches_manual_loop(softmax_cv_data):
     """Integration twin: per-fold held-out losses equal a manual
     softmax_regularization_path + softmax_multi_loss loop over the same
@@ -374,6 +386,7 @@ def test_softmax_cv_lamduh_matches_manual_loop(softmax_cv_data):
         )
 
 
+@pytest.mark.slow
 def test_softmax_cv_lamduh_weighted_scoring(spark, softmax_cv_data):
     """weight_col routes into BOTH the fold fits and the held-out
     scoring: per-unit weighted NLL Σw·ll/Σw."""
@@ -417,6 +430,7 @@ def test_softmax_cv_lamduh_weighted_scoring(spark, softmax_cv_data):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_batched_path_matches_sequential_cold(data):
     # batched runs the EXACT per-λ _prox_loop policy, so it must land on
     # the same points as the cold (warm=False) sequential sweep
@@ -432,6 +446,7 @@ def test_batched_path_matches_sequential_cold(data):
     np.testing.assert_allclose(bat, seq, atol=1e-6, rtol=0)
 
 
+@pytest.mark.slow
 def test_batched_path_no_normalize_matches_sequential(data):
     lams = [0.3, 0.05]
     kw = dict(regularizer="l1", max_iter=200, tol=1e-10, normalize=False)
@@ -444,18 +459,22 @@ def test_batched_path_no_normalize_matches_sequential(data):
     np.testing.assert_allclose(bat, seq, atol=1e-6, rtol=0)
 
 
-def test_batched_path_sparse_matches_dense(data):
+@pytest.mark.parametrize("batched", [True, False])
+@pytest.mark.slow
+def test_batched_path_sparse_matches_dense(data, batched):
+    # both path modes run wide-sparse input on the sparse solver body
+    # (sequential: proximal_grad_sparse per λ)
     from dask_glm_spark.sources.vectors import to_sparse_columns
 
     lams = [0.3, 0.05]
     kw = dict(regularizer="l1", max_iter=200, tol=1e-10)
     dense = regularization_path(
-        data, lams, solver="proximal_grad", batched=True,
+        data, lams, solver="proximal_grad", batched=batched,
         normalize=False, **kw
     )
     sdf = to_sparse_columns(data.select("features", "label"))
     sparse = regularization_path(
-        sdf, lams, solver="proximal_grad", batched=True, **kw
+        sdf, lams, solver="proximal_grad", batched=batched, **kw
     )
     np.testing.assert_allclose(sparse, dense, atol=1e-8, rtol=0)
 
@@ -482,6 +501,7 @@ def test_batched_path_fit_info_and_validation(data):
         regularization_path(data, [-0.1], batched=True)
 
 
+@pytest.mark.slow
 def test_cv_lamduh_batched_forwarding(data):
     # batched=True rides **kwargs into every per-fold path AND the
     # full-data refit — selection still lands on the informative λ
@@ -581,6 +601,7 @@ def test_batched_fista_core_bitwise_mirrors_fista_loop():
     assert all({"n_iter", "converged"} <= set(d) for d in infos)
 
 
+@pytest.mark.slow
 def test_batched_path_accelerate_matches_sequential(data):
     # Spark integration: batched+accelerate lands on the same optima as
     # the cold sequential FISTA sweep
@@ -598,6 +619,7 @@ def test_batched_path_accelerate_matches_sequential(data):
     np.testing.assert_allclose(bat, seq, atol=1e-6, rtol=0)
 
 
+@pytest.mark.slow
 def test_softmax_cv_lamduh_batched_forwarding(softmax_cv_data):
     # batched=True rides **kwargs into every per-fold softmax path and
     # the full-data refit

@@ -9,9 +9,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 
 from dask_glm_spark.operators import solvers
 from dask_glm_spark.operators.estimators import SoftmaxRegression
@@ -85,6 +84,7 @@ def _objective(B, X, y, lam):
     return loss + lam * np.abs(B).sum()
 
 
+@pytest.mark.slow
 def test_softmax_fista_objective_matches_numpy_twin(data):
     df, X, y = data
     info: dict = {}
@@ -100,6 +100,7 @@ def test_softmax_fista_objective_matches_numpy_twin(data):
     assert info["n_iter"] >= 1
 
 
+@pytest.mark.slow
 def test_softmax_prox_sparse_matches_dense(data):
     df, X, y = data
     sd = V.to_sparse_columns(df)
@@ -113,6 +114,7 @@ def test_softmax_prox_sparse_matches_dense(data):
     np.testing.assert_allclose(Bs, Bd, atol=1e-6)
 
 
+@pytest.mark.slow
 def test_softmax_l1_zeroes_noise_features(data):
     """Feature selection: with a meaningful λ the 4 noise rows of B are
     EXACTLY zero (the soft-threshold's raison d'être) while the 2
@@ -128,6 +130,7 @@ def test_softmax_l1_zeroes_noise_features(data):
     assert (noise == 0.0).sum() >= 3  # at least 3 of 4 noise rows exact-zero
 
 
+@pytest.mark.slow
 def test_estimator_proximal_grad_dispatch(data):
     df, X, y = data
     est = SoftmaxRegression(
@@ -149,6 +152,7 @@ def test_estimator_proximal_grad_dispatch(data):
     np.testing.assert_allclose(est2.coefs_, b1, atol=1e-4)
 
 
+@pytest.mark.slow
 def test_estimator_proximal_grad_sparse_dispatch(data):
     df, X, y = data
     sd = V.to_sparse_columns(df)
@@ -199,6 +203,7 @@ def test_softmax_multi_loss_gradient_kernels_match(data):
     assert np.array_equal(dg[:, 0], np.ravel(g1))
 
 
+@pytest.mark.slow
 def test_softmax_path_batched_matches_sequential(data):
     from dask_glm_spark.operators.model_selection import (
         softmax_regularization_path,
@@ -217,6 +222,7 @@ def test_softmax_path_batched_matches_sequential(data):
     np.testing.assert_allclose(bat, seq, atol=5e-5, rtol=0)
 
 
+@pytest.mark.slow
 def test_softmax_lamduh_max_kills_all_coefficients(data):
     from dask_glm_spark.operators.model_selection import softmax_lamduh_max
 
