@@ -1300,8 +1300,11 @@ def softmax_multi_loss_gradient(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(losses (c,), gradients (p·k, c)) for c candidate (p, k) softmax
     matrices in ONE scan — the multinomial twin of ``multi_loss_gradient``
-    (round 13: the batched-λ FISTA path evaluates every λ's extrapolated
-    point together). Per candidate the arithmetic is
+    (round 13): the point and probe surface of the batched softmax λ-path,
+    which runs ``solvers._fista`` over every λ's extrapolated point and
+    probe candidates together (dense features only; a single
+    ``softmax_proximal`` fit calls ``softmax_loss_gradient`` and
+    ``softmax_multi_loss`` instead). Per candidate the arithmetic is
     ``softmax_loss_gradient``'s closure (two GEMMs + stable logsumexp),
     so the c=1 column is bit-identical to the single-candidate kernel;
     partials are c·(1 + p·k) doubles per partition."""

@@ -55,18 +55,16 @@ def regularization_path(
     worth of scans per λ. At 100 TB the path's cost is passes over the
     data, and batching divides them by ~len(lamduhs): the sequential
     sweep pays Σ_i iters(λ_i) scans, the batched sweep max_i iters(λ_i)
-    (each scan carrying every active λ's probe candidates). Per-λ update
-    policy, acceptance, and stopping are EXACTLY ``_prox_loop``'s, so
-    each row converges to the same point as a cold standalone fit
-    (``warm`` is ignored — λs no longer chain; parity pinned in
-    tests/test_model_selection.py). ``accelerate=True`` composes: the
-    batched core then mirrors ``_fista_loop`` per λ (momentum,
-    majorization acceptance, full-objective stopping — both mirrors are
-    pinned bit-exactly against the sequential loops with shared numpy
-    closures). Standardization is hoisted to ONE
-    moments pass shared by all λ (same transform the per-fit pass would
-    compute — it is λ-independent). Dense and wide-sparse inputs in
-    both modes.
+    (each scan carrying every active λ's probe candidates). The batched
+    path and a single ``proximal_grad`` fit run the same body
+    (``solvers._ista``, or ``_fista`` with ``accelerate=True``: momentum,
+    majorization acceptance, full-objective stopping) — a single fit is
+    its one-λ case — so each row converges to the same point as a cold
+    standalone fit (``warm`` is ignored — λs no longer chain; parity
+    pinned in tests/test_model_selection.py). Standardization is hoisted
+    to ONE moments pass shared by all λ (same transform the per-fit pass
+    would compute — it is λ-independent). Dense and wide-sparse inputs
+    in both modes.
     """
     if solver not in _PATH_SOLVERS:
         raise ValueError(
@@ -171,212 +169,15 @@ def _lamduh_list(lamduhs) -> list[float]:
 _BATCH_PROBE_TOTAL = 32
 
 
-def _batched_prox_core(multi_lg, p, lams, regularizer, max_iter, tol,
-                       init_beta, infos):
-    """Every λ's ISTA state machine advanced by shared fused scans.
-
-    Per-λ policy is byte-for-byte ``solvers._prox_loop``'s (same
-    backtracking sequence s·mult^k, same first-simple-decrease
-    acceptance, same step growth/underflow/relative-decrease stopping, and
-    the accepted candidate's gradient feeds its next iteration) — the
-    batching ONLY changes which scan evaluates a candidate, never which
-    candidate is accepted: within an iteration the probe sequence is
-    deterministic, so candidates can be co-evaluated speculatively across
-    λ without reading each other's results. One multi_loss_gradient scan
-    per probe round serves every active λ.
-    """
-    from dask_glm_spark.functions.regularizers import Regularizer
-
-    reg = Regularizer.get(regularizer)
-    L = len(lams)
-    first_backtrack, next_backtrack = 0.1, 0.5
-    step_growth = 1.25
-    beta0 = solvers._init_vec(init_beta, p)
-    betas = [beta0.copy() for _ in range(L)]
-    steps = [1.0] * L
-    bmult = [first_backtrack] * L
-    done = [False] * L
-    conv = [False] * L
-    iters = [0] * L
-    # one scan: loss+gradient at every starting β (identical starts give
-    # identical columns — per-candidate results are column-independent)
-    losses0, grads0 = multi_lg(betas)
-    funcs = [float(losses0[i]) for i in range(L)]
-    gradv = [np.asarray(grads0[:, i], dtype=np.float64) for i in range(L)]
-    for _ in range(max_iter):
-        active = [i for i in range(L) if not done[i]]
-        if not active:
-            break
-        for i in active:
-            iters[i] += 1
-        # per-λ backtracking state for THIS iteration
-        obeta = {i: betas[i] for i in active}
-        lf = {i: funcs[i] for i in active}
-        ograd = {i: gradv[i] for i in active}
-        nexti = {i: 0 for i in active}       # next candidate index to probe
-        accepted: dict[int, bool] = {}
-        searching = list(active)
-        while searching:
-            cpl = max(1, _BATCH_PROBE_TOTAL // len(searching))
-            batch: list[tuple[int, float, np.ndarray]] = []
-            for i in searching:
-                hi = min(nexti[i] + cpl, solvers.MAX_BACKTRACKS)
-                for k in range(nexti[i], hi):
-                    s = steps[i] * bmult[i] ** k
-                    cand = reg.proximal_operator(
-                        obeta[i] - s * ograd[i], s * lams[i]
-                    )
-                    batch.append((i, s, cand))
-                nexti[i] = hi
-            losses_b, grads_b = multi_lg([c for _, _, c in batch])
-            next_searching = []
-            pos_by_i: dict[int, list[int]] = {}
-            for pos, (i, _, _) in enumerate(batch):
-                pos_by_i.setdefault(i, []).append(pos)
-            for i in searching:
-                found = False
-                for pos in pos_by_i[i]:
-                    _, s, cand = batch[pos]
-                    fval = float(losses_b[pos])
-                    # mirror _prox_loop: every examined candidate becomes
-                    # the iterate until one is accepted
-                    betas[i] = cand
-                    funcs[i] = fval
-                    gradv[i] = np.asarray(grads_b[:, pos], dtype=np.float64)
-                    if lf[i] - fval > 0:
-                        steps[i] = s
-                        found = True
-                        break
-                if found:
-                    accepted[i] = True
-                elif nexti[i] < solvers.MAX_BACKTRACKS:
-                    next_searching.append(i)
-                else:
-                    accepted[i] = False
-                    steps[i] = s  # last probed size (_prox_loop's for-else)
-            searching = next_searching
-        for i in active:
-            if steps[i] == 0:
-                done[i] = True  # step underflow: _prox_loop's hard break
-                continue
-            df_rel = (lf[i] - funcs[i]) / max(funcs[i], lf[i])
-            if df_rel < tol:
-                conv[i] = True
-                done[i] = True
-                continue
-            steps[i] *= step_growth
-            bmult[i] = next_backtrack
-    for i in range(L):
-        solvers._fill_info(infos[i], iters[i], conv[i])
-    return np.stack(betas)
-
-
-def _batched_fista_core(multi_lg, p, lams, regularizer, max_iter, tol,
-                        init_beta, infos):
-    """Every λ's FISTA state machine advanced by shared fused scans — the
-    accelerated twin of ``_batched_prox_core`` (``solvers._fista_loop``'s
-    per-λ policy byte-for-byte: the extrapolated-point gradient, the
-    0.5^i backtracking sequence, the majorization acceptance test, the
-    Nesterov momentum update, and the full-objective stopping rule).
-    Per outer iteration: ONE multi_lg scan evaluates every active λ's
-    extrapolated point, then shared probe scans carry every
-    still-searching λ's candidates (probe losses read from the same
-    multi_lg — the sparse sequential FISTA's convention; gradients ride
-    along unused)."""
-    from dask_glm_spark.functions.regularizers import Regularizer
-
-    reg = Regularizer.get(regularizer)
-    L = len(lams)
-    x0 = solvers._init_vec(init_beta, p)
-    xs = [x0.copy() for _ in range(L)]
-    ys = [x0.copy() for _ in range(L)]
-    ts = [1.0] * L
-    steps = [1.0] * L
-    fprev: list[float | None] = [None] * L
-    done = [False] * L
-    conv = [False] * L
-    iters = [0] * L
-    for _ in range(max_iter):
-        active = [i for i in range(L) if not done[i]]
-        if not active:
-            break
-        for i in active:
-            iters[i] += 1
-        fys, gys = multi_lg([ys[i] for i in active])
-        fy = {i: float(fys[j]) for j, i in enumerate(active)}
-        gy = {
-            i: np.asarray(gys[:, j], dtype=np.float64)
-            for j, i in enumerate(active)
-        }
-        nexti = {i: 0 for i in active}
-        result: dict[int, tuple | None] = {}
-        searching = list(active)
-        while searching:
-            cpl = max(1, _BATCH_PROBE_TOTAL // len(searching))
-            batch: list[tuple[int, float, np.ndarray]] = []
-            for i in searching:
-                hi = min(nexti[i] + cpl, solvers.MAX_BACKTRACKS)
-                for kk in range(nexti[i], hi):
-                    s = steps[i] * (0.5 ** kk)
-                    cand = reg.proximal_operator(
-                        ys[i] - s * gy[i], s * lams[i]
-                    )
-                    batch.append((i, s, cand))
-                nexti[i] = hi
-            losses_b, _ = multi_lg([c for _, _, c in batch])
-            pos_by_i: dict[int, list[int]] = {}
-            for pos, (i, _, _) in enumerate(batch):
-                pos_by_i.setdefault(i, []).append(pos)
-            nxt = []
-            for i in searching:
-                found = False
-                for pos in pos_by_i[i]:
-                    _, s, cand = batch[pos]
-                    fval = float(losses_b[pos])
-                    d = cand - ys[i]
-                    if fval <= fy[i] + gy[i] @ d + (d @ d) / (2.0 * s):
-                        result[i] = (cand, fval, s)
-                        found = True
-                        break
-                if found:
-                    continue
-                if nexti[i] < solvers.MAX_BACKTRACKS:
-                    nxt.append(i)
-                else:
-                    result[i] = None
-            searching = nxt
-        for i in active:
-            r = result[i]
-            if r is None:
-                done[i] = True  # step underflow: y_i is numerically fixed
-                continue
-            xn, fx, s = r
-            steps[i] = s
-            tn = (1.0 + np.sqrt(1.0 + 4.0 * ts[i] * ts[i])) / 2.0
-            ys[i] = xn + ((ts[i] - 1.0) / tn) * (xn - xs[i])
-            xs[i], ts[i] = xn, tn
-            fobj = fx + lams[i] * reg.f(xn)
-            if fprev[i] is not None and abs(fprev[i] - fobj) / max(
-                abs(fobj), abs(fprev[i]), 1.0
-            ) < tol:
-                conv[i] = True
-                done[i] = True
-                continue
-            fprev[i] = fobj
-            steps[i] *= 1.25
-    for i in range(L):
-        solvers._fill_info(infos[i], iters[i], conv[i])
-    return np.stack(xs)
-
-
 def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
     """Layout + standardization wrapper for the batched λ-path: persist
     once, hoist ONE moments pass (λ-independent — the same transform every
-    per-fit ``@normalize`` pass would compute), run the batched core on
-    the input's layout in the standardized space, and back-transform
-    every row. Wide-sparse (findices, fvalues) input runs the O(k·nnz)
-    sparse probe kernel and never standardizes (the sparse-path
-    contract)."""
+    per-fit ``@normalize`` pass would compute), run ``solvers._ista`` /
+    ``_fista`` over all λs on the input's layout in the standardized
+    space (``multi_loss_grad`` as point and probe surface,
+    ``_BATCH_PROBE_TOTAL`` candidates per scan), and back-transform every
+    row. Wide-sparse (findices, fvalues) input runs the O(k·nnz) sparse
+    probe kernel and never standardizes (the sparse-path contract)."""
     from dask_glm_spark.sources import vectors as V
 
     features_col = kwargs.pop("features_col", "features")
@@ -397,7 +198,7 @@ def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
             f"unexpected keyword arguments for batched path: {sorted(kwargs)}"
         )
     infos: list[dict] = [{} for _ in lams]
-    core = _batched_fista_core if accelerate else _batched_prox_core
+    body = solvers._fista if accelerate else solvers._ista
     sparse = V.is_sparse_columns(df, idx_col, val_col)
     with solvers._cached(df) as (df, _):
         if sparse:
@@ -415,9 +216,10 @@ def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
             stdz.view, stdz.p, label_col, family, weight_col, offset_col,
             **layout,
         )
-        out = core(
-            lay.multi_loss_grad, lay.p, lams, regularizer, max_iter, tol,
-            stdz.forward(init_beta), infos,
+        out = body(
+            lay.multi_loss_grad, lay.multi_loss_grad, lay.p, regularizer,
+            lams, max_iter, tol, stdz.forward(init_beta), infos,
+            _BATCH_PROBE_TOTAL,
         )
         if caller_info is not None:
             caller_info["per_lamduh"] = infos
@@ -441,20 +243,40 @@ def softmax_regularization_path(
     indices in [0, k) — the solver-level contract; use
     ``SoftmaxRegression`` for label mapping.
 
+    Wide-sparse (findices, fvalues) input runs
+    ``solvers.softmax_proximal_sparse`` per λ (width probed once, never
+    standardized).
+
     ``batched=True`` (round 13): every λ's FISTA state machine advanced
     by shared ``softmax_multi_loss_gradient`` scans — the multinomial
     twin of ``regularization_path(batched=True)``, same Σ-of-iterations →
-    max-of-iterations pass count. Per-λ policy is exactly
-    ``solvers._fista_loop``'s (the loop ``softmax_proximal`` runs), so
-    each row lands on the cold standalone fit's optimum; ``warm`` is
-    ignored. Dense features only (the ``softmax_proximal`` scope)."""
+    max-of-iterations pass count. Per-λ policy is ``solvers._fista``'s
+    (the body ``softmax_proximal`` runs with one λ), so each row lands on
+    the cold standalone fit's optimum; ``warm`` is ignored. Dense features
+    only: there is no multi-point sparse softmax gradient kernel, so
+    sparse input raises ``ValueError``."""
+    from dask_glm_spark.sources import vectors as V
+
     lams = _lamduh_list(lamduhs)
+    idx_col = kwargs.get("idx_col", "findices")
+    sparse = V.is_sparse_columns(df, idx_col, kwargs.get("val_col", "fvalues"))
     if batched:
+        if sparse:
+            raise ValueError(
+                "softmax_regularization_path(batched=True) takes dense "
+                "features only; use batched=False for sparse input"
+            )
         return _softmax_path_batched(df, lams, k, regularizer, **kwargs)
+    # the solver for the input's layout, resolved through the module
+    fn = getattr(
+        solvers, "softmax_proximal_sparse" if sparse else "softmax_proximal"
+    )
     caller_info = kwargs.pop("fit_info", None)
     infos: list[dict] = [{} for _ in lams]
     # spread BEFORE caching (see regularization_path)
     with solvers._cached(df) as (df, _):
+        if sparse and not kwargs.get("p"):
+            kwargs["p"] = V.sparse_p(df, idx_col)
         order = sorted(range(len(lams)), key=lambda i: -lams[i])
         betas: list[np.ndarray | None] = [None] * len(lams)
         prev = None
@@ -464,9 +286,7 @@ def softmax_regularization_path(
             if warm and prev is not None:
                 kw.setdefault("init_beta", prev)
             B = np.asarray(
-                solvers.softmax_proximal(
-                    df, k, regularizer=regularizer, lamduh=lams[i], **kw
-                ),
+                fn(df, k, regularizer=regularizer, lamduh=lams[i], **kw),
                 dtype=np.float64,
             )
             betas[i] = B
@@ -479,7 +299,7 @@ def softmax_regularization_path(
 def _softmax_path_batched(df, lams, k, regularizer, **kwargs):
     """Batched multinomial λ-path: one ``_Standardizer`` pass hoisted for
     all λ (the same λ-independent transform each ``softmax_proximal`` call
-    would compute), then ``_batched_fista_core`` over the flattened (p·k)
+    would compute), then ``solvers._fista`` over the flattened (p·k)
     vectors with ONE ``softmax_multi_loss_gradient`` scan per evaluation
     round. Probe scans ride the same kernel (gradients along unused — the
     sparse sequential FISTA convention), so the per-scan partial is
@@ -513,9 +333,9 @@ def _softmax_path_batched(df, lams, k, regularizer, **kwargs):
                 features_col, label_col, weight_col=weight_col,
             )
 
-        flat = _batched_fista_core(
-            multi_lg, p * k, lams, regularizer, max_iter, tol,
-            stdz.forward(init_beta, k), infos,
+        flat = solvers._fista(
+            multi_lg, multi_lg, p * k, regularizer, lams, max_iter, tol,
+            stdz.forward(init_beta, k), infos, _BATCH_PROBE_TOTAL,
         )
         if caller_info is not None:
             caller_info["per_lamduh"] = infos

@@ -12,7 +12,11 @@ O(nnz) kernels, never standardized). A dense solver is the standardizer
 (``@normalize`` / ``_softmax_dense``) plus the dense layout plus the body;
 its ``*_sparse`` twin is ``_run_sparse`` plus the sparse layout plus the
 same body. ``softmax_*`` solvers fit the joint k-class multinomial over
-the flattened (p, k) coefficients with the same bodies.
+the flattened (p, k) coefficients with the same bodies. The proximal
+bodies (``_ista``, ``_fista``) advance a list of λs: a single fit is the
+one-λ case, ``model_selection``'s batched λ-path the many-λ case. ADMM
+builds dense or CSR blocks with one builder (``_admm_blocks``) and runs
+one set of consensus rounds (``_admm_consensus``).
 
 Per-iteration cluster cost (the scale contract; one "scan" is one job):
 
@@ -614,134 +618,178 @@ def _gd(lay, max_iter, tol, init_beta, fit_info):
     return beta
 
 
-def _prox_loop(
-    loss_grad, multi_loss_grad, p, regularizer, lamduh, max_iter, tol,
-    init_beta=None, fit_info=None,
+def _backtrack(probe, searching, budget, candidate, accept):
+    """The backtracking search shared by ``_ista`` and ``_fista``, for
+    every λ index in ``searching`` at once. λ ``i``'s candidates are
+    ``candidate(i, j) -> (s, cand)`` for ``j = 0 .. MAX_BACKTRACKS-1``,
+    examined in order until ``accept(i, s, cand, loss)``; each ``probe``
+    scan carries ``max(1, budget // len(searching))`` candidates of every
+    λ still searching. Within an iteration the candidate sequence is
+    fixed, so co-evaluating λs never changes which candidate a λ accepts —
+    only which scan evaluates it. Returns ``(last, accepted)``: per λ the
+    last examined ``(s, cand, loss, grad)`` (grad ``None`` for a
+    losses-only probe) and the set of λs that accepted it."""
+    nexti = dict.fromkeys(searching, 0)
+    last, accepted = {}, set()
+    while searching:
+        cpl = max(1, budget // len(searching))
+        batch = []
+        for i in searching:
+            hi = min(nexti[i] + cpl, MAX_BACKTRACKS)
+            batch += [(i, *candidate(i, j)) for j in range(nexti[i], hi)]
+            nexti[i] = hi
+        losses, grads = probe([c for _, _, c in batch])
+        for pos, (i, s, cand) in enumerate(batch):
+            if i in accepted:
+                continue
+            g = None if grads is None else np.asarray(
+                grads[:, pos], dtype=np.float64
+            )
+            last[i] = (s, cand, float(losses[pos]), g)
+            if accept(i, s, cand, last[i][2]):
+                accepted.add(i)
+        searching = [
+            i for i in searching
+            if i not in accepted and nexti[i] < MAX_BACKTRACKS
+        ]
+    return last, accepted
+
+
+def _ista(
+    point, probe, dim, regularizer, lams, max_iter, tol, init_beta, infos,
+    budget,
 ):
-    """Proximal-gradient / ISTA control flow shared by the dense and sparse
-    paths (``algorithms.py:422-505``): ONE fused loss+gradient scan up
-    front, then batched FUSED probe scans per iteration where each
-    candidate is ``prox(beta - s*grad, s*lamduh)`` and acceptance is
-    simple decrease (``df > 0``, :489-491). As in ``_gd`` (round 7),
-    the probe returns each candidate's gradient, so the accepted (or last
-    evaluated) candidate's gradient feeds the next iteration without a
-    separate scan."""
-    first_backtrack, next_backtrack = 0.1, 0.5
-    step_growth = 1.25
-    step_size = 1.0
-    backtrack_mult = first_backtrack
-    beta = _init_vec(init_beta, p)
-    regularizer = Regularizer.get(regularizer)
+    """Proximal gradient / ISTA (``algorithms.py:422-505``) for every λ in
+    ``lams``, advanced by shared scans; returns ``(len(lams), dim)``.
 
-    converged = False
-    it = 0
-    func, grad = loss_grad(beta)
-    for it in range(1, max_iter + 1):
-        obeta = beta
-        lf = func
-        ngrad = grad
-        accepted = False
-        for base in range(0, MAX_BACKTRACKS, PROBE_BATCH):
-            sizes = [
-                step_size * backtrack_mult**i
-                for i in range(base, min(base + PROBE_BATCH, MAX_BACKTRACKS))
-            ]
-            cands = [
-                regularizer.proximal_operator(obeta - s * grad, s * lamduh)
-                for s in sizes
-            ]
-            losses, grads = multi_loss_grad(cands)
-            for i, (s, cand, fval) in enumerate(zip(sizes, cands, losses)):
-                beta, func, ngrad = cand, fval, grads[:, i]
-                if lf - fval > 0:
-                    step_size = s
-                    accepted = True
-                    break
-            if accepted:
-                break
-        else:
-            step_size = sizes[-1]
-        if step_size == 0:
+    ``point(betas) -> (losses, grads (dim, n))`` evaluates the start
+    points in ONE scan, then each iteration's ``_backtrack`` probes
+    candidates ``prox(beta - s*grad, s*λ)`` over ``probe`` (same
+    signature), ``budget`` per scan, accepting the first simple decrease
+    (``df > 0``, :489-491). Every examined candidate becomes the iterate
+    until one is accepted, and its probe gradient feeds the next
+    iteration (round 7: no separate gradient scan). A single fit is
+    ``lams=[lamduh]`` with ``PROBE_BATCH``; the batched λ-path passes all
+    its λs with ``_BATCH_PROBE_TOTAL`` — the sequential sweep pays
+    Σ iters(λ) scans, the batched one max iters(λ). ``infos[i]`` gets λ
+    i's ``n_iter``/``converged``."""
+    reg = Regularizer.get(regularizer)
+    L = len(lams)
+    betas = [_init_vec(init_beta, dim) for _ in range(L)]
+    losses, grads = point(betas)
+    funcs = [float(losses[i]) for i in range(L)]
+    gradv = [np.asarray(grads[:, i], dtype=np.float64) for i in range(L)]
+    steps, bmult = [1.0] * L, [0.1] * L
+    iters, conv = [0] * L, [False] * L
+    active = list(range(L))
+    for _ in range(max_iter):
+        if not active:
             break
-        df_rel = (lf - func) / max(func, lf)
-        if df_rel < tol:
-            converged = True
-            break
-        step_size *= step_growth
-        backtrack_mult = next_backtrack
-        grad = ngrad
-    _fill_info(fit_info, it, converged)
-    return beta
+        for i in active:
+            iters[i] += 1
+
+        def candidate(i, j):
+            s = steps[i] * bmult[i] ** j
+            return s, reg.proximal_operator(
+                betas[i] - s * gradv[i], s * lams[i]
+            )
+
+        last, _ = _backtrack(
+            probe, active, budget, candidate,
+            lambda i, s, cand, fval: funcs[i] - fval > 0,
+        )
+        still = []
+        for i in active:
+            lf = funcs[i]
+            # accepted, or the last probed size (the search ran out)
+            steps[i], betas[i], funcs[i], gradv[i] = last[i]
+            if steps[i] == 0:
+                continue  # step underflow: hard stop
+            if (lf - funcs[i]) / max(funcs[i], lf) < tol:
+                conv[i] = True
+                continue
+            steps[i] *= 1.25
+            bmult[i] = 0.5
+            still.append(i)
+        active = still
+    for i in range(L):
+        _fill_info(infos[i], iters[i], conv[i])
+    return np.stack(betas)
 
 
-def _fista_loop(
-    loss_grad, multi_loss_grad, p, regularizer, lamduh, max_iter, tol,
-    init_beta=None, fit_info=None,
+def _fista(
+    point, probe, dim, regularizer, lams, max_iter, tol, init_beta, infos,
+    budget,
 ):
-    """Accelerated proximal gradient (FISTA, Beck & Teboulle 2009) — the
-    beyond-reference fast path behind ``proximal_grad(accelerate=True)``.
+    """Accelerated proximal gradient (FISTA, Beck & Teboulle 2009) for
+    every λ in ``lams`` — the beyond-reference fast path behind
+    ``proximal_grad(accelerate=True)`` and ``softmax_proximal``; same
+    arguments and result as ``_ista``.
 
-    Why it exists: the reference's ISTA step policy (replicated exactly in
-    ``_prox_loop``) terminates on relative SMOOTH-loss decrease, and once
-    backtracking has shrunk the step the per-iteration decrease can drop
-    below ``tol`` while the iterate is still ~1e-3 from the optimum (seen
-    against the MLlib/OWL-QN oracle in tests/test_mllib_oracle.py). FISTA's
-    O(1/k^2) rate plus a majorization-based acceptance reaches oracle-grade
-    optima in tens of iterations.
+    Why it exists: the reference's ISTA step policy (``_ista``)
+    terminates on relative SMOOTH-loss decrease, and once backtracking
+    has shrunk the step the per-iteration decrease can drop below ``tol``
+    while the iterate is still ~1e-3 from the optimum (seen against the
+    MLlib/OWL-QN oracle in tests/test_mllib_oracle.py). FISTA's O(1/k^2)
+    rate plus a majorization-based acceptance reaches oracle-grade optima
+    in tens of iterations.
 
-    Per iteration: one fused loss+gradient scan at the extrapolated point
-    ``y`` plus batched candidate-loss probe scans (the same two kernel
-    surfaces ISTA uses — no new kernel). Acceptance is the backtracking
-    majorization test ``f(x) <= f(y) + g·(x-y) + ||x-y||^2/(2s)`` (required
-    for the accelerated rate; plain decrease is not valid under momentum).
+    Per iteration: one ``point`` scan at every active λ's extrapolated
+    point ``y``, then ``_backtrack`` over ``probe`` (only its losses are
+    read) with the 0.5^j step sequence. Acceptance is the majorization
+    test ``f(x) <= f(y) + g·(x-y) + ||x-y||^2/(2s)`` (required for the
+    accelerated rate; plain decrease is not valid under momentum); no
+    accepted candidate stops that λ (``y`` is numerically a fixed point).
     Convergence on the relative change of the FULL objective
-    ``f(x) + lamduh*R(x)`` — the quantity the optimum actually minimizes."""
-    step_size = 1.0
-    regularizer = Regularizer.get(regularizer)
-    x = _init_vec(init_beta, p)
-    yk = x.copy()
-    t = 1.0
-    fobj_prev = None
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
-        fy, gy = loss_grad(yk)
-        accepted = False
-        fx = fy
-        xn = yk
-        for base in range(0, MAX_BACKTRACKS, PROBE_BATCH):
-            sizes = [
-                step_size * (0.5 ** i)
-                for i in range(base, min(base + PROBE_BATCH, MAX_BACKTRACKS))
-            ]
-            cands = [
-                regularizer.proximal_operator(yk - s * gy, s * lamduh)
-                for s in sizes
-            ]
-            losses, _ = multi_loss_grad(cands)
-            for s, cand, fval in zip(sizes, cands, losses):
-                d = cand - yk
-                if fval <= fy + gy @ d + (d @ d) / (2.0 * s):
-                    xn, fx, step_size = cand, fval, s
-                    accepted = True
-                    break
-            if accepted:
-                break
-        if not accepted:
-            break  # step underflow: yk is numerically a fixed point
-        tn = (1.0 + np.sqrt(1.0 + 4.0 * t * t)) / 2.0
-        yk = xn + ((t - 1.0) / tn) * (xn - x)
-        x, t = xn, tn
-        fobj = fx + lamduh * regularizer.f(x)
-        if fobj_prev is not None and abs(fobj_prev - fobj) / max(
-            abs(fobj), abs(fobj_prev), 1.0
-        ) < tol:
-            converged = True
+    ``f(x) + λ·R(x)`` — the quantity the optimum actually minimizes."""
+    reg = Regularizer.get(regularizer)
+    L = len(lams)
+    xs = [_init_vec(init_beta, dim) for _ in range(L)]
+    ys = [x.copy() for x in xs]
+    ts, steps = [1.0] * L, [1.0] * L
+    fprev: list[float | None] = [None] * L
+    iters, conv = [0] * L, [False] * L
+    active = list(range(L))
+    for _ in range(max_iter):
+        if not active:
             break
-        fobj_prev = fobj
-        step_size *= 1.25  # mild growth: re-probe larger steps next round
-    _fill_info(fit_info, it, converged)
-    return x
+        fys, gys = point([ys[i] for i in active])
+        fy, gy = {}, {}
+        for j, i in enumerate(active):
+            iters[i] += 1
+            fy[i] = float(fys[j])
+            gy[i] = np.asarray(gys[:, j], dtype=np.float64)
+
+        def candidate(i, j):
+            s = steps[i] * 0.5 ** j
+            return s, reg.proximal_operator(ys[i] - s * gy[i], s * lams[i])
+
+        def majorized(i, s, cand, fval):
+            d = cand - ys[i]
+            return fval <= fy[i] + gy[i] @ d + (d @ d) / (2.0 * s)
+
+        last, accepted = _backtrack(probe, active, budget, candidate, majorized)
+        still = []
+        for i in active:
+            if i not in accepted:
+                continue  # step underflow: y_i is numerically a fixed point
+            steps[i], xn, fx, _ = last[i]
+            tn = (1.0 + np.sqrt(1.0 + 4.0 * ts[i] * ts[i])) / 2.0
+            ys[i] = xn + ((ts[i] - 1.0) / tn) * (xn - xs[i])
+            xs[i], ts[i] = xn, tn
+            fobj = fx + lams[i] * reg.f(xn)
+            if fprev[i] is not None and abs(fprev[i] - fobj) / max(
+                abs(fobj), abs(fprev[i]), 1.0
+            ) < tol:
+                conv[i] = True
+                continue
+            fprev[i] = fobj
+            steps[i] *= 1.25  # mild growth: re-probe larger steps next round
+            still.append(i)
+        active = still
+    for i in range(L):
+        _fill_info(infos[i], iters[i], conv[i])
+    return np.stack(xs)
 
 
 def gd_step(
@@ -805,7 +853,7 @@ def prox_step(
 
     The candidate construction of the ISTA loop (reference
     ``algorithms.py:479-481``: ``prox(beta - s*grad, s*lamduh)``; our
-    ``_prox_loop`` candidate line) with the backtracking pinned so the
+    ``_ista`` candidate line) with the backtracking pinned so the
     update is deterministic. Uses the REAL ``Regularizer.proximal_operator``
     — for q49 the DuckDB oracle re-derives the L1 soft-threshold
     symbolically, putting the prox math under the hash gate.
@@ -874,16 +922,25 @@ def _lbfgs(
 def _proximal(
     lay, regularizer, lamduh, max_iter, tol, init_beta, fit_info, accelerate,
 ):
-    """The proximal-gradient body of ``proximal_grad`` (ISTA, or FISTA
-    with ``accelerate``) and ``softmax_proximal`` (always FISTA: its
-    softmax probe returns losses only). The elementwise prox is
-    group-agnostic, so the softmax fit runs the same loop on vec(B)."""
-    loop = _fista_loop if accelerate else _prox_loop
-    beta = loop(
-        lay.loss_grad, lay.multi_loss_grad, lay.dim, regularizer, lamduh,
-        max_iter, tol, _init_vec(init_beta, lay.p, lay.k), fit_info,
+    """The proximal-gradient fit of ``proximal_grad`` (ISTA, or FISTA with
+    ``accelerate``) and ``softmax_proximal`` (always FISTA: its softmax
+    probe returns losses only): the one-λ case of ``_ista``/``_fista``,
+    with the layout's ``loss_grad`` at each point and ``PROBE_BATCH``
+    candidates per ``multi_loss_grad`` scan. The elementwise prox is
+    group-agnostic, so the softmax fit runs the same body on vec(B)."""
+
+    def point(betas):
+        (beta,) = betas
+        loss, grad = lay.loss_grad(beta)
+        return [loss], grad[:, None]
+
+    body = _fista if accelerate else _ista
+    (beta,) = body(
+        point, lay.multi_loss_grad, lay.dim, regularizer, [lamduh],
+        max_iter, tol, _init_vec(init_beta, lay.p, lay.k), [fit_info],
+        PROBE_BATCH,
     )
-    return np.asarray(beta, dtype=np.float64).reshape(lay.shape)
+    return beta.reshape(lay.shape)
 
 
 def _newton_cg(lay, max_iter, tol, init_beta, fit_info, cg_tol, max_cg_iter):
@@ -1172,7 +1229,7 @@ def proximal_grad(
     ``accelerate=True`` (beyond-reference, round 8): FISTA momentum with
     majorization backtracking — same two kernel surfaces, O(1/k^2) rate,
     and a full-objective stopping rule; reaches the MLlib/OWL-QN optimum
-    where the reference's step policy stalls (see ``_fista_loop``)."""
+    where the reference's step policy stalls (see ``_fista``)."""
     lay = _dense_layout(df, family, features_col, label_col, path, kwargs)
     return _proximal(
         lay, regularizer, lamduh, max_iter, tol, init_beta,
@@ -1378,7 +1435,7 @@ def admm(
     **kwargs,
 ):
     """Consensus ADMM (``algorithms.py:224-336``) with executor-resident
-    per-partition state. ``init_beta`` warm-starts z AND every block's
+    per-partition data. ``init_beta`` warm-starts z AND every block's
     local β_i at the supplied point (duals start at zero — the standard
     ADMM restart); with ``init_beta=None`` the reference init (z=0,
     β_i=1) is preserved bit-for-bit. ``weight_col`` (sample weights) and
@@ -1399,56 +1456,12 @@ def admm(
     ADMM wants. Pass ``nblocks=0`` to keep the input partitioning
     (pre-partitioned pipelines), or an explicit count.
 
-    Scale design (VERDICT r1 #8 hardening): round 1 materializes each
-    partition as a cached numpy block ``(pid, X, y, beta_i, u_i,
-    beta_hat_i)`` — after that, per-round cluster traffic is exactly
-
-      driver -> executors : z            (p floats, ONE broadcast)
-      executors -> driver : (beta_i, beta_hat_i + u_i) per partition
-                            (2p floats each — needed for the global z-prox
-                             and the residual stopping rule)
-
-    ``u_i``/``beta_i`` NEVER leave their executor: the dual update
-    ``u_i += beta_hat_i - z`` is computed partition-locally at the start of
-    the next round, when the new ``z`` arrives (same update order as the
-    reference, deferred by half a round). The old design broadcast a dict of
-    every partition's state — O(k*p) bytes to every executor per round,
-    quadratic-ish at many-partitions x wide-p.
-
-    Block lineage: each round is ``blocks.map(...)``; persisted per round,
-    previous round unpersisted (checkpointed rounds keep their blocks —
-    they ARE the checkpoint), ``localCheckpoint`` every 10 rounds bounds
-    the chain (the reference's recalcRate rhythm, algorithms.py:117).
-    X converts Arrow->numpy ONCE at block build (vectorized buffer reshape,
-    no per-row Python); rounds touch only numpy.
+    The blocks come from ``_admm_blocks`` (one numpy block per partition,
+    built once) and the rounds from ``_admm_consensus``; ``admm_sparse``
+    runs both on CSR blocks. Per-round cluster traffic is O(p) per block:
+    z out, (β_i, β̂_i + u_i) back — X never crosses again after the build.
     """
-    weight_col = kwargs.pop("weight_col", None)
-    offset_col = kwargs.pop("offset_col", None)
-    fit_info = kwargs.pop("fit_info", None)
-    regularizer = Regularizer.get(regularizer)
     p = _resolve_p(df, features_col, kwargs)
-
-    augmented = weight_col is not None or offset_col is not None
-    fam = (
-        _AugmentedFamily(family, weight_col is not None, offset_col is not None)
-        if augmented
-        else family
-    )
-    sc = df.sparkSession.sparkContext
-    # Block store (round 13, VERDICT r12 #8): disk blocks write each block
-    # as a local .npy pair and cache only the paths — rounds memmap straight
-    # from page cache, so the one-time multi-GB pickled block build (the
-    # 100× probe's single-JVM GC component) AND the per-round JVM→Python
-    # block copy both disappear. It is used ONLY in local mode: there one
-    # JVM holds every block (the GC effect) and one filesystem guarantees
-    # path visibility. On a real cluster the blocks already spread across
-    # executor JVMs (heap pressure divides by the executor count) and a
-    # round task rescheduled off the writing executor under delay
-    # scheduling would not see the file — the JVM block-manager cache
-    # stays the robust choice there.
-    disk_blocks = sc.master.startswith("local")
-
-    cur = df.rdd.getNumPartitions()
     if nblocks is None:
         # row count threaded from @normalize's fused moments pass when
         # present; a direct admm() call pays one cached-scan count
@@ -1466,7 +1479,8 @@ def admm(
                               MIN_ADMM_BLOCK_BYTES // row_bytes))
         max_rows = max(min_rows, min(MAX_ADMM_BLOCK_ROWS,
                                      MAX_ADMM_BLOCK_BYTES // row_bytes))
-        nblocks = max(1, min(sc.defaultParallelism, n_rows // min_rows))
+        nblocks = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
+                             n_rows // min_rows))
         # memory guard: one-block-per-core would make each materialized
         # numpy block n_rows/cores × p doubles — unbounded in n. Cap block
         # rows so a huge-n fit raises the block count past core count
@@ -1480,398 +1494,14 @@ def admm(
         # once, but the first-round cache materialization (parquet read +
         # standardize + numpy block build, the fit's most CPU-heavy pass)
         # parallelizes nblocks-wide and dominates — don't "fix" this again.
-    if nblocks and cur != nblocks:
-        if nblocks < cur:
-            # contiguous merge, NO shuffle — each block is a union of
-            # adjacent input splits, exactly the reference's dask-array
-            # chunking (contiguous row ranges, algorithms.py admm blocks),
-            # and a full-data exchange cheaper at any scale. Round-robin
-            # repartition bought nothing: consensus ADMM only needs every
-            # block visited per round, not IID blocks, and the reference
-            # itself fits contiguous chunks.
-            df = df.coalesce(nblocks)
-        else:
-            # can't split partitions without an exchange (rare: tiny
-            # file-split count on a single-file table)
-            df = df.repartition(nblocks)
-
-    # Block build (VERDICT r2 #3): one Arrow pass converts each partition
-    # to a single (pid, X-bytes, y-bytes) row — column batches flatten to
-    # numpy via zero-copy buffer views, never a per-row Python loop over
-    # pickled Rows. The tiny one-row-per-partition DataFrame then crosses
-    # to the RDD layer, where np.frombuffer restores the blocks.
-    aux_cols = [c for c in (weight_col, offset_col) if c is not None]
-    n_yrows = 1 + len(aux_cols)
-
-    def _assemble_block(batches):
-        """Arrow batches -> one (pid, X, y) numpy block (zero-copy buffer
-        reshape, never a per-row Python loop)."""
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        Xs, ys = [], []
-        auxs = [[] for _ in aux_cols]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            feats = batch.column(0)
-            flat = feats.flatten()  # list<double> -> values array
-            Xs.append(flat.to_numpy(zero_copy_only=False).reshape(-1, p))
-            ys.append(batch.column(1).to_numpy(zero_copy_only=False))
-            for j in range(len(aux_cols)):
-                auxs[j].append(
-                    batch.column(2 + j).to_numpy(zero_copy_only=False)
-                )
-        if not Xs:
-            return None
-        X = np.ascontiguousarray(np.concatenate(Xs))
-        y = np.concatenate(ys)
-        if aux_cols:
-            # y-buffer carries vstack([y][, w][, o]); _AugmentedFamily
-            # splits it in the local solves
-            y = np.vstack([y] + [np.concatenate(a) for a in auxs])
-        y = np.ascontiguousarray(y)
-        return pid, X, y
-
-    def build_block_arrow(batches):
-        import pyarrow as pa
-
-        blk = _assemble_block(batches)
-        if blk is None:
-            return
-        pid, X, y = blk
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int64()),
-                pa.array([X.tobytes()], type=pa.large_binary()),
-                pa.array([y.tobytes()], type=pa.large_binary()),
-            ],
-            names=["pid", "xb", "yb"],
-        )
-
-    blockdir = None
-    if disk_blocks:
-        import tempfile
-
-        blockdir = tempfile.mkdtemp(prefix="dgs-admm-blocks-")
-
-    def build_block_disk(batches, _dir=blockdir):
-        import os
-
-        import pyarrow as pa
-
-        blk = _assemble_block(batches)
-        if blk is None:
-            return
-        pid, X, y = blk
-        xpath = os.path.join(_dir, f"blk_{pid}_x.npy")
-        ypath = os.path.join(_dir, f"blk_{pid}_y.npy")
-        # write-then-rename: a lineage recompute of this partition (cache
-        # eviction) must never leave a concurrent reader a torn file
-        np.save(xpath + ".tmp.npy", X)
-        os.replace(xpath + ".tmp.npy", xpath)
-        np.save(ypath + ".tmp.npy", y)
-        os.replace(ypath + ".tmp.npy", ypath)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int64()),
-                pa.array([xpath], type=pa.string()),
-                pa.array([ypath], type=pa.string()),
-            ],
-            names=["pid", "xb", "yb"],
-        )
-
-    proj = df.select(
-        df[features_col].cast("array<double>"), df[label_col].cast("double"),
-        *[F.col(c).cast("double") for c in aux_cols],
-    )
-    if disk_blocks:
-        packed = proj.mapInArrow(
-            build_block_disk, schema="pid long, xb string, yb string"
-        )
-
-        def unpack(row):
-            # state: (pid, X-ref, y-ref, beta_i, u_i, beta_hat_i or None);
-            # the refs memmap lazily inside each round task (_block_xy)
-            return (
-                row.pid, _NpyRef(row.xb), _NpyRef(row.yb),
-                np.ones(p), np.zeros(p), None,
-            )
-    else:
-        packed = proj.mapInArrow(
-            build_block_arrow, schema="pid long, xb binary, yb binary"
-        )
-
-        def unpack(row):
-            X = np.frombuffer(row.xb, dtype=np.float64).reshape(-1, p)
-            y = np.frombuffer(row.yb, dtype=np.float64)
-            if n_yrows > 1:
-                y = y.reshape(n_yrows, -1)
-            # state: (pid, X, y, beta_i, u_i, beta_hat_i or None)
-            return (row.pid, X, y, np.ones(p), np.zeros(p), None)
-
-    blocks = packed.rdd.map(unpack, preservesPartitioning=True)
-    try:
+    with _admm_blocks(
+        df, _DenseBlock(p), [F.col(features_col).cast("array<double>")],
+        label_col, family, nblocks, kwargs,
+    ) as (blocks, fam):
         return _admm_consensus(
-            blocks, p, regularizer, lamduh, rho, over_relax,
-            max_iter, abstol, reltol, fam, sc, init_beta=init_beta,
-            fit_info=fit_info,
+            blocks, p, regularizer, lamduh, rho, over_relax, max_iter,
+            abstol, reltol, fam, init_beta, kwargs.pop("fit_info", None),
         )
-    finally:
-        if blockdir is not None:
-            import shutil
-
-            shutil.rmtree(blockdir, ignore_errors=True)
-
-
-# Above this many bytes of (k x 2p floats) per-round state, broadcasting it
-# is worse than keeping state inside the block rows (wide-p sparse ADMM).
-MAX_DRIVER_STATE_BYTES = 64 * 1024 * 1024
-
-
-class _NpyRef:
-    """Pickles as a path; resolves to a read-only numpy memmap on use —
-    the ADMM local-disk block store (round 13, VERDICT r12 #8). The data
-    RDD then caches O(bytes-of-path) rows instead of multi-GB pickled
-    numpy blocks, which removes BOTH the single-JVM heap/GC pressure of
-    the one-time block build (the 100× probe's one super-linear
-    component) AND the per-round JVM→Python socket copy + unpickle of
-    every block (reads come straight from page cache via mmap)."""
-
-    __slots__ = ("path",)
-
-    def __init__(self, path: str):
-        self.path = path
-
-    def load(self) -> np.ndarray:
-        return np.load(self.path, mmap_mode="r")
-
-
-def _block_xy(X, y):
-    """Resolve a consensus block's (X, y) — plain arrays pass through;
-    local-disk blocks (``_NpyRef``) memmap lazily inside the round task."""
-    if isinstance(X, _NpyRef):
-        return X.load(), y.load()
-    return X, y
-
-
-def _admm_consensus(
-    blocks, p, regularizer, lamduh, rho, over_relax,
-    max_iter, abstol, reltol, fam, sc, init_beta=None, fit_info=None,
-):
-    """The consensus rounds shared by the dense and sparse ADMM paths:
-    blocks are (pid, X, y, beta_i, u_i, beta_hat_i) with X anything the
-    family math can ``.dot`` (dense ndarray or CSRMatrix).
-
-    Two state layouts, chosen by per-round state size (k x 2p floats):
-
-    - **driver-resident** (dense / modest p — the common case): the data
-      RDD is immutable ``(pid, X, y)`` cached once; β_i/u_i live on the
-      driver and are broadcast each round. In PySpark, an RDD whose rows
-      are mutated every round re-serializes X across the JVM<->Python
-      boundary TWICE per round (worker read + re-persist write of the
-      returned blocks) — measured as the dominant, data-proportional
-      per-round cost at 10x bench scale (3.4 s/round at 6M rows). With
-      immutable data, X crosses once (the unavoidable cached-block read)
-      and nothing data-sized ever crosses back; lineage never grows, so
-      the per-round persist/localCheckpoint dance disappears too.
-    - **executor-resident** (wide-p sparse): k x 2p floats of state is
-      too big to broadcast (p ~ 10^6 hashed-text features => GBs), so
-      state rides a separate tiny RDD zipped against the immutable data
-      RDD each round — X is still read from cache per round, but the
-      round's OUTPUT is O(p) per block, so nothing data-sized is ever
-      serialized back either.
-    """
-    # Block count upper bound without a job: each input partition yields at
-    # most one block (admm may request nblocks > defaultParallelism, and
-    # nblocks=0 keeps the caller's partitioning — defaultParallelism would
-    # under-count both).
-    nparts = max(1, blocks.getNumPartitions())
-    if 2 * p * 8 * nparts <= MAX_DRIVER_STATE_BYTES:
-        return _admm_consensus_driver_state(
-            blocks, p, regularizer, lamduh, rho, over_relax,
-            max_iter, abstol, reltol, fam, sc, init_beta=init_beta,
-            fit_info=fit_info,
-        )
-    # Immutable data (pid, X, y) cached ONCE; the per-block state rides a
-    # SEPARATE tiny RDD zipped back each round (both are one-element-per-
-    # partition children of the same parent, so zip alignment is exact).
-    # X is read from cache each round (unavoidable in PySpark) but never
-    # serialized back — the round's output is O(p) per block, so the
-    # per-round persist/localCheckpoint machinery touches state only.
-    data = blocks.map(
-        lambda b: (b[0], b[1], b[2]), preservesPartitioning=True
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    nchunks = data.count()  # empty partitions contribute no block
-    if nchunks == 0:
-        raise ValueError("empty input DataFrame")
-    b0 = np.ones(p) if init_beta is None else _init_vec(init_beta, p)
-    state = data.map(
-        lambda b: (b[0], b0, np.zeros(p), None),
-        preservesPartitioning=True,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
-
-    z = np.zeros(p) if init_beta is None else _init_vec(init_beta, p)
-
-    def make_round(z_bc, first):
-        def run(pair):
-            (pid, X, y), (_, beta, u, beta_hat_prev) = pair
-            X, y = _block_xy(X, y)
-            zv = z_bc.value
-            if not first:
-                # deferred dual update from the previous round, now that the
-                # new z is known (reference: u += beta_hat - z, :322)
-                u = u + beta_hat_prev - zv
-            new_beta = _admm_local_update(X, y, beta, zv, u, rho, fam)
-            beta_hat = over_relax * new_beta + (1 - over_relax) * zv
-            return (pid, new_beta, u, beta_hat)
-
-        return run
-
-    prev = state
-    prev_ckpt = False
-    for it in range(max_iter):
-        z_bc = sc.broadcast(z)
-        nxt = data.zip(prev).map(
-            make_round(z_bc, first=(it == 0)), preservesPartitioning=True
-        )
-        nxt_ckpt = (it + 1) % 10 == 0
-        if nxt_ckpt:
-            nxt.localCheckpoint()
-        else:
-            nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
-        # one action per round: ship back (pid, beta_i, beta_hat_i + u_i)
-        stats = nxt.map(lambda s: (s[0], s[1], s[3] + s[2])).collect()
-        # ADVICE r2: never unpersist a localCheckpoint'd round — its state
-        # rows ARE the checkpoint (lineage is truncated; dropping them
-        # would make any later recompute fail with missing blocks).
-        if prev is not state and not prev_ckpt:
-            prev.unpersist(False)
-        prev, prev_ckpt = nxt, nxt_ckpt
-        z_bc.unpersist(False)
-
-        stats.sort(key=lambda t: t[0])  # deterministic reduction order
-        new_betas = np.array([t[1] for t in stats])
-        v = np.array([t[2] for t in stats])  # beta_hat_i + u_i
-
-        zold = z.copy()
-        ztilde = np.mean(v, axis=0)
-        z = regularizer.proximal_operator(ztilde, lamduh / (rho * nchunks))
-
-        u_next = v - z  # u_i^{t+1} = u_i^t + beta_hat_i - z^{t+1}
-
-        primal_res = np.linalg.norm(new_betas - z)
-        dual_res = np.linalg.norm(rho * (z - zold))
-        eps_pri = np.sqrt(p * nchunks) * abstol + reltol * np.maximum(
-            np.linalg.norm(new_betas), np.sqrt(nchunks) * np.linalg.norm(z)
-        )
-        eps_dual = np.sqrt(p * nchunks) * abstol + reltol * np.linalg.norm(
-            rho * u_next
-        )
-        if primal_res < eps_pri and dual_res < eps_dual:
-            _log.info("admm (executor-state) converged after %d rounds", it + 1)
-            _fill_info(fit_info, it + 1, True)
-            break
-    else:
-        _fill_info(fit_info, max_iter, False)
-
-    data.unpersist(False)
-    state.unpersist(False)
-    if prev is not state and not prev_ckpt:
-        prev.unpersist(False)
-    return z
-
-
-def _admm_consensus_driver_state(
-    blocks, p, regularizer, lamduh, rho, over_relax,
-    max_iter, abstol, reltol, fam, sc, init_beta=None, fit_info=None,
-):
-    """Driver-resident-state consensus rounds (see ``_admm_consensus``).
-
-    Update order is EXACTLY the reference's (algorithms.py:224-336) with
-    the dual step relocated, not reordered: the executor-resident layout
-    applies ``u_i += beta_hat_i - z`` lazily at the start of the next
-    round once the new z arrives; here the driver applies the identical
-    update eagerly at the end of the round that produced z — same u_i
-    values enter every local solve (parity pinned by the existing
-    test_admm suite, which runs both layouts via the p-size dispatch).
-    """
-    data = blocks.map(
-        lambda b: (b[0], b[1], b[2]), preservesPartitioning=True
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    z = np.zeros(p) if init_beta is None else _init_vec(init_beta, p)
-    b0_default = None if init_beta is None else _init_vec(init_beta, p)
-    # Lazy state init (round 9): the pid set used to come from a separate
-    # `data.map(pid).collect()` job whose only real effect was forcing the
-    # cache materialization — one full job of pure floor at bench scale.
-    # Round 1 now materializes the cache itself and returns the pids in
-    # its stats; unknown pids default to the same block-build init
-    # (beta=ones, u=zeros), so the math is bit-identical.
-    betas: dict = {}
-    us: dict = {}
-    nchunks = 0
-
-    for it in range(max_iter):
-        st_bc = sc.broadcast((z, betas, us))
-
-        def run(block, _st=st_bc, _p=p, _b0=b0_default):
-            pid, X, y = block
-            X, y = _block_xy(X, y)
-            zv, bs, uss = _st.value
-            b0 = bs.get(pid)
-            u0 = uss.get(pid)
-            if b0 is None:
-                # block-build init parity; warm start overrides the
-                # reference's ones-init with the supplied point
-                b0 = np.ones(_p) if _b0 is None else _b0
-            if u0 is None:
-                u0 = np.zeros(_p)
-            new_beta = _admm_local_update(X, y, b0, zv, u0, rho, fam)
-            beta_hat = over_relax * new_beta + (1 - over_relax) * zv
-            return (pid, new_beta, beta_hat)
-
-        stats = data.map(run, preservesPartitioning=True).collect()
-        st_bc.unpersist(False)
-        if not stats:
-            raise ValueError("empty input DataFrame")
-        if not nchunks:
-            nchunks = len(stats)
-            us = {t[0]: np.zeros(p) for t in stats}
-
-        stats.sort(key=lambda t: t[0])  # deterministic reduction order
-        new_betas = np.array([t[1] for t in stats])
-        v = np.array(
-            [t[2] + us[t[0]] for t in stats]
-        )  # beta_hat_i + u_i, pid-sorted
-
-        zold = z.copy()
-        ztilde = np.mean(v, axis=0)
-        z = regularizer.proximal_operator(ztilde, lamduh / (rho * nchunks))
-
-        # u_i^{t+1} = u_i^t + beta_hat_i - z^{t+1}, applied driver-side
-        for i, t in enumerate(stats):
-            us[t[0]] = v[i] - z
-            betas[t[0]] = new_betas[i]
-
-        primal_res = np.linalg.norm(new_betas - z)
-        dual_res = np.linalg.norm(rho * (z - zold))
-        eps_pri = np.sqrt(p * nchunks) * abstol + reltol * np.maximum(
-            np.linalg.norm(new_betas), np.sqrt(nchunks) * np.linalg.norm(z)
-        )
-        eps_dual = np.sqrt(p * nchunks) * abstol + reltol * np.linalg.norm(
-            rho * np.array([us[pid] for pid in sorted(us)])
-        )
-        if primal_res < eps_pri and dual_res < eps_dual:
-            _log.info("admm (driver-state) converged after %d rounds", it + 1)
-            _fill_info(fit_info, it + 1, True)
-            break
-    else:
-        _fill_info(fit_info, max_iter, False)
-
-    data.unpersist(False)
-    return z
 
 
 def admm_sparse(
@@ -1892,115 +1522,437 @@ def admm_sparse(
     init_beta=None,
     **kwargs,
 ):
-    """Consensus ADMM over wide-sparse ``(indices, values)`` features.
-
-    Identical consensus rounds to ``admm`` (shared ``_admm_consensus``);
-    only the block representation differs: each partition packs into a
-    scipy-free ``CSRMatrix`` (three flat arrays, 24 bytes/nnz), and the
-    local L-BFGS update duck-types through ``X.dot``/``X.T.dot`` as O(nnz)
-    scatter-adds — rows are never densified, so p in the 10^5-10^6 hashed
-    -text range stays tractable per executor. No standardization, same
-    rationale as ``lbfgs_sparse``. ``nblocks`` defaults to
-    ``sc.defaultParallelism`` (no row count is available pre-scan on this
-    path); 0 keeps the input partitioning.
+    """Consensus ADMM over wide-sparse ``(indices, values)`` features: the
+    ``admm`` block builder and consensus rounds on ``CSRMatrix`` blocks
+    (three flat arrays, 24 bytes/nnz). The local L-BFGS update duck-types
+    through ``X.dot``/``X.T.dot`` as O(nnz) scatter-adds — rows are never
+    densified, so p in the 10^5-10^6 hashed-text range stays tractable
+    per executor. No standardization, same rationale as ``lbfgs_sparse``.
+    ``nblocks`` defaults to ``sc.defaultParallelism`` (no row count is
+    available pre-scan on this path); 0 keeps the input partitioning.
     """
-    from dask_glm_spark.functions.kernels_sparse import CSRMatrix
     from dask_glm_spark.sources.vectors import sparse_p
+
+    p = p or sparse_p(df, idx_col)
+    if nblocks is None:
+        nblocks = df.sparkSession.sparkContext.defaultParallelism
+    with _admm_blocks(
+        df, _CSRBlock(p),
+        [F.col(idx_col).cast("array<long>"),
+         F.col(val_col).cast("array<double>")],
+        label_col, family, nblocks, kwargs,
+    ) as (blocks, fam):
+        return _admm_consensus(
+            blocks, p, regularizer, lamduh, rho, over_relax, max_iter,
+            abstol, reltol, fam, init_beta, kwargs.pop("fit_info", None),
+        )
+
+
+class _DenseBlock:
+    """ADMM block reader of a dense ``array<double>`` features column:
+    per batch the row-major (n, p) X, one contiguous array per block.
+    Module-level so the block-build closure pickles."""
+
+    dtypes = (np.float64,)
+
+    def __init__(self, p):
+        self.p = int(p)
+
+    def read(self, batch):
+        flat = batch.column(0).flatten()  # list<double> -> values array
+        return (flat.to_numpy(zero_copy_only=False).reshape(-1, self.p),)
+
+    def join(self, parts):
+        return [np.ascontiguousarray(np.concatenate([x for (x,) in parts]))]
+
+    def matrix(self, arrays, n_rows):
+        return arrays[0].reshape(-1, self.p)
+
+
+class _CSRBlock(_DenseBlock):
+    """ADMM block reader of ``(indices, values)`` columns: per batch the
+    flat indices, values and row lengths; a block is the ``CSRMatrix``
+    indices/values/row-ids."""
+
+    dtypes = (np.int64, np.float64, np.int64)
+
+    def read(self, batch):
+        il = batch.column(0)
+        return (
+            il.flatten().to_numpy(zero_copy_only=False).astype(np.int64),
+            batch.column(1).flatten().to_numpy(zero_copy_only=False),
+            il.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64),
+        )
+
+    def join(self, parts):
+        idx, vals, lens = (np.concatenate(a) for a in zip(*parts))
+        rows = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+        return [np.ascontiguousarray(a) for a in (idx, vals, rows)]
+
+    def matrix(self, arrays, n_rows):
+        from dask_glm_spark.functions.kernels_sparse import CSRMatrix
+
+        return CSRMatrix(*arrays, (n_rows, self.p))
+
+
+class _NpyBlock:
+    """A consensus block in the local-disk store (see ``_admm_blocks``):
+    pickles as its ``.npy`` paths and resolves to ``(X, y)`` over
+    read-only memmaps inside the round task, so the data RDD caches
+    O(bytes-of-path) rows and rounds read blocks straight from page
+    cache."""
+
+    __slots__ = ("paths", "reader")
+
+    def __init__(self, paths, reader):
+        self.paths, self.reader = paths, reader
+
+    def load(self):
+        *xs, y = [np.load(path, mmap_mode="r") for path in self.paths]
+        return self.reader.matrix(xs, y.shape[-1]), y
+
+
+def _block_xy(blk):
+    """A consensus block's (X, y): in-memory blocks are the pair itself;
+    local-disk blocks (``_NpyBlock``) memmap lazily inside the round
+    task."""
+    return blk.load() if isinstance(blk, _NpyBlock) else blk
+
+
+def _build_block(batches, reader, n_x, n_y, blockdir):
+    """mapInArrow body of ``_admm_blocks``: one partition's Arrow batches
+    (``n_x`` feature columns, then ``n_y`` label/weight/offset columns)
+    -> ONE row ``(pid, b0, b1, ...)`` holding the block's arrays — the
+    reader's X arrays, then y. Column batches flatten to numpy via buffer
+    views, never a per-row Python loop. The y-buffer carries
+    ``vstack([y][, w][, o])`` (``_AugmentedFamily`` splits it). Stored as
+    raw bytes, or (``blockdir`` set) as ``.npy`` files whose paths are
+    the row."""
+    import os
+
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    pid = TaskContext.get().partitionId()
+    xs, ys = [], []
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        xs.append(reader.read(batch))
+        ys.append([
+            batch.column(n_x + j).to_numpy(zero_copy_only=False)
+            for j in range(n_y)
+        ])
+    if not xs:
+        return
+    cols = [np.concatenate(c) for c in zip(*ys)]
+    y = np.ascontiguousarray(cols[0] if n_y == 1 else np.vstack(cols))
+    arrays = reader.join(xs) + [y]
+    if blockdir is None:
+        out = [pa.array([a.tobytes()], type=pa.large_binary()) for a in arrays]
+    else:
+        out = []
+        for j, a in enumerate(arrays):
+            path = os.path.join(blockdir, f"blk_{pid}_{j}.npy")
+            # write-then-rename: a lineage recompute of this partition
+            # (cache eviction) must never leave a concurrent reader a
+            # torn file
+            np.save(path + ".tmp.npy", a)
+            os.replace(path + ".tmp.npy", path)
+            out.append(pa.array([path], type=pa.string()))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array([pid], type=pa.int64()), *out],
+        names=["pid"] + [f"b{j}" for j in range(len(out))],
+    )
+
+
+@contextmanager
+def _admm_blocks(df, reader, x_cols, label_col, family, nblocks, kwargs):
+    """Yield ``(blocks, fam)``: the ``(pid, block)`` RDD of one numpy
+    block per non-empty partition of ``df`` (``nblocks`` of them; 0 keeps
+    the input partitioning) and the family the local solves use
+    (``_AugmentedFamily`` when the ``weight_col``/``offset_col`` popped
+    from ``kwargs`` ride in y). ``reader`` is ``_DenseBlock`` or
+    ``_CSRBlock`` over the ``x_cols`` expressions; a block is ``(X, y)``
+    with X an ndarray or ``CSRMatrix``, or an ``_NpyBlock``. The block
+    directory is removed on exit.
+
+    Block store (round 13, VERDICT r12 #8): in local mode each block is
+    written as local ``.npy`` files and only the paths are cached — rounds
+    memmap straight from page cache, so the one-time multi-GB pickled
+    block build (the 100× probe's one super-linear component: single-JVM
+    heap/GC pressure) AND the per-round JVM→Python block copy + unpickle
+    both disappear.
+    There one JVM holds every block (the GC effect) and one filesystem
+    guarantees path visibility. On a real cluster the blocks already
+    spread across executor JVMs (heap pressure divides by the executor
+    count) and a round task rescheduled off the writing executor under
+    delay scheduling would not see the file — the JVM block-manager cache
+    of raw-bytes rows stays the robust choice there."""
+    import shutil
+    import tempfile
 
     weight_col = kwargs.pop("weight_col", None)
     offset_col = kwargs.pop("offset_col", None)
-    fit_info = kwargs.pop("fit_info", None)
-    augmented = weight_col is not None or offset_col is not None
+    aux_cols = [c for c in (weight_col, offset_col) if c is not None]
     fam = (
         _AugmentedFamily(family, weight_col is not None, offset_col is not None)
-        if augmented
+        if aux_cols
         else family
     )
-    regularizer = Regularizer.get(regularizer)
-    sc = df.sparkSession.sparkContext
-    p = p or sparse_p(df, idx_col)
-
-    if nblocks is None:
-        nblocks = sc.defaultParallelism
     cur = df.rdd.getNumPartitions()
     if nblocks and cur != nblocks:
-        # same layout rule as the dense path: contiguous no-shuffle merge
-        # when reducing (reference chunking is contiguous), exchange only
-        # when partitions must be split
-        df = df.coalesce(nblocks) if nblocks < cur else df.repartition(nblocks)
-
-    aux_cols = [c for c in (weight_col, offset_col) if c is not None]
-    n_yrows = 1 + len(aux_cols)
-
-    def build_block_arrow(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        idxs, vals, lens, ys = [], [], [], []
-        auxs = [[] for _ in aux_cols]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            il = batch.column(0)
-            idxs.append(il.flatten().to_numpy(zero_copy_only=False).astype(np.int64))
-            lens.append(il.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64))
-            vals.append(batch.column(1).flatten().to_numpy(zero_copy_only=False))
-            ys.append(batch.column(2).to_numpy(zero_copy_only=False))
-            for j in range(len(aux_cols)):
-                auxs[j].append(
-                    batch.column(3 + j).to_numpy(zero_copy_only=False)
-                )
-        if not ys:
-            return
-        lens_all = np.concatenate(lens)
-        row_ids = np.repeat(np.arange(len(lens_all), dtype=np.int64), lens_all)
-        y = np.concatenate(ys)
-        if aux_cols:
-            # same convention as the dense path: the y-buffer carries
-            # vstack([y][, w][, o]) and _AugmentedFamily splits it
-            y = np.vstack([y] + [np.concatenate(a) for a in auxs])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([pid], type=pa.int64()),
-                pa.array([np.ascontiguousarray(np.concatenate(idxs)).tobytes()],
-                         type=pa.large_binary()),
-                pa.array([np.ascontiguousarray(np.concatenate(vals)).tobytes()],
-                         type=pa.large_binary()),
-                pa.array([np.ascontiguousarray(row_ids).tobytes()], type=pa.large_binary()),
-                pa.array([np.ascontiguousarray(y).tobytes()],
-                         type=pa.large_binary()),
-            ],
-            names=["pid", "ib", "vb", "rb", "yb"],
+        if nblocks < cur:
+            # contiguous merge, NO shuffle — each block is a union of
+            # adjacent input splits, exactly the reference's dask-array
+            # chunking (contiguous row ranges, algorithms.py admm blocks),
+            # and a full-data exchange cheaper at any scale. Round-robin
+            # repartition bought nothing: consensus ADMM only needs every
+            # block visited per round, not IID blocks, and the reference
+            # itself fits contiguous chunks.
+            df = df.coalesce(nblocks)
+        else:
+            # can't split partitions without an exchange (rare: tiny
+            # file-split count on a single-file table)
+            df = df.repartition(nblocks)
+    n_x, n_y = len(x_cols), 1 + len(aux_cols)
+    disk = df.sparkSession.sparkContext.master.startswith("local")
+    blockdir = tempfile.mkdtemp(prefix="dgs-admm-blocks-") if disk else None
+    try:
+        names = [f"b{j}" for j in range(len(reader.dtypes) + 1)]
+        packed = df.select(
+            *x_cols, F.col(label_col).cast("double"),
+            *[F.col(c).cast("double") for c in aux_cols],
+        ).mapInArrow(
+            lambda batches: _build_block(batches, reader, n_x, n_y, blockdir),
+            schema="pid long, " + ", ".join(
+                f"{n} {'string' if disk else 'binary'}" for n in names
+            ),
         )
 
-    packed = df.select(
-        df[idx_col].cast("array<long>"), df[val_col].cast("array<double>"),
-        df[label_col].cast("double"),
-        *[F.col(c).cast("double") for c in aux_cols],
-    ).mapInArrow(
-        build_block_arrow, schema="pid long, ib binary, vb binary, rb binary, yb binary"
-    )
+        def unpack(row):
+            if disk:
+                return row.pid, _NpyBlock([row[n] for n in names], reader)
+            *xs, y = [
+                np.frombuffer(row[n], dtype=dt)
+                for n, dt in zip(names, reader.dtypes + (np.float64,))
+            ]
+            if n_y > 1:
+                y = y.reshape(n_y, -1)
+            return row.pid, (reader.matrix(xs, y.shape[-1]), y)
 
-    def unpack(row):
-        y = np.frombuffer(row.yb, dtype=np.float64)
-        if n_yrows > 1:
-            y = y.reshape(n_yrows, -1)
-        n_rows_blk = y.shape[-1]
-        X = CSRMatrix(
-            np.frombuffer(row.ib, dtype=np.int64),
-            np.frombuffer(row.vb, dtype=np.float64),
-            np.frombuffer(row.rb, dtype=np.int64),
-            (n_rows_blk, p),
+        yield packed.rdd.map(unpack, preservesPartitioning=True), fam
+    finally:
+        if blockdir is not None:
+            shutil.rmtree(blockdir, ignore_errors=True)
+
+
+# Above this many bytes of (k x 2p floats) per-round state, broadcasting it
+# is worse than keeping state inside the block rows (wide-p sparse ADMM).
+MAX_DRIVER_STATE_BYTES = 64 * 1024 * 1024
+
+
+def _admm_consensus(
+    blocks, p, regularizer, lamduh, rho, over_relax,
+    max_iter, abstol, reltol, fam, init_beta=None, fit_info=None,
+):
+    """The consensus rounds of ``admm`` and ``admm_sparse`` over
+    ``(pid, block)`` rows (X anything the family math can ``.dot``:
+    dense ndarray or CSRMatrix). The data RDD is cached ONCE and never
+    changes; each round returns ``(β_i, β̂_i + u_i)`` per block, and the
+    driver runs the z-prox, dual update and residual stopping rule
+    (``algorithms.py:224-336``, deterministic pid order). Every RDD the
+    fit persists is released when it ends, by return or by raise.
+
+    Where β_i/u_i live between rounds is chosen by per-round state size
+    (k x 2p floats) — the iterates are the same either way:
+
+    - **driver-resident** (dense / modest p — the common case,
+      ``_driver_state_rounds``): β_i/u_i live on the driver and are
+      broadcast each round. In PySpark, an RDD whose rows are mutated
+      every round re-serializes X across the JVM<->Python boundary TWICE
+      per round (worker read + re-persist write of the returned blocks) —
+      measured as the dominant, data-proportional per-round cost at 10x
+      bench scale (3.4 s/round at 6M rows). With immutable data, X
+      crosses once (the unavoidable cached-block read) and nothing
+      data-sized ever crosses back; lineage never grows.
+    - **executor-resident** (wide-p sparse, ``_executor_state_rounds``):
+      k x 2p floats of state is too big to broadcast (p ~ 10^6
+      hashed-text features => GBs), so state rides a separate tiny RDD
+      zipped against the data RDD each round — the round's OUTPUT is
+      still O(p) per block.
+    """
+    regularizer = Regularizer.get(regularizer)
+    # Block count upper bound without a job: each input partition yields at
+    # most one block (admm may request nblocks > defaultParallelism, and
+    # nblocks=0 keeps the caller's partitioning — defaultParallelism would
+    # under-count both).
+    nparts = max(1, blocks.getNumPartitions())
+    rounds = (
+        _driver_state_rounds if 2 * p * 8 * nparts <= MAX_DRIVER_STATE_BYTES
+        else _executor_state_rounds
+    )
+    held = []  # every RDD this fit persisted
+    try:
+        data = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+        held.append(data)
+        run_round = rounds(
+            data, p, rho, over_relax, fam, blocks.context, init_beta, held
         )
-        return (row.pid, X, y, np.ones(p), np.zeros(p), None)
+        z = np.zeros(p) if init_beta is None else _init_vec(init_beta, p)
+        u = None
+        for it in range(max_iter):
+            new_betas, v = run_round(z, u)  # pid-sorted; v = β̂_i + u_i
+            nchunks = len(v)
+            zold = z
+            z = regularizer.proximal_operator(
+                np.mean(v, axis=0), lamduh / (rho * nchunks)
+            )
+            u = v - z  # u_i^{t+1} = u_i^t + beta_hat_i - z^{t+1}
+            primal_res = np.linalg.norm(new_betas - z)
+            dual_res = np.linalg.norm(rho * (z - zold))
+            eps_pri = np.sqrt(p * nchunks) * abstol + reltol * np.maximum(
+                np.linalg.norm(new_betas), np.sqrt(nchunks) * np.linalg.norm(z)
+            )
+            eps_dual = np.sqrt(p * nchunks) * abstol + reltol * np.linalg.norm(
+                rho * u
+            )
+            if primal_res < eps_pri and dual_res < eps_dual:
+                _log.info("admm converged after %d rounds", it + 1)
+                _fill_info(fit_info, it + 1, True)
+                break
+        else:
+            _fill_info(fit_info, max_iter, False)
+        return z
+    finally:
+        for rdd in held:
+            rdd.unpersist(False)
 
-    blocks = packed.rdd.map(unpack, preservesPartitioning=True)
-    return _admm_consensus(
-        blocks, p, regularizer, lamduh, rho, over_relax,
-        max_iter, abstol, reltol, fam, sc, init_beta=init_beta,
-        fit_info=fit_info,
-    )
+
+def _driver_state_rounds(data, p, rho, over_relax, fam, sc, init_beta, held):
+    """Driver-resident state (see ``_admm_consensus``): returns
+    ``run_round(z, u) -> (β_i, β̂_i + u_i)``, u the previous round's duals.
+
+    Update order is EXACTLY the reference's (algorithms.py:224-336) with
+    the dual step relocated, not reordered: the executor-resident layout
+    applies ``u_i += beta_hat_i - z`` lazily at the start of the next
+    round once the new z arrives; here the driver applies the identical
+    update eagerly at the end of the round that produced z — same u_i
+    values enter every local solve (parity pinned by
+    tests/test_admm.py::test_state_layouts_agree).
+
+    Lazy state init (round 9): round 1 materializes the cache itself and
+    returns the pids in its stats; unknown pids default to the block-build
+    init (beta=ones — or the warm start — and u=zeros)."""
+    b0_default = None if init_beta is None else _init_vec(init_beta, p)
+    betas: dict = {}
+    us: dict = {}
+    pids: list = []
+
+    def run_round(z, u):
+        nonlocal us, pids
+        if u is not None:
+            us = dict(zip(pids, u))
+        st_bc = sc.broadcast((z, betas, us))
+
+        def run(block, _st=st_bc, _p=p, _b0=b0_default):
+            pid, blk = block
+            X, y = _block_xy(blk)
+            zv, bs, uss = _st.value
+            b0 = bs.get(pid)
+            u0 = uss.get(pid)
+            if b0 is None:
+                # block-build init parity; warm start overrides the
+                # reference's ones-init with the supplied point
+                b0 = np.ones(_p) if _b0 is None else _b0
+            if u0 is None:
+                u0 = np.zeros(_p)
+            new_beta = _admm_local_update(X, y, b0, zv, u0, rho, fam)
+            beta_hat = over_relax * new_beta + (1 - over_relax) * zv
+            return (pid, new_beta, beta_hat)
+
+        stats = data.map(run, preservesPartitioning=True).collect()
+        st_bc.unpersist(False)
+        if not stats:
+            raise ValueError("empty input DataFrame")
+        stats.sort(key=lambda t: t[0])  # deterministic reduction order
+        pids = [t[0] for t in stats]
+        if not us:
+            us = {pid: np.zeros(p) for pid in pids}
+        new_betas = np.array([t[1] for t in stats])
+        betas.update(zip(pids, new_betas))
+        return new_betas, np.array([t[2] + us[t[0]] for t in stats])
+
+    return run_round
+
+
+def _executor_state_rounds(data, p, rho, over_relax, fam, sc, init_beta,
+                           held):
+    """Executor-resident state (see ``_admm_consensus``): returns
+    ``run_round(z, _) -> (β_i, β̂_i + u_i)``. Per-block state
+    ``(pid, β_i, u_i, β̂_i)`` rides a SEPARATE tiny RDD zipped against the
+    data RDD each round (both are one-element-per-partition children of
+    the same parent, so zip alignment is exact); ``u_i += β̂_i - z`` runs
+    partition-locally at the start of the next round, when the new z
+    arrives (reference: :322, deferred by half a round). Each round's
+    state is persisted and its predecessor released; every 10th round is
+    ``localCheckpoint``ed instead (the reference's recalcRate rhythm,
+    algorithms.py:117) and kept until the fit ends — its rows ARE the
+    checkpoint of the later rounds' lineage."""
+    nchunks = data.count()  # empty partitions contribute no block
+    if nchunks == 0:
+        raise ValueError("empty input DataFrame")
+    b0 = np.ones(p) if init_beta is None else _init_vec(init_beta, p)
+    state = data.map(
+        lambda b: (b[0], b0, np.zeros(p), None),
+        preservesPartitioning=True,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    held.append(state)
+    state.count()
+    prev, prev_ckpt, it = state, False, 0
+
+    def make_round(z_bc, first):
+        def run(pair):
+            (pid, blk), (_, beta, u, beta_hat_prev) = pair
+            X, y = _block_xy(blk)
+            zv = z_bc.value
+            if not first:
+                # deferred dual update from the previous round, now that the
+                # new z is known (reference: u += beta_hat - z, :322)
+                u = u + beta_hat_prev - zv
+            new_beta = _admm_local_update(X, y, beta, zv, u, rho, fam)
+            beta_hat = over_relax * new_beta + (1 - over_relax) * zv
+            return (pid, new_beta, u, beta_hat)
+
+        return run
+
+    def run_round(z, _u):
+        nonlocal prev, prev_ckpt, it
+        z_bc = sc.broadcast(z)
+        nxt = data.zip(prev).map(
+            make_round(z_bc, first=(it == 0)), preservesPartitioning=True
+        )
+        nxt_ckpt = (it + 1) % 10 == 0
+        if nxt_ckpt:
+            nxt.localCheckpoint()
+        else:
+            nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
+        held.append(nxt)
+        # one action per round: ship back (pid, beta_i, beta_hat_i + u_i)
+        stats = nxt.map(lambda s: (s[0], s[1], s[3] + s[2])).collect()
+        # ADVICE r2: never unpersist a localCheckpoint'd round mid-fit —
+        # its state rows ARE the checkpoint (lineage is truncated; dropping
+        # them would make any later recompute fail with missing blocks).
+        if prev is not state and not prev_ckpt:
+            prev.unpersist(False)
+        prev, prev_ckpt, it = nxt, nxt_ckpt, it + 1
+        z_bc.unpersist(False)
+        stats.sort(key=lambda t: t[0])  # deterministic reduction order
+        return (
+            np.array([t[1] for t in stats]), np.array([t[2] for t in stats]),
+        )
+
+    return run_round
 
 
 def softmax_lbfgs(

@@ -432,8 +432,8 @@ def test_softmax_cv_lamduh_weighted_scoring(spark, softmax_cv_data):
 
 @pytest.mark.slow
 def test_batched_path_matches_sequential_cold(data):
-    # batched runs the EXACT per-λ _prox_loop policy, so it must land on
-    # the same points as the cold (warm=False) sequential sweep
+    # batched runs the single fit's ISTA body over all λs, so it must land
+    # on the same points as the cold (warm=False) sequential sweep
     lams = [0.5, 0.1, 0.02]
     kw = dict(regularizer="l1", max_iter=200, tol=1e-10)
     seq = regularization_path(
@@ -517,23 +517,15 @@ def test_cv_lamduh_batched_forwarding(data):
     assert np.abs(out["betas"][0]).max() < 1e-8
 
 
-def test_batched_core_bitwise_mirrors_prox_loop():
-    # No Spark: drive _batched_prox_core and solvers._prox_loop with the
-    # SAME numpy objective closures. The batched core claims its per-λ
-    # state machine is byte-for-byte _prox_loop's — with identical
-    # arithmetic the iterates must then be EXACTLY equal (==, not
-    # allclose) for every λ, including backtracking and stopping.
-    from dask_glm_spark.operators.model_selection import _batched_prox_core
+def _numpy_logistic(seed, n, beta):
+    """Logistic loss/gradient closures over a numpy design (the
+    families.py formulas): ``multi_lg(cands) -> (losses, grads (p, c))``."""
+    rng = np.random.default_rng(seed)
+    X = rng.normal(size=(n, len(beta)))
+    yv = (rng.random(n) < 1 / (1 + np.exp(-(X @ beta)))).astype(float)
 
-    rng = np.random.default_rng(42)
-    X = rng.normal(size=(200, 5))
-    yv = (rng.random(200) < 1 / (1 + np.exp(-(X @ [1, -2, 0.5, 0, 3])))).astype(
-        float
-    )
-
-    def lg(beta):
-        xb = X @ beta
-        # logistic loss/gradient, the families.py formulas
+    def lg(b):
+        xb = X @ b
         loss = float(np.sum(np.logaddexp(0, xb) - yv * xb))
         grad = X.T @ (1 / (1 + np.exp(-xb)) - yv)
         return loss, grad
@@ -545,60 +537,50 @@ def test_batched_core_bitwise_mirrors_prox_loop():
             np.column_stack([p[1] for p in pairs]),
         )
 
-    lams = [3.0, 0.5, 0.05, 0.0]
+    return multi_lg
+
+
+def _assert_multi_lambda_equals_single(body, multi_lg, p, lams, max_iter, tol):
+    # No Spark: ONE multi-λ call of the body (the batched λ-path's
+    # candidate budget) against one-λ calls with the single-fit budget,
+    # driven by the SAME numpy closures. Co-evaluating λs only changes
+    # which scan evaluates a candidate, never which candidate is
+    # accepted — so the iterates must be EXACTLY equal (==, not allclose)
+    # for every λ, including backtracking and stopping.
+    from dask_glm_spark.operators.model_selection import _BATCH_PROBE_TOTAL
+
     infos = [{} for _ in lams]
-    batched = _batched_prox_core(
-        multi_lg, 5, lams, "l1", 60, 1e-9, None, infos
+    batched = body(
+        multi_lg, multi_lg, p, "l1", lams, max_iter, tol, None, infos,
+        _BATCH_PROBE_TOTAL,
     )
     for i, lam in enumerate(lams):
-        seq = solvers._prox_loop(
-            lg, multi_lg, 5, "l1", lam, 60, 1e-9, None, None
+        info = {}
+        (single,) = body(
+            multi_lg, multi_lg, p, "l1", [lam], max_iter, tol, None, [info],
+            solvers.PROBE_BATCH,
         )
-        assert np.array_equal(batched[i], seq), (
-            f"λ={lam}: batched {batched[i]} != sequential {seq}"
+        assert np.array_equal(batched[i], single), (
+            f"λ={lam}: batched {batched[i]} != single {single}"
         )
+        assert infos[i] == info
     assert all({"n_iter", "converged"} <= set(d) for d in infos)
+
+
+def test_batched_core_bitwise_mirrors_prox_loop():
+    multi_lg = _numpy_logistic(42, 200, [1, -2, 0.5, 0, 3])
+    _assert_multi_lambda_equals_single(
+        solvers._ista, multi_lg, 5, [3.0, 0.5, 0.05, 0.0], 60, 1e-9
+    )
 
 
 def test_batched_fista_core_bitwise_mirrors_fista_loop():
-    # accelerate=True twin of the ISTA mirror test above: same numpy
-    # closures drive _batched_fista_core and solvers._fista_loop —
-    # iterates must be EXACTLY equal per λ (momentum, majorization
-    # acceptance, and full-objective stopping included).
-    from dask_glm_spark.operators.model_selection import _batched_fista_core
-
-    rng = np.random.default_rng(3)
-    X = rng.normal(size=(150, 4))
-    yv = (rng.random(150) < 1 / (1 + np.exp(-(X @ [2, -1, 0, 0.5])))).astype(
-        float
+    # accelerate=True twin (momentum, majorization acceptance, and
+    # full-objective stopping included)
+    multi_lg = _numpy_logistic(3, 150, [2, -1, 0, 0.5])
+    _assert_multi_lambda_equals_single(
+        solvers._fista, multi_lg, 4, [2.0, 0.3, 0.01], 80, 1e-10
     )
-
-    def lg(beta):
-        xb = X @ beta
-        loss = float(np.sum(np.logaddexp(0, xb) - yv * xb))
-        grad = X.T @ (1 / (1 + np.exp(-xb)) - yv)
-        return loss, grad
-
-    def multi_lg(cands):
-        pairs = [lg(np.asarray(c)) for c in cands]
-        return (
-            np.array([p[0] for p in pairs]),
-            np.column_stack([p[1] for p in pairs]),
-        )
-
-    lams = [2.0, 0.3, 0.01]
-    infos = [{} for _ in lams]
-    batched = _batched_fista_core(
-        multi_lg, 4, lams, "l1", 80, 1e-10, None, infos
-    )
-    for i, lam in enumerate(lams):
-        seq = solvers._fista_loop(
-            lg, multi_lg, 4, "l1", lam, 80, 1e-10, None, None
-        )
-        assert np.array_equal(batched[i], seq), (
-            f"λ={lam}: batched {batched[i]} != sequential {seq}"
-        )
-    assert all({"n_iter", "converged"} <= set(d) for d in infos)
 
 
 @pytest.mark.slow
