@@ -8,8 +8,11 @@ combination of:
   P3 weighted Gram  X^T diag(w) X     -> p×p partial+final aggregation
   P4 scalar maps    exp/log1p/sigmoid -> built-in Column functions
   P5 reductions     sum(loss terms)   -> df.agg(F.sum(...))
-  P6 column moments mean/std per col  -> one agg (population std!)
-  P7 per-partition fan-out (ADMM)     -> mapInPandas, see operators/solvers.py
+  P6 column moments mean/std per col  -> one mapInArrow partial scan
+                                         (population std!); ADMM folds the
+                                         same partials into its block build
+  P7 per-partition fan-out (ADMM)     -> one mapInArrow block build, see
+                                         operators/solvers.py
   P8 broadcast of beta                -> literal folding (p floats -> codegen
                                          constants) or closure capture
   P9 intercept append                 -> F.concat(features, array(1.0))
@@ -285,6 +288,36 @@ def _sum_partial_rows(
     return acc
 
 
+def _fold_partial(acc: dict | None, part: dict, merges: dict | None) -> dict:
+    """Fold one batch's partial into a partition's running partial (the
+    first batch seeds it): arrays and scalars add, ``merges`` overrides
+    per column — the within-partition half of every Arrow partial
+    aggregation."""
+    if acc is None:
+        return dict(part)
+    for k, v in part.items():
+        m = merges.get(k) if merges else None
+        acc[k] = m(acc[k], v) if m is not None else acc[k] + v
+    return acc
+
+
+def _flat_rows(col, p: int | None = None) -> np.ndarray:
+    """A ``list<double>`` Arrow column as an (n, p) float64 array read
+    from its flat values buffer (no per-row objects). Every row must
+    have width ``p`` (default: the batch's first row) — a bare reshape
+    would silently realign ragged rows into wrong features."""
+    lens = col.value_lengths().to_numpy(zero_copy_only=False)
+    if p is None:
+        p = lens[0] if len(lens) else 0
+    if not np.all(lens == p):
+        raise ValueError(
+            f"features rows must all have width {p}; a batch has widths "
+            f"{sorted(set(lens.tolist()))}"
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(col), int(p))
+
+
 def _arrow_field_type(ddl: str):
     """Minimal Spark-DDL → pyarrow type map for partial-row schemas."""
     import pyarrow as pa
@@ -355,14 +388,6 @@ def _partial_rows(
 
     value_cols = [f.split()[0] for f in out_fields.split(",")]
 
-    def _acc_fold(acc, part):
-        if acc is None:
-            return dict(part)
-        for k, v in part.items():
-            m = merges.get(k) if merges else None
-            acc[k] = m(acc[k], v) if m is not None else acc[k] + v
-        return acc
-
     if arrow_batches:
         import pyarrow as pa
 
@@ -379,7 +404,7 @@ def _partial_rows(
             for rb in batches:
                 if rb.num_rows == 0:
                     continue
-                acc = _acc_fold(acc, batch_partial_fn(rb))
+                acc = _fold_partial(acc, batch_partial_fn(rb), merges)
             if acc is not None:
                 ctx = TaskContext.get()
                 pid = ctx.partitionId() if ctx is not None else 0
@@ -400,7 +425,7 @@ def _partial_rows(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                acc = _acc_fold(acc, batch_partial_fn(pdf))
+                acc = _fold_partial(acc, batch_partial_fn(pdf), merges)
             if acc is not None:
                 ctx = TaskContext.get()
                 pid = ctx.partitionId() if ctx is not None else 0
@@ -1376,25 +1401,77 @@ def _softmax_hvp_arrow(df, reader, B, V, weight_col) -> np.ndarray:
 # P6: per-feature column moments (population std — numpy ddof=0 parity;
 # Spark's default `stddev` is the SAMPLE std. SURVEY §7 correctness trap.)
 # ---------------------------------------------------------------------------
+# The moments partial of one batch and its finish, shared by
+# column_moments_full and the ADMM block build (solvers._build_block):
+# partials fold within a partition with _fold_partial, then on the driver
+# in sorted-pid order from MOMENT_ZEROS.
+MOMENT_FIELDS = (
+    "n double, sw double, s array<double>, ss array<double>, "
+    "mn array<double>, mx array<double>"
+)
+MOMENT_ZEROS = {
+    "n": 0.0, "sw": 0.0, "s": 0.0, "ss": 0.0, "mn": np.inf, "mx": -np.inf,
+}
+MOMENT_MERGES = {"mn": np.minimum, "mx": np.maximum}
+
+
+def _moments_partial(X: np.ndarray, w: np.ndarray | None = None) -> dict:
+    """One batch's ``(n, Σw, Σw·x, Σw·x², min, max)`` (w = 1 unweighted)."""
+    if w is not None:
+        Xw = X * w[:, None]
+        return {
+            "n": np.float64(len(X)),
+            "sw": np.float64(w.sum()),
+            "s": Xw.sum(axis=0),
+            "ss": (Xw * X).sum(axis=0),
+            "mn": X.min(axis=0),
+            "mx": X.max(axis=0),
+        }
+    return {
+        "n": np.float64(len(X)),
+        "sw": np.float64(len(X)),
+        "s": X.sum(axis=0),
+        "ss": (X * X).sum(axis=0),
+        "mn": X.min(axis=0),
+        "mx": X.max(axis=0),
+    }
+
+
+def _moments_finish(acc: dict) -> tuple[int, np.ndarray, np.ndarray]:
+    """``(n_rows, mean, std)`` of a folded moments partial: population
+    std, forced to exactly 0.0 where min == max."""
+    if acc["n"] == 0:
+        raise ValueError("empty input DataFrame")
+    n, sw, s, ss, mn, mx = (
+        acc[c] for c in ("n", "sw", "s", "ss", "mn", "mx")
+    )
+    mean = s / sw
+    var = np.maximum(ss / sw - mean * mean, 0.0)
+    std = np.sqrt(var)
+    std[mn == mx] = 0.0  # constant columns: exact zero, robustly
+    return int(n), mean, std
+
+
 def column_moments_full(
     df: DataFrame,
     features_col: str = "features",
     weight_col: str | None = None,
 ) -> tuple[int, np.ndarray, np.ndarray]:
-    """(n_rows, mean, std) in ONE Arrow partial-aggregation scan that also
-    discovers p from the vectors — the solver preamble's ONLY job.
+    """(n_rows, mean, std) in ONE ``mapInArrow`` partial-aggregation scan
+    that also discovers p from the vectors. Each batch's X is read from
+    the flat values buffer of the features column (``_flat_rows``: one
+    reshape, no per-row arrays; ragged rows raise ``ValueError``).
 
-    Previously every fit paid three small jobs before iterating (infer_p
-    probe + a p-wide codegen agg + admm's row count); on this box each job
-    has a ~0.2 s scheduling floor, so the fusion is ~0.5 s off every fit
-    wall (round 6). Partials (n, Σx, Σx², min, max) merge driver-side in
-    sorted-pid order (run-invariant); std is the population form
+    Partials (n, Σx, Σx², min, max) merge driver-side in sorted-pid order
+    (run-invariant); std is the population form
     sqrt(max(Σx²/n − mean², 0)), then forced to EXACTLY 0.0 wherever
     min == max: the non-central form is fp-exact-zero only for the
     all-ones intercept column, so a constant non-one column could yield a
     tiny nonzero std and silently evade normalize()'s constant-column
     detection (intercept identification / multi-constant error) — the
-    min/max probe rides the same scan for free (ADVICE r6).
+    min/max probe rides the same scan for free (ADVICE r6). The dense
+    ADMM fit computes the same partials while it builds its blocks
+    (``solvers._build_block``) and runs no moments job of its own.
 
     ``weight_col`` (ADVICE r10): mean/std become the WEIGHTED population
     moments (Σw·x/Σw, sqrt(Σw·x²/Σw − mean²)) — exactly the moments of the
@@ -1407,27 +1484,11 @@ def column_moments_full(
     as non-constant (documented divergence from strict replication; such
     inputs are degenerate)."""
 
-    def batch_partial(pdf: pd.DataFrame) -> dict:
-        X = _features_matrix(pdf, features_col)
-        if weight_col is not None:
-            w = pdf[weight_col].to_numpy(dtype=np.float64)
-            Xw = X * w[:, None]
-            return {
-                "n": np.float64(len(X)),
-                "sw": np.float64(w.sum()),
-                "s": Xw.sum(axis=0),
-                "ss": (Xw * X).sum(axis=0),
-                "mn": X.min(axis=0),
-                "mx": X.max(axis=0),
-            }
-        return {
-            "n": np.float64(len(X)),
-            "sw": np.float64(len(X)),
-            "s": X.sum(axis=0),
-            "ss": (X * X).sum(axis=0),
-            "mn": X.min(axis=0),  # generic op skips empty batches
-            "mx": X.max(axis=0),
-        }
+    from dask_glm_spark.functions.kernels_sparse import _f64
+
+    def batch_partial(rb) -> dict:
+        w = None if weight_col is None else _f64(rb, weight_col)
+        return _moments_partial(_flat_rows(rb.column(0)), w)
 
     cols = [features_col] if weight_col is None else [features_col, weight_col]
     # p is discovered from the vectors: scalar seeds broadcast onto the
@@ -1435,24 +1496,12 @@ def column_moments_full(
     acc = _arrow_partials_generic(
         df.select(*cols),
         batch_partial,
-        "n double, sw double, s array<double>, ss array<double>, "
-        "mn array<double>, mx array<double>",
-        {
-            "n": 0.0, "sw": 0.0, "s": 0.0, "ss": 0.0,
-            "mn": np.inf, "mx": -np.inf,
-        },
-        merges={"mn": np.minimum, "mx": np.maximum},
+        MOMENT_FIELDS,
+        MOMENT_ZEROS,
+        merges=MOMENT_MERGES,
+        arrow_batches=True,
     )
-    if acc["n"] == 0:
-        raise ValueError("empty input DataFrame")
-    n, sw, s, ss, mn, mx = (
-        acc[c] for c in ("n", "sw", "s", "ss", "mn", "mx")
-    )
-    mean = s / sw
-    var = np.maximum(ss / sw - mean * mean, 0.0)
-    std = np.sqrt(var)
-    std[mn == mx] = 0.0  # constant columns: exact zero, robustly
-    return int(n), mean, std
+    return _moments_finish(acc)
 
 
 def column_moments(

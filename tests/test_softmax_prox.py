@@ -273,3 +273,18 @@ def test_softmax_lamduh_max_kills_all_coefficients(data):
         normalize=False,
     )
     assert np.any(np.abs(B) > 1e-10)
+
+
+def test_softmax_path_sparse_ignores_normalize(data):
+    # normalize=False is the natural raw-space setting for sparse input;
+    # like the binary path, the sparse softmax solver accepts and ignores it
+    from dask_glm_spark.operators.model_selection import (
+        softmax_regularization_path,
+    )
+
+    sdf = V.to_sparse_columns(data[0])
+    B = softmax_regularization_path(
+        sdf, [5.0], K, normalize=False, max_iter=1,
+    )
+    assert B.shape == (1, P, K)
+    assert np.all(np.isfinite(B))
