@@ -47,8 +47,8 @@ GLM = """glm AS (
 def _grad_sql(residual: str, label_expr: str) -> str:
     """One-pass p-vector gradient: aggregate once, unpivot via CASE.
 
-    Mirrors the engine's physical plan (partial+final aggregation of p
-    sums in a single scan — kernels.loss_gradient sql path)."""
+    Mirrors the engine's reduction (the p gradient sums of one scan —
+    kernels.loss_gradient)."""
     sums = ", ".join(f"sum(f{j}*r) AS g{j}" for j in range(1, 5))
     case = "CASE j WHEN 1 THEN g1 WHEN 2 THEN g2 WHEN 3 THEN g3 ELSE g4 END"
     return f"""WITH {GLM},
@@ -279,8 +279,8 @@ _SPG_CASE = "CASE j WHEN 1 THEN spg1 WHEN 2 THEN spg2 WHEN 3 THEN spg3 ELSE spg4
 _SPH_CASE = "CASE j WHEN 1 THEN sph1 WHEN 2 THEN sph2 WHEN 3 THEN sph3 ELSE sph4 END"
 
 # Round 13 (cont.): the fused multi-probe LINE-SEARCH kernels under the
-# gate — kernels.multi_loss_gradient (auto→arrow: the per-iteration probe
-# every dense gd/lbfgs line search actually runs) and its sparse twin
+# gate — kernels.multi_loss_gradient (the per-iteration probe every
+# dense gd/lbfgs line search actually runs) and its sparse twin
 # multi_loss_gradient_sparse, both evaluated at the candidate pair
 # [BETA, beta1].  Candidate 0's loss/gradient must land on the values the
 # single-candidate kernels already gate (mlgl0 vs q02, mlgg0 vs q05 —
@@ -2833,14 +2833,9 @@ def _q_solver_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
                       sum of squares (r11)
     - ``dres``        inference.glm_residuals(kind='deviance') at BETA,
                       SIGNED sum (keeps the sign branch gated) (r12)
-    - ``hvp``         kernels.hessian_vector_product at (BETA, HVP_V),
-                      **path='arrow' pinned** (r13, VERDICT r12 #7: every
-                      other gated kernel value resolves to the sql path
-                      at p=4; production wide-p fits run the arrow path,
-                      so one gate column must exercise it — values are
-                      bit-identical across paths per
-                      tests/test_newton_cg.py::test_hvp_matches_numpy_twin,
-                      so the hash must not move) (r12; arrow-pinned r13)
+    - ``hvp``         kernels.hessian_vector_product at (BETA, HVP_V)
+                      (r12), fused with smloss/smg into one scan by
+                      kernels.fused_softmax_hvp
     - ``sloss`` / ``sgrad``  kernels_sparse.loss_gradient_sparse at BETA
                       over the RAGGED sparse view (coordinate
                       label_cnt%4 masked to 0, dropped by
@@ -2851,8 +2846,8 @@ def _q_solver_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``shvp``        kernels_sparse.hessian_vector_product_sparse at
                       (BETA, HVP_V) over the same ragged view (r13)
     - ``mlgl0/mlgl1/mlgg0/mlgg1``  kernels.multi_loss_gradient
-                      (auto→ARROW, the fused per-iteration line-search
-                      probe dense gd/lbfgs actually run) at the candidate
+                      (the fused per-iteration line-search probe dense
+                      gd/lbfgs actually run) at the candidate
                       pair [BETA, beta1]: candidate 0 must reproduce the
                       single-candidate gated values (loss = q02, gradient
                       = q05), candidate 1's gradient is new math from the
@@ -2936,60 +2931,19 @@ def _q_solver_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pinned BETA via the REAL glm_residuals (kind='deviance'); the
     # oracle recomputes sign(y−μ)·sqrt(2·binomial unit deviance), and
     # summing the SIGNED residuals keeps the sign branch under the gate.
-    def _sql_gate_sums():
-        """wloss/wgrad + oloss/ograd + BOTH residual sums in ONE scan/agg
-        job (r14 pass 3, guide §2.4 — extends the r14 pairwise fusions):
-        the weighted and offset spec expressions come from the same
-        ``_loss_gradient_sql_parts`` builder ``loss_gradient_fused`` uses,
-        glm_residuals contributes its pure per-row projections, and every
-        sum column accumulates over the same cached rows in the same
-        per-partition order with the same single-partition final merge —
-        all six values are bit-equal to the former two separate jobs
-        (pinned by tests/test_kernels.py::test_sql_gate_fusion_bit_equal,
-        which replays this exact fused agg against the standalone
-        kernels)."""
-        from dask_glm_spark.functions.kernels import _loss_gradient_sql_parts
-
-        proj_w, aggs_w = _loss_gradient_sql_parts(
-            Logistic, np.asarray(BETA), 4, "features", "label", "w", None,
-            prefix="s0_",
-        )
-        proj_o, aggs_o = _loss_gradient_sql_parts(
-            Logistic, np.asarray(BETA), 4, "features", "label", None, "o",
-            prefix="s1_",
-        )
-        res = inference.glm_residuals(
-            dfwo, Logistic, np.asarray(BETA), "pearson", out_col="_rp"
-        )
-        res = inference.glm_residuals(
-            res, Logistic, np.asarray(BETA), "deviance", out_col="_rd"
-        )
-        with kernels.kernel_exec(spark, stable_source=True):
-            row = (
-                res.select(
-                    F.col("features"), F.col("_rp"), F.col("_rd"),
-                    *proj_w, *proj_o,
-                )
-                .agg(
-                    *aggs_w,
-                    *aggs_o,
-                    F.sum(F.col("_rp") * F.col("_rp")).alias("_pchi2"),
-                    F.sum("_rd").alias("_dres"),
-                )
-                .collect()[0]
-            )
-        return (
-            (
-                float(row["s0_loss"]),
-                np.array([row[f"s0_g{j}"] for j in range(4)]),
-            ),
-            (
-                float(row["s1_loss"]),
-                np.array([row[f"s1_g{j}"] for j in range(4)]),
-            ),
-            float(row["_pchi2"]),
-            float(row["_dres"]),
-        )
+    # Both sums come from ONE plain aggregate over the two projections.
+    res = inference.glm_residuals(
+        dfwo, Logistic, np.asarray(BETA), "pearson", out_col="_rp"
+    )
+    res = inference.glm_residuals(
+        res, Logistic, np.asarray(BETA), "deviance", out_col="_rd"
+    )
+    with kernels.kernel_exec(spark):
+        row = res.agg(
+            F.sum(F.col("_rp") * F.col("_rp")).alias("_pchi2"),
+            F.sum("_rd").alias("_dres"),
+        ).collect()[0]
+    pchi2, dres = float(row["_pchi2"]), float(row["_dres"])
 
     # round 13 (cont.): the SPARSE CSR physical path under the gate —
     # sources.vectors.to_sparse_columns (declarative nonzero filter) feeds
@@ -3006,20 +2960,16 @@ def _q_solver_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(x),
     )
 
-    # r14 pass 3 (guide §2.4): the softmax evaluation and the ARROW-pinned
-    # Hvp (round 12 / r13, VERDICT r12 #7 — the path production wide-p
-    # fits use, so the Arrow physical plan itself sits under the DuckDB
-    # hash gate) share ONE arrow scan — each value's per-batch numpy is
-    # the unchanged kernel closure, so all values are bit-identical to
-    # the two former separate jobs (pytest-pinned; see fused_softmax_hvp).
+    # r14 pass 3 (guide §2.4): the softmax evaluation and the Hvp share
+    # ONE Arrow scan — each value's per-batch numpy is the unchanged
+    # kernel closure, so all values are bit-identical to the two
+    # standalone jobs (pytest-pinned; see fused_softmax_hvp).
     smloss, G, hv = kernels.fused_softmax_hvp(
         df3, np.asarray(SOFTMAX_B), Logistic, np.asarray(BETA),
         np.asarray(HVP_V), 4, softmax_label_col="_l3",
     )
-    # r14 / r14 pass 3 (guide §2.3/§2.4, VERDICT r13 #1): the weighted and
-    # offset kernel evaluations AND both residual sums share one scan of
-    # dfwo — six values, one job, bit-identical (see _sql_gate_sums).
-    (wloss, wgrad), (oloss, ograd), pchi2, dres = _sql_gate_sums()
+    wloss, wgrad = kernels.loss_gradient(dfwo, Logistic, BETA, weight_col="w")
+    oloss, ograd = kernels.loss_gradient(dfwo, Logistic, BETA, offset_col="o")
     # spread BEFORE the sparse conversion: the sf0.1 parquet arrives as 3
     # splits, and the JVM→Python Arrow write of list columns (the
     # dominant cost of a sparse scan, ~2.4 s single-task at this SF)
@@ -3030,9 +2980,8 @@ def _q_solver_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "features",
     ).persist()  # the fused sparse gate job shares one exchange+conversion
     # round 13: the fused multi-probe line-search kernels at the
-    # candidate pair [BETA, beta1] — multi_loss_gradient (auto → the
-    # literal-free explode-SQL probe since r14's second pass: still the
-    # exact per-iteration probe dense gd/prox run) and its sparse twin
+    # candidate pair [BETA, beta1] — multi_loss_gradient (the exact
+    # per-iteration probe dense gd/prox run) and its sparse twin
     # over the same ragged view. Candidate 0 must reproduce the
     # single-candidate kernels' gated values (mlgl0 = q02's loss, mlgg0 =
     # q05's gradient); candidate 1's gradient is new math the oracle's b

@@ -7,13 +7,13 @@ generically by every solver via ``family=`` kwargs.
 Dual form, per the engine architecture (SURVEY.md §7):
 
 1. **Spark Column expressions** (``loglike_terms``, ``residual``,
-   ``hess_weight``): pointwise terms over an ``xb = X·beta`` column.
-   These stay inside whole-stage codegen — the hot path never leaves the
-   JVM for p small enough to unroll.
+   ``hess_weight``): pointwise terms over an ``xb = X·beta`` column, the
+   whole-stage-codegen form of the same algebra (the Spark-SQL test
+   oracle of the kernels, ``tests/sql_reference.py``).
 2. **numpy statics** (``pointwise_loss``, ``pointwise_gradient``,
    ``loglike_np``): identical formulas over in-memory arrays. Used by the
-   ADMM per-partition local solves (inside Arrow batches), by the Arrow
-   partial-aggregation kernel path, and by tests.
+   ADMM per-partition local solves (inside Arrow batches), by every
+   partial-aggregation kernel, and by tests.
 
 The gradient of every family factors as ``X^T r(xb, y)`` and the hessian
 as ``X^T diag(w(xb)) X`` — ``residual`` and ``hess_weight`` supply the

@@ -1130,7 +1130,12 @@ def sparse_predict_interval(
     interval algebra is then the SAME narrow SQL tail the dense path
     uses. One scan, no shuffle, no p² bytes leaving any executor —
     Σ travels one broadcast closure."""
-    from dask_glm_spark.functions.kernels_sparse import CSRMatrix, _batch_csr
+    from dask_glm_spark.functions.kernels import _with_columns
+    from dask_glm_spark.functions.kernels_sparse import (
+        CSRMatrix,
+        _batch_csr,
+        _f64,
+    )
 
     q = _interval_quantile(summary, level)
     beta = np.asarray(summary.coefficients, dtype=np.float64).ravel()
@@ -1149,10 +1154,10 @@ def sparse_predict_interval(
         )
 
     def op(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = _batch_csr(pdf, idx_col, val_col, p)
+            X = _batch_csr(rb, idx_col, val_col, p)
             n = X.shape[0]
             if fit_intercept:
                 # the fit's constant-1 coordinate at index p−1
@@ -1164,7 +1169,7 @@ def sparse_predict_interval(
                 )
             xb = X @ beta
             if offset_col is not None:
-                xb = xb + pdf[offset_col].to_numpy(dtype=np.float64)
+                xb = xb + _f64(rb, offset_col)
             # Σ·x per row: one scatter per Σ column, then contract with x
             # again — O(nnz·p) per batch, never a dense (n, p) X
             Sx = X @ Sigma
@@ -1173,15 +1178,14 @@ def sparse_predict_interval(
                 weights=X.values * Sx[X.row_ids, X.indices],
                 minlength=n,
             )
-            out = pdf.copy()
-            out["_xb"] = xb
-            out["se_link"] = np.sqrt(np.maximum(quad, 0.0))
-            yield out
+            yield _with_columns(
+                rb, {"_xb": xb, "se_link": np.sqrt(np.maximum(quad, 0.0))}
+            )
 
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
-    scored = df.mapInPandas(
+    scored = df.mapInArrow(
         op, schema=f"{fields}, _xb double, se_link double"
     )
     return _attach_interval_cols(

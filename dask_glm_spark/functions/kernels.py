@@ -13,33 +13,25 @@ combination of:
                                          same partials into its block build
   P7 per-partition fan-out (ADMM)     -> one mapInArrow block build, see
                                          operators/solvers.py
-  P8 broadcast of beta                -> literal folding (p floats -> codegen
-                                         constants) or closure capture
+  P8 broadcast of beta                -> closure capture (kernels); literal
+                                         folding (scoring expressions,
+                                         ``matvec_expr``)
   P9 intercept append                 -> F.concat(features, array(1.0))
 
-Each aggregation kernel has two physical paths:
-
-- ``sql``: fully unrolled JVM Column expressions — whole-stage codegen,
-  partial+final HashAggregate, zero Python in the loop. Best for small p
-  (the unroll produces p (+p²/2) sum columns). This is also the
-  DuckDB-checkable form (SURVEY §2.6 queries).
-- ``arrow``: ONE partial-aggregation body (``_arrow_partials``), shared
-  with the wide-sparse kernels of ``kernels_sparse``. Each kernel's
-  per-batch closure is written against ``X @ …`` / ``X.T @ …`` only, so
-  it runs unchanged on a dense ndarray (``mapInPandas`` batches: one
-  BLAS GEMV/GEMM per batch) or on a ``kernels_sparse.CSRMatrix``
-  (``mapInArrow`` batches: O(nnz) bincounts) — only the batch reader
-  differs. Each partition emits ONE row of ``(pid, partials...)``; the
-  driver sums partials **in sorted partition order** (a run-invariant
-  reduction order, replicating dask's deterministic chunk-tree
-  reductions — needed by the reference determinism tests,
-  ``tests/test_algos_families.py:141-160``). Scales to wide p where
-  unrolling would blow up codegen.
-
-Path choice (``auto``): sql for p <= UNROLL_MAX, arrow beyond. At 100 TB
-both are a single scan of the cached feature table with only O(p) or O(p²)
-bytes leaving each executor — the shape of MLlib's treeAggregate; there is
-no shuffle of X, ever.
+Each aggregation kernel has ONE physical path, ``_arrow_partials``: a
+``mapInArrow`` scan whose per-batch closure is written against ``X @ …``
+/ ``X.T @ …`` only, so it runs unchanged on a dense ndarray (``_dense``:
+the features list column's flat values buffer reshaped to (n, p) by
+``_flat_rows``, one BLAS GEMV/GEMM per batch) or on a
+``kernels_sparse.CSRMatrix`` (``kernels_sparse._csr``: O(nnz)
+bincounts) — only the batch reader differs. Each partition emits ONE row
+of ``(pid, partials...)``; the driver sums partials **in sorted partition
+order** (a run-invariant reduction order, replicating dask's
+deterministic chunk-tree reductions — needed by the reference
+determinism tests, ``tests/test_algos_families.py:141-160``). At 100 TB
+this is a single scan of the cached feature table with only O(p) or
+O(p²) bytes leaving each executor — the shape of MLlib's treeAggregate;
+there is no shuffle of X, ever.
 """
 
 from __future__ import annotations
@@ -83,47 +75,12 @@ UNROLL_MAX = 64
 # ---------------------------------------------------------------------------
 _AQE_LOCK = threading.Lock()
 _AQE_STATE: dict[int, tuple[int, str]] = {}  # session id -> (depth, saved)
-# r14 (second pass): iterative solvers re-plan the same SQL kernel with a
-# NEW beta every evaluation. Scalar double literals are inlined into the
-# whole-stage-codegen SOURCE, so each evaluation is a Janino cache MISS —
-# measured +70-100 ms/evaluation on this box (scripts/kernel_eval_cost.py:
-# loss_gradient 249 vs 179 ms, gradient_hessian 387 vs 289, hvp 258 vs
-# 177). The fix: beta rides ONE ArrayType literal (non-primitive literals
-# are codegen REFERENCES — data, not source), and ConstantFolding is
-# excluded while the kernel action plans so the optimizer cannot fold the
-# element accesses back into inlined scalars. The generated source is then
-# byte-identical across evaluations -> Janino cache HIT. Values are
-# bit-identical (folding is pure extraction), pinned by
-# tests/test_kernels.py::test_matvec_array_literal_bit_exact.
-_NOFOLD_STATE: dict[int, tuple[int, str | None, str | None]] = {}
-_NOFOLD_RULE = "org.apache.spark.sql.catalyst.optimizer.ConstantFolding"
-_EXCLUDED_RULES_KEY = "spark.sql.optimizer.excludedRules"
-# Stable-source kernel actions also pin the reduce side of their (by
-# contract BOUNDED) exchanges to one task: the explode-probe's
-# groupBy(candidate) otherwise fans its k×(p+1)-value exchange across
-# the session's full shuffle.partitions — 31 empty reduce tasks of pure
-# scheduling latency per solver iteration (measured 343 -> 237 ms/probe
-# at 32 -> 4). Scale-safe for exactly the reason kernel_exec exists:
-# every wrapped exchange carries O(p²)/O(k·p) bytes at ANY data scale,
-# and per-group merge order stays map-id order (values bit-identical).
-# Pipeline shuffles never run under stable_source and keep the session
-# setting.
-_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
 @contextmanager
-def kernel_exec(spark, stable_source: bool = False):
+def kernel_exec(spark):
     """Run a tiny-result kernel action with AQE off, restoring the
-    session's prior setting when the outermost kernel job finishes.
-
-    ``stable_source=True`` (iterative GLM kernels only) additionally
-    excludes the ConstantFolding optimizer rule for the action, keeping
-    per-iteration beta array literals out of the generated code so the
-    solver loop reuses one compiled plan instead of paying a Janino
-    compile per evaluation. Only the GLM kernel aggregates opt in: their
-    plans contain no foldable work besides the beta elements (a pipeline
-    plan with e.g. a folded ``from_json`` literal table must NOT run
-    under it)."""
+    session's prior setting when the outermost kernel job finishes."""
     key = id(spark)
     with _AQE_LOCK:
         depth, saved = _AQE_STATE.get(key, (0, "true"))
@@ -135,48 +92,10 @@ def kernel_exec(spark, stable_source: bool = False):
             if saved != "false":
                 spark.conf.set("spark.sql.adaptive.enabled", "false")
         _AQE_STATE[key] = (depth + 1, saved)
-        if stable_source:
-            nf_depth, nf_saved, sp_saved = _NOFOLD_STATE.get(
-                key, (0, None, None)
-            )
-            if nf_depth == 0:
-                try:
-                    nf_saved = spark.conf.get(_EXCLUDED_RULES_KEY, None)
-                except Exception:
-                    nf_saved = None
-                if not nf_saved:
-                    spark.conf.set(_EXCLUDED_RULES_KEY, _NOFOLD_RULE)
-                elif _NOFOLD_RULE not in nf_saved:
-                    spark.conf.set(
-                        _EXCLUDED_RULES_KEY, nf_saved + "," + _NOFOLD_RULE
-                    )
-                try:
-                    sp_saved = spark.conf.get(_SHUFFLE_KEY, None)
-                except Exception:
-                    sp_saved = None
-                if sp_saved != "1":
-                    spark.conf.set(_SHUFFLE_KEY, "1")
-            _NOFOLD_STATE[key] = (nf_depth + 1, nf_saved, sp_saved)
     try:
         yield
     finally:
         with _AQE_LOCK:
-            if stable_source and key in _NOFOLD_STATE:
-                nf_depth, nf_saved, sp_saved = _NOFOLD_STATE[key]
-                if nf_depth == 1:
-                    try:
-                        if nf_saved:
-                            spark.conf.set(_EXCLUDED_RULES_KEY, nf_saved)
-                        else:
-                            spark.conf.unset(_EXCLUDED_RULES_KEY)
-                        if sp_saved is not None and sp_saved != "1":
-                            spark.conf.set(_SHUFFLE_KEY, sp_saved)
-                        elif sp_saved is None:
-                            spark.conf.unset(_SHUFFLE_KEY)
-                    finally:
-                        del _NOFOLD_STATE[key]
-                else:
-                    _NOFOLD_STATE[key] = (nf_depth - 1, nf_saved, sp_saved)
             depth, saved = _AQE_STATE[key]
             if depth == 1:
                 # Delete the state entry even if the restore throws (e.g.
@@ -195,34 +114,12 @@ def kernel_exec(spark, stable_source: bool = False):
 # ---------------------------------------------------------------------------
 # P1: mat-vec as a codegen'd expression (beta folded in as literals — P8)
 # ---------------------------------------------------------------------------
-def _vec_elems(vec, n: int) -> list[Column]:
-    """The n elements of ``vec`` as Columns over ONE ArrayType literal.
-
-    An ArrayType literal lands in the codegen ``references`` array (data),
-    not the generated source, so a plan built from these elements has
-    byte-identical source across different vec values — under
-    ``kernel_exec(stable_source=True)`` (ConstantFolding excluded) the
-    iterative solvers then hit the Janino cache every evaluation instead
-    of recompiling per beta (measured +70-100 ms/evaluation saved; see
-    kernel_exec). Anywhere ConstantFolding IS active (every declared
-    query plan) the optimizer folds each element access back into the
-    exact scalar literal the old form inlined — the optimized plans are
-    byte-identical, pinned by the plans/r14 dumps. Falls back to plain
-    float literals when the runtime cannot build an ndarray literal
-    (pre-4.0 PySpark)."""
-    try:
-        arr = F.lit(np.asarray(list(vec), dtype=np.float64))
-        return [arr[int(j)] for j in range(n)]
-    except Exception:
-        return [F.lit(float(b)) for b in list(vec)[:n]]
-
-
 def matvec_expr(beta: Iterable[float], features_col: str = "features") -> Column:
-    """``xb = Σ_j features[j] * beta[j]`` — unrolled, constant-folded."""
+    """``xb = Σ_j features[j] * beta[j]`` — unrolled, one double literal
+    per coefficient (the scoring and declared-query form; the kernels
+    capture beta in their per-batch closures instead)."""
     col = F.col(features_col)
-    beta = list(beta)
-    elems = _vec_elems(beta, len(beta))
-    terms = [col[int(j)] * elems[j] for j in range(len(beta))]
+    terms = [col[j] * float(b) for j, b in enumerate(beta)]
     return reduce(lambda a, b: a + b, terms)
 
 
@@ -244,13 +141,6 @@ def infer_p(df: DataFrame, features_col: str = "features") -> int:
 # ---------------------------------------------------------------------------
 # Arrow partial-aggregation machinery (P2/P3/P5 fused, deterministic merge)
 # ---------------------------------------------------------------------------
-def _features_matrix(pdf: pd.DataFrame, features_col: str) -> np.ndarray:
-    # np.stack over the object array of ndarrays is a single vectorized copy
-    # (ADVICE r1: np.array(list(...)) looped per row inside the hot Arrow path).
-    vals = pdf[features_col].to_numpy()
-    return np.stack(vals).astype(np.float64, copy=False)
-
-
 # Above this partition count, insert an executor-side combine stage before
 # the driver merge (tree aggregation). At 10^4-10^5 partitions x wide p the
 # single-level driver merge of p² Hessian partials is the bottleneck
@@ -318,6 +208,27 @@ def _flat_rows(col, p: int | None = None) -> np.ndarray:
     return flat.astype(np.float64, copy=False).reshape(len(col), int(p))
 
 
+def _with_columns(rb, cols: dict):
+    """``rb`` plus one float64 column per ``cols`` entry: a 1-D array
+    becomes a ``double`` column, a 2-D (n, k) array an ``array<double>``
+    column of its rows — the output side of the ``mapInArrow`` scoring
+    passes."""
+    import pyarrow as pa
+
+    arrays, names = list(rb.columns), list(rb.schema.names)
+    for name, v in cols.items():
+        v = np.asarray(v, dtype=np.float64)
+        if v.ndim == 2:
+            offsets = np.arange(v.shape[0] + 1, dtype=np.int32) * v.shape[1]
+            arrays.append(
+                pa.ListArray.from_arrays(pa.array(offsets), pa.array(v.ravel()))
+            )
+        else:
+            arrays.append(pa.array(v))
+        names.append(name)
+    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
 def _arrow_field_type(ddl: str):
     """Minimal Spark-DDL → pyarrow type map for partial-row schemas."""
     import pyarrow as pa
@@ -338,31 +249,25 @@ def _arrow_partials_generic(
     tree_threshold: int | None = None,
     merges: dict | None = None,
     partial_doubles: int | None = None,
-    arrow_batches: bool = False,
 ) -> dict:
-    """Run ``batch_partial_fn(batch) -> dict`` per Arrow batch, sum within
-    the partition, one partial row per partition; return the driver fold
-    of those rows, seeded with ``zeros`` (one entry per ``out_fields``
-    column — a scalar seed broadcasts onto an array column whose width
-    the caller does not know).
+    """Run ``batch_partial_fn(batch) -> dict`` per ``pyarrow.RecordBatch``
+    of a ``mapInArrow`` scan, sum within the partition, one partial row
+    per partition; return the driver fold of those rows, seeded with
+    ``zeros`` (one entry per ``out_fields`` column — a scalar seed
+    broadcasts onto an array column whose width the caller does not
+    know).
 
     Partials are folded on the driver in sorted partition-id order so the
     float reduction order is run-invariant (``_partial_rows`` has the
-    tree merge above ``tree_threshold`` partitions).
-
-    ``arrow_batches=True`` (round 13) runs the scan stage through
-    ``mapInArrow`` instead of ``mapInPandas``: ``batch_partial_fn``
-    receives a ``pyarrow.RecordBatch``. For list-typed columns the
-    arrow→pandas conversion allocates one small ndarray PER ROW (measured
-    ~300× the cost of reading the flat Arrow buffers directly), so the
-    sparse reader (``kernels_sparse._batch_csr``) reads offsets/values
-    zero-copy. Identical batch boundaries and identical flat arrays →
-    partials are bit-identical to the pandas mode; only the conversion
-    cost changes.
+    tree merge above ``tree_threshold`` partitions). Batch readers take
+    list columns from their flat Arrow buffers (``_flat_rows``,
+    ``kernels_sparse._batch_csr``): the arrow→pandas conversion of a list
+    column allocates one small ndarray per row (measured ~300× the cost
+    of the flat read for the sparse reader, round 13).
     """
     rows = _partial_rows(
         df, batch_partial_fn, out_fields, tree_threshold, merges,
-        partial_doubles, arrow_batches,
+        partial_doubles,
     )
     return _sum_partial_rows(rows, list(zeros), merges, init=zeros)
 
@@ -374,7 +279,6 @@ def _partial_rows(
     tree_threshold: int | None = None,
     merges: dict | None = None,
     partial_doubles: int | None = None,
-    arrow_batches: bool = False,
 ) -> list:
     """The pid-sorted partial rows behind ``_arrow_partials_generic``.
 
@@ -384,59 +288,37 @@ def _partial_rows(
     treeAggregate does for the same reason). Grouping is pid-deterministic
     (``pid // TREE_FANIN``) and group-internal order is sorted-pid, so
     tree results are also run-invariant."""
+    import pyarrow as pa
     from pyspark import TaskContext
 
     value_cols = [f.split()[0] for f in out_fields.split(",")]
+    pa_schema = pa.schema(
+        [("pid", pa.int32())]
+        + [
+            (f.split()[0], _arrow_field_type(f.split(None, 1)[1]))
+            for f in out_fields.split(",")
+        ]
+    )
 
-    if arrow_batches:
-        import pyarrow as pa
+    def op(batches):
+        acc: dict | None = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            acc = _fold_partial(acc, batch_partial_fn(rb), merges)
+        if acc is not None:
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            cols = [pa.array([pid], type=pa.int32())]
+            for name, typ in zip(value_cols, list(pa_schema)[1:]):
+                v = acc[name]
+                if isinstance(v, np.ndarray):
+                    cols.append(pa.array([v], type=typ.type))
+                else:
+                    cols.append(pa.array([float(v)], type=pa.float64()))
+            yield pa.RecordBatch.from_arrays(cols, schema=pa_schema)
 
-        pa_schema = pa.schema(
-            [("pid", pa.int32())]
-            + [
-                (f.split()[0], _arrow_field_type(f.split(None, 1)[1]))
-                for f in out_fields.split(",")
-            ]
-        )
-
-        def op_arrow(batches):
-            acc: dict | None = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                acc = _fold_partial(acc, batch_partial_fn(rb), merges)
-            if acc is not None:
-                ctx = TaskContext.get()
-                pid = ctx.partitionId() if ctx is not None else 0
-                cols = [pa.array([pid], type=pa.int32())]
-                for name, typ in zip(value_cols, list(pa_schema)[1:]):
-                    v = acc[name]
-                    if isinstance(v, np.ndarray):
-                        cols.append(pa.array([v], type=typ.type))
-                    else:
-                        cols.append(pa.array([float(v)], type=pa.float64()))
-                yield pa.RecordBatch.from_arrays(cols, schema=pa_schema)
-
-        out = df.mapInArrow(op_arrow, schema=f"pid int, {out_fields}")
-    else:
-
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: dict | None = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                acc = _fold_partial(acc, batch_partial_fn(pdf), merges)
-            if acc is not None:
-                ctx = TaskContext.get()
-                pid = ctx.partitionId() if ctx is not None else 0
-                row = {"pid": [pid]}
-                for k, v in acc.items():
-                    row[k] = [
-                        v.tolist() if isinstance(v, np.ndarray) else float(v)
-                    ]
-                yield pd.DataFrame(row)
-
-        out = df.mapInPandas(op, schema=f"pid int, {out_fields}")
+    out = df.mapInArrow(op, schema=f"pid int, {out_fields}")
 
     if tree_threshold is None:
         tree_threshold = TREE_MERGE_THRESHOLD
@@ -531,9 +413,12 @@ def _partial_rows(
 
 
 def _dense(features_col: str):
-    """The dense batch reader of ``_arrow_partials``: ``mapInPandas``
-    batches stacked into an (n, p) ndarray."""
-    return False, lambda pdf: _features_matrix(pdf, features_col)
+    """The dense batch reader of ``_arrow_partials``: the features list
+    column's flat values buffer as an (n, p) ndarray (``_flat_rows``;
+    ragged rows raise ``ValueError``)."""
+    return lambda rb: _flat_rows(
+        rb.column(rb.schema.get_field_index(features_col))
+    )
 
 
 def _arrow_partials(
@@ -545,15 +430,13 @@ def _arrow_partials(
     offset_col: str | None = None,
 ) -> dict:
     """The Arrow kernel body shared by dense and sparse features: one
-    scan running the per-batch closures in ``parts`` on one read of X,
-    folded into sums seeded with ``zeros``.
+    ``mapInArrow`` scan running the per-batch closures in ``parts`` on one
+    read of X, folded into sums seeded with ``zeros``.
 
-    ``reader`` is ``(arrow_batches, read)`` with ``read(batch) -> X`` —
-    ``_dense(features_col)`` (``mapInPandas``, an ndarray) or
-    ``kernels_sparse._csr(idx_col, val_col, p)`` (``mapInArrow``, a
-    ``CSRMatrix``); the closures only use ``X @`` and ``X.T @``, so they
-    run unchanged on either, and the pandas-vs-Arrow batch choice is made
-    here only. Each ``parts`` entry is ``(fn, label_col, prefix)``:
+    ``reader(batch) -> X`` is ``_dense(features_col)`` (an ndarray) or
+    ``kernels_sparse._csr(idx_col, val_col, p)`` (a ``CSRMatrix``); the
+    closures only use ``X @`` and ``X.T @``, so they run unchanged on
+    either. Each ``parts`` entry is ``(fn, label_col, prefix)``:
     ``fn(X, y[, w][, o=...]) -> dict`` gets the float64 label column
     (None when ``label_col`` is None), ``weight_col`` as a positional w
     and ``offset_col`` as keyword ``o=`` (both round 10); its outputs land
@@ -564,10 +447,8 @@ def _arrow_partials(
     its width (for the byte-aware tree merge) come from ``zeros``."""
     from dask_glm_spark.functions.kernels_sparse import _f64
 
-    arrow_batches, read = reader
-
     def batch_partial(batch) -> dict:
-        X = read(batch)
+        X = reader(batch)
         args = [] if weight_col is None else [_f64(batch, weight_col)]
         kw = {} if offset_col is None else {"o": _f64(batch, offset_col)}
         out = {}
@@ -584,7 +465,6 @@ def _arrow_partials(
     return _arrow_partials_generic(
         df, batch_partial, out_fields, zeros,
         partial_doubles=sum(int(np.size(z)) for z in zeros.values()),
-        arrow_batches=arrow_batches,
     )
 
 
@@ -592,67 +472,6 @@ def _arrow_partials(
 # Fused loss + gradient (the per-iteration job of lbfgs/GD/prox_grad; O4:
 # loss and gradient share the xb subexpression and one scan of X)
 # ---------------------------------------------------------------------------
-def _loss_gradient_sql_parts(
-    family,
-    beta: np.ndarray,
-    p: int,
-    features_col: str,
-    label_col: str,
-    weight_col: str | None,
-    offset_col: str | None,
-    prefix: str = "",
-) -> tuple[list[Column], list[Column]]:
-    """The sql-path loss+gradient as (projection columns, aggregate
-    columns) — the ONE definition, shared by ``loss_gradient`` and
-    ``loss_gradient_fused`` so a fused multi-spec scan computes
-    bit-identical sums (same expressions, same per-partition
-    accumulation order).
-
-    Split shape (r14, plan-stability): the beta-dependent per-row terms
-    (``ll``, ``r``) are PROJECTED below the aggregate instead of inlined
-    into every sum. Catalyst's subexpression elimination orders its
-    extracted functions by a hash that includes literal VALUES, so an
-    aggregate whose sums all embed beta emitted differently-ordered code
-    per evaluation — a Janino cache miss per solver iteration even with
-    the beta array literal kept out of the source. With the terms
-    projected, the aggregate's expressions are literal-free (stable
-    hash ⇒ stable order) and the projection's subexpressions (xb and its
-    exp terms) have distinct heights (stable sort). Per-row arithmetic
-    and per-partition accumulation order are unchanged, so every sum is
-    bit-identical to the inlined form (pinned by
-    tests/test_kernels.py::test_matvec_array_literal_bit_exact)."""
-    xb = matvec_expr(beta, features_col)
-    # offset/exposure (round 10, MLlib offsetCol): the linear predictor
-    # becomes xb + offset — a fixed per-row term with no coefficient
-    if offset_col is not None:
-        xb = xb + F.col(offset_col)
-    y = F.col(label_col)
-    r = family.residual(xb, y)
-    # weighted GLM (round 10): loss = sum(w*ll), grad = X^T (w*r) —
-    # same single scan, one extra multiply inside codegen
-    if weight_col is not None:
-        w = F.col(weight_col)
-        ll = w * family.loglike_terms(xb, y)
-        r = w * r
-    else:
-        ll = family.loglike_terms(xb, y)
-    proj = [ll.alias(f"_{prefix}ll"), r.alias(f"_{prefix}r")]
-    fcol = F.col(features_col)
-    rcol = F.col(f"_{prefix}r")
-    # coalesce: F.sum is NULL on empty input; the arrow path returns
-    # 0.0/zeros — keep both physical paths consistent (ADVICE r1).
-    aggs = [
-        F.coalesce(F.sum(F.col(f"_{prefix}ll")), F.lit(0.0)).alias(
-            f"{prefix}loss"
-        )
-    ]
-    aggs += [
-        F.coalesce(F.sum(fcol[j] * rcol), F.lit(0.0)).alias(f"{prefix}g{j}")
-        for j in range(p)
-    ]
-    return proj, aggs
-
-
 def loss_gradient(
     df: DataFrame,
     family,
@@ -660,31 +479,23 @@ def loss_gradient(
     p: int | None = None,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     weight_col: str | None = None,
     offset_col: str | None = None,
 ) -> tuple[float, np.ndarray]:
+    """(loss, gradient) at ``beta`` in one scan. ``weight_col`` (round
+    10): loss Σ w·ll, gradient Xᵀ(w⊙r); ``offset_col`` (MLlib offsetCol):
+    the linear predictor becomes xb + offset, a fixed per-row term with
+    no coefficient."""
     beta = np.asarray(beta, dtype=np.float64)
-    p = p or len(beta)
-    if path == "auto":
-        path = "sql" if p <= UNROLL_MAX else "arrow"
-    if path == "sql":
-        proj, aggs = _loss_gradient_sql_parts(
-            family, beta, p, features_col, label_col, weight_col, offset_col
-        )
-        with kernel_exec(df.sparkSession, stable_source=True):
-            row = df.select(F.col(features_col), *proj).agg(*aggs).collect()[0]
-        return float(row["loss"]), np.array([row[f"g{j}"] for j in range(p)])
-
     return _loss_gradient_arrow(
-        df, _dense(features_col), family, beta, p, label_col, weight_col,
-        offset_col,
+        df, _dense(features_col), family, beta, p or len(beta), label_col,
+        weight_col, offset_col,
     )
 
 
 def _loss_gradient_partial(family, beta: np.ndarray):
-    """Per-batch closure of ``loss_gradient``'s arrow path (dense or
-    sparse X) as a factory, so a fused multi-kernel scan evaluates the
+    """Per-batch closure of ``loss_gradient`` (dense or sparse X) as a
+    factory, so a fused multi-kernel scan evaluates the
     byte-identical arithmetic the standalone kernel job runs."""
     beta = np.asarray(beta, dtype=np.float64)
 
@@ -716,49 +527,6 @@ def gradient(df, family, beta, **kw) -> np.ndarray:
     return loss_gradient(df, family, beta, **kw)[1]
 
 
-def loss_gradient_fused(
-    df: DataFrame,
-    family,
-    beta: np.ndarray,
-    p: int | None = None,
-    specs: list[dict] | None = None,
-    features_col: str = "features",
-    label_col: str = "label",
-) -> list[tuple[float, np.ndarray]]:
-    """Several sql-path ``loss_gradient`` evaluations at the SAME beta in
-    ONE scan/agg job — e.g. the weighted and the offset variant of a
-    model over one frame (r14, guide §2.3 "aggregate before you shuffle"
-    / §2.4: N scans sharing a source become one). Each ``specs`` entry is
-    ``{"weight_col": ..., "offset_col": ...}`` (both optional). Sums are
-    bit-identical to N separate ``loss_gradient`` calls: the per-spec
-    expressions come from the same ``_loss_gradient_sql_parts`` builder and
-    each sum's per-partition accumulation order is unchanged (pinned by
-    tests/test_kernels.py::test_loss_gradient_fused_matches_separate)."""
-    beta = np.asarray(beta, dtype=np.float64)
-    p = p or len(beta)
-    specs = specs or [{}]
-    proj: list[Column] = []
-    aggs: list[Column] = []
-    for i, spec in enumerate(specs):
-        sp, sa = _loss_gradient_sql_parts(
-            family, beta, p, features_col, label_col,
-            spec.get("weight_col"), spec.get("offset_col"), prefix=f"s{i}_",
-        )
-        proj += sp
-        aggs += sa
-    with kernel_exec(df.sparkSession, stable_source=True):
-        row = (
-            df.select(F.col(features_col), *proj).agg(*aggs).collect()[0]
-        )
-    return [
-        (
-            float(row[f"s{i}_loss"]),
-            np.array([row[f"s{i}_g{j}"] for j in range(p)]),
-        )
-        for i in range(len(specs))
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Fused gradient + Hessian (the Newton per-iteration job)
 # ---------------------------------------------------------------------------
@@ -769,53 +537,11 @@ def gradient_hessian(
     p: int | None = None,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     weight_col: str | None = None,
     offset_col: str | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     beta = np.asarray(beta, dtype=np.float64)
     p = p or len(beta)
-    if path == "auto":
-        # p² agg columns unroll much faster than p — lower threshold.
-        path = "sql" if p <= 16 else "arrow"
-    if path == "sql":
-        xb = matvec_expr(beta, features_col)
-        if offset_col is not None:
-            xb = xb + F.col(offset_col)
-        y = F.col(label_col)
-        r = family.residual(xb, y)
-        w = family.hess_weight(xb)
-        if weight_col is not None:
-            sw = F.col(weight_col)
-            r = sw * r
-            w = sw * w
-        fcol = F.col(features_col)
-        # beta-dependent per-row terms projected below the aggregate —
-        # keeps the aggregate's subexpression hashes literal-free so the
-        # generated source is identical across iterations (see
-        # _loss_gradient_sql_parts); arithmetic and accumulation order
-        # unchanged, sums bit-identical.
-        pre = df.select(fcol, r.alias("_r"), w.alias("_w"))
-        rcol, wcol = F.col("_r"), F.col("_w")
-        aggs = [
-            F.coalesce(F.sum(fcol[j] * rcol), F.lit(0.0)).alias(f"g{j}")
-            for j in range(p)
-        ]
-        aggs += [
-            F.coalesce(
-                F.sum(wcol * fcol[i] * fcol[j]), F.lit(0.0)
-            ).alias(f"h{i}_{j}")
-            for i in range(p)
-            for j in range(i, p)
-        ]
-        with kernel_exec(df.sparkSession, stable_source=True):
-            row = pre.agg(*aggs).collect()[0]
-        grad = np.array([row[f"g{j}"] for j in range(p)])
-        hess = np.empty((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                hess[i, j] = hess[j, i] = row[f"h{i}_{j}"]
-        return grad, hess
 
     def partial(X, y, sw=None, o=None):
         xb = X @ beta if o is None else X @ beta + o
@@ -846,8 +572,8 @@ def gradient_hessian(
 # fused scan per CG iteration (xb, hw, X·v, and the Xᵀ reduce share it).
 # ---------------------------------------------------------------------------
 def _hvp_partial(family, beta: np.ndarray, v: np.ndarray):
-    """Per-batch closure of ``hessian_vector_product``'s arrow path as a
-    factory (see ``_loss_gradient_partial``); the label is never read."""
+    """Per-batch closure of ``hessian_vector_product`` as a factory (see
+    ``_loss_gradient_partial``); the label is never read."""
     beta = np.asarray(beta, dtype=np.float64)
     v = np.asarray(v, dtype=np.float64)
 
@@ -869,48 +595,15 @@ def hessian_vector_product(
     p: int | None = None,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     weight_col: str | None = None,
     offset_col: str | None = None,
 ) -> np.ndarray:
+    """``label_col`` is kept for callers; the product never reads a
+    label."""
     beta = np.asarray(beta, dtype=np.float64)
-    v = np.asarray(v, dtype=np.float64)
-    p = p or len(beta)
-    if path == "auto":
-        path = "sql" if p <= UNROLL_MAX else "arrow"
-    if path == "sql":
-        xb = matvec_expr(beta, features_col)
-        if offset_col is not None:
-            xb = xb + F.col(offset_col)
-        fcol = F.col(features_col)
-        # per-row scalar t = hw·(X·v) projected below the aggregate for
-        # iteration-stable codegen source (see _loss_gradient_sql_parts).
-        # Two stacked projects: xb and xv are SAME-height matvecs whose
-        # subexpression hashes both embed literal values, so one project
-        # holding both re-ties the extraction order per (beta, v) —
-        # aliasing xb first leaves each project with at most one
-        # literal-bearing subexpression tree. Sums bit-identical.
-        pre1 = df.select(
-            fcol,
-            xb.alias("_xb"),
-            *([F.col(weight_col)] if weight_col is not None else []),
-        )
-        hw = family.hess_weight(F.col("_xb"))
-        if weight_col is not None:
-            hw = F.col(weight_col) * hw
-        t = hw * matvec_expr(v, features_col)
-        pre = pre1.select(fcol, t.alias("_t"))
-        tcol = F.col("_t")
-        aggs = [
-            F.coalesce(F.sum(fcol[j] * tcol), F.lit(0.0)).alias(f"hv{j}")
-            for j in range(p)
-        ]
-        with kernel_exec(df.sparkSession, stable_source=True):
-            row = pre.agg(*aggs).collect()[0]
-        return np.array([row[f"hv{j}"] for j in range(p)])
-
     return _hvp_arrow(
-        df, _dense(features_col), family, beta, v, p, weight_col, offset_col
+        df, _dense(features_col), family, beta, v, p or len(beta),
+        weight_col, offset_col,
     )
 
 
@@ -926,7 +619,7 @@ def _hvp_arrow(
 # ---------------------------------------------------------------------------
 # Multi-probe loss: k candidate betas in ONE scan (vectorized line search —
 # the Spark-side improvement over the reference's one-job-per-backtrack,
-# SURVEY §2.1). Arrow path: one (n,p)x(p,k) GEMM per batch.
+# SURVEY §2.1): one (n,p)x(p,k) GEMM per batch.
 # ---------------------------------------------------------------------------
 def multi_loss(
     df: DataFrame,
@@ -934,7 +627,6 @@ def multi_loss(
     betas: list[np.ndarray],
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     weight_col: str | None = None,
     offset_col: str | None = None,
     with_denom: bool = False,
@@ -944,44 +636,6 @@ def multi_loss(
     denominator, which otherwise cost a second full pass over the split
     (r13, guide §2.1: shuffle/scan fewer bytes by fusing aggregates)."""
     k = len(betas)
-    p = len(betas[0])
-    if path == "auto":
-        path = "sql" if p * k <= 4 * UNROLL_MAX else "arrow"
-    if path == "sql":
-        y = F.col(label_col)
-
-        def _term(b):
-            xb = matvec_expr(b, features_col)
-            if offset_col is not None:
-                xb = xb + F.col(offset_col)
-            t = family.loglike_terms(xb, y)
-            return F.col(weight_col) * t if weight_col is not None else t
-
-        # per-candidate loglike terms projected below the aggregate for
-        # iteration-stable codegen source at k=1, the solver-loop shape
-        # (see _loss_gradient_sql_parts); sums bit-identical.
-        proj = [_term(b).alias(f"_t{i}") for i, b in enumerate(betas)]
-        if with_denom and weight_col is not None:
-            proj.append(F.col(weight_col))
-        pre = df.select(*proj)
-        aggs = [
-            F.coalesce(F.sum(F.col(f"_t{i}")), F.lit(0.0)).alias(f"s{i}")
-            for i in range(len(betas))
-        ]
-        if with_denom:
-            d = (
-                F.sum(F.col(weight_col))
-                if weight_col is not None
-                else F.count("*").cast("double")
-            )
-            aggs.append(F.coalesce(d, F.lit(0.0)).alias("_denom"))
-        with kernel_exec(df.sparkSession, stable_source=True):
-            row = pre.agg(*aggs).collect()[0]
-        losses_out = np.array([row[f"s{i}"] for i in range(k)])
-        if with_denom:
-            return losses_out, float(row["_denom"])
-        return losses_out
-
     B = np.column_stack([np.asarray(b, dtype=np.float64) for b in betas])
 
     def partial(X, y, w=None, o=None):
@@ -1017,7 +671,6 @@ def multi_loss_gradient(
     betas: list[np.ndarray],
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     weight_col: str | None = None,
     offset_col: str | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -1028,87 +681,17 @@ def multi_loss_gradient(
     disappears and GD/prox run ~one scan per iteration instead of two.
     On this box that halves the dominant ~0.2 s/job scheduling floor; at
     scale it halves passes over the data (the gradient reuses the batch
-    the probe already read).
-
-    Arrow path: XB and XᵀR are two (n,p)x(p,k)-shaped GEMMs per batch;
-    partials are (k + p·k) doubles. SQL path (r14, explode form): the k
-    candidates ride ONE array-of-array-literals column, ``posexplode``
-    fans each row out to (candidate_id, beta_c) pairs, and a
-    ``groupBy(candidate_id)`` aggregates each candidate's loss and
-    gradient sums — per-candidate row arithmetic and accumulation order
-    are IDENTICAL to the former unrolled k-column aggregate (bit-equal,
-    pinned by tests/test_kernels.py::test_multi_loss_gradient_paths_agree
-    via the unchanged 1e-12 sql/arrow parity plus the solver-trajectory
-    suites), but the plan contains no per-candidate expressions, so its
-    codegen source is byte-identical across iterations — the Janino-
-    recompile-per-iteration problem that originally forced ``auto`` to
-    ARROW (r6: gd 5.4 s sql vs 3.5 arrow) is gone at the root.
-
-    ``auto`` now resolves like ``multi_loss``: sql while p·k stays small
-    (one JVM-only job, ~300 ms/probe on this box vs ~500 ms for the
-    arrow path's Python-worker round trip), arrow beyond (the explode
-    multiplies row work by k; wide p·k wants the per-batch GEMMs)."""
-    k = len(betas)
-    p = len(betas[0])
-    if path == "auto":
-        path = "sql" if p * k <= 4 * UNROLL_MAX else "arrow"
-    if path == "sql":
-        y = F.col(label_col)
-        fcol = F.col(features_col)
-        cand = F.array(
-            *[F.lit(np.asarray(b, dtype=np.float64)) for b in betas]
-        )
-        extra = [F.col(c) for c in (weight_col, offset_col) if c is not None]
-        pre = df.select(
-            fcol,
-            y.alias("_y"),
-            *extra,
-            F.posexplode(cand).alias("_c", "_b"),
-        )
-        b = F.col("_b")
-        xb = reduce(
-            lambda a, c: a + c, [fcol[j] * b[j] for j in range(p)]
-        )
-        if offset_col is not None:
-            xb = xb + F.col(offset_col)
-        ll = family.loglike_terms(xb, F.col("_y"))
-        r = family.residual(xb, F.col("_y"))
-        if weight_col is not None:
-            w = F.col(weight_col)
-            ll = w * ll
-            r = w * r
-        pre2 = pre.select("_c", fcol, ll.alias("_ll"), r.alias("_r"))
-        aggs = [F.coalesce(F.sum("_ll"), F.lit(0.0)).alias("s")]
-        aggs += [
-            F.coalesce(F.sum(fcol[j] * F.col("_r")), F.lit(0.0)).alias(
-                f"g{j}"
-            )
-            for j in range(p)
-        ]
-        with kernel_exec(df.sparkSession, stable_source=True):
-            rows = pre2.groupBy("_c").agg(*aggs).collect()
-        by_c = {int(r_["_c"]): r_ for r_ in rows}
-        # empty input produces zero groups: zero-fill to match the arrow
-        # path's zeros and the former coalesce-0.0 per-candidate sums
-        losses = np.zeros(k)
-        grads = np.zeros((p, k))
-        for i in range(k):
-            r_ = by_c.get(i)
-            if r_ is not None:
-                losses[i] = r_["s"]
-                for j in range(p):
-                    grads[j, i] = r_[f"g{j}"]
-        return losses, grads
-
+    the probe already read). Per batch XB and XᵀR are two
+    (n,p)x(p,k)-shaped GEMMs; partials are (k + p·k) doubles."""
     return _multi_loss_gradient_arrow(
-        df, _dense(features_col), family, betas, p, label_col, weight_col,
-        offset_col,
+        df, _dense(features_col), family, betas, len(betas[0]), label_col,
+        weight_col, offset_col,
     )
 
 
 def _multi_loss_gradient_partial(family, betas: list[np.ndarray]):
-    """Per-batch closure of ``multi_loss_gradient``'s arrow path as a
-    factory (see ``_loss_gradient_partial``)."""
+    """Per-batch closure of ``multi_loss_gradient`` as a factory (see
+    ``_loss_gradient_partial``)."""
     B = np.column_stack([np.asarray(b, dtype=np.float64) for b in betas])
     k = B.shape[1]
 
@@ -1244,7 +827,7 @@ def fused_softmax_hvp(
     features_col: str = "features",
 ) -> tuple[float, np.ndarray, np.ndarray]:
     """``softmax_loss_gradient`` (over ``softmax_label_col``) +
-    ``hessian_vector_product(path='arrow')`` in ONE scan of the same
+    ``hessian_vector_product`` in ONE scan of the same
     frame (r14 pass 3, guide §2.4: two jobs sharing a cached source
     become one — q48's dense arrow gate section). ``label_col`` is kept
     for callers; the Hessian-vector product never reads a label.
@@ -1499,7 +1082,6 @@ def column_moments_full(
         MOMENT_FIELDS,
         MOMENT_ZEROS,
         merges=MOMENT_MERGES,
-        arrow_batches=True,
     )
     return _moments_finish(acc)
 

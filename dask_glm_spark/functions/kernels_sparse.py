@@ -4,12 +4,11 @@ Wide-sparse entry points of ``functions.kernels`` (P1/P2/P5 for one-hot /
 hashed text features with p up to 10^6, where densifying each row would
 multiply bytes-on-wire by p/nnz). There is no sparse kernel arithmetic
 here: each public ``*_sparse`` function runs the SAME per-batch closure
-as its dense Arrow twin, through the same partial-aggregation scan (one
-partial row per partition, driver fold in sorted-pid order). Only the
-batch reader differs — ``_csr`` reads the flat Arrow list buffers of a
-``mapInArrow`` batch (round 13: the arrow→pandas conversion of list
-columns allocates one ndarray per row; the flat buffers are ~300×
-cheaper) into a ``CSRMatrix``, whose ``@`` is an O(nnz) bincount:
+as its dense twin, through the same ``mapInArrow`` partial-aggregation
+scan (one partial row per partition, driver fold in sorted-pid order).
+Only the batch reader differs — ``_csr`` reads the flat Arrow list
+buffers of a batch into a ``CSRMatrix``, whose ``@`` is an O(nnz)
+bincount:
 
     X @ beta = bincount(row_ids, weights = values * beta[indices])   O(nnz)
     X.T @ r  = bincount(indices, weights = r[row_ids] * values)      O(nnz)
@@ -17,8 +16,7 @@ cheaper) into a ``CSRMatrix``, whose ``@`` is an O(nnz) bincount:
 Bytes leaving each executor stay O(p) (the gradient partial); X is never
 densified on either side of the Arrow boundary.
 
-No SQL/unrolled path here on purpose: at the p where sparse matters,
-unrolled codegen is the wrong tool. Correctness coverage is two-layer:
+Correctness coverage is two-layer:
 sparse vs dense parity in tests/test_sparse.py, and (round 13) the CSR
 path itself under the DuckDB hash gate — q48's sloss/sgrad/shvp/
 smlgl1/smlgg1 columns run loss_gradient_sparse,
@@ -32,61 +30,52 @@ glmbench's layer trace wraps every one of them by name.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from dask_glm_spark.functions import kernels as _k
 
 
+def _flat_csr(ic, vc):
+    """The flat ``(indices int64, values float64, row lengths int64)`` of
+    one batch's index and value list columns, read from their Arrow
+    buffers (no per-row objects). The two lists of every row must have
+    the same length: flattening them separately would otherwise shift
+    values onto other rows and indices, so a mismatch raises
+    ``ValueError``. Shared by the kernel reader (``_batch_csr``) and the
+    ADMM block reader (``solvers._CSRBlock``)."""
+    lens = ic.value_lengths().to_numpy(zero_copy_only=False)
+    vlens = vc.value_lengths().to_numpy(zero_copy_only=False)
+    if not np.array_equal(lens, vlens):
+        row = int(np.flatnonzero(lens != vlens)[0])
+        raise ValueError(
+            f"sparse row {row} of a batch has {lens[row]} indices but "
+            f"{vlens[row]} values; every row's index and value lists must "
+            "have the same length"
+        )
+    idx = ic.flatten().to_numpy(zero_copy_only=False)
+    vals = vc.flatten().to_numpy(zero_copy_only=False)
+    return (
+        idx.astype(np.int64, copy=False),
+        vals.astype(np.float64, copy=False),
+        lens.astype(np.int64, copy=False),
+    )
+
+
 def _batch_csr(batch, idx_col: str, val_col: str, p: int) -> "CSRMatrix":
-    """A batch of (indices, values) lists as an (n, p) ``CSRMatrix``.
-
-    Accepts a pandas batch (``mapInPandas`` — one small ndarray per row,
-    bulk-concatenated) or a ``pyarrow.RecordBatch`` (``mapInArrow`` —
-    round 13: the flat value/offset buffers are read directly, no per-row
-    allocation; measured ~300× cheaper than the arrow→pandas conversion
-    of the same list columns). Identical arrays either way."""
-    if not isinstance(batch, pd.DataFrame):
-        import pyarrow.compute as pc
-
-        ic = batch.column(batch.schema.get_field_index(idx_col))
-        vc = batch.column(batch.schema.get_field_index(val_col))
-        flat_idx = ic.flatten().to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False
-        )
-        flat_val = vc.flatten().to_numpy(zero_copy_only=False).astype(
-            np.float64, copy=False
-        )
-        lens = pc.list_value_length(ic).to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False
-        )
-    else:
-        idx_lists = batch[idx_col].to_numpy()
-        val_lists = batch[val_col].to_numpy()
-        lens = np.fromiter(
-            (len(v) for v in idx_lists), dtype=np.int64, count=len(idx_lists)
-        )
-        # bulk concatenate over the object array (C-side loop over row
-        # buffers) — the per-row np.asarray listcomp it replaces was ~3×
-        # the cost at typical batch sizes (round 13)
-        flat_idx = (
-            np.concatenate(idx_lists).astype(np.int64, copy=False)
-            if len(idx_lists)
-            else np.zeros(0, dtype=np.int64)
-        )
-        flat_val = (
-            np.concatenate(val_lists).astype(np.float64, copy=False)
-            if len(val_lists)
-            else np.zeros(0)
-        )
+    """A ``pyarrow.RecordBatch``'s (indices, values) lists as an (n, p)
+    ``CSRMatrix``, read from the flat buffers (``_flat_csr``; round 13:
+    ~300× cheaper than the arrow→pandas conversion of the same list
+    columns)."""
+    idx, vals, lens = _flat_csr(
+        batch.column(batch.schema.get_field_index(idx_col)),
+        batch.column(batch.schema.get_field_index(val_col)),
+    )
     row_ids = np.repeat(np.arange(len(lens)), lens)
-    return CSRMatrix(flat_idx, flat_val, row_ids, (len(lens), p))
+    return CSRMatrix(idx, vals, row_ids, (len(lens), p))
 
 
 def _f64(batch, col: str) -> np.ndarray:
-    """Float64 column pull from a pandas batch or pyarrow.RecordBatch."""
-    if isinstance(batch, pd.DataFrame):
-        return batch[col].to_numpy(dtype=np.float64)
+    """A ``pyarrow.RecordBatch`` column as float64."""
     return (
         batch.column(batch.schema.get_field_index(col))
         .to_numpy(zero_copy_only=False)
@@ -95,9 +84,9 @@ def _f64(batch, col: str) -> np.ndarray:
 
 
 def _csr(idx_col: str, val_col: str, p: int):
-    """The sparse batch reader of ``kernels._arrow_partials``:
-    ``mapInArrow`` batches read into a ``CSRMatrix``."""
-    return True, lambda rb: _batch_csr(rb, idx_col, val_col, p)
+    """The sparse batch reader of ``kernels._arrow_partials``: a
+    ``mapInArrow`` batch read into a ``CSRMatrix``."""
+    return lambda rb: _batch_csr(rb, idx_col, val_col, p)
 
 
 class CSRMatrix:

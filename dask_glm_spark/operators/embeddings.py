@@ -12,7 +12,7 @@ engine's solver conventions:
   reduction is run-invariant;
 - the eigendecomposition is driver-side numpy on the d×d covariance
   (d is 64-1024 for real embedding tables — never data-scale);
-- projection is a literal-free ``mapInPandas`` GEMM per Arrow batch (the
+- projection is a literal-free ``mapInArrow`` GEMM per Arrow batch (the
   k-means convention: the matrix rides the closure, the plan is
   byte-stable, no per-call Janino recompile).
 """
@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame
 
 from dask_glm_spark.functions.kernels import (
     _arrow_partials_generic,
-    _features_matrix,
+    _flat_rows,
+    _with_columns,
 )
 
 
@@ -37,8 +38,8 @@ def embedding_moments(
     exact partials (n, Σx, Σxxᵀ); symmetry is enforced after the driver
     fold (float addition noise only)."""
 
-    def batch_partial(pdf):
-        X = _features_matrix(pdf, vec_col)
+    def batch_partial(rb):
+        X = _flat_rows(rb.column(0))
         return {
             "n": np.float64(len(X)),
             "s": X.sum(axis=0),
@@ -104,8 +105,6 @@ def project_embeddings(
     One batched GEMM per Arrow batch; the projection matrix rides the
     closure — the plan carries no giant literal and is byte-stable across
     calls (the k-means lesson)."""
-    import pandas as pd
-
     mean = np.asarray(model["mean"], dtype=np.float64)
     comps = np.asarray(model["components"], dtype=np.float64)
     if whiten:
@@ -116,16 +115,13 @@ def project_embeddings(
     cols = df.columns
 
     def op(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            X = _features_matrix(pdf, vec_col)
-            P = (X - mean) @ comps.T
-            out = {c: pdf[c] for c in cols}
-            out[out_col] = list(P)
-            yield pd.DataFrame(out)
+            X = _flat_rows(rb.column(rb.schema.get_field_index(vec_col)))
+            yield _with_columns(rb, {out_col: (X - mean) @ comps.T})
 
     fields = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in cols
     )
-    return df.mapInPandas(op, schema=f"{fields}, {out_col} array<double>")
+    return df.mapInArrow(op, schema=f"{fields}, {out_col} array<double>")

@@ -426,7 +426,8 @@ class _GLM(BaseEstimator):
         return df_.withColumn(col_name, xb)
 
     def _sparse_xb(self, df: DataFrame, col_name: str) -> DataFrame:
-        from dask_glm_spark.functions.kernels_sparse import _batch_csr
+        from dask_glm_spark.functions.kernels import _with_columns
+        from dask_glm_spark.functions.kernels_sparse import _batch_csr, _f64
 
         # A dense fit with fit_intercept=True stores the intercept as the
         # LAST coefficient; sparse indices only address the weights, so
@@ -451,21 +452,19 @@ class _GLM(BaseEstimator):
             )
 
         def op(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
+            for rb in batches:
+                if rb.num_rows == 0:
                     continue
-                X = _batch_csr(pdf, "findices", "fvalues", len(beta))
+                X = _batch_csr(rb, "findices", "fvalues", len(beta))
                 xb = X @ beta + icpt
                 if offset_col is not None:
-                    xb = xb + pdf[offset_col].to_numpy(dtype=np.float64)
-                out = pdf.copy()
-                out[col_name] = xb
-                yield out
+                    xb = xb + _f64(rb, offset_col)
+                yield _with_columns(rb, {col_name: xb})
 
         fields = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )
-        return df.mapInPandas(op, schema=f"{fields}, {col_name} double")
+        return df.mapInArrow(op, schema=f"{fields}, {col_name} double")
 
 
 class LogisticRegression(_GLM):
@@ -807,25 +806,24 @@ class MulticlassLogisticRegression(_GLM):
         the ``_sparse_xb`` split. Shared by OvR (round 13) and softmax
         scoring; both argmax over these LINEAR scores (sigmoid and
         softmax are monotone per class / rank-preserving)."""
+        from dask_glm_spark.functions.kernels import _with_columns
         from dask_glm_spark.functions.kernels_sparse import _batch_csr
 
         Bmat = self.coefs_.T.copy()  # (p, k), intercept split out
         icpt = np.asarray(self.intercepts_, dtype=np.float64)
 
         def op(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
+            for rb in batches:
+                if rb.num_rows == 0:
                     continue
-                Z = _batch_csr(pdf, "findices", "fvalues", len(Bmat)) @ Bmat
+                Z = _batch_csr(rb, "findices", "fvalues", len(Bmat)) @ Bmat
                 Z += icpt
-                out = pdf.copy()
-                out[col] = [r.tolist() for r in Z]
-                yield out
+                yield _with_columns(rb, {col: Z})
 
         fields = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )
-        return df.mapInPandas(op, schema=f"{fields}, {col} array<double>")
+        return df.mapInArrow(op, schema=f"{fields}, {col} array<double>")
 
     def predict_proba(self, df: DataFrame) -> DataFrame:
         from dask_glm_spark.sources import vectors as V

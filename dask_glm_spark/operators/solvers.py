@@ -2,8 +2,8 @@
 
 Reference semantics: ``dask_glm/algorithms.py`` (each solver's docstring
 cites the lines it replicates). Model state (beta, p floats — p·k for
-softmax) lives on the driver and is folded into each job as codegen
-literals or closure capture — never shuffled.
+softmax) lives on the driver and rides each kernel job's per-batch
+closure — never shuffled.
 
 Each algorithm's body is written once and runs on either feature layout
 (``_Layout``): a dense ``features: array<double>`` column, or wide-sparse
@@ -406,7 +406,7 @@ def _init_vec(init_beta, p: int, k: int | None = None) -> np.ndarray:
 class _Layout:
     """The feature layout of one fit — the one place where dense and
     wide-sparse inputs differ. Dense: an ``array<double>`` column
-    (``features_col``, kernel ``path``); sparse: ``idx_col``/``val_col``
+    (``features_col``); sparse: ``idx_col``/``val_col``
     index/value arrays over ``p`` coordinates. ``k`` selects the
     objective: ``None`` is the binary GLM of ``family`` over (p,)
     coefficients, an int the k-class softmax over the flattened (p, k)
@@ -419,14 +419,14 @@ class _Layout:
 
     def __init__(
         self, df, p, label_col="label", family=None, weight_col=None,
-        offset_col=None, features_col="features", path="auto",
-        idx_col=None, val_col="fvalues", k=None,
+        offset_col=None, features_col="features", idx_col=None,
+        val_col="fvalues", k=None,
     ):
         self.df, self.p, self.k, self.family = df, int(p), k, family
         self.label_col, self.weight_col, self.offset_col = (
             label_col, weight_col, offset_col,
         )
-        self.features_col, self.path = features_col, path
+        self.features_col = features_col
         self.idx_col, self.val_col = idx_col, val_col
         self.shape = (self.p,) if k is None else (self.p, k)
         self.dim = self.p if k is None else self.p * k
@@ -457,8 +457,7 @@ class _Layout:
             )
         return kernels.loss_gradient(
             self.df, self.family, beta, self.p, self.features_col,
-            self.label_col, self.path, weight_col=self.weight_col,
-            offset_col=self.offset_col,
+            self.label_col, self.weight_col, self.offset_col,
         )
 
     def multi_loss_grad(self, cands):
@@ -483,8 +482,7 @@ class _Layout:
             )
         return kernels.multi_loss_gradient(
             self.df, self.family, cands, self.features_col, self.label_col,
-            self.path, weight_col=self.weight_col,
-            offset_col=self.offset_col,
+            weight_col=self.weight_col, offset_col=self.offset_col,
         )
 
     def gradient(self, beta):
@@ -493,8 +491,7 @@ class _Layout:
         return kernels.gradient(
             self.df, self.family, beta, p=self.p,
             features_col=self.features_col, label_col=self.label_col,
-            path=self.path, weight_col=self.weight_col,
-            offset_col=self.offset_col,
+            weight_col=self.weight_col, offset_col=self.offset_col,
         )
 
     def hvp(self, beta, v):
@@ -518,18 +515,17 @@ class _Layout:
         return kernels.hessian_vector_product(
             self.df, self.family, beta, v, p=self.p,
             features_col=self.features_col, label_col=self.label_col,
-            path=self.path, weight_col=self.weight_col,
-            offset_col=self.offset_col,
+            weight_col=self.weight_col, offset_col=self.offset_col,
         )
 
 
-def _dense_layout(df, family, features_col, label_col, path, kwargs):
+def _dense_layout(df, family, features_col, label_col, kwargs):
     """The dense layout of a ``@normalize``d binary solver (pops ``p``,
     ``weight_col``, ``offset_col`` from its kwargs)."""
     return _Layout(
         df, _resolve_p(df, features_col, kwargs), label_col, family,
         kwargs.pop("weight_col", None), kwargs.pop("offset_col", None),
-        features_col=features_col, path=path,
+        features_col=features_col,
     )
 
 
@@ -799,7 +795,6 @@ def gd_step(
     family=Logistic,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     compute_loss: bool = True,
 ) -> tuple[np.ndarray, float | None]:
     """ONE unrolled fixed-step gradient-descent iteration.
@@ -825,14 +820,14 @@ def gd_step(
     beta = np.asarray(beta, dtype=np.float64)
     p = len(beta)
     _, grad = kernels.loss_gradient(
-        df, family, beta, p, features_col, label_col, path
+        df, family, beta, p, features_col, label_col
     )
     beta1 = beta - float(stepsize) * grad
     if not compute_loss:
         return beta1, None
     loss1 = kernels.loss(
         df, family, beta1,
-        features_col=features_col, label_col=label_col, path=path,
+        features_col=features_col, label_col=label_col,
     )
     return beta1, float(loss1)
 
@@ -846,7 +841,6 @@ def prox_step(
     family=Logistic,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     candidate=None,
 ) -> np.ndarray:
     """ONE unrolled proximal-gradient iteration at a fixed step size.
@@ -868,7 +862,7 @@ def prox_step(
     p = len(beta)
     if candidate is None:
         _, grad = kernels.loss_gradient(
-            df, family, beta, p, features_col, label_col, path
+            df, family, beta, p, features_col, label_col
         )
         candidate = beta - float(stepsize) * grad
     reg = Regularizer.get(regularizer)
@@ -975,7 +969,6 @@ def gradient_descent(
     family=Logistic,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     init_beta=None,
     **kwargs,
 ):
@@ -989,7 +982,7 @@ def gradient_descent(
     per-row sample-weight column (weighted GLM, round 10): loss/gradient
     become Σ w·ll and Xᵀ(w⊙r) — same scans, one extra multiply.
     """
-    lay = _dense_layout(df, family, features_col, label_col, path, kwargs)
+    lay = _dense_layout(df, family, features_col, label_col, kwargs)
     return _gd(lay, max_iter, tol, init_beta, kwargs.pop("fit_info", None))
 
 
@@ -1001,7 +994,6 @@ def newton(
     family=Logistic,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     init_beta=None,
     **kwargs,
 ):
@@ -1035,7 +1027,7 @@ def newton(
     tol_ok = False
     while not converged:
         grad, hess = kernels.gradient_hessian(
-            df, family, beta, p, features_col, label_col, path,
+            df, family, beta, p, features_col, label_col,
             weight_col=weight_col, offset_col=offset_col,
         )
         step, *_ = np.linalg.lstsq(hess, grad, rcond=-1)
@@ -1109,7 +1101,6 @@ def newton_cg(
     family=Logistic,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     init_beta=None,
     cg_tol: float | None = None,
     max_cg_iter: int | None = None,
@@ -1133,7 +1124,7 @@ def newton_cg(
     ``cg_tol`` to pin it. ``max_cg_iter`` defaults to ``min(p, 64)``.
     Supports ``weight_col`` / ``offset_col`` like every dense solver.
     """
-    lay = _dense_layout(df, family, features_col, label_col, path, kwargs)
+    lay = _dense_layout(df, family, features_col, label_col, kwargs)
     return _newton_cg(
         lay, max_iter, tol, init_beta, kwargs.pop("fit_info", None),
         cg_tol, max_cg_iter,
@@ -1188,7 +1179,6 @@ def lbfgs(
     verbose: bool = False,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     init_beta=None,
     **kwargs,
 ):
@@ -1198,7 +1188,7 @@ def lbfgs(
     Architecturally identical to MLlib's LogisticRegression (breeze LBFGS +
     treeAggregate), which doubles as an independent oracle in tests.
     ``init_beta`` warm-starts the optimizer."""
-    lay = _dense_layout(df, family, features_col, label_col, path, kwargs)
+    lay = _dense_layout(df, family, features_col, label_col, kwargs)
     return _lbfgs(
         lay, regularizer, lamduh, max_iter, tol, init_beta,
         kwargs.pop("fit_info", None), verbose,
@@ -1215,7 +1205,6 @@ def proximal_grad(
     tol: float = 1e-8,
     features_col: str = "features",
     label_col: str = "label",
-    path: str = "auto",
     accelerate: bool = False,
     init_beta=None,
     **kwargs,
@@ -1230,7 +1219,7 @@ def proximal_grad(
     majorization backtracking — same two kernel surfaces, O(1/k^2) rate,
     and a full-objective stopping rule; reaches the MLlib/OWL-QN optimum
     where the reference's step policy stalls (see ``_fista``)."""
-    lay = _dense_layout(df, family, features_col, label_col, path, kwargs)
+    lay = _dense_layout(df, family, features_col, label_col, kwargs)
     return _proximal(
         lay, regularizer, lamduh, max_iter, tol, init_beta,
         kwargs.pop("fit_info", None), accelerate,
@@ -1618,18 +1607,14 @@ class _DenseBlock:
 
 class _CSRBlock(_DenseBlock):
     """ADMM block reader of ``(indices, values)`` columns: per batch the
-    flat indices, values and row lengths; a block is the ``CSRMatrix``
-    indices/values/row-ids."""
+    flat indices, values and row lengths (``kernels_sparse._flat_csr``:
+    rows whose two lists differ in length raise ``ValueError``); a block
+    is the ``CSRMatrix`` indices/values/row-ids."""
 
     dtypes = (np.int64, np.float64, np.int64)
 
     def read(self, batch):
-        il = batch.column(0)
-        return (
-            il.flatten().to_numpy(zero_copy_only=False).astype(np.int64),
-            batch.column(1).flatten().to_numpy(zero_copy_only=False),
-            il.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64),
-        )
+        return kernels_sparse._flat_csr(batch.column(0), batch.column(1))
 
     def join(self, parts):
         idx, vals, lens = (np.concatenate(a) for a in zip(*parts))

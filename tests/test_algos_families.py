@@ -110,8 +110,8 @@ def test_determinism_same_inputs_same_beta(spark):
     df, _, _ = make_classification(spark, n_samples=400, n_features=3, seed=70605,
                                   npartitions=4)
     df = df.persist()
-    b1 = solvers.lbfgs(df, family=Logistic, path="arrow")
-    b2 = solvers.lbfgs(df, family=Logistic, path="arrow")
+    b1 = solvers.lbfgs(df, family=Logistic)
+    b2 = solvers.lbfgs(df, family=Logistic)
     np.testing.assert_array_equal(b1, b2)
     df.unpersist()
 

@@ -6,9 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 
 from dask_glm_spark import GammaRegression
 from dask_glm_spark.functions import kernels
@@ -32,11 +31,10 @@ def gdata(spark):
     df.unpersist()
 
 
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_kernel_numpy_twin(gdata, path):
+def test_kernel_numpy_twin(gdata):
     df, X, y = gdata
     beta = np.array([0.2, -0.1])
-    loss, grad = kernels.loss_gradient(df, Gamma, beta, path=path)
+    loss, grad = kernels.loss_gradient(df, Gamma, beta)
     xb = X @ beta
     np.testing.assert_allclose(
         loss, float(np.sum(Gamma.loglike_terms_np(xb, y))), rtol=1e-12
@@ -45,6 +43,7 @@ def test_kernel_numpy_twin(gdata, path):
                                rtol=1e-10)
 
 
+@pytest.mark.slow
 def test_mllib_gamma_oracle(gdata):
     from pyspark.ml.functions import array_to_vector
     from pyspark.ml.regression import GeneralizedLinearRegression
@@ -68,6 +67,7 @@ def test_mllib_gamma_oracle(gdata):
     )
 
 
+@pytest.mark.slow
 def test_solvers_agree_and_weighted(gdata):
     from pyspark.sql import functions as F
 
@@ -146,6 +146,7 @@ def test_weighted_deviance_equals_replicated(gdata, spark):
         dfw.unpersist()
 
 
+@pytest.mark.slow
 def test_deviance_matches_mllib_summary(gdata):
     """VERDICT r10 #6 (gamma face): mean unit deviance × n vs MLlib GLR
     ``summary.deviance`` on a shared gamma/log fit."""

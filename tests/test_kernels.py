@@ -1,4 +1,8 @@
-"""Kernel-layer parity: sql vs arrow paths vs driver numpy ground truth."""
+"""Kernel-layer parity against driver numpy ground truth.
+
+Tests parametrized over ``path`` run the kernel ("arrow", its one physical
+path) or the in-test Spark-SQL reference (``tests/sql_reference.py``,
+"sql") against the same numpy twin."""
 
 import numpy as np
 import pytest
@@ -7,6 +11,7 @@ from pyspark.sql import functions as F
 from dask_glm_spark.functions import kernels
 from dask_glm_spark.functions.families import FAMILIES, Logistic
 from dask_glm_spark.sources.datasets import make_classification
+from tests import sql_reference
 
 
 @pytest.fixture(scope="module")
@@ -26,9 +31,10 @@ BETA = np.array([0.3, -0.7, 0.11, 0.52])
 @pytest.mark.parametrize("family", list(FAMILIES.values()))
 @pytest.mark.parametrize("path", ["sql", "arrow"])
 def test_loss_gradient_matches_numpy(data, family, path):
+    k = kernels if path == "arrow" else sql_reference
     df, X, y = data
     yy = np.clip(y, 0, None) if family.name == "poisson" else y
-    loss, grad = kernels.loss_gradient(df, family, BETA, path=path)
+    loss, grad = k.loss_gradient(df, family, BETA)
     xb = X @ BETA
     np.testing.assert_allclose(loss, family.loglike_np(xb, y), rtol=1e-9)
     np.testing.assert_allclose(grad, X.T @ family.residual_np(xb, y), rtol=1e-9)
@@ -37,8 +43,9 @@ def test_loss_gradient_matches_numpy(data, family, path):
 @pytest.mark.parametrize("family", list(FAMILIES.values()))
 @pytest.mark.parametrize("path", ["sql", "arrow"])
 def test_gradient_hessian_matches_numpy(data, family, path):
+    k = kernels if path == "arrow" else sql_reference
     df, X, y = data
-    grad, hess = kernels.gradient_hessian(df, family, BETA, path=path)
+    grad, hess = k.gradient_hessian(df, family, BETA)
     xb = X @ BETA
     w = family.hess_weight_np(xb)
     np.testing.assert_allclose(grad, X.T @ family.residual_np(xb, y), rtol=1e-9)
@@ -48,9 +55,10 @@ def test_gradient_hessian_matches_numpy(data, family, path):
 
 @pytest.mark.parametrize("path", ["sql", "arrow"])
 def test_multi_loss(data, path):
+    k = kernels if path == "arrow" else sql_reference
     df, X, y = data
     betas = [BETA, BETA * 0.5, np.zeros(4)]
-    losses = kernels.multi_loss(df, Logistic, betas, path=path)
+    losses = k.multi_loss(df, Logistic, betas)
     expected = [Logistic.loglike_np(X @ b, y) for b in betas]
     np.testing.assert_allclose(losses, expected, rtol=1e-9)
 
@@ -74,7 +82,7 @@ def test_add_intercept(data):
 def test_arrow_path_is_deterministic(data):
     df, X, y = data
     results = [
-        kernels.loss_gradient(df, Logistic, BETA, path="arrow") for _ in range(3)
+        kernels.loss_gradient(df, Logistic, BETA) for _ in range(3)
     ]
     for loss, grad in results[1:]:
         assert loss == results[0][0]  # bit-identical
@@ -85,13 +93,13 @@ def test_tree_merge_matches_single_level(data, monkeypatch):
     """Two-level (tree) partial merge: same math as the single-level driver
     merge to fp tolerance, and bit-deterministic across runs."""
     df, X, y = data
-    single_loss, single_grad = kernels.loss_gradient(df, Logistic, BETA, path="arrow")
+    single_loss, single_grad = kernels.loss_gradient(df, Logistic, BETA)
     # force the tree path: threshold below the partition count
     monkeypatch.setattr(kernels, "TREE_MERGE_THRESHOLD", 2)
     monkeypatch.setattr(kernels, "TREE_FANIN", 2)
     many = df.repartition(9)
     tree_runs = [
-        kernels.loss_gradient(many, Logistic, BETA, path="arrow") for _ in range(2)
+        kernels.loss_gradient(many, Logistic, BETA) for _ in range(2)
     ]
     for loss, grad in tree_runs:
         np.testing.assert_allclose(loss, single_loss, rtol=1e-12)
@@ -102,24 +110,28 @@ def test_tree_merge_matches_single_level(data, monkeypatch):
 
 def test_tree_merge_gradient_hessian(data, monkeypatch):
     df, X, y = data
-    g0, h0 = kernels.gradient_hessian(df, Logistic, BETA, path="arrow")
+    g0, h0 = kernels.gradient_hessian(df, Logistic, BETA)
     monkeypatch.setattr(kernels, "TREE_MERGE_THRESHOLD", 2)
     monkeypatch.setattr(kernels, "TREE_FANIN", 2)
-    g1, h1 = kernels.gradient_hessian(df.repartition(9), Logistic, BETA, path="arrow")
+    g1, h1 = kernels.gradient_hessian(df.repartition(9), Logistic, BETA)
     np.testing.assert_allclose(g1, g0, rtol=1e-12)
     np.testing.assert_allclose(h1, h0, rtol=1e-12)
 
 
 @pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_gd_step_matches_numpy(data, path):
+def test_gd_step_matches_numpy(data, path, monkeypatch):
     """One unrolled fixed-step GD iteration (q48 surface): update line of
     _gd_loop with the line search pinned — beta1 = beta - s*grad, loss
-    re-evaluated at beta1 (reference algorithms.py:154)."""
+    re-evaluated at beta1 (reference algorithms.py:154). "sql" runs the
+    step over the SQL reference kernels."""
     from dask_glm_spark.operators.solvers import gd_step
 
+    if path == "sql":
+        monkeypatch.setattr(kernels, "loss_gradient", sql_reference.loss_gradient)
+        monkeypatch.setattr(kernels, "multi_loss", sql_reference.multi_loss)
     df, X, y = data
     s = 1e-3
-    beta1, loss1 = gd_step(df, BETA, s, family=Logistic, path=path)
+    beta1, loss1 = gd_step(df, BETA, s, family=Logistic)
     xb = X @ BETA
     g = X.T @ Logistic.residual_np(xb, y)
     exp_beta1 = BETA - s * g
@@ -130,15 +142,18 @@ def test_gd_step_matches_numpy(data, path):
 
 
 @pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_prox_step_matches_numpy(data, path):
+def test_prox_step_matches_numpy(data, path, monkeypatch):
     """One unrolled ISTA candidate (q49 surface): the real
-    L1.proximal_operator applied to beta - s*grad (algorithms.py:479-481)."""
+    L1.proximal_operator applied to beta - s*grad (algorithms.py:479-481).
+    "sql" runs the step over the SQL reference gradient."""
     from dask_glm_spark.functions.regularizers import L1
     from dask_glm_spark.operators.solvers import prox_step
 
+    if path == "sql":
+        monkeypatch.setattr(kernels, "loss_gradient", sql_reference.loss_gradient)
     df, X, y = data
     s, lam = 1e-3, 500.0
-    beta1 = prox_step(df, BETA, s, lam, regularizer="l1", path=path)
+    beta1 = prox_step(df, BETA, s, lam, regularizer="l1")
     g = X.T @ Logistic.residual_np(X @ BETA, y)
     exp = L1().proximal_operator(BETA - s * g, s * lam)
     np.testing.assert_allclose(beta1, exp, rtol=1e-9, atol=1e-12)
@@ -189,30 +204,13 @@ def test_multi_loss_gradient_survives_overflow_candidates(spark, data):
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", RuntimeWarning)
         losses, grads = kernels.multi_loss_gradient(
-            df, Poisson, [sane, crazy], path="arrow"
+            df, Poisson, [sane, crazy]
         )
-        ref_l, ref_g = kernels.loss_gradient(df, Poisson, sane, path="arrow")
+        ref_l, ref_g = kernels.loss_gradient(df, Poisson, sane)
     assert grads.shape == (4, 2)
     np.testing.assert_allclose(losses[0], ref_l, rtol=1e-12)
     np.testing.assert_allclose(grads[:, 0], ref_g, rtol=1e-12)
     assert not np.isfinite(losses[1])  # the crazy candidate: inf, not a crash
-
-
-def test_multi_loss_gradient_paths_agree(spark, data):
-    """sql and arrow fused-probe paths agree on losses AND gradients."""
-    from dask_glm_spark.functions.families import Logistic
-
-    df, X, y = data
-    betas = [np.array([0.1, -0.2, 0.3, 0.0]), np.array([0.0, 0.1, 0.0, -0.1])]
-    l_s, g_s = kernels.multi_loss_gradient(df, Logistic, betas, path="sql")
-    l_a, g_a = kernels.multi_loss_gradient(df, Logistic, betas, path="arrow")
-    np.testing.assert_allclose(l_s, l_a, rtol=1e-12)
-    np.testing.assert_allclose(g_s, g_a, rtol=1e-12)
-    # and against the single-beta fused kernel
-    for i, b in enumerate(betas):
-        l1, g1 = kernels.loss_gradient(df, Logistic, b, path="sql")
-        np.testing.assert_allclose(l_s[i], l1, rtol=1e-12)
-        np.testing.assert_allclose(g_s[:, i], g1, rtol=1e-12)
 
 
 def test_roc_auc_distributed_matches_numpy(spark):
@@ -286,7 +284,7 @@ def test_multi_level_tree_merge_bytes_capped(data, monkeypatch):
     result bit-for-bit across runs."""
     df, X, y = data
     single_loss, single_grad = kernels.loss_gradient(
-        df, Logistic, BETA, path="arrow"
+        df, Logistic, BETA
     )
     # budget of 2 partial rows -> fanin 2 -> 9 parts need 3+ levels
     monkeypatch.setattr(
@@ -294,7 +292,7 @@ def test_multi_level_tree_merge_bytes_capped(data, monkeypatch):
     )
     many = df.repartition(9)
     runs = [
-        kernels.loss_gradient(many, Logistic, BETA, path="arrow")
+        kernels.loss_gradient(many, Logistic, BETA)
         for _ in range(2)
     ]
     for loss, grad in runs:
@@ -308,15 +306,15 @@ def test_multi_level_merge_generic_sum(spark, monkeypatch):
     """Direct _arrow_partials_generic exercise: 16 partitions, budget of
     3 rows -> levels of fanin 3 until <= 3 groups; the folded sum equals
     the plain driver sum."""
-    import pandas as pd
+    from dask_glm_spark.functions.kernels_sparse import _f64
 
     df = spark.range(160, numPartitions=16).withColumn(
         "v", (F.col("id") % 7).cast("double")
     )
     monkeypatch.setattr(kernels, "DRIVER_PULL_BUDGET_BYTES", 3 * 8 * 2)
 
-    def bp(pdf: pd.DataFrame) -> dict:
-        return {"s": float(pdf["v"].sum()), "c": float(len(pdf))}
+    def bp(rb) -> dict:
+        return {"s": float(_f64(rb, "v").sum()), "c": float(rb.num_rows)}
 
     rows = kernels._partial_rows(
         df, bp, "s double, c double", partial_doubles=2
@@ -334,36 +332,6 @@ def test_multi_level_merge_generic_sum(spark, monkeypatch):
     assert acc == {"s": total_s, "c": total_c}
 
 
-def test_loss_gradient_fused_matches_separate(data):
-    """r14 q48 job fusion: loss_gradient_fused builds each spec's agg
-    expressions from the same sql builder as loss_gradient, so the fused
-    single-scan values must match the separate-job values exactly."""
-    df, X, y = data
-    dfw = df.withColumn("w", 1.0 + (F.col("id") % 5).cast("double") / 4.0)
-    dfwo = dfw.withColumn("o", (F.col("id") % 3).cast("double") / 10.0)
-
-    (wl, wg), (ol, og) = kernels.loss_gradient_fused(
-        dfwo, Logistic, BETA, 4,
-        specs=[{"weight_col": "w"}, {"offset_col": "o"}],
-    )
-    wl2, wg2 = kernels.loss_gradient(dfwo, Logistic, BETA, 4, weight_col="w")
-    ol2, og2 = kernels.loss_gradient(dfwo, Logistic, BETA, 4, offset_col="o")
-    np.testing.assert_allclose(wl, wl2, rtol=1e-12)
-    np.testing.assert_allclose(wg, wg2, rtol=1e-12)
-    np.testing.assert_allclose(ol, ol2, rtol=1e-12)
-    np.testing.assert_allclose(og, og2, rtol=1e-12)
-    # and against driver numpy ground truth
-    pdf = dfwo.orderBy("id").toPandas()
-    w = pdf["w"].to_numpy()
-    o = pdf["o"].to_numpy()
-    np.testing.assert_allclose(
-        wg, X.T @ (w * Logistic.residual_np(X @ BETA, y)), rtol=1e-9
-    )
-    np.testing.assert_allclose(
-        og, X.T @ Logistic.residual_np(X @ BETA + o, y), rtol=1e-9
-    )
-
-
 def test_prox_step_candidate_matches_internal_gradient(data):
     """r14 q48 job fusion: prox_step(candidate=gd_step's beta1) must equal
     prox_step computing its own gradient — gd_step's update IS the prox
@@ -372,73 +340,45 @@ def test_prox_step_candidate_matches_internal_gradient(data):
 
     df, _, _ = data
     s, lam = 1e-3, 500.0
-    beta1, _ = gd_step(df, BETA, s, family=Logistic, path="sql")
+    beta1, _ = gd_step(df, BETA, s, family=Logistic)
     via_candidate = prox_step(
         df, BETA, s, lam, regularizer="l1", candidate=beta1
     )
-    recomputed = prox_step(df, BETA, s, lam, regularizer="l1", path="sql")
+    recomputed = prox_step(df, BETA, s, lam, regularizer="l1")
     np.testing.assert_allclose(via_candidate, recomputed, rtol=1e-12, atol=0)
 
 
-def test_matvec_array_literal_bit_exact(data, spark):
-    """r14: beta rides ONE ArrayType literal (stable codegen source) and
-    ConstantFolding is excluded during kernel actions. The sums must be
-    BIT-identical to the folded-literal form — folding is pure element
-    extraction, so evaluating with folding ON (a plain collect outside
-    kernel_exec, which folds each ``lit(arr)[j]`` back into the exact
-    scalar literal the old form inlined) must reproduce every float."""
-    df, X, y = data
-    rng = np.random.RandomState(41)
-    for _ in range(3):
-        beta = rng.rand(4) - 0.4
-        # library form: stable-source kernel action (folding excluded)
-        loss, grad = kernels.loss_gradient(df, Logistic, beta, path="sql")
-        # reference: the pre-r14 INLINED scalar-literal aggregate shape,
-        # collected OUTSIDE kernel_exec (folding on, subexprs re-fused) —
-        # the exact plan the old kernels ran
-        fcol = F.col("features")
-        xb = sum(
-            (fcol[j] * float(beta[j]) for j in range(1, 4)),
-            fcol[0] * float(beta[0]),
-        )
-        y = F.col("label")
-        r = Logistic.residual(xb, y)
-        ll = Logistic.loglike_terms(xb, y)
-        aggs = [F.coalesce(F.sum(ll), F.lit(0.0)).alias("loss")]
-        aggs += [
-            F.coalesce(F.sum(fcol[j] * r), F.lit(0.0)).alias(f"g{j}")
-            for j in range(4)
-        ]
-        row = df.agg(*aggs).collect()[0]
-        assert loss == float(row["loss"])
-        assert np.array_equal(
-            grad, np.array([row[f"g{j}"] for j in range(4)])
-        )
+def test_kernel_exec_restores_aqe(spark, data):
+    """kernel_exec turns AQE off for the outermost kernel action and
+    restores the session value on exit: after nested kernel actions,
+    after an action that raises, and for a prior user value."""
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    df, _, _ = data
+    with kernels.kernel_exec(spark):
+        assert spark.conf.get(key) == "false"
+        with kernels.kernel_exec(spark):
+            kernels.loss_gradient(df, Logistic, BETA)  # nests its own
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == before
+    from pyspark.errors import PythonException
 
-
-def test_kernel_exec_stable_source_restores_conf(spark):
-    """The excludedRules override must restore the prior session value on
-    exit, including nesting and a pre-existing user value."""
-    key = "spark.sql.optimizer.excludedRules"
+    with pytest.raises(PythonException, match="shapes|mismatch"):
+        with kernels.kernel_exec(spark):
+            kernels.loss_gradient(
+                df.select(F.array(F.lit(1.0)).alias("features"), "label"),
+                Logistic, BETA,
+            )
+    assert spark.conf.get(key) == before
+    assert id(spark) not in kernels._AQE_STATE
     try:
-        spark.conf.unset(key)
-    except Exception:
-        pass
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    with kernels.kernel_exec(spark, stable_source=True):
-        assert kernels._NOFOLD_RULE in spark.conf.get(key)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        with kernels.kernel_exec(spark, stable_source=True):
-            assert kernels._NOFOLD_RULE in spark.conf.get(key)
-    assert spark.conf.get(key, None) in (None, "")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before_sp
-    prior = "org.apache.spark.sql.catalyst.optimizer.OptimizeIn"
-    spark.conf.set(key, prior)
-    with kernels.kernel_exec(spark, stable_source=True):
-        val = spark.conf.get(key)
-        assert prior in val and kernels._NOFOLD_RULE in val
-    assert spark.conf.get(key) == prior
-    spark.conf.unset(key)
+        spark.conf.set(key, "false")
+        with kernels.kernel_exec(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_multi_loss_gradient_candidate_loss_matches_loss(data):
@@ -475,7 +415,7 @@ def test_fused_softmax_hvp_matches_separate(data):
         d.select("features", F.col("_l3").alias("label")), B
     )
     hv1 = kernels.hessian_vector_product(
-        d.select("features", "label"), Logistic, BETA, v, 4, path="arrow"
+        d.select("features", "label"), Logistic, BETA, v, 4
     )
     sm2, G2, hv2 = kernels.fused_softmax_hvp(
         d, B, Logistic, BETA, v, 4, softmax_label_col="_l3"
@@ -518,31 +458,37 @@ def test_fused_sparse_gate_matches_separate(data):
 
 
 def test_sql_gate_fusion_bit_equal(data, spark):
-    """r14 pass 3 q48 fusion: the single agg computing the weighted spec,
-    the offset spec AND both residual sums (q48's _sql_gate_sums shape)
-    must be BIT-equal to the standalone kernels — every sum column
-    accumulates the same per-row expressions over the same rows in the
-    same per-partition order."""
+    """q48's gate values over its weighted/offset frame: wloss/wgrad and
+    oloss/ograd come from the production kernel, and the one aggregate
+    computing both residual sums (q48's pchi2/dres aggregate) is
+    BIT-equal to the two sums aggregated alone."""
     from dask_glm_spark.functions import inference
-    from dask_glm_spark.functions.kernels import (
-        _loss_gradient_sql_parts,
-        kernel_exec,
-    )
 
     df, X, y = data
     dfwo = df.select(
+        "id",
         "features",
         "label",
         (1.0 + (F.col("id") % 5).cast("double") / 4.0).alias("w"),
         ((F.col("id") % 3).cast("double") / 10.0).alias("o"),
     ).persist()
     try:
-        dfwo.count()
-        proj_w, aggs_w = _loss_gradient_sql_parts(
-            Logistic, BETA, 4, "features", "label", "w", None, prefix="s0_"
+        wl, wg = kernels.loss_gradient(dfwo, Logistic, BETA, weight_col="w")
+        ol, og = kernels.loss_gradient(dfwo, Logistic, BETA, offset_col="o")
+        pdf = dfwo.orderBy("id").toPandas()
+        w, o = pdf["w"].to_numpy(), pdf["o"].to_numpy()
+        xb = X @ BETA
+        np.testing.assert_allclose(
+            wl, np.dot(w, Logistic.loglike_terms_np(xb, y)), rtol=1e-9
         )
-        proj_o, aggs_o = _loss_gradient_sql_parts(
-            Logistic, BETA, 4, "features", "label", None, "o", prefix="s1_"
+        np.testing.assert_allclose(
+            wg, X.T @ (w * Logistic.residual_np(xb, y)), rtol=1e-9
+        )
+        np.testing.assert_allclose(
+            ol, Logistic.loglike_np(xb + o, y), rtol=1e-9
+        )
+        np.testing.assert_allclose(
+            og, X.T @ Logistic.residual_np(xb + o, y), rtol=1e-9
         )
         res = inference.glm_residuals(
             dfwo, Logistic, BETA, "pearson", out_col="_rp"
@@ -550,41 +496,12 @@ def test_sql_gate_fusion_bit_equal(data, spark):
         res = inference.glm_residuals(
             res, Logistic, BETA, "deviance", out_col="_rd"
         )
-        with kernel_exec(spark, stable_source=True):
-            row = (
-                res.select(
-                    F.col("features"), F.col("_rp"), F.col("_rd"),
-                    *proj_w, *proj_o,
-                )
-                .agg(
-                    *aggs_w,
-                    *aggs_o,
-                    F.sum(F.col("_rp") * F.col("_rp")).alias("_pchi2"),
-                    F.sum("_rd").alias("_dres"),
-                )
-                .collect()[0]
-            )
-        (wl, wg), (ol, og) = kernels.loss_gradient_fused(
-            dfwo, Logistic, BETA, 4,
-            specs=[{"weight_col": "w"}, {"offset_col": "o"}],
-        )
-        res2 = inference.glm_residuals(
-            dfwo.select("features", "label"), Logistic, BETA, "pearson",
-            out_col="_rp",
-        )
-        res2 = inference.glm_residuals(
-            res2, Logistic, BETA, "deviance", out_col="_rd"
-        )
-        with kernel_exec(spark):
-            row2 = res2.agg(
-                F.sum(F.col("_rp") * F.col("_rp")).alias("p"),
-                F.sum("_rd").alias("d"),
-            ).collect()[0]
-        assert float(row["s0_loss"]) == wl
-        assert [row[f"s0_g{j}"] for j in range(4)] == list(wg)
-        assert float(row["s1_loss"]) == ol
-        assert [row[f"s1_g{j}"] for j in range(4)] == list(og)
-        assert float(row["_pchi2"]) == float(row2["p"])
-        assert float(row["_dres"]) == float(row2["d"])
+        pchi2 = F.sum(F.col("_rp") * F.col("_rp"))
+        with kernels.kernel_exec(spark):
+            row = res.agg(pchi2.alias("p"), F.sum("_rd").alias("d")).first()
+            p_alone = res.agg(pchi2.alias("p")).first()["p"]
+            d_alone = res.agg(F.sum("_rd").alias("d")).first()["d"]
+        assert row["p"] == p_alone
+        assert row["d"] == d_alone
     finally:
         dfwo.unpersist()

@@ -12,9 +12,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 
 from dask_glm_spark import LogisticRegression
 from dask_glm_spark.functions import kernels
@@ -58,7 +57,7 @@ def test_cg_negative_curvature_first_step_returns_gradient():
 
 
 # ---------------------------------------------------------------------------
-# Hvp kernel vs numpy twin, both physical paths
+# Hvp kernel vs numpy twin
 # ---------------------------------------------------------------------------
 @pytest.fixture(scope="module")
 def clf_data(spark):
@@ -77,21 +76,19 @@ def clf_data(spark):
     df.unpersist()
 
 
-@pytest.mark.parametrize("path", ["sql", "arrow"])
 @pytest.mark.parametrize("family", [Logistic, Normal, Poisson])
-def test_hvp_matches_numpy_twin(clf_data, path, family):
+def test_hvp_matches_numpy_twin(clf_data, family):
     df, X, y = clf_data
     rng = np.random.RandomState(7)
     beta = rng.randn(X.shape[1]) * 0.3
     v = rng.randn(X.shape[1])
     hw = family.hess_weight_np(X @ beta)
     expected = X.T @ (hw * (X @ v))
-    got = kernels.hessian_vector_product(df, family, beta, v, path=path)
+    got = kernels.hessian_vector_product(df, family, beta, v)
     np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
 
 
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_hvp_weighted_offset(spark, path):
+def test_hvp_weighted_offset(spark):
     import pandas as pd
 
     rng = np.random.RandomState(42)
@@ -110,7 +107,7 @@ def test_hvp_weighted_offset(spark, path):
     hw = w * Logistic.hess_weight_np(X @ beta + o)
     expected = X.T @ (hw * (X @ v))
     got = kernels.hessian_vector_product(
-        df, Logistic, beta, v, path=path, weight_col="w", offset_col="o"
+        df, Logistic, beta, v, weight_col="w", offset_col="o"
     )
     np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
 
@@ -118,6 +115,7 @@ def test_hvp_weighted_offset(spark, path):
 # ---------------------------------------------------------------------------
 # solver parity with newton
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_newton_cg_matches_newton_logistic(clf_data):
     df, X, y = clf_data
     b_newton = newton(df, max_iter=50, tol=1e-10)
@@ -125,6 +123,7 @@ def test_newton_cg_matches_newton_logistic(clf_data):
     np.testing.assert_allclose(b_cg, b_newton, rtol=1e-6, atol=1e-8)
 
 
+@pytest.mark.slow
 def test_newton_cg_matches_newton_poisson(spark):
     df = make_poisson(
         spark, n_samples=300, n_features=3, seed=77, npartitions=3
@@ -134,6 +133,7 @@ def test_newton_cg_matches_newton_poisson(spark):
     np.testing.assert_allclose(b_cg, b_newton, rtol=1e-6, atol=1e-8)
 
 
+@pytest.mark.slow
 def test_newton_cg_matches_newton_normal(spark):
     df = make_regression(
         spark, n_samples=300, n_features=3, seed=88, npartitions=3
@@ -143,6 +143,7 @@ def test_newton_cg_matches_newton_normal(spark):
     np.testing.assert_allclose(b_cg, b_newton, rtol=1e-6, atol=1e-8)
 
 
+@pytest.mark.slow
 def test_newton_cg_eisenstat_walker_default_converges(clf_data):
     # default forcing sequence (cg_tol=None) must reach the same optimum,
     # just possibly with more outer iterations
@@ -155,6 +156,7 @@ def test_newton_cg_eisenstat_walker_default_converges(clf_data):
     np.testing.assert_allclose(b_cg, b_newton, rtol=1e-5, atol=1e-7)
 
 
+@pytest.mark.slow
 def test_newton_cg_weighted_offset_parity(spark):
     import pandas as pd
 
@@ -174,6 +176,7 @@ def test_newton_cg_weighted_offset_parity(spark):
     np.testing.assert_allclose(b_cg, b_newton, rtol=1e-6, atol=1e-8)
 
 
+@pytest.mark.slow
 def test_newton_cg_gamma_tweedie_parity(spark):
     # non-canonical log links: both solvers Fisher-score with the same
     # hess_weight, so the iterates agree step-for-step
@@ -193,6 +196,7 @@ def test_newton_cg_gamma_tweedie_parity(spark):
         np.testing.assert_allclose(b_cg, b_newton, rtol=1e-6, atol=1e-8)
 
 
+@pytest.mark.slow
 def test_estimator_dispatch_newton_cg(clf_data):
     df, X, y = clf_data
     lr_cg = LogisticRegression(solver="newton_cg", max_iter=50, tol=1e-10).fit(df)
@@ -211,6 +215,7 @@ def test_newton_cg_in_registry():
 # ---------------------------------------------------------------------------
 # wide-sparse newton_cg (round 12: sparse features get Newton semantics)
 # ---------------------------------------------------------------------------
+@pytest.mark.slow
 def test_newton_cg_sparse_matches_dense(clf_data):
     from dask_glm_spark.operators.solvers import newton_cg_sparse
     from dask_glm_spark.sources import vectors as V
@@ -241,6 +246,7 @@ def test_hvp_sparse_matches_numpy_twin(clf_data):
     np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
 
 
+@pytest.mark.slow
 def test_estimator_sparse_newton_cg_with_intercept(clf_data):
     """The round-12 combo: wide-sparse + fit_intercept + newton_cg —
     matches the dense intercept-extended newton fit."""
@@ -351,6 +357,7 @@ def test_softmax_hvp_sparse_matches_dense(softmax_data):
     )
 
 
+@pytest.mark.slow
 def test_softmax_newton_cg_matches_lbfgs(softmax_data):
     df, X, y, k = softmax_data
     B_lbfgs = solvers.softmax_lbfgs(
@@ -374,6 +381,7 @@ def test_softmax_newton_cg_matches_lbfgs(softmax_data):
     np.testing.assert_allclose(B_cg.sum(axis=1), 0.0, atol=1e-10)
 
 
+@pytest.mark.slow
 def test_softmax_newton_cg_sparse_matches_dense(softmax_data):
     from dask_glm_spark.sources import vectors as V_
 
@@ -388,6 +396,7 @@ def test_softmax_newton_cg_sparse_matches_dense(softmax_data):
     np.testing.assert_allclose(B_sparse, B_dense, rtol=1e-8, atol=1e-9)
 
 
+@pytest.mark.slow
 def test_softmax_estimator_dispatch_newton_cg(softmax_data):
     from dask_glm_spark.operators.estimators import SoftmaxRegression
 
@@ -408,6 +417,7 @@ def test_softmax_estimator_dispatch_newton_cg(softmax_data):
     assert m_cg.n_iter_ is not None and m_cg.converged_ is not None
 
 
+@pytest.mark.slow
 def test_softmax_estimator_sparse_newton_cg(softmax_data):
     from dask_glm_spark.operators.estimators import SoftmaxRegression
     from dask_glm_spark.sources import vectors as V_

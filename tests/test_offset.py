@@ -24,6 +24,7 @@ from dask_glm_spark import PoissonRegression
 from dask_glm_spark.functions import kernels
 from dask_glm_spark.functions.families import Poisson
 from dask_glm_spark.operators import solvers
+from tests import sql_reference
 
 
 @pytest.fixture(scope="module")
@@ -49,10 +50,12 @@ def pdata(spark):
 
 @pytest.mark.parametrize("path", ["sql", "arrow"])
 def test_kernel_numpy_twin(pdata, path):
+    """"arrow" runs the kernels, "sql" the in-test Spark-SQL reference."""
+    k = kernels if path == "arrow" else sql_reference
     df, X, y, o = pdata
     beta = np.array([0.3, -0.1])
-    loss, grad = kernels.loss_gradient(
-        df, Poisson, beta, path=path, offset_col="off"
+    loss, grad = k.loss_gradient(
+        df, Poisson, beta, offset_col="off"
     )
     xb = X @ beta + o
     np.testing.assert_allclose(
@@ -61,14 +64,14 @@ def test_kernel_numpy_twin(pdata, path):
     np.testing.assert_allclose(
         grad, X.T @ Poisson.residual_np(xb, y), rtol=1e-10
     )
-    g, h = kernels.gradient_hessian(
-        df, Poisson, beta, path=path, offset_col="off"
+    g, h = k.gradient_hessian(
+        df, Poisson, beta, offset_col="off"
     )
     hw = Poisson.hess_weight_np(xb)
     np.testing.assert_allclose(g, X.T @ Poisson.residual_np(xb, y), rtol=1e-10)
     np.testing.assert_allclose(h, X.T @ (hw[:, None] * X), rtol=1e-10)
-    losses, grads = kernels.multi_loss_gradient(
-        df, Poisson, [beta, np.zeros(2)], path=path, offset_col="off"
+    losses, grads = k.multi_loss_gradient(
+        df, Poisson, [beta, np.zeros(2)], offset_col="off"
     )
     np.testing.assert_allclose(losses[0], loss, rtol=1e-10)
     np.testing.assert_allclose(grads[:, 0], grad, rtol=1e-10)

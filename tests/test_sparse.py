@@ -78,7 +78,7 @@ def test_mllib_vector_ingest(spark):
 def test_sparse_loss_gradient_matches_dense(dense_df, sparse_df, sparse_data):
     X, y = sparse_data
     beta = np.linspace(-0.5, 0.5, P)
-    dl, dg = kernels.loss_gradient(dense_df, Logistic, beta, path="arrow")
+    dl, dg = kernels.loss_gradient(dense_df, Logistic, beta)
     sl, sg = kernels_sparse.loss_gradient_sparse(sparse_df, Logistic, beta, p=P)
     np.testing.assert_allclose(sl, dl, rtol=1e-12)
     np.testing.assert_allclose(sg, dg, rtol=1e-12, atol=1e-12)
@@ -147,6 +147,38 @@ def test_admm_sparse_matches_dense_fit(dense_df, sparse_df):
         sparse_df, p=P, nblocks=0
     )
     np.testing.assert_allclose(sparse_lr.coef_, dense_lr.coef_, rtol=1e-5, atol=1e-7)
+
+
+def test_ragged_csr_rows_raise(spark):
+    """A row whose index and value lists differ in length must raise, not
+    shift values onto other rows: the flat reader shared by the kernels
+    (``_batch_csr``) and the CSR ADMM blocks (``_CSRBlock``) compares the
+    two lists' lengths. Row 0 has 2 indices but 1 value; row 1 the
+    reverse, so the flat arrays have equal totals."""
+    import pyarrow as pa
+    from pyspark.errors import PythonException
+
+    from dask_glm_spark.operators import solvers
+
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "findices": pa.array([[0, 2], [1]], type=pa.list_(pa.int64())),
+            "fvalues": [[1.0], [2.0, 3.0]],
+            "label": [1.0, 0.0],
+        }
+    )
+    with pytest.raises(ValueError, match="same length"):
+        kernels_sparse._batch_csr(rb, "findices", "fvalues", 3)
+    with pytest.raises(ValueError, match="same length"):
+        solvers._CSRBlock(3).read(rb)
+    df = spark.createDataFrame(
+        [([0, 2], [1.0], 1.0), ([1], [2.0, 3.0], 0.0)],
+        "findices array<int>, fvalues array<double>, label double",
+    ).coalesce(1)
+    with pytest.raises(PythonException, match="same length"):
+        kernels_sparse.loss_gradient_sparse(df, Logistic, np.ones(3), 3)
+    with pytest.raises(PythonException, match="same length"):
+        solvers.admm_sparse(df, p=3, max_iter=2)
 
 
 def test_csr_matrix_duck_type(sparse_data):

@@ -28,6 +28,7 @@ from dask_glm_spark import LogisticRegression, SoftmaxRegression
 from dask_glm_spark.functions import kernels
 from dask_glm_spark.functions.families import Logistic, Poisson
 from dask_glm_spark.operators import solvers
+from tests import sql_reference
 
 N, P = 300, 3
 
@@ -93,10 +94,12 @@ def test_weighted_equals_replicated_gd_prox(wdata):
 
 @pytest.mark.parametrize("path", ["sql", "arrow"])
 def test_kernel_numpy_twin(wdata, path):
+    """"arrow" runs the kernels, "sql" the in-test Spark-SQL reference."""
+    k = kernels if path == "arrow" else sql_reference
     df, _, X, y, w = wdata
     beta = np.array([0.3, -0.2, 0.1])
-    loss, grad = kernels.loss_gradient(
-        df, Logistic, beta, path=path, weight_col="w"
+    loss, grad = k.loss_gradient(
+        df, Logistic, beta, weight_col="w"
     )
     xb = X @ beta
     exp_loss = float(np.dot(w, Logistic.loglike_terms_np(xb, y)))
@@ -104,20 +107,20 @@ def test_kernel_numpy_twin(wdata, path):
     np.testing.assert_allclose(loss, exp_loss, rtol=1e-12)
     np.testing.assert_allclose(grad, exp_grad, rtol=1e-10)
 
-    g, h = kernels.gradient_hessian(
-        df, Logistic, beta, path=path, weight_col="w"
+    g, h = k.gradient_hessian(
+        df, Logistic, beta, weight_col="w"
     )
     hw = w * Logistic.hess_weight_np(xb)
     np.testing.assert_allclose(g, exp_grad, rtol=1e-10)
     np.testing.assert_allclose(h, X.T @ (hw[:, None] * X), rtol=1e-10)
 
     cands = [beta, np.zeros(P)]
-    losses, grads = kernels.multi_loss_gradient(
-        df, Logistic, cands, path=path, weight_col="w"
+    losses, grads = k.multi_loss_gradient(
+        df, Logistic, cands, weight_col="w"
     )
     np.testing.assert_allclose(losses[0], exp_loss, rtol=1e-12)
     np.testing.assert_allclose(grads[:, 0], exp_grad, rtol=1e-10)
-    ml = kernels.multi_loss(df, Logistic, cands, path=path, weight_col="w")
+    ml = k.multi_loss(df, Logistic, cands, weight_col="w")
     np.testing.assert_allclose(ml[0], exp_loss, rtol=1e-12)
 
 
@@ -125,13 +128,10 @@ def test_unit_weights_match_unweighted(wdata):
     df, *_ = wdata
     df1 = df.withColumn("ones", F.lit(1.0))
     beta = np.array([0.3, -0.2, 0.1])
-    for path in ("sql", "arrow"):
-        a = kernels.loss_gradient(df1, Logistic, beta, path=path)
-        b = kernels.loss_gradient(
-            df1, Logistic, beta, path=path, weight_col="ones"
-        )
-        np.testing.assert_allclose(a[0], b[0], rtol=1e-12)
-        np.testing.assert_allclose(a[1], b[1], rtol=1e-12)
+    a = kernels.loss_gradient(df1, Logistic, beta)
+    b = kernels.loss_gradient(df1, Logistic, beta, weight_col="ones")
+    np.testing.assert_allclose(a[0], b[0], rtol=1e-12)
+    np.testing.assert_allclose(a[1], b[1], rtol=1e-12)
 
 
 def test_mllib_weightcol_oracle(wdata):

@@ -44,17 +44,17 @@ def test_bytes_aware_tree_merge_parity(small, monkeypatch):
     the single-level fold to float-reduction tolerance."""
     beta = np.array([0.1, -0.2, 0.3, 0.05])
     base_loss, base_grad = kernels.loss_gradient(
-        small, Logistic, beta, 4, path="arrow"
+        small, Logistic, beta, 4
     )
     # 64 bytes < 8 * (1 + p) -> max_driver_rows < nparts -> tree path
     monkeypatch.setattr(kernels, "DRIVER_PULL_BUDGET_BYTES", 64)
     tree_loss, tree_grad = kernels.loss_gradient(
-        small, Logistic, beta, 4, path="arrow"
+        small, Logistic, beta, 4
     )
     np.testing.assert_allclose(tree_loss, base_loss, rtol=1e-12)
     np.testing.assert_allclose(tree_grad, base_grad, rtol=1e-12)
     # and the tree path is deterministic run-over-run (the pid-group fold)
-    tree2 = kernels.loss_gradient(small, Logistic, beta, 4, path="arrow")
+    tree2 = kernels.loss_gradient(small, Logistic, beta, 4)
     assert tree2[0] == tree_loss
     np.testing.assert_array_equal(tree2[1], tree_grad)
 
