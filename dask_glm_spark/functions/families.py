@@ -1,19 +1,24 @@
-"""GLM families: the scalar loss algebra, in dual form.
+"""GLM families: the loss algebra and the inference algebra, in dual form.
 
 Semantics replicate the reference exactly (``dask_glm/families.py:6-123``):
 each family is a class-used-as-namespace with static methods, consumed
-generically by every solver via ``family=`` kwargs.
+generically by every solver via ``family=`` kwargs — and by the Wald
+inference and the estimators, which never switch on a family's name.
 
 Dual form, per the engine architecture (SURVEY.md §7):
 
-1. **Spark Column expressions** (``loglike_terms``, ``residual``,
-   ``hess_weight``): pointwise terms over an ``xb = X·beta`` column, the
-   whole-stage-codegen form of the same algebra (the Spark-SQL test
-   oracle of the kernels, ``tests/sql_reference.py``).
+1. **Spark Column expressions**: the per-row projections of
+   ``inference.glm_residuals``, the interval tail, the summary's deviance
+   aggregate and the estimators' ``predict`` / ``get_deviance``
+   (``mean``, ``variance``, ``link_deriv``, ``unit_deviance``), plus the
+   loss terms ``loglike_terms`` / ``residual`` / ``hess_weight``, whose
+   Column form is the Spark-SQL test oracle of the kernels
+   (``tests/sql_reference.py``).
 2. **numpy statics** (``pointwise_loss``, ``pointwise_gradient``,
-   ``loglike_np``): identical formulas over in-memory arrays. Used by the
-   ADMM per-partition local solves (inside Arrow batches), by every
-   partial-aggregation kernel, and by tests.
+   ``loglike_np``, ``mean_np``, ``variance_np``): identical formulas over
+   in-memory arrays. Used by the ADMM per-partition local solves (inside
+   Arrow batches), by every partial-aggregation kernel, by the summary's
+   dispersion scan, and by tests.
 
 The gradient of every family factors as ``X^T r(xb, y)`` and the hessian
 as ``X^T diag(w(xb)) X`` — ``residual`` and ``hess_weight`` supply the
@@ -25,6 +30,22 @@ aggregations without family-specific code:
   Logistic  | sigmoid(xb) - y     | s(1-s), s=sigmoid(xb)   (families.py:41-51)
   Normal    | 2(xb - y)           | 2                        (families.py:78-84)
   Poisson   | exp(xb) - y         | exp(xb)                  (families.py:114-123)
+
+Inference members (beyond-reference; the MLlib GLR contract):
+
+  family    | mean μ      | V(μ)     | dη/dμ       | null_mean | φ fixed | hess_scale
+  ----------|-------------|----------|-------------|-----------|---------|-----------
+  Logistic  | sigmoid(xb) | μ(1-μ)   | 1/(μ(1-μ))  | 0.5       | yes     | 1
+  Normal    | xb          | 1        | 1           | 0.0       | no      | 2
+  Poisson   | exp(xb)     | μ        | 1/μ         | 1.0       | yes     | 1
+  Gamma     | exp(xb)     | μ²       | 1/μ         | 1.0       | no      | 1
+  Tweedie   | exp(xb)     | μ^q      | 1/μ         | 1.0       | no      | 1
+
+``unit_deviance(y, μ)`` is the per-row deviance d(y, μ); ``null_mean`` is
+g⁻¹(0), the no-intercept null model; ``dispersion_fixed`` families report
+z statistics at φ = 1, the others estimate φ = Pearson χ²/(n − p) and
+report t statistics; ``hess_scale`` is the objective Hessian over the
+unit-dispersion Fisher information (Normal's loss is the unscaled SSE).
 """
 
 from __future__ import annotations
@@ -47,6 +68,11 @@ class Logistic:
     """Binary-outcome family (reference: ``dask_glm/families.py:6-51``)."""
 
     name = "logistic"
+    null_mean = 0.5
+    dispersion_fixed = True
+    hess_scale = 1.0
+    mean = staticmethod(sigmoid_expr)
+    mean_np = staticmethod(sigmoid_np)
 
     # --- Spark Column form ------------------------------------------------
     @staticmethod
@@ -62,6 +88,21 @@ class Logistic:
     def hess_weight(xb: Column) -> Column:
         s = sigmoid_expr(xb)
         return s * (F.lit(1.0) - s)
+
+    @staticmethod
+    def variance(mu: Column) -> Column:
+        return mu * (F.lit(1.0) - mu)
+
+    @staticmethod
+    def link_deriv(mu: Column) -> Column:
+        return F.lit(1.0) / (mu * (F.lit(1.0) - mu))
+
+    @staticmethod
+    def unit_deviance(y: Column, mu: Column) -> Column:
+        # y ∈ {0, 1}: the xlogx terms vanish at 0/1
+        return F.lit(2.0) * (
+            F.when(y > 0.5, -F.log(mu)).otherwise(-F.log(F.lit(1.0) - mu))
+        )
 
     # --- numpy form ---------------------------------------------------------
     @staticmethod
@@ -84,6 +125,10 @@ class Logistic:
         return s * (1.0 - s)
 
     @staticmethod
+    def variance_np(mu):
+        return mu * (1.0 - mu)
+
+    @staticmethod
     def pointwise_loss(beta, X, y):
         return Logistic.loglike_np(X.dot(np.ravel(beta)), np.ravel(y))
 
@@ -100,6 +145,9 @@ class Normal:
     """
 
     name = "normal"
+    null_mean = 0.0
+    dispersion_fixed = False
+    hess_scale = 2.0  # the SSE objective is 2x the unit-dispersion NLL
 
     @staticmethod
     def loglike_terms(xb: Column, y: Column) -> Column:
@@ -112,6 +160,22 @@ class Normal:
     @staticmethod
     def hess_weight(xb: Column) -> Column:
         return F.lit(2.0)
+
+    @staticmethod
+    def mean(xb: Column) -> Column:
+        return xb
+
+    @staticmethod
+    def variance(mu: Column) -> Column:
+        return F.lit(1.0)
+
+    @staticmethod
+    def link_deriv(mu: Column) -> Column:
+        return F.lit(1.0)
+
+    @staticmethod
+    def unit_deviance(y: Column, mu: Column) -> Column:
+        return (y - mu) * (y - mu)
 
     @staticmethod
     def loglike_np(Xbeta, y):
@@ -130,6 +194,14 @@ class Normal:
         return np.full_like(Xbeta, 2.0)
 
     @staticmethod
+    def mean_np(Xbeta):
+        return Xbeta
+
+    @staticmethod
+    def variance_np(mu):
+        return np.ones_like(mu)
+
+    @staticmethod
     def pointwise_loss(beta, X, y):
         return Normal.loglike_np(X.dot(np.ravel(beta)), np.ravel(y))
 
@@ -138,10 +210,31 @@ class Normal:
         return X.T.dot(Normal.residual_np(X.dot(np.ravel(beta)), np.ravel(y)))
 
 
-class Poisson:
+class _LogLink:
+    """Inverse link, link derivative and null mean of the log-link
+    families (Poisson, Gamma, Tweedie)."""
+
+    null_mean = 1.0  # exp(0)
+    hess_scale = 1.0
+
+    @staticmethod
+    def mean(xb: Column) -> Column:
+        return F.exp(xb)
+
+    @staticmethod
+    def link_deriv(mu: Column) -> Column:
+        return F.lit(1.0) / mu
+
+    @staticmethod
+    def mean_np(Xbeta):
+        return np.exp(Xbeta)
+
+
+class Poisson(_LogLink):
     """Count-data family (reference: ``dask_glm/families.py:87-123``)."""
 
     name = "poisson"
+    dispersion_fixed = True
 
     @staticmethod
     def loglike_terms(xb: Column, y: Column) -> Column:
@@ -154,6 +247,17 @@ class Poisson:
     @staticmethod
     def hess_weight(xb: Column) -> Column:
         return F.exp(xb)
+
+    @staticmethod
+    def variance(mu: Column) -> Column:
+        return mu
+
+    @staticmethod
+    def unit_deviance(y: Column, mu: Column) -> Column:
+        return F.lit(2.0) * (
+            F.when(y > 0, y * F.log(y / mu)).otherwise(F.lit(0.0))
+            - (y - mu)
+        )
 
     @staticmethod
     def loglike_np(Xbeta, y):
@@ -172,6 +276,10 @@ class Poisson:
         return np.exp(Xbeta)
 
     @staticmethod
+    def variance_np(mu):
+        return mu
+
+    @staticmethod
     def pointwise_loss(beta, X, y):
         return Poisson.loglike_np(X.dot(np.ravel(beta)), np.ravel(y))
 
@@ -180,7 +288,7 @@ class Poisson:
         return X.T.dot(Poisson.residual_np(X.dot(np.ravel(beta)), np.ravel(y)))
 
 
-class Gamma:
+class Gamma(_LogLink):
     """Gamma family with log link — beyond-reference (round 10; MLlib GLR
     ``family="gamma", link="log"`` is the public contract). Strictly
     positive continuous responses with constant coefficient of variation
@@ -196,6 +304,7 @@ class Gamma:
     """
 
     name = "gamma"
+    dispersion_fixed = False
 
     @staticmethod
     def loglike_terms(xb: Column, y: Column) -> Column:
@@ -208,6 +317,20 @@ class Gamma:
     @staticmethod
     def hess_weight(xb: Column) -> Column:
         return F.lit(1.0)
+
+    @staticmethod
+    def variance(mu: Column) -> Column:
+        return mu * mu
+
+    @staticmethod
+    def unit_deviance(y: Column, mu: Column) -> Column:
+        # y <= 0 is invalid for gamma: Spark's log(<=0) is NULL, which
+        # every aggregate would silently skip — NaN poisons it instead
+        # (the poisson_deviance_expr convention)
+        logterm = F.when(y > 0, -F.log(y / mu)).otherwise(
+            F.lit(float("nan"))
+        )
+        return F.lit(2.0) * (logterm + (y - mu) / mu)
 
     @staticmethod
     def loglike_np(Xbeta, y):
@@ -226,6 +349,10 @@ class Gamma:
         return np.ones_like(Xbeta)
 
     @staticmethod
+    def variance_np(mu):
+        return mu * mu
+
+    @staticmethod
     def pointwise_loss(beta, X, y):
         return Gamma.loglike_np(X.dot(np.ravel(beta)), np.ravel(y))
 
@@ -234,7 +361,7 @@ class Gamma:
         return X.T.dot(Gamma.residual_np(X.dot(np.ravel(beta)), np.ravel(y)))
 
 
-class Tweedie:
+class Tweedie(_LogLink):
     """Compound-Poisson Tweedie family with log link — beyond-reference
     (round 10; MLlib GLR ``family="tweedie"`` is the public contract).
 
@@ -256,6 +383,8 @@ class Tweedie:
     every solver takes ``family=Tweedie(1.5)`` unchanged, dense or
     sparse, with weights/offsets composing.
     """
+
+    dispersion_fixed = False
 
     def __init__(self, var_power: float = 1.5):
         if not 1.0 < var_power < 2.0:
@@ -280,6 +409,27 @@ class Tweedie:
     def hess_weight(self, xb: Column) -> Column:
         return F.exp(xb * (2.0 - self.var_power))
 
+    def variance(self, mu: Column) -> Column:
+        return F.pow(mu, F.lit(self.var_power))
+
+    def unit_deviance(self, y: Column, mu: Column) -> Column:
+        """d(y, μ) = 2·[ y^(2−q)/((1−q)(2−q)) − y·μ^(1−q)/(1−q)
+        + μ^(2−q)/(2−q) ] (the y-only term is 0 at y=0).
+
+        This is the TRUE unit deviance (R's tweedie package form). MLlib
+        GLR substitutes max(y, 0.1) inside its y^(1−q) factor, so its
+        ``summary.deviance`` diverges on rows with 0 < y < 0.1 — parity
+        with MLlib outside that band is pinned in
+        ``tests/test_tweedie.py::test_deviance_matches_mllib_summary``."""
+        q = self.var_power
+        return F.lit(2.0) * (
+            F.when(
+                y > 0, F.pow(y, F.lit(2.0 - q)) / ((1.0 - q) * (2.0 - q))
+            ).otherwise(F.lit(0.0))
+            - y * F.pow(mu, F.lit(1.0 - q)) / (1.0 - q)
+            + F.pow(mu, F.lit(2.0 - q)) / (2.0 - q)
+        )
+
     # --- numpy form -------------------------------------------------------
     def loglike_terms_np(self, Xbeta, y):
         q = self.var_power
@@ -296,6 +446,9 @@ class Tweedie:
 
     def hess_weight_np(self, Xbeta):
         return np.exp(Xbeta * (2.0 - self.var_power))
+
+    def variance_np(self, mu):
+        return mu ** self.var_power
 
     def pointwise_loss(self, beta, X, y):
         return self.loglike_np(X.dot(np.ravel(beta)), np.ravel(y))

@@ -3,12 +3,15 @@
 The reference stops at point estimates; every practical GLM consumer
 (statsmodels ``summary()``, R ``summary.glm``, MLlib GLR
 ``summary``) also reports standard errors, Wald statistics, and
-p-values. This module computes them Spark-side from TWO extra scans of
-the training frame — one fused gradient+Gram job at the fitted β (the
-observed/expected Fisher information ``XᵀWX``; the same
-``kernels.gradient_hessian`` every newton iteration runs) and, for
-dispersion-estimating families, one Pearson-χ² aggregate — then inverts
-the p×p information on the driver exactly like the newton solve.
+p-values. A summary costs one Arrow scan of the training frame at the
+fitted β — the gradient+Gram partial every newton iteration runs (the
+observed/expected Fisher information ``XᵀWX``), fused with the row
+count, the weighted response mean and, for dispersion-estimating
+families, the Pearson χ² — plus one deviance aggregate; the p×p
+information is inverted on the driver exactly like the newton solve.
+Every family-specific quantity (inverse link, variance, link
+derivative, unit deviance, null mean, dispersion kind, objective scale)
+is a member of the family (``functions/families.py``).
 
 Statistical contract (the MLlib GLR convention, which the tests
 cross-check end-to-end):
@@ -43,31 +46,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_glm_spark.functions.kernels import kernel_exec
-
-# gradient_hessian returns the Hessian of each family's OBJECTIVE, which
-# for Normal is the unscaled SSE (reference parity: hess_weight = 2), i.e.
-# 2·XᵀX — twice the unit-dispersion Fisher information. Scale back here.
-_HESS_SCALE = {"normal": 2.0}
-
-# Families with KNOWN unit dispersion (z statistics); everything else
-# estimates φ by Pearson χ²/(n−p) and uses t statistics (MLlib GLR).
-_FIXED_DISPERSION = ("logistic", "poisson")
-
-
-def _null_mu(family) -> float:
-    """g⁻¹(0): the no-intercept null-model mean (ADVICE r12: this was a
-    name-based if/else whose final branch silently handed ANY future
-    family μ₀=1 — now an explicit per-family table that fails loudly)."""
-    name = getattr(family, "name", "")
-    table = {"logistic": 0.5, "normal": 0.0, "poisson": 1.0, "gamma": 1.0}
-    if name in table:
-        return table[name]
-    if name.startswith("tweedie"):  # log link: exp(0) = 1
-        return 1.0
-    raise ValueError(
-        f"no null-model mean g^-1(0) registered for family {name!r} — "
-        "add its link-inverse-at-zero to inference._null_mu"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -183,122 +161,71 @@ def students_t_isf(p: float, df: float) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Pearson χ² (dispersion) — one aggregate scan
+# Dispersion: one per-batch partial shared by the dense and sparse scans
 # ---------------------------------------------------------------------------
-def _pearson_and_n(
-    df: DataFrame,
-    family,
-    beta: np.ndarray,
-    features_col: str,
-    label_col: str,
-    weight_col: str | None,
-    offset_col: str | None,
-) -> tuple[float, float, float]:
-    """(Σ w·(y−μ)²/V(μ), n, Σw·y/Σw) in one codegen aggregate. Only
-    called for the dispersion-estimating families (normal/gamma/
-    tweedie); the weighted response mean rides along for the null
-    deviance."""
-    from dask_glm_spark.functions import kernels
+def _dispersion_part(family, beta: np.ndarray, label_col: str):
+    """``(zeros, part)`` for ``kernels._arrow_partials``: per batch the
+    row count ``n``, ``Σw`` and ``Σw·y`` (the intercept-only null mean)
+    and, unless the family's dispersion is fixed, the Pearson χ²
+    ``Σ w·(y−μ)²/V(μ)`` at ``beta``."""
+    fixed = family.dispersion_fixed
 
-    xb = kernels.matvec_expr(beta, features_col)
-    if offset_col is not None:
-        xb = xb + F.col(offset_col)
-    y = F.col(label_col)
-    name = getattr(family, "name", "")
-    if name == "normal":
-        mu = xb
-        v = F.lit(1.0)
-    elif name == "gamma":
-        mu = F.exp(xb)
-        v = mu * mu
-    elif name.startswith("tweedie"):
-        mu = F.exp(xb)
-        v = F.pow(mu, F.lit(float(family.var_power)))
-    else:  # pragma: no cover — guarded by _FIXED_DISPERSION upstream
-        raise ValueError(f"no Pearson variance function for family {name!r}")
-    term = (y - mu) * (y - mu) / v
-    w = F.col(weight_col) if weight_col is not None else F.lit(1.0)
-    if weight_col is not None:
-        term = w * term
-    with kernel_exec(df.sparkSession):
-        row = df.agg(
-            F.sum(term).alias("pearson"),
-            F.count("*").alias("n"),
-            F.sum(w * y).alias("swy"),
-            F.sum(w).alias("sw"),
-        ).collect()[0]
-    return (
-        float(row["pearson"]),
-        float(row["n"]),
-        float(row["swy"]) / float(row["sw"]),
+    def partial(X, y, w=None, o=None) -> dict:
+        out = {
+            "n": float(len(y)),
+            "sw": float(len(y) if w is None else w.sum()),
+            "swy": float(y.sum() if w is None else (w * y).sum()),
+        }
+        if not fixed:
+            xb = X @ beta if o is None else X @ beta + o
+            mu = family.mean_np(xb)
+            term = (y - mu) ** 2 / family.variance_np(mu)
+            if w is not None:
+                term = term * w
+            out["pearson"] = float(term.sum())
+        return out
+
+    zeros = {"n": 0.0, "sw": 0.0, "swy": 0.0}
+    if not fixed:
+        zeros["pearson"] = 0.0
+    return zeros, (partial, label_col, "")
+
+
+def _dispersion(acc: dict, family, p: int) -> tuple[float, float, float]:
+    """``(n, df_residual, φ)`` from the folded dispersion partials: φ = 1
+    for fixed-dispersion families (z statistics; df_residual is
+    reporting-only and clamped — a hashed p > n is normal for sparse
+    fits), else Pearson χ²/(n − p), which needs n > p."""
+    n = acc["n"]
+    if family.dispersion_fixed:
+        return n, max(n - p, 0.0), 1.0
+    df_resid = n - p
+    if df_resid <= 0:
+        raise ValueError(
+            f"no residual degrees of freedom (n={n:.0f}, p={p}) — "
+            "t-based dispersion inference needs n > p"
+        )
+    return n, df_resid, acc["pearson"] / df_resid
+
+
+def _wald(coefs, se, family, n, df_resid, dispersion, **extra) -> "GLMSummary":
+    """The GLMSummary of coefficients and their SEs: z statistics with
+    normal tails when φ is fixed, t(df_residual) tails otherwise."""
+    fixed = family.dispersion_fixed
+    with np.errstate(divide="ignore", invalid="ignore"):
+        stat = np.where(se > 0, coefs / se, np.nan)
+    if fixed:
+        pvals = np.array([2.0 * normal_sf(abs(z)) for z in stat])
+    else:
+        pvals = np.array(
+            [2.0 * students_t_sf(abs(t), df_resid) for t in stat]
+        )
+    return GLMSummary(
+        coefficients=coefs, std_errors=se, statistic=stat, p_values=pvals,
+        statistic_kind="z" if fixed else "t", dispersion=float(dispersion),
+        dispersion_fixed=fixed, df_residual=float(df_resid), n=float(n),
+        **extra,
     )
-
-
-def _mean_and_variance_exprs(family, xb):
-    """(μ, V(μ)) Column expressions for a family at the linear predictor."""
-    name = getattr(family, "name", "")
-    if name == "logistic":
-        mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-xb))
-        return mu, mu * (F.lit(1.0) - mu)
-    if name == "normal":
-        return xb, F.lit(1.0)
-    if name == "poisson":
-        mu = F.exp(xb)
-        return mu, mu
-    if name == "gamma":
-        mu = F.exp(xb)
-        return mu, mu * mu
-    if name.startswith("tweedie"):
-        mu = F.exp(xb)
-        return mu, F.pow(mu, F.lit(float(family.var_power)))
-    raise ValueError(f"no mean/variance expressions for family {name!r}")
-
-
-def _link_deriv_expr(family, mu):
-    """dη/dμ at μ for the family's link (canonical for
-    logistic/normal/poisson; log for gamma/tweedie — NOT 1/V there,
-    review r11)."""
-    name = getattr(family, "name", "")
-    if name == "logistic":  # logit: 1/(μ(1−μ))
-        return F.lit(1.0) / (mu * (F.lit(1.0) - mu))
-    if name == "normal":  # identity
-        return F.lit(1.0)
-    if name in ("poisson", "gamma") or name.startswith("tweedie"):
-        return F.lit(1.0) / mu  # log link
-    raise ValueError(f"no link derivative for family {name!r}")
-
-
-def _unit_deviance_expr(family, y, mu):
-    """Per-row unit deviance d(y, μ) as a Column (the TRUE form — for
-    Tweedie see the MLlib max(y, 0.1) quirk note on
-    ``TweedieRegression.get_deviance``)."""
-    name = getattr(family, "name", "")
-    two = F.lit(2.0)
-    if name == "logistic":  # y ∈ {0, 1}: the xlogx terms vanish at 0/1
-        return two * (
-            F.when(y > 0.5, -F.log(mu)).otherwise(
-                -F.log(F.lit(1.0) - mu)
-            )
-        )
-    if name == "normal":
-        return (y - mu) * (y - mu)
-    if name == "poisson":
-        return two * (
-            F.when(y > 0, y * F.log(y / mu)).otherwise(F.lit(0.0))
-            - (y - mu)
-        )
-    if name == "gamma":
-        return two * (-F.log(y / mu) + (y - mu) / mu)
-    if name.startswith("tweedie"):
-        q = float(family.var_power)
-        return two * (
-            F.when(
-                y > 0, F.pow(y, F.lit(2.0 - q)) / ((1.0 - q) * (2.0 - q))
-            ).otherwise(F.lit(0.0))
-            - y * F.pow(mu, F.lit(1.0 - q)) / (1.0 - q)
-            + F.pow(mu, F.lit(2.0 - q)) / (2.0 - q)
-        )
-    raise ValueError(f"no unit deviance expression for family {name!r}")
 
 
 def glm_residuals(
@@ -340,19 +267,19 @@ def glm_residuals(
         if offset_col is not None:
             xb = xb + F.col(offset_col)
     y = F.col(label_col)
-    mu, v = _mean_and_variance_exprs(family, xb)
+    mu = family.mean(xb)
     sqrt_w = (
         F.sqrt(F.col(weight_col)) if weight_col is not None else F.lit(1.0)
     )
     if kind == "deviance":
-        d = _unit_deviance_expr(family, y, mu)
+        d = family.unit_deviance(y, mu)
         r = F.signum(y - mu) * F.sqrt(F.greatest(d, F.lit(0.0))) * sqrt_w
     elif kind == "pearson":
-        r = (y - mu) * sqrt_w / F.sqrt(v)
+        r = (y - mu) * sqrt_w / F.sqrt(family.variance(mu))
     elif kind == "response":
         r = y - mu
     elif kind == "working":
-        r = (y - mu) * _link_deriv_expr(family, mu)
+        r = (y - mu) * family.link_deriv(mu)
     else:
         raise ValueError(
             "kind must be one of 'deviance', 'pearson', 'response', "
@@ -424,36 +351,6 @@ class GLMSummary:
         )
 
 
-def _score_meat(
-    df: DataFrame,
-    family,
-    beta: np.ndarray,
-    p: int,
-    features_col: str,
-    label_col: str,
-    weight_col: str | None,
-    offset_col: str | None,
-) -> np.ndarray:
-    """HC0 "meat": ``Σ_i s_i s_iᵀ`` with ``s_i = u_i·x_i`` the per-row
-    OBJECTIVE score (u = family residual, w-scaled for weighted fits) —
-    one Arrow Gram-shaped scan, p² partials under the bytes-aware tree
-    merge like every other Gram job."""
-    from dask_glm_spark.functions.kernels import _arrow_partials, _dense
-
-    def partial(X, y, w=None, o=None):
-        xb = X @ beta if o is None else X @ beta + o
-        u = family.residual_np(xb, y)
-        if w is not None:
-            u = w * u
-        Xu = X * u[:, None]
-        return {"meat": (Xu.T @ Xu).ravel()}
-
-    return _arrow_partials(
-        df, _dense(features_col), {"meat": np.zeros(p * p)},
-        [(partial, label_col, "")], weight_col, offset_col,
-    )["meat"].reshape(p, p)
-
-
 def glm_summary(
     df: DataFrame,
     family,
@@ -489,17 +386,37 @@ def glm_summary(
     HC0 twin for gaussian, where our SSE objective is 2× the NLL), and
     the dispersion φ plays no role in the SEs (it is still estimated and
     reported). Valid under variance misspecification — the quasi-
-    likelihood / sandwich contract."""
+    likelihood / sandwich contract.
+
+    Cost: one Arrow scan (the Hessian partial fused with the dispersion
+    partials and, with ``robust``, the HC0 score "meat" ``Σ s_i s_iᵀ``)
+    plus one deviance aggregate — 2 Spark jobs."""
     from dask_glm_spark.functions import kernels
 
     beta = np.asarray(beta, dtype=np.float64).ravel()
     p = len(beta)
-    _, hess = kernels.gradient_hessian(
-        df, family, beta, p, features_col, label_col,
-        weight_col=weight_col, offset_col=offset_col,
+    dzeros, dpart = _dispersion_part(family, beta, label_col)
+    zeros = {"grad": np.zeros(p), "hess": np.zeros(p * p), **dzeros}
+    parts = [(kernels._gradient_hessian_partial(family, beta), label_col, ""),
+             dpart]
+    if robust:
+        def meat(X, y, w=None, o=None):
+            # s_i = u_i·x_i, u the (w-scaled) objective score residual
+            xb = X @ beta if o is None else X @ beta + o
+            u = family.residual_np(xb, y)
+            if w is not None:
+                u = w * u
+            Xu = X * u[:, None]
+            return {"meat": (Xu.T @ Xu).ravel()}
+
+        zeros["meat"] = np.zeros(p * p)
+        parts.append((meat, label_col, ""))
+    acc = kernels._arrow_partials(
+        df, kernels._dense(features_col), zeros, parts, weight_col,
+        offset_col,
     )
-    name = getattr(family, "name", "")
-    info = hess / _HESS_SCALE.get(name, 1.0)  # unit-dispersion XᵀWX
+    hess = acc["hess"].reshape(p, p)
+    info = hess / family.hess_scale  # unit-dispersion XᵀWX
     # rank check (ADVICE r11): pinv on a rank-deficient information would
     # silently report pseudo-inverse SEs for unidentified coefficients —
     # MLlib GLR refuses SEs there; so do we, loudly.
@@ -514,34 +431,9 @@ def glm_summary(
             "failure of the SVD rank test: rescale the features, or pass "
             "an explicit rank_tol.)"
         )
-    cov_unit = np.linalg.inv(info)
+    n, df_resid, dispersion = _dispersion(acc, family, p)
 
-    y = F.col(label_col)
-    w = F.col(weight_col) if weight_col is not None else F.lit(1.0)
-    if name in _FIXED_DISPERSION:
-        with kernel_exec(df.sparkSession):
-            row0 = df.agg(
-                F.count("*").alias("n"),
-                F.sum(w * y).alias("swy"),
-                F.sum(w).alias("sw"),
-            ).collect()[0]
-        n = float(row0["n"])
-        ybar = float(row0["swy"]) / float(row0["sw"])
-        dispersion, fixed = 1.0, True
-        df_resid = n - p
-    else:
-        pearson, n, ybar = _pearson_and_n(
-            df, family, beta, features_col, label_col, weight_col,
-            offset_col,
-        )
-        df_resid = n - p
-        if df_resid <= 0:
-            raise ValueError(
-                f"no residual degrees of freedom (n={n:.0f}, p={p})"
-            )
-        dispersion, fixed = pearson / df_resid, False
-
-    # total + null deviance in ONE extra scan: d at the fitted μ and at
+    # total + null deviance in ONE aggregate: d at the fitted μ and at
     # the null μ₀ — the intercept-only MLE μ̂₀ = weighted mean of y
     # (closed form under every link here) when an intercept was fit, or
     # g⁻¹(0) for no-intercept fits (R's zero-linear-predictor null,
@@ -549,48 +441,28 @@ def glm_summary(
     # convention is offset-INCLUDED null, which has no closed form —
     # documented divergence; with no offset the values match R/MLlib
     # exactly).
+    y = F.col(label_col)
+    w = F.col(weight_col) if weight_col is not None else F.lit(1.0)
     xb_fit = kernels.matvec_expr(beta, features_col)
     if offset_col is not None:
         xb_fit = xb_fit + F.col(offset_col)
-    mu_fit, _ = _mean_and_variance_exprs(family, xb_fit)
-    d_fit = _unit_deviance_expr(family, y, mu_fit)
-    if fit_intercept:
-        mu0 = float(ybar)
-    else:  # g⁻¹(0), per-family table (loud on unknown families)
-        mu0 = _null_mu(family)
-    d_null = _unit_deviance_expr(family, y, F.lit(mu0))
+    d_fit = family.unit_deviance(y, family.mean(xb_fit))
+    mu0 = acc["swy"] / acc["sw"] if fit_intercept else family.null_mean
+    d_null = family.unit_deviance(y, F.lit(float(mu0)))
     with kernel_exec(df.sparkSession):
         drow = df.agg(
             F.sum(w * d_fit).alias("dev"), F.sum(w * d_null).alias("dev0")
         ).collect()[0]
-    deviance = float(drow["dev"])
-    null_deviance = float(drow["dev0"])
 
     if robust:
-        meat = _score_meat(
-            df, family, beta, p, features_col, label_col, weight_col,
-            offset_col,
-        )
         h_inv = np.linalg.pinv(hess)  # OBJECTIVE Hessian: scaling cancels
-        cov = h_inv @ meat @ h_inv
+        cov = h_inv @ acc["meat"].reshape(p, p) @ h_inv
     else:
-        cov = cov_unit * dispersion
+        cov = np.linalg.inv(info) * dispersion
     se = np.sqrt(np.maximum(np.diag(cov), 0.0))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        stat = np.where(se > 0, beta / se, np.nan)
-    if fixed:
-        pvals = np.array([2.0 * normal_sf(abs(z)) for z in stat])
-        kind = "z"
-    else:
-        pvals = np.array(
-            [2.0 * students_t_sf(abs(t), df_resid) for t in stat]
-        )
-        kind = "t"
-    return GLMSummary(
-        coefficients=beta, std_errors=se, statistic=stat, p_values=pvals,
-        statistic_kind=kind, dispersion=float(dispersion),
-        dispersion_fixed=fixed, df_residual=float(df_resid), n=float(n),
-        covariance=cov, deviance=deviance, null_deviance=null_deviance,
+    return _wald(
+        beta, se, family, n, df_resid, dispersion, covariance=cov,
+        deviance=float(drow["dev"]), null_deviance=float(drow["dev0"]),
     )
 
 
@@ -635,9 +507,10 @@ def sparse_coef_se(
     ``x_cᵀ M x_c`` with ``x_c = H⁻¹e_c`` (the CG solve this function
     already runs, rescaled from the unit information to the OBJECTIVE
     Hessian) and ``M = Σᵢ sᵢsᵢᵀ`` the score outer-product "meat"; since
-    only the quadratic form is needed, M is never formed — ONE extra
-    O(nnz) scan computes ``Σᵢ (sᵢᵀx_c)²`` for ALL coordinates together
-    (per batch: one scatter of the stacked solves, one residual pass).
+    only the quadratic form is needed, M is never formed — the one
+    O(nnz) dispersion scan also computes ``Σᵢ (sᵢᵀx_c)²`` for ALL
+    coordinates (per batch: one scatter of the stacked solves, one
+    residual pass).
     Matches dense ``glm_summary(robust=True)`` at the same coordinates
     (1e-6 pytest); dispersion is reported but plays no role in the SEs,
     exactly the dense sandwich contract.
@@ -659,8 +532,6 @@ def sparse_coef_se(
         # residual in exactly p iterations) — allow 4p with a floor for
         # tiny p and a scan-budget ceiling for hashed widths
         max_cg_iter = min(max(4 * p, 64), 512)
-    name = getattr(family, "name", "")
-    scale = _HESS_SCALE.get(name, 1.0)
 
     # many scans ahead (one per CG step per coordinate): cache the frame
     # for the duration with the same parallelism floor the sparse solvers
@@ -678,8 +549,7 @@ def sparse_coef_se(
     try:
         return _sparse_coef_se_body(
             df, family, beta, coords, p, idx_col, val_col, label_col,
-            weight_col, offset_col, cg_tol, max_cg_iter, name, scale,
-            robust,
+            weight_col, offset_col, cg_tol, max_cg_iter, robust,
         )
     finally:
         if we_persisted:
@@ -688,13 +558,16 @@ def sparse_coef_se(
 
 def _sparse_coef_se_body(
     df, family, beta, coords, p, idx_col, val_col, label_col,
-    weight_col, offset_col, cg_tol, max_cg_iter, name, scale,
-    robust=False,
+    weight_col, offset_col, cg_tol, max_cg_iter, robust=False,
 ):
+    from dask_glm_spark.functions.kernels import _arrow_partials
     from dask_glm_spark.functions.kernels_sparse import (
+        _csr,
         hessian_vector_product_sparse,
     )
     from dask_glm_spark.operators.solvers import _cg_solve
+
+    scale = family.hess_scale
 
     def hvp(v: np.ndarray) -> np.ndarray:
         return (
@@ -746,17 +619,14 @@ def _sparse_coef_se_body(
             # sandwich bread is the OBJECTIVE Hessian H = scale·I
             solves.append(x / scale)
 
-    # dispersion: fixed 1 for logistic/poisson; Pearson χ²/(n−p) else —
-    # one O(nnz) scan (the sparse twin of _pearson_and_n)
-    from dask_glm_spark.functions.kernels import _arrow_partials
-    from dask_glm_spark.functions.kernels_sparse import _csr
-
-    sand_diag = None
+    # one O(nnz) scan: the dispersion partials (the dense summary's
+    # closure) and, with robust, the HC0 sandwich diagonal for ALL
+    # coordinates — per batch, T[i, j] = x_iᵀ·solve_j (one scatter per
+    # stacked solve), s_iᵀ·solve_j = u_i·T[i, j] with u the (w-scaled)
+    # objective score residual — partial is Σᵢ (u_i·T[i, :])².
+    zeros, dpart = _dispersion_part(family, beta, label_col)
+    parts = [dpart]
     if robust:
-        # HC0 sandwich diagonal for ALL coordinates in ONE O(nnz) scan:
-        # per batch, T[i, j] = x_iᵀ·solve_j (one scatter per stacked
-        # solve), s_iᵀ·solve_j = u_i·T[i, j] with u the (w-scaled)
-        # objective score residual — partial is Σᵢ (u_i·T[i, :])².
         XC = np.column_stack(solves)  # (p, n_coords)
 
         def meat_partial(X, y, w=None, o=None) -> dict:
@@ -768,85 +638,16 @@ def _sparse_coef_se_body(
             T = np.ascontiguousarray(X @ XC)
             return {"sand": ((u[:, None] * T) ** 2).sum(axis=0)}
 
-        sand_diag = _arrow_partials(
-            df, _csr(idx_col, val_col, p), {"sand": np.zeros(XC.shape[1])},
-            [(meat_partial, label_col, "")], weight_col, offset_col,
-        )["sand"]
-
-    var_power = float(getattr(family, "var_power", 0.0) or 0.0)
-
-    def pearson_partial(X, y, w=None, o=None) -> dict:
-        xb = X @ beta if o is None else X @ beta + o
-        if name == "normal":
-            mu, v = xb, np.ones_like(xb)
-        elif name == "gamma":
-            mu = np.exp(xb)
-            v = mu * mu
-        elif name.startswith("tweedie"):
-            mu = np.exp(xb)
-            v = mu ** var_power
-        else:  # pragma: no cover — rejected driver-side before the scan
-            raise ValueError(
-                f"no Pearson variance function for family {name!r}"
-            )
-        term = (y - mu) ** 2 / v
-        if w is not None:
-            term = term * w
-        return {"pearson": float(term.sum()), "n": float(len(xb))}
-
-    if name in _FIXED_DISPERSION:
-        # z statistics: df_resid is reporting-only (clamped — a hashed
-        # p > n is normal for sparse fits and irrelevant at φ = 1)
-        with kernel_exec(df.sparkSession):
-            n = float(df.count())
-        dispersion, fixed = 1.0, True
-        df_resid = max(n - p, 0.0)
-    else:
-        # loud driver-side guard (ADVICE r12): a future non-fixed-
-        # dispersion family without a registered Pearson variance
-        # function must fail here, not compute a silently-gaussian φ
-        if name != "normal" and name != "gamma" and not name.startswith(
-            "tweedie"
-        ):
-            raise ValueError(
-                f"no Pearson variance function for family {name!r} — "
-                "register its mean/variance in the sparse Pearson scan "
-                "or add it to _FIXED_DISPERSION"
-            )
-        acc = _arrow_partials(
-            df, _csr(idx_col, val_col, p), {"pearson": 0.0, "n": 0.0},
-            [(pearson_partial, label_col, "")], weight_col, offset_col,
-        )
-        pearson, n = acc["pearson"], acc["n"]
-        df_resid = n - p
-        if df_resid <= 0:
-            raise ValueError(
-                f"no residual degrees of freedom (n={n:.0f}, p={p}) — "
-                "t-based dispersion inference needs n > p"
-            )
-        dispersion, fixed = pearson / df_resid, False
-
+        zeros["sand"] = np.zeros(XC.shape[1])
+        parts.append((meat_partial, label_col, ""))
+    acc = _arrow_partials(
+        df, _csr(idx_col, val_col, p), zeros, parts, weight_col, offset_col,
+    )
+    n, df_resid, dispersion = _dispersion(acc, family, p)
     se = (
-        np.sqrt(sand_diag)
-        if sand_diag is not None
-        else np.sqrt(dispersion * inv_diag)
+        np.sqrt(acc["sand"]) if robust else np.sqrt(dispersion * inv_diag)
     )
-    bsel = beta[coords]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        stat = np.where(se > 0, bsel / se, np.nan)
-    if fixed:
-        pvals = np.array([2.0 * normal_sf(abs(z)) for z in stat])
-        kind = "z"
-    else:
-        pvals = np.array(
-            [2.0 * students_t_sf(abs(t), df_resid) for t in stat]
-        )
-        kind = "t"
-    return GLMSummary(
-        coefficients=bsel, std_errors=se, statistic=stat, p_values=pvals,
-        statistic_kind=kind, dispersion=float(dispersion),
-        dispersion_fixed=fixed, df_residual=float(df_resid), n=float(n),
-    )
+    return _wald(beta[coords], se, family, n, df_resid, dispersion)
 
 
 # ---------------------------------------------------------------------------
@@ -1090,14 +891,10 @@ def _attach_interval_cols(out: DataFrame, family, xb, q: float, scale: str):
             .withColumn("hi", hi_link)
         )
     if scale == "mean":
-        def mean_of(e):
-            m, _ = _mean_and_variance_exprs(family, e)
-            return m
-
         return (
-            out.withColumn("prediction", mean_of(xb))
-            .withColumn("lo", mean_of(lo_link))
-            .withColumn("hi", mean_of(hi_link))
+            out.withColumn("prediction", family.mean(xb))
+            .withColumn("lo", family.mean(lo_link))
+            .withColumn("hi", family.mean(hi_link))
         )
     raise ValueError(f"scale must be 'link' or 'mean', got {scale!r}")
 

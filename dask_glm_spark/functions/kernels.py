@@ -249,13 +249,14 @@ def _arrow_partials_generic(
     tree_threshold: int | None = None,
     merges: dict | None = None,
     partial_doubles: int | None = None,
+    columns: list | None = None,
 ) -> dict:
     """Run ``batch_partial_fn(batch) -> dict`` per ``pyarrow.RecordBatch``
     of a ``mapInArrow`` scan, sum within the partition, one partial row
     per partition; return the driver fold of those rows, seeded with
     ``zeros`` (one entry per ``out_fields`` column — a scalar seed
     broadcasts onto an array column whose width the caller does not
-    know).
+    know). ``columns`` (default: all) are the columns the scan reads.
 
     Partials are folded on the driver in sorted partition-id order so the
     float reduction order is run-invariant (``_partial_rows`` has the
@@ -267,7 +268,7 @@ def _arrow_partials_generic(
     """
     rows = _partial_rows(
         df, batch_partial_fn, out_fields, tree_threshold, merges,
-        partial_doubles,
+        partial_doubles, columns,
     )
     return _sum_partial_rows(rows, list(zeros), merges, init=zeros)
 
@@ -279,6 +280,7 @@ def _partial_rows(
     tree_threshold: int | None = None,
     merges: dict | None = None,
     partial_doubles: int | None = None,
+    columns: list | None = None,
 ) -> list:
     """The pid-sorted partial rows behind ``_arrow_partials_generic``.
 
@@ -318,10 +320,15 @@ def _partial_rows(
                     cols.append(pa.array([float(v)], type=pa.float64()))
             yield pa.RecordBatch.from_arrays(cols, schema=pa_schema)
 
-    out = df.mapInArrow(op, schema=f"pid int, {out_fields}")
+    src = df if columns is None else df.select(*columns)
+    out = src.mapInArrow(op, schema=f"pid int, {out_fields}")
 
     if tree_threshold is None:
         tree_threshold = TREE_MERGE_THRESHOLD
+    # the caller's frame, not the pruned select: a DataFrame builds its
+    # RDD once and keeps it, so a solver passing the same frame every
+    # evaluation pays the planning once (a fresh select's .rdd cost
+    # 0.07-0.24 s per call on a 4-core box)
     nparts = df.rdd.getNumPartitions()
     # bytes-aware pull cap: tree-merge whenever the single-level driver
     # pull would exceed the byte budget, independent of partition count
@@ -400,25 +407,22 @@ def _partial_rows(
     # fit). toArrow() keeps the transfer columnar and list cells land as
     # numpy arrays; every consumer already goes through np.asarray, and
     # the pid-sorted driver fold order (the determinism contract) is
-    # unchanged. toArrow is a PySpark 4.0 API — on the declared 3.5
-    # minimum fall back to collect() (same values, boxed transfer).
+    # unchanged.
     with kernel_exec(df.sparkSession):
-        if hasattr(out, "toArrow"):
-            recs = out.toArrow().to_pandas().to_dict("records")
-            recs.sort(key=lambda r: int(r["pid"]))
-            return recs
-        rows = out.collect()
-        rows.sort(key=lambda r: r["pid"])
-        return rows
+        recs = out.toArrow().to_pandas().to_dict("records")
+    recs.sort(key=lambda r: int(r["pid"]))
+    return recs
 
 
 def _dense(features_col: str):
     """The dense batch reader of ``_arrow_partials``: the features list
     column's flat values buffer as an (n, p) ndarray (``_flat_rows``;
-    ragged rows raise ``ValueError``)."""
-    return lambda rb: _flat_rows(
-        rb.column(rb.schema.get_field_index(features_col))
-    )
+    ragged rows raise ``ValueError``). ``columns`` names what it reads."""
+    def read(rb):
+        return _flat_rows(rb.column(rb.schema.get_field_index(features_col)))
+
+    read.columns = (features_col,)
+    return read
 
 
 def _arrow_partials(
@@ -436,7 +440,10 @@ def _arrow_partials(
     ``reader(batch) -> X`` is ``_dense(features_col)`` (an ndarray) or
     ``kernels_sparse._csr(idx_col, val_col, p)`` (a ``CSRMatrix``); the
     closures only use ``X @`` and ``X.T @``, so they run unchanged on
-    either. Each ``parts`` entry is ``(fn, label_col, prefix)``:
+    either. The scan reads only the reader's ``columns`` and the label,
+    weight and offset columns; every other column of ``df`` is pruned
+    before ``mapInArrow``, so it never reaches the Python worker. Each
+    ``parts`` entry is ``(fn, label_col, prefix)``:
     ``fn(X, y[, w][, o=...]) -> dict`` gets the float64 label column
     (None when ``label_col`` is None), ``weight_col`` as a positional w
     and ``offset_col`` as keyword ``o=`` (both round 10); its outputs land
@@ -462,9 +469,12 @@ def _arrow_partials(
         f"{c} {'array<double>' if np.ndim(z) else 'double'}"
         for c, z in zeros.items()
     )
+    cols = [*reader.columns, *(lc for _, lc, _ in parts), weight_col,
+            offset_col]
     return _arrow_partials_generic(
         df, batch_partial, out_fields, zeros,
         partial_doubles=sum(int(np.size(z)) for z in zeros.values()),
+        columns=list(dict.fromkeys(c for c in cols if c is not None)),
     )
 
 
@@ -542,6 +552,20 @@ def gradient_hessian(
 ) -> tuple[np.ndarray, np.ndarray]:
     beta = np.asarray(beta, dtype=np.float64)
     p = p or len(beta)
+    acc = _arrow_partials(
+        df, _dense(features_col),
+        {"grad": np.zeros(p), "hess": np.zeros(p * p)},
+        [(_gradient_hessian_partial(family, beta), label_col, "")],
+        weight_col, offset_col,
+    )
+    return acc["grad"], acc["hess"].reshape(p, p)
+
+
+def _gradient_hessian_partial(family, beta: np.ndarray):
+    """Per-batch closure of ``gradient_hessian`` as a factory (see
+    ``_loss_gradient_partial``): ``inference.glm_summary`` fuses it with
+    its dispersion and score partials into one scan."""
+    beta = np.asarray(beta, dtype=np.float64)
 
     def partial(X, y, sw=None, o=None):
         xb = X @ beta if o is None else X @ beta + o
@@ -555,12 +579,7 @@ def gradient_hessian(
             "hess": (X.T @ (hw[:, None] * X)).ravel(),
         }
 
-    acc = _arrow_partials(
-        df, _dense(features_col),
-        {"grad": np.zeros(p), "hess": np.zeros(p * p)},
-        [(partial, label_col, "")], weight_col, offset_col,
-    )
-    return acc["grad"], acc["hess"].reshape(p, p)
+    return partial
 
 
 # ---------------------------------------------------------------------------
@@ -1077,11 +1096,8 @@ def column_moments_full(
     # p is discovered from the vectors: scalar seeds broadcast onto the
     # array columns; rows arrive pid-sorted (deterministic fold order)
     acc = _arrow_partials_generic(
-        df.select(*cols),
-        batch_partial,
-        MOMENT_FIELDS,
-        MOMENT_ZEROS,
-        merges=MOMENT_MERGES,
+        df, batch_partial, MOMENT_FIELDS, MOMENT_ZEROS,
+        merges=MOMENT_MERGES, columns=cols,
     )
     return _moments_finish(acc)
 

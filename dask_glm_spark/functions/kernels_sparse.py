@@ -85,8 +85,13 @@ def _f64(batch, col: str) -> np.ndarray:
 
 def _csr(idx_col: str, val_col: str, p: int):
     """The sparse batch reader of ``kernels._arrow_partials``: a
-    ``mapInArrow`` batch read into a ``CSRMatrix``."""
-    return lambda rb: _batch_csr(rb, idx_col, val_col, p)
+    ``mapInArrow`` batch read into a ``CSRMatrix``. ``columns`` names
+    what it reads."""
+    def read(rb):
+        return _batch_csr(rb, idx_col, val_col, p)
+
+    read.columns = (idx_col, val_col)
+    return read
 
 
 class CSRMatrix:

@@ -47,9 +47,10 @@ def embedding_moments(
         }
 
     acc = _arrow_partials_generic(
-        df.select(vec_col), batch_partial,
+        df, batch_partial,
         "n double, s array<double>, ss array<double>",
         {"n": 0.0, "s": 0.0, "ss": 0.0},  # d is discovered from the vectors
+        columns=[vec_col],
     )
     n, s, ss = acc["n"], acc["s"], acc["ss"]
     if n == 0:

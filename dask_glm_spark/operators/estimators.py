@@ -225,13 +225,13 @@ class _GLM(BaseEstimator):
         errors ``sqrt(diag(φ·(XᵀWX)⁻¹))``, z/t statistics, two-sided
         p-values, and the dispersion φ (1 fixed for logistic/poisson;
         Pearson χ²/(n−p) for gaussian/gamma/tweedie — the MLlib GLR
-        contract, cross-checked in tests/test_inference.py). Two extra
-        scans: one fused gradient+Gram job (the newton iteration shape)
-        plus, when φ is estimated, one Pearson aggregate. Honors the
-        estimator's ``weight_col``/``offset_col``.
+        contract, cross-checked in tests/test_inference.py). Two Spark
+        jobs: one Arrow scan (the newton iteration's gradient+Gram
+        partial fused with the dispersion partials) plus one deviance
+        aggregate. Honors the estimator's ``weight_col``/``offset_col``.
 
         ``robust=True``: heteroskedasticity-robust HC0 sandwich SEs
-        (White 1980) — one extra score-Gram scan; see
+        (White 1980) — the score-Gram "meat" rides the same scan; see
         ``inference.glm_summary``.
 
         Wide-sparse fits: the FULL p² covariance is rejected (the wrong
@@ -241,9 +241,9 @@ class _GLM(BaseEstimator):
         O(nnz) Hessian-vector-product scans (``inference.
         sparse_coef_se``); exact vs the dense summary to CG tolerance,
         practical for tens of coordinates. ``robust=True`` composes
-        (round 13): the HC0 sandwich diagonal reuses the same CG solves
-        plus ONE extra O(nnz) scan for all coordinates' meat quadratic
-        forms — never a p² object."""
+        (round 13): the HC0 sandwich diagonal reuses the same CG solves,
+        and the one O(nnz) dispersion scan also computes all
+        coordinates' meat quadratic forms — never a p² object."""
         from dask_glm_spark.functions import inference
         from dask_glm_spark.sources import vectors as V
 
@@ -394,6 +394,15 @@ class _GLM(BaseEstimator):
             offset_col=self.offset_col,
         )
 
+    def predict(self, df: DataFrame) -> DataFrame:
+        """The fitted mean response ``g⁻¹(x·coef + offset)`` per row, as
+        a ``prediction`` column."""
+        return (
+            self._with_xb(df, "_xb")
+            .withColumn("prediction", self.family.mean(F.col("_xb")))
+            .drop("_xb")
+        )
+
     def _linear_expr(self):
         # X·coef over the (maybe intercept-extended) features column
         return kernels.matvec_expr(self._coef, self.features_col)
@@ -478,7 +487,7 @@ class LogisticRegression(_GLM):
     def predict_proba(self, df: DataFrame) -> DataFrame:
         return (
             self._with_xb(df, "_xb")
-            .withColumn("probability", families.sigmoid_expr(F.col("_xb")))
+            .withColumn("probability", self.family.mean(F.col("_xb")))
             .drop("_xb")
         )
 
@@ -509,9 +518,6 @@ class LinearRegression(_GLM):
 
     family = families.Normal
 
-    def predict(self, df: DataFrame) -> DataFrame:
-        return self._with_xb(df, "prediction")
-
     def score(self, df: DataFrame, weight_col: str | None = None) -> float:
         # reference quirk: score is MSE, not R² (estimators.py:203-204)
         pred = self.predict(df)
@@ -525,13 +531,6 @@ class PoissonRegression(_GLM):
 
     family = families.Poisson
 
-    def predict(self, df: DataFrame) -> DataFrame:
-        return (
-            self._with_xb(df, "_xb")
-            .withColumn("prediction", F.exp(F.col("_xb")))
-            .drop("_xb")
-        )
-
     def get_deviance(self, df: DataFrame, weight_col: str | None = None) -> float:
         pred = self.predict(df)
         return metrics.poisson_deviance(
@@ -539,55 +538,40 @@ class PoissonRegression(_GLM):
         )
 
 
-def _mean_unit_deviance(pred: DataFrame, d, weight_col: str | None) -> float:
-    """``Σw·d / Σw`` — weighted mean unit deviance (sklearn
-    ``sample_weight`` semantics, matching the package's other weighted
-    metrics; ``weight_col=None`` is plain ``avg`` — ADVICE r10)."""
-    with kernels.kernel_exec(pred.sparkSession):
-        if weight_col is None:
-            row = pred.agg(F.avg(d).alias("dev")).collect()[0]
-        else:
-            w = F.col(weight_col)
-            row = pred.agg((F.sum(w * d) / F.sum(w)).alias("dev")).collect()[0]
-    return float(row["dev"])
-
-
-class GammaRegression(_GLM):
-    """Gamma regression, log link — beyond-reference (MLlib GLR
-    ``family="gamma", link="log"`` contract). Strictly positive
-    responses; ``score`` is the MEAN unit deviance
-    ``2·[−log(y/μ) + (y−μ)/μ]`` (lower is better)."""
-
-    family = families.Gamma
-
-    def predict(self, df: DataFrame) -> DataFrame:
-        return (
-            self._with_xb(df, "_xb")
-            .withColumn("prediction", F.exp(F.col("_xb")))
-            .drop("_xb")
-        )
+class _MeanDevianceGLM(_GLM):
+    """Estimators scored by the MEAN unit deviance of their family
+    (lower is better)."""
 
     def get_deviance(
         self, df: DataFrame, weight_col: str | None = None
     ) -> float:
+        """Mean unit deviance ``family.unit_deviance(y, μ)`` at the
+        fitted means; with ``weight_col`` ``Σw·d / Σw`` (sklearn
+        ``sample_weight`` semantics, matching the package's other
+        weighted metrics — ADVICE r10)."""
         pred = self.predict(df)
-        y = F.col(self.label_col)
-        mu = F.col("prediction")
-        # y <= 0 is invalid for gamma: Spark's log(<=0) yields NULL and
-        # F.avg would silently SKIP the row, hiding degenerate labels
-        # behind a finite deviance — poison with nan instead (the
-        # poisson_deviance_expr convention, review r5)
-        logterm = F.when(y > 0, -F.log(y / mu)).otherwise(
-            F.lit(float("nan"))
+        d = self.family.unit_deviance(
+            F.col(self.label_col), F.col("prediction")
         )
-        d = F.lit(2.0) * (logterm + (y - mu) / mu)
-        return _mean_unit_deviance(pred, d, weight_col)
+        if weight_col is None:
+            return metrics._agg_scalar(pred, F.avg(d))
+        w = F.col(weight_col)
+        return metrics._agg_scalar(pred, F.sum(w * d) / F.sum(w))
 
     def score(self, df: DataFrame, weight_col: str | None = None) -> float:
         return self.get_deviance(df, weight_col=weight_col)
 
 
-class TweedieRegression(_GLM):
+class GammaRegression(_MeanDevianceGLM):
+    """Gamma regression, log link — beyond-reference (MLlib GLR
+    ``family="gamma", link="log"`` contract). Strictly positive
+    responses (a label y <= 0 makes the deviance NaN); ``score`` is the
+    MEAN unit deviance ``2·[−log(y/μ) + (y−μ)/μ]`` (lower is better)."""
+
+    family = families.Gamma
+
+
+class TweedieRegression(_MeanDevianceGLM):
     """Tweedie (compound-Poisson) regression, log link — beyond-reference
     (MLlib GLR ``family="tweedie"`` contract). ``var_power`` q ∈ (1, 2)
     selects the variance function V(μ)=μ^q: nonnegative responses with a
@@ -609,43 +593,6 @@ class TweedieRegression(_GLM):
         # keep the family object in sync when var_power changes
         self.family = families.Tweedie(self.var_power)
         return self
-
-    def predict(self, df: DataFrame) -> DataFrame:
-        return (
-            self._with_xb(df, "_xb")
-            .withColumn("prediction", F.exp(F.col("_xb")))
-            .drop("_xb")
-        )
-
-    def get_deviance(
-        self, df: DataFrame, weight_col: str | None = None
-    ) -> float:
-        """Mean Tweedie unit deviance at the fitted means:
-        d(y, μ) = 2·[ y^(2−q)/((1−q)(2−q)) − y·μ^(1−q)/(1−q)
-        + μ^(2−q)/(2−q) ] (the y-only term is 0 at y=0).
-
-        This is the TRUE unit deviance (R's tweedie package form). MLlib
-        GLR substitutes max(y, 0.1) inside its y^(1−q) factor, so its
-        ``summary.deviance`` diverges on rows with 0 < y < 0.1 — parity
-        with MLlib outside that band is pinned in
-        ``tests/test_tweedie.py::test_deviance_matches_mllib_summary``.
-        ``weight_col``: Σw·d/Σw (sklearn sample_weight semantics)."""
-        q = self.var_power
-        pred = self.predict(df)
-        y = F.col(self.label_col)
-        mu = F.col("prediction")
-        d = F.lit(2.0) * (
-            F.when(
-                y > 0,
-                F.pow(y, F.lit(2.0 - q)) / ((1.0 - q) * (2.0 - q)),
-            ).otherwise(F.lit(0.0))
-            - y * F.pow(mu, F.lit(1.0 - q)) / (1.0 - q)
-            + F.pow(mu, F.lit(2.0 - q)) / (2.0 - q)
-        )
-        return _mean_unit_deviance(pred, d, weight_col)
-
-    def score(self, df: DataFrame, weight_col: str | None = None) -> float:
-        return self.get_deviance(df, weight_col=weight_col)
 
 
 class MulticlassLogisticRegression(_GLM):

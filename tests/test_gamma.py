@@ -124,6 +124,25 @@ def test_deviance_poisons_on_nonpositive_labels(gdata, spark):
     assert np.isnan(est.get_deviance(bad))
 
 
+def test_summary_deviance_poisons_on_nonpositive_labels(gdata):
+    """The summary's deviance and the deviance residuals run the same
+    Gamma unit deviance as get_deviance: a label y <= 0 makes them NaN
+    instead of a NULL that the aggregate would skip."""
+    from pyspark.sql import functions as F
+
+    from dask_glm_spark.functions import inference
+
+    df, *_ = gdata
+    bad = kernels.add_intercept(
+        df.limit(10).withColumn("label", F.lit(0.0)).union(df.limit(50))
+    )
+    beta = np.array([0.6, -0.4, 0.5])
+    assert np.isnan(inference.glm_summary(bad, Gamma, beta).deviance)
+    res = inference.glm_residuals(bad, Gamma, beta, "deviance")
+    zero = res.where(F.col("label") == 0.0).collect()
+    assert zero and all(np.isnan(r["residual"]) for r in zero)
+
+
 def test_weighted_deviance_equals_replicated(gdata, spark):
     """ADVICE r10: get_deviance/score accept weight_col — Σw·d/Σw equals
     the unweighted mean deviance of the integer-weight replicated frame."""

@@ -10,9 +10,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-# r14 (VERDICT r13 #2): multi-minute file on a latency-floor box — skipped
-# by the default serial run, always run by scripts/partest.py (see conftest)
-pytestmark = pytest.mark.slow
+# Tests that take >= 4 s each are marked slow one by one: skipped by the
+# default serial run, always run by scripts/partest.py (see conftest).
 
 from dask_glm_spark import (
     GammaRegression,
@@ -96,6 +95,7 @@ def cls_data(spark):
     df.unpersist()
 
 
+@pytest.mark.slow
 def test_logistic_summary_vs_mllib(cls_data):
     est = LogisticRegression(solver="newton", max_iter=100, tol=1e-10).fit(
         cls_data
@@ -107,6 +107,7 @@ def test_logistic_summary_vs_mllib(cls_data):
     _check_against_mllib(s, theirs)
 
 
+@pytest.mark.slow
 def test_gaussian_summary_vs_mllib(spark):
     rng = np.random.RandomState(31)
     n = 500
@@ -125,6 +126,7 @@ def test_gaussian_summary_vs_mllib(spark):
     _check_against_mllib(s, theirs, se_rtol=1e-5, p_atol=1e-6)
 
 
+@pytest.mark.slow
 def test_poisson_summary_vs_mllib(spark):
     rng = np.random.RandomState(41)
     n = 500
@@ -141,6 +143,7 @@ def test_poisson_summary_vs_mllib(spark):
     _check_against_mllib(s, theirs)
 
 
+@pytest.mark.slow
 def test_gamma_summary_vs_mllib(spark):
     rng = np.random.RandomState(23)
     n = 500
@@ -159,6 +162,7 @@ def test_gamma_summary_vs_mllib(spark):
     _check_against_mllib(s, theirs)
 
 
+@pytest.mark.slow
 def test_tweedie_summary_vs_mllib(spark):
     rng = np.random.RandomState(17)
     n = 500
@@ -187,6 +191,7 @@ def test_tweedie_summary_vs_mllib(spark):
     assert np.isfinite(s.deviance) and s.deviance < s.null_deviance
 
 
+@pytest.mark.slow
 def test_weighted_logistic_summary_vs_mllib(cls_data, spark):
     from pyspark.sql import functions as F
 
@@ -220,6 +225,7 @@ def test_summary_requires_fit_and_dense(spark, cls_data):
         est.summary(sp)
 
 
+@pytest.mark.slow
 def test_ovr_summary_per_class_equals_binary(spark):
     """MulticlassLogisticRegression.summary: each class's GLMSummary is
     exactly the binary logistic summary on the y==class indicator (OvR =
@@ -287,6 +293,7 @@ def _mllib_residuals(theirs, kind):
     return pdf[pdf.columns[-1]].to_numpy()
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("kind", ["deviance", "pearson"])
 def test_residuals_match_mllib(spark, cls_data, kind):
     """glm_residuals evaluated AT MLlib's own coefficients must equal
@@ -374,6 +381,7 @@ def test_quantile_functions_known_values():
         )
 
 
+@pytest.mark.slow
 def test_predict_interval_ties_to_summary_se(cls_data, spark):
     """At x = e_j (one-hot), se_link must equal the j-th coefficient's
     standard error exactly, and the interval is beta_j ± z*·SE_j — wiring
@@ -493,6 +501,7 @@ def test_working_residuals_use_link_derivative(spark):
     )
 
 
+@pytest.mark.slow
 def test_summary_rejects_penalized_fits(cls_data):
     """Review r11: Wald SEs assume the MLE — a ridge-penalized fit (the
     estimator DEFAULT: admm + l2 + lamduh=1) must be rejected, matching
@@ -507,6 +516,7 @@ def test_summary_rejects_penalized_fits(cls_data):
     assert est2.summary(cls_data).statistic_kind == "z"
 
 
+@pytest.mark.slow
 def test_robust_hc0_sandwich_numpy_twins(spark, cls_data):
     """HC0 sandwich SEs (White 1980): exact numpy twins for logistic
     (canonical) and gaussian — the gaussian case also verifies that the
@@ -595,6 +605,7 @@ def test_rank_deficient_design_raises(spark):
         est.summary(df)
 
 
+@pytest.mark.slow
 def test_null_deviance_no_intercept(spark, cls_data):
     """fit_intercept=False -> the null model is the ZERO linear predictor
     (mu0 = 1/2 for logit), not the intercept-only mean model
@@ -615,6 +626,109 @@ def test_null_deviance_no_intercept(spark, cls_data):
         cls_data
     ).summary(cls_data)
     assert s_i.null_deviance < s.null_deviance
+
+
+@pytest.mark.parametrize("robust", [False, True])
+@pytest.mark.parametrize("family_name", ["logistic", "gamma"])
+def test_summary_is_one_scan_plus_one_aggregate(spark, cls_data, robust,
+                                                family_name):
+    """A summary runs 2 Spark jobs: the Arrow scan (Hessian, dispersion
+    and, with robust, the HC0 meat partials) and the deviance
+    aggregate."""
+    from pyspark.sql import functions as F
+
+    from dask_glm_spark.functions import families, kernels
+
+    family = families.FAMILIES[family_name]
+    df = kernels.add_intercept(
+        cls_data.withColumn("label", F.col("label") + 0.5)
+        if family_name == "gamma" else cls_data
+    )
+    df.count()  # materialize the fixture's cache outside the group
+    sc = spark.sparkContext
+    group = f"summary-{family_name}-{robust}"
+    sc.setJobGroup(group, group)
+    try:
+        s = inference.glm_summary(
+            df, family, np.array([0.9, -0.6, 0.3, -0.2]), robust=robust
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert np.isfinite(s.std_errors).all() and np.isfinite(s.deviance)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def test_new_family_needs_no_inference_edits(spark):
+    """A family defined only here — quasi-Poisson: Poisson's algebra with
+    an estimated dispersion — runs the summary, the four residual kinds
+    and the mean interval from its own members, against numpy twins."""
+    from dask_glm_spark.functions.families import Poisson
+
+    class QuasiPoisson(Poisson):
+        name = "quasipoisson"
+        dispersion_fixed = False
+
+    rng = np.random.RandomState(41)
+    n = 240
+    X = np.column_stack([rng.standard_normal((n, 2)) * 0.5, np.ones(n)])
+    beta = np.array([0.4, -0.3, 0.2])
+    mu = np.exp(X @ beta)
+    y = rng.poisson(mu * rng.gamma(2.0, 0.5, n)).astype(float)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]], float(y[i])) for i in range(n)],
+        "id long, features array<double>, label double",
+    ).repartition(3).persist()
+
+    def unit_dev(m):
+        ylogy = np.where(y > 0, y * np.log(np.where(y > 0, y, 1.0) / m), 0.0)
+        return 2.0 * (ylogy - (y - m))
+
+    try:
+        s = inference.glm_summary(df, QuasiPoisson, beta)
+        phi = np.sum((y - mu) ** 2 / mu) / (n - 3)
+        cov = np.linalg.inv(X.T @ (mu[:, None] * X)) * phi
+        se = np.sqrt(np.diag(cov))
+        assert s.statistic_kind == "t" and not s.dispersion_fixed
+        assert s.dispersion == pytest.approx(phi, rel=1e-10)
+        np.testing.assert_allclose(s.std_errors, se, rtol=1e-9)
+        np.testing.assert_allclose(
+            s.p_values,
+            [2.0 * inference.students_t_sf(abs(t), n - 3) for t in beta / se],
+            rtol=1e-8,
+        )
+        assert s.deviance == pytest.approx(unit_dev(mu).sum(), rel=1e-10)
+        assert s.null_deviance == pytest.approx(
+            unit_dev(np.full(n, y.mean())).sum(), rel=1e-10
+        )
+        s0 = inference.glm_summary(df, QuasiPoisson, beta, fit_intercept=False)
+        assert s0.null_deviance == pytest.approx(
+            unit_dev(np.ones(n)).sum(), rel=1e-10
+        )
+
+        twins = {
+            "response": y - mu,
+            "pearson": (y - mu) / np.sqrt(mu),
+            "working": (y - mu) / mu,
+            "deviance": np.sign(y - mu) * np.sqrt(np.maximum(unit_dev(mu), 0)),
+        }
+        for kind, ref in twins.items():
+            got = inference.glm_residuals(df, QuasiPoisson, beta, kind)
+            got = got.orderBy("id").toPandas()["residual"].to_numpy()
+            np.testing.assert_allclose(got, ref, rtol=1e-9, atol=1e-12)
+
+        pi = inference.glm_predict_interval(df, QuasiPoisson, s, level=0.9)
+        pi = pi.orderBy("id").toPandas()
+        se_link = np.sqrt(np.einsum("ij,jk,ik->i", X, s.covariance, X))
+        q = inference.students_t_isf(0.05, n - 3)
+        xb = X @ beta
+        np.testing.assert_allclose(pi["prediction"], mu, rtol=1e-12)
+        np.testing.assert_allclose(pi["se_link"], se_link, rtol=1e-9)
+        np.testing.assert_allclose(pi["lo"], np.exp(xb - q * se_link),
+                                   rtol=1e-9)
+        np.testing.assert_allclose(pi["hi"], np.exp(xb + q * se_link),
+                                   rtol=1e-9)
+    finally:
+        df.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -705,6 +819,7 @@ def test_softmax_summary_exact_oracle(softmax_data):
     )
 
 
+@pytest.mark.slow
 def test_softmax_summary_diverges_from_ovr(softmax_data):
     """Documented divergence: OvR per-class binary SEs are a DIFFERENT
     estimand than the joint multinomial contrasts — neither the point
@@ -763,6 +878,7 @@ def test_softmax_summary_weighted_numpy_twin(spark, softmax_data):
     np.testing.assert_allclose(info, expected, rtol=1e-9, atol=1e-9)
 
 
+@pytest.mark.slow
 def test_refit_mle_escape_hatch(cls_data):
     """The default estimator config is penalized -> summary() refuses;
     refit_mle() returns an UNpenalized warm-started clone whose summary
@@ -783,6 +899,7 @@ def test_refit_mle_escape_hatch(cls_data):
     np.testing.assert_allclose(s.p_values, s_ref.p_values, atol=1e-4)
 
 
+@pytest.mark.slow
 def test_refit_mle_multiclass_and_softmax(softmax_data):
     """Review r12: the penalized-inference refusal message advertises
     refit_mle(), which crashed on multiclass fits (_coefs vs _coef).

@@ -457,6 +457,33 @@ def test_fused_sparse_gate_matches_separate(data):
         sdf.unpersist()
 
 
+def test_kernel_scan_reads_only_its_columns(data):
+    """A kernel scan prunes every column its reader, label, weight and
+    offset do not read before ``mapInArrow``: an extra column whose
+    evaluation fails never runs, dense or sparse, and the values equal
+    those of the frame without it."""
+    from dask_glm_spark.functions import kernels_sparse
+    from dask_glm_spark.sources.vectors import to_sparse_columns
+
+    df, X, y = data
+    dfw = df.withColumn("w", 1.0 + (F.col("id") % 3).cast("double"))
+    bad = dfw.withColumn("extra", F.raise_error(F.lit("extra column read")))
+    got = kernels.loss_gradient(bad, Logistic, BETA, weight_col="w")
+    ref = kernels.loss_gradient(dfw, Logistic, BETA, weight_col="w")
+    np.testing.assert_allclose(got[0], ref[0], rtol=1e-13)
+    np.testing.assert_allclose(got[1], ref[1], rtol=1e-13)
+    sdf = to_sparse_columns(dfw.select("features", "label", "w"), "features")
+    sbad = sdf.withColumn("extra", F.raise_error(F.lit("extra column read")))
+    got = kernels_sparse.loss_gradient_sparse(
+        sbad, Logistic, BETA, 4, weight_col="w"
+    )
+    ref = kernels_sparse.loss_gradient_sparse(
+        sdf, Logistic, BETA, 4, weight_col="w"
+    )
+    assert got[0] == ref[0]
+    np.testing.assert_array_equal(got[1], ref[1])
+
+
 def test_sql_gate_fusion_bit_equal(data, spark):
     """q48's gate values over its weighted/offset frame: wloss/wgrad and
     oloss/ograd come from the production kernel, and the one aggregate
