@@ -9,10 +9,13 @@ combination of:
   P4 scalar maps    exp/log1p/sigmoid -> built-in Column functions
   P5 reductions     sum(loss terms)   -> df.agg(F.sum(...))
   P6 column moments mean/std per col  -> one mapInArrow partial scan
-                                         (population std!); ADMM folds the
-                                         same partials into its block build
-  P7 per-partition fan-out (ADMM)     -> one mapInArrow block build, see
-                                         operators/solvers.py
+                                         (population std!); a dense fit's
+                                         block build folds the same
+                                         partials (no moments job)
+  P7 per-partition fan-out            -> one mapInArrow block build per
+                                         dense fit (solvers._blocks): the
+                                         numpy blocks every evaluation and
+                                         ADMM round of the fit reads
   P8 broadcast of beta                -> closure capture (kernels); literal
                                          folding (scoring expressions,
                                          ``matvec_expr``)
@@ -28,10 +31,12 @@ bincounts) — only the batch reader differs. Each partition emits ONE row
 of ``(pid, partials...)``; the driver sums partials **in sorted partition
 order** (a run-invariant reduction order, replicating dask's
 deterministic chunk-tree reductions — needed by the reference
-determinism tests, ``tests/test_algos_families.py:141-160``). At 100 TB
-this is a single scan of the cached feature table with only O(p) or
-O(p²) bytes leaving each executor — the shape of MLlib's treeAggregate;
-there is no shuffle of X, ever.
+determinism tests, ``tests/test_algos_families.py:141-160``). A dense
+fit passes its block cache (``solvers._Blocks``) in place of the frame:
+the same closures then run per block, one partial row per block, folded
+the same way. At 100 TB either is a single pass over the feature data
+with only O(p) or O(p²) bytes leaving each executor — the shape of
+MLlib's treeAggregate; there is no shuffle of X, ever.
 """
 
 from __future__ import annotations
@@ -273,6 +278,84 @@ def _arrow_partials_generic(
     return _sum_partial_rows(rows, list(zeros), merges, init=zeros)
 
 
+def _merge_levels(
+    nparts: int, tree_threshold: int | None = None,
+    partial_doubles: int | None = None,
+) -> list[tuple[int, int]]:
+    """``(stride, groups)`` of each tree-merge level over ``nparts``
+    partial rows (pids in ``[0, nparts)``); empty when one driver-side
+    level suffices.
+
+    The tree merge runs above ``tree_threshold`` rows, and also whenever
+    the single-level driver pull of ``partial_doubles``-wide rows would
+    exceed ``DRIVER_PULL_BUDGET_BYTES`` (round 11). Multi-level merge
+    (ADVICE r11): fanin is capped so one key group never exceeds the byte
+    budget of partial rows — the old single-level merge sized fanin to
+    ceil(nparts/max_driver_rows), which at wide p with many partitions put
+    GBs of partials in one executor task (p=2048 Gram, 1000 parts: 143 x
+    34 MB ≈ 4.8 GB). Now fanin ≤ min(TREE_FANIN, max_driver_rows) and
+    levels repeat until the driver pull fits. Level L groups by
+    ``pid // stride`` (stride = fanin₁·…·fanin_L) and each combined row
+    keeps its group's MIN original pid, so the sorted-pid fold order is
+    run-invariant at every level."""
+    if tree_threshold is None:
+        tree_threshold = TREE_MERGE_THRESHOLD
+    max_driver_rows = None
+    if partial_doubles:
+        max_driver_rows = max(
+            1, DRIVER_PULL_BUDGET_BYTES // (8 * int(partial_doubles))
+        )
+    levels, n_rows, stride = [], nparts, 1
+    while n_rows > tree_threshold or (
+        max_driver_rows is not None and n_rows > max_driver_rows
+    ):
+        fanin = TREE_FANIN
+        if max_driver_rows is not None:
+            fanin = min(fanin, max_driver_rows)
+        fanin = max(fanin, 2)
+        stride *= fanin
+        n_rows = (n_rows + fanin - 1) // fanin
+        levels.append((stride, n_rows))
+    return levels
+
+
+def _combine_rows(rows, stride: int, value_cols: list, merges: dict | None):
+    """One tree-merge level inside an executor task: fold ``rows`` per
+    key group ``pid // stride`` in sorted-pid order, one output row per
+    GROUP (with its min pid), not per task — hash repartitioning can land
+    two group keys in one task (birthday collisions), and folding the
+    whole task would make the summed values depend on which keys collided
+    (review r12)."""
+    groups: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: r["pid"]):
+        groups.setdefault(int(r["pid"]) // stride, []).append(r)
+    for key in sorted(groups):
+        grp = groups[key]
+        acc = _sum_partial_rows(grp, value_cols, merges)
+        acc["pid"] = int(grp[0]["pid"])
+        yield acc
+
+
+def _rdd_partial_rows(
+    rdd, value_cols: list, nparts: int, merges: dict | None = None,
+    partial_doubles: int | None = None,
+) -> list:
+    """The pid-sorted partial rows of an RDD of partial dicts (each with
+    its ``pid`` in ``[0, nparts)``): the block-cache side of
+    ``_partial_rows``, behind the same byte-aware tree merge (each level
+    keyed by ``pid // stride`` onto its own partition) and pulled with
+    ``collect()``."""
+    for stride, groups in _merge_levels(nparts, None, partial_doubles):
+        rdd = rdd.keyBy(
+            lambda r, s=stride: int(r["pid"]) // s
+        ).partitionBy(groups, lambda key: key).values().mapPartitions(
+            lambda rows, s=stride: _combine_rows(rows, s, value_cols, merges)
+        )
+    rows = rdd.collect()
+    rows.sort(key=lambda r: int(r["pid"]))
+    return rows
+
+
 def _partial_rows(
     df: DataFrame,
     batch_partial_fn,
@@ -284,12 +367,12 @@ def _partial_rows(
 ) -> list:
     """The pid-sorted partial rows behind ``_arrow_partials_generic``.
 
-    Above ``tree_threshold`` partitions a two-level (tree) merge combines
-    ~TREE_FANIN partials per group executor-side first — the driver then
-    folds #groups rows instead of #partitions (what MLlib's
-    treeAggregate does for the same reason). Grouping is pid-deterministic
-    (``pid // TREE_FANIN``) and group-internal order is sorted-pid, so
-    tree results are also run-invariant."""
+    Above ``tree_threshold`` partitions (or the driver-pull byte budget)
+    a tree merge (``_merge_levels``) combines ~TREE_FANIN partials per
+    group executor-side first — the driver then folds #groups rows
+    instead of #partitions (what MLlib's treeAggregate does for the same
+    reason). Grouping is pid-deterministic and group-internal order is
+    sorted-pid, so tree results are also run-invariant."""
     import pyarrow as pa
     from pyspark import TaskContext
 
@@ -323,81 +406,32 @@ def _partial_rows(
     src = df if columns is None else df.select(*columns)
     out = src.mapInArrow(op, schema=f"pid int, {out_fields}")
 
-    if tree_threshold is None:
-        tree_threshold = TREE_MERGE_THRESHOLD
     # the caller's frame, not the pruned select: a DataFrame builds its
     # RDD once and keeps it, so a solver passing the same frame every
     # evaluation pays the planning once (a fresh select's .rdd cost
     # 0.07-0.24 s per call on a 4-core box)
     nparts = df.rdd.getNumPartitions()
-    # bytes-aware pull cap: tree-merge whenever the single-level driver
-    # pull would exceed the byte budget, independent of partition count
-    max_driver_rows = None
-    if partial_doubles:
-        max_driver_rows = max(
-            1, DRIVER_PULL_BUDGET_BYTES // (8 * int(partial_doubles))
-        )
 
     def make_combine(stride: int):
         def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # one output row PER KEY GROUP (pid // stride), not per task:
-            # hash repartitioning can land two group keys in one task
-            # (birthday collisions), and folding the whole task would
-            # make the summed values depend on which keys collided —
-            # per-group folding keeps every value identical regardless
-            # of collision layout (review r12). The single rows.sort
-            # fixes the deterministic merge order; per-chunk pre-sorts
-            # were dead work.
             rows = [r for pdf in batches for r in pdf.to_dict("records")]
-            if not rows:
-                return
-            rows.sort(key=lambda r: r["pid"])
-            groups: dict[int, list] = {}
-            for r in rows:
-                groups.setdefault(int(r["pid"]) // stride, []).append(r)
-            for key in sorted(groups):
-                grp = groups[key]
-                acc = _sum_partial_rows(grp, value_cols, merges)
-                row = {"pid": [int(grp[0]["pid"])]}
-                for c in value_cols:
-                    v = acc[c]
-                    row[c] = [
-                        v.tolist() if isinstance(v, np.ndarray) else float(v)
-                    ]
-                yield pd.DataFrame(row)
+            for acc in _combine_rows(rows, stride, value_cols, merges):
+                yield pd.DataFrame({
+                    "pid": [acc["pid"]],
+                    **{
+                        c: [acc[c].tolist() if isinstance(acc[c], np.ndarray)
+                            else float(acc[c])]
+                        for c in value_cols
+                    },
+                })
 
         return combine
 
-    def _needs_merge(n: int) -> bool:
-        return n > tree_threshold or (
-            max_driver_rows is not None and n > max_driver_rows
-        )
-
-    # Multi-level merge (ADVICE r11): fanin is capped so one key group
-    # never exceeds the byte budget of partial rows — the old
-    # single-level merge sized fanin to ceil(nparts/max_driver_rows),
-    # which at wide p with many partitions put GBs of partials in one
-    # executor task (p=2048 Gram, 1000 parts: 143 x 34 MB ≈ 4.8 GB). Now
-    # fanin ≤ min(TREE_FANIN, max_driver_rows) and levels repeat until the
-    # driver pull fits. Grouping stays pid-deterministic: each combined
-    # row keeps its group's MIN original pid, so level L groups by
-    # pid // (fanin₁·…·fanin_L) and the sorted-pid fold order is
-    # run-invariant at every level. Hash-repartition collisions can still
-    # co-locate 2+ key groups in one task (expected only a few; a strict
-    # per-task cap would need deterministic range partitioning), but the
-    # per-group combine keeps the VALUES collision-independent and each
-    # group's materialized rows within fanin.
-    n_rows = nparts
-    stride = 1
-    while _needs_merge(n_rows):
-        fanin = TREE_FANIN
-        if max_driver_rows is not None:
-            fanin = min(fanin, max_driver_rows)
-        fanin = max(fanin, 2)
-        stride *= fanin
-        n_rows = (n_rows + fanin - 1) // fanin
+    for stride, groups in _merge_levels(
+        nparts, tree_threshold, partial_doubles
+    ):
         out = out.repartition(
-            n_rows, (F.col("pid") / stride).cast("int")
+            groups, (F.col("pid") / stride).cast("int")
         ).mapInPandas(make_combine(stride), schema=f"pid int, {out_fields}")
 
     # Columnar retrieval (round 11): collect() boxes every float of every
@@ -451,30 +485,48 @@ def _arrow_partials(
     (``fused_softmax_hvp``, ``kernels_sparse.fused_sparse_gate``) whose
     values are bit-identical to the standalone jobs: same closures, batch
     boundaries fixed by row count, same fold. The partial-row schema and
-    its width (for the byte-aware tree merge) come from ``zeros``."""
+    its width (for the byte-aware tree merge) come from ``zeros``.
+
+    ``df`` may also be a dense fit's block cache (``solvers._Blocks``,
+    built once per fit): the same ``parts`` then run on each block's
+    rows in slices of the Arrow batch size, each block's partial carries
+    the block's pid, and the rows are folded in pid order behind the same
+    byte-aware tree merge (``_rdd_partial_rows``); ``reader`` is unused
+    there (the block holds X)."""
     from dask_glm_spark.functions.kernels_sparse import _f64
 
-    def batch_partial(batch) -> dict:
-        X = reader(batch)
-        args = [] if weight_col is None else [_f64(batch, weight_col)]
-        kw = {} if offset_col is None else {"o": _f64(batch, offset_col)}
+    def run_parts(X, col) -> dict:
+        args = [] if weight_col is None else [col(weight_col)]
+        kw = {} if offset_col is None else {"o": col(offset_col)}
         out = {}
         for fn, label_col, prefix in parts:
-            y = None if label_col is None else _f64(batch, label_col)
+            y = None if label_col is None else col(label_col)
             for key, v in fn(X, y, *args, **kw).items():
                 out[prefix + key] = v
         return out
+
+    partial_doubles = sum(int(np.size(z)) for z in zeros.values())
+    cols = [*(lc for _, lc, _ in parts), weight_col, offset_col]
+    cols = list(dict.fromkeys(c for c in cols if c is not None))
+    if not isinstance(df, DataFrame):
+        # a dense fit's block cache (``solvers._Blocks``): the same parts
+        # per block, X standardized on load
+        rows = _rdd_partial_rows(
+            df.partials(run_parts, cols), list(zeros), df.nparts,
+            partial_doubles=partial_doubles,
+        )
+        return _sum_partial_rows(rows, list(zeros), init=zeros)
+
+    def batch_partial(batch) -> dict:
+        return run_parts(reader(batch), lambda c: _f64(batch, c))
 
     out_fields = ", ".join(
         f"{c} {'array<double>' if np.ndim(z) else 'double'}"
         for c, z in zeros.items()
     )
-    cols = [*reader.columns, *(lc for _, lc, _ in parts), weight_col,
-            offset_col]
     return _arrow_partials_generic(
-        df, batch_partial, out_fields, zeros,
-        partial_doubles=sum(int(np.size(z)) for z in zeros.values()),
-        columns=list(dict.fromkeys(c for c in cols if c is not None)),
+        df, batch_partial, out_fields, zeros, partial_doubles=partial_doubles,
+        columns=list(dict.fromkeys([*reader.columns, *cols])),
     )
 
 

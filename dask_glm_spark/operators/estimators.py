@@ -987,17 +987,18 @@ class SoftmaxRegression(MulticlassLogisticRegression):
                 "per-class offset cancels in the softmax)"
             )
         sparse = V.is_sparse_columns(df)
-        # Persist BEFORE class discovery (r14, guide §5/§2.4): the input is
-        # typically an uncached featurizer derivation (fit_text_classifier's
-        # mapInPandas scan), which would otherwise run once for the
-        # classes job, once for a sparse width probe, and once more when
-        # the solver materializes its own cache. Persisting here makes the
-        # first of those jobs materialize the cache, so the featurize runs
-        # exactly once; the solver is told persist=False (the relabel /
-        # intercept / standardize views scan this cache through narrow
-        # projections — the OvR "k classes never means k cached copies"
-        # contract).
-        with solvers._cached(df) as (df, owned):
+        # Sparse input: persist BEFORE class discovery (r14, guide
+        # §5/§2.4): the input is typically an uncached featurizer
+        # derivation (fit_text_classifier's mapInPandas scan), which would
+        # otherwise run once for the classes job, once for a sparse width
+        # probe, and once more when the solver materializes its own cache.
+        # Persisting here makes the first of those jobs materialize the
+        # cache, so the featurize runs exactly once; the solver is told
+        # persist=False (the relabel / intercept views scan this cache
+        # through narrow projections — the OvR "k classes never means k
+        # cached copies" contract). A dense fit reads its input once into
+        # its block cache, so dense input is not persisted.
+        with solvers._cached(df, sparse) as (df, owned):
             if owned:
                 extra["persist"] = False
             if sparse:

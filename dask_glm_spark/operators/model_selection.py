@@ -13,6 +13,8 @@ Deterministic k-fold CV and JSON model persistence already live in
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 from pyspark.sql import DataFrame
 
@@ -40,14 +42,14 @@ def regularization_path(
     Fits execute in DESCENDING λ order regardless of input order — the
     heaviest-regularized fit is cheapest from zeros, and each subsequent
     fit warm-starts from its predecessor (``warm=False`` cold-starts
-    every fit, for A/Bs). The input is persisted once around the sweep so
-    the per-λ fits share one cache; with ``normalize`` on (the default)
-    the λ-independent moments job runs ONCE here (r13) and seeds every
-    dense fit through the wrapper's ``_moments`` hook — the identical
-    floats each per-fit scan would have produced, so standardization is
-    bit-equal to a standalone call (pinned in tests/test_model_selection).
-    Wide-sparse (findices, fvalues) input runs the solver's ``*_sparse``
-    twin per λ (width probed once, never standardized).
+    every fit, for A/Bs). A dense input is read ONCE into a block cache
+    that every per-λ fit evaluates over (``_shared_input``; with
+    ``normalize`` on, the default, the λ-independent moments fold into
+    that build), so standardization and data are bit-equal to a
+    standalone call's (pinned in tests/test_model_selection).
+    Wide-sparse (findices, fvalues) input is persisted once and runs the
+    solver's ``*_sparse`` twin per λ (width probed once, never
+    standardized).
 
     ``batched=True`` (round 13, proximal_grad only) runs every λ's ISTA
     state machine SIMULTANEOUSLY — one fused ``multi_loss_gradient``
@@ -62,9 +64,9 @@ def regularization_path(
     its one-λ case — so each row converges to the same point as a cold
     standalone fit (``warm`` is ignored — λs no longer chain; parity
     pinned in tests/test_model_selection.py). Standardization is hoisted
-    to ONE moments pass shared by all λ (same transform the per-fit pass
-    would compute — it is λ-independent). Dense and wide-sparse inputs
-    in both modes.
+    into the ONE block build shared by all λ (same transform the per-fit
+    build would compute — it is λ-independent). Dense and wide-sparse
+    inputs in both modes.
     """
     if solver not in _PATH_SOLVERS:
         raise ValueError(
@@ -81,8 +83,6 @@ def regularization_path(
         return _regularization_path_batched(
             df, lams, regularizer, family, **kwargs
         )
-    from dask_glm_spark.functions import kernels
-    from dask_glm_spark.plans.layout import right_size_kernel_cache
     from dask_glm_spark.sources import vectors as V
 
     idx_col = kwargs.get("idx_col", "findices")
@@ -94,47 +94,13 @@ def regularization_path(
     # returned in INPUT order under "per_lamduh"
     caller_info = kwargs.pop("fit_info", None)
     infos: list[dict] = [{} for _ in lams]
-    # spread BEFORE caching (round 13) — the solvers' own persist is
-    # skipped on an already-cached frame, so a 3-split parquet would
-    # otherwise run every iteration scan 3-wide
-    with solvers._cached(df) as (df, owned):
-        # r13 (guide §2.1: don't run identical passes twice): the per-fit
-        # @normalize moments job is λ-INDEPENDENT — same cached frame, same
-        # weight column — so ONE fused moments scan here seeds every fit
-        # through the wrapper's ``_moments`` hook. The seed holds the
-        # identical floats each per-fit scan would produce (the sweep goes
-        # from len(lams) moments jobs to 1); copies are passed per fit
-        # because the wrapper zeroes the intercept coordinate in place.
-        # Sparse fits never standardize; their width is probed once here.
-        moments = None
-        if sparse:
-            if not kwargs.get("p"):
-                kwargs["p"] = V.sparse_p(df, idx_col)
-        elif kwargs.get("normalize", True):
-            moments = kernels.column_moments_full(
-                df,
-                kwargs.get("features_col", "features"),
-                weight_col=kwargs.get("weight_col"),
-            )
-        # r14 pass 3 (guide §2.2): the shared moments job materialized the
-        # cache and yields n_rows — every per-λ fit's kernel evaluations
-        # then run over a right-sized coalesce VIEW of it (see
-        # plans.layout.right_size_kernel_cache; no-op at scale). persist is
-        # forced off for the fits: a view is not ``is_cached``, and the
-        # wrapper would otherwise build a second cache over this one.
-        if owned and moments is not None:
-            df = right_size_kernel_cache(df, moments[0])
-            kwargs.setdefault("persist", False)
+    with _shared_input(df, sparse, solver, kwargs) as df:
         order = sorted(range(len(lams)), key=lambda i: -lams[i])
         betas: list[np.ndarray | None] = [None] * len(lams)
         prev = None
         for i in order:
             kw = dict(kwargs)
             kw["fit_info"] = infos[i]
-            if moments is not None:
-                kw["_moments"] = (
-                    moments[0], moments[1].copy(), moments[2].copy(),
-                )
             if warm and prev is not None:
                 kw.setdefault("init_beta", prev)
             beta = np.asarray(
@@ -154,6 +120,42 @@ def regularization_path(
         return np.stack(betas)
 
 
+@contextmanager
+def _shared_input(df, sparse: bool, solver: str, kwargs: dict):
+    """The one read of a sequential λ-path's input that every per-λ fit
+    shares (yields the frame the fits are called with). Dense: ONE block
+    build for all λ — the λ-independent standardization moments fold
+    into it — passed to each fit as ``kwargs["_blocks"]`` (``admm``'s
+    blocks, with its block count, for ``solver="admm"``), so each fit's
+    standardization and data are bit-equal to a standalone call's over
+    the same blocks (pinned in tests/test_model_selection). Wide-sparse:
+    the input persisted once (spread BEFORE caching, round 13 — the
+    solvers' own persist is skipped on an already-cached frame) and its
+    width probed once (``kwargs["p"]``)."""
+    from dask_glm_spark.sources import vectors as V
+
+    if sparse:
+        with solvers._cached(df) as (df, _):
+            if not kwargs.get("p"):
+                kwargs["p"] = V.sparse_p(df, kwargs.get("idx_col", "findices"))
+            yield df
+        return
+    cols = (
+        kwargs.get("features_col", "features"), kwargs.get("label_col", "label"),
+        kwargs.get("weight_col"), kwargs.get("offset_col"),
+    )
+    norm = kwargs.get("normalize", True)
+    if solver == "admm":
+        build = solvers._admm_dense_blocks(
+            df, *cols, kwargs.get("nblocks"), norm, kwargs.get("p"),
+        )
+    else:
+        build = solvers._dense_blocks(df, *cols, norm)
+    with build as blocks:
+        kwargs["_blocks"] = blocks
+        yield df
+
+
 def _lamduh_list(lamduhs) -> list[float]:
     lams = [float(v) for v in lamduhs]
     if not lams:
@@ -170,9 +172,10 @@ _BATCH_PROBE_TOTAL = 32
 
 
 def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
-    """Layout + standardization wrapper for the batched λ-path: persist
-    once, hoist ONE moments pass (λ-independent — the same transform every
-    per-fit ``@normalize`` pass would compute), run ``solvers._ista`` /
+    """Layout + standardization wrapper for the batched λ-path: ONE block
+    build for all λ (dense; it folds the λ-independent moments — the same
+    transform every per-fit ``@normalize`` build would compute) or one
+    persist (sparse), run ``solvers._ista`` /
     ``_fista`` over all λs on the input's layout in the standardized
     space (``multi_loss_grad`` as point and probe surface,
     ``_BATCH_PROBE_TOTAL`` candidates per scan), and back-transform every
@@ -200,20 +203,21 @@ def _regularization_path_batched(df, lams, regularizer, family, **kwargs):
     infos: list[dict] = [{} for _ in lams]
     body = solvers._fista if accelerate else solvers._ista
     sparse = V.is_sparse_columns(df, idx_col, val_col)
-    with solvers._cached(df) as (df, _):
+    with solvers._cached(df) if sparse else solvers._dense_blocks(
+        df, features_col, label_col, weight_col, offset_col, do_norm,
+    ) as src:
         if sparse:
+            df, _ = src
             # identity transform: sparse input never standardizes
-            stdz = solvers._Standardizer(
-                df, None, False, p=p or V.sparse_p(df, idx_col)
-            )
+            stdz = solvers._Standardizer(p=p or V.sparse_p(df, idx_col))
             layout = dict(idx_col=idx_col, val_col=val_col)
         else:
             stdz = solvers._Standardizer(
-                df, features_col, do_norm, weight_col, p=p
+                src.moments if do_norm else None, src.p
             )
-            layout = dict(features_col=features_col)
+            df, layout = src.scaled(stdz), dict(features_col=features_col)
         lay = solvers._Layout(
-            stdz.view, stdz.p, label_col, family, weight_col, offset_col,
+            df, stdz.p, label_col, family, weight_col, offset_col,
             **layout,
         )
         out = body(
@@ -273,10 +277,7 @@ def softmax_regularization_path(
     )
     caller_info = kwargs.pop("fit_info", None)
     infos: list[dict] = [{} for _ in lams]
-    # spread BEFORE caching (see regularization_path)
-    with solvers._cached(df) as (df, _):
-        if sparse and not kwargs.get("p"):
-            kwargs["p"] = V.sparse_p(df, idx_col)
+    with _shared_input(df, sparse, "softmax_proximal", kwargs) as df:
         order = sorted(range(len(lams)), key=lambda i: -lams[i])
         betas: list[np.ndarray | None] = [None] * len(lams)
         prev = None
@@ -297,10 +298,10 @@ def softmax_regularization_path(
 
 
 def _softmax_path_batched(df, lams, k, regularizer, **kwargs):
-    """Batched multinomial λ-path: one ``_Standardizer`` pass hoisted for
-    all λ (the same λ-independent transform each ``softmax_proximal`` call
-    would compute), then ``solvers._fista`` over the flattened (p·k)
-    vectors with ONE ``softmax_multi_loss_gradient`` scan per evaluation
+    """Batched multinomial λ-path: one block build for all λ (its
+    moments give the same λ-independent transform each
+    ``softmax_proximal`` call would compute), then ``solvers._fista``
+    over the flattened (p·k) vectors with ONE ``softmax_multi_loss_gradient`` scan per evaluation
     round. Probe scans ride the same kernel (gradients along unused — the
     sparse sequential FISTA convention), so the per-scan partial is
     c·(1 + p·k) doubles; the candidate budget caps c at
@@ -320,15 +321,18 @@ def _softmax_path_batched(df, lams, k, regularizer, **kwargs):
             f"unexpected keyword arguments for batched path: {sorted(kwargs)}"
         )
     infos: list[dict] = [{} for _ in lams]
-    with solvers._cached(df) as (df, _):
+    with solvers._dense_blocks(
+        df, features_col, label_col, weight_col, None, normalize,
+    ) as blocks:
         stdz = solvers._Standardizer(
-            df, features_col, normalize, weight_col
+            blocks.moments if normalize else None, blocks.p
         )
         p = stdz.p
+        src = blocks.scaled(stdz)
 
         def multi_lg(cands):
             return kernels.softmax_multi_loss_gradient(
-                stdz.view,
+                src,
                 [np.asarray(c, dtype=np.float64).reshape(p, k) for c in cands],
                 features_col, label_col, weight_col=weight_col,
             )

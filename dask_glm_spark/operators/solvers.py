@@ -14,11 +14,17 @@ its ``*_sparse`` twin is ``_run_sparse`` plus the sparse layout plus the
 same body. ``softmax_*`` solvers fit the joint k-class multinomial over
 the flattened (p, k) coefficients with the same bodies. The proximal
 bodies (``_ista``, ``_fista``) advance a list of λs: a single fit is the
-one-λ case, ``model_selection``'s batched λ-path the many-λ case. ADMM
-builds dense or CSR blocks with one builder (``_admm_blocks``) and runs
-one set of consensus rounds (``_admm_consensus``); a dense ADMM fit reads
-its input in one Python pass (the block build, which also folds the
-standardization moments), and its blocks are its only cache.
+one-λ case, ``model_selection``'s batched λ-path the many-λ case.
+
+Every dense fit reads its input ONCE: one block build (``_blocks``, one
+``mapInArrow`` job) writes one numpy block per partition, folds the
+standardization moments and discovers p, and the fit's block cache
+(``_Blocks``) is all it reads afterwards. Kernel evaluations map the
+same per-batch closures over the blocks (``kernels._arrow_partials``
+accepts the cache in place of a DataFrame), X standardized in numpy as
+each block is loaded; ADMM's consensus rounds run their local solves on
+the same blocks (``_admm_consensus``, dense or CSR). A λ-path builds once
+for all its λ. Sparse non-ADMM fits scan a persisted frame instead.
 
 Per-iteration cluster cost (the scale contract; one "scan" is one job):
 
@@ -38,16 +44,19 @@ Per-iteration cluster cost (the scale contract; one "scan" is one job):
   softmax_*         as the binary      p·k (+1) floats; probes c·p·k
                     body it runs
 
-Sparse twins have the same scan counts over O(nnz) kernels. X is scanned
-from cache each job (MEMORY_AND_DISK); lineage never grows because every
-job is a fresh plan over the cached scan — Spark's analogue of the
-reference's ``recalcRate`` graph-depth bounding (algorithms.py:117)
-comes for free.
+plus, per dense fit, the one block build (and for ``admm``'s default
+block count one JVM row count before it). Sparse twins have the same
+scan counts over O(nnz) kernels, scanning their persisted frame
+(MEMORY_AND_DISK) each job. Lineage never grows: every dense job maps
+the fixed block cache, every sparse job is a fresh plan over the cached
+scan — Spark's analogue of the reference's ``recalcRate`` graph-depth
+bounding (algorithms.py:117) comes for free.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import copy
+from contextlib import contextmanager, nullcontext
 from functools import wraps
 
 import numpy as np
@@ -59,8 +68,8 @@ from dask_glm_spark.functions import kernels, kernels_sparse
 from dask_glm_spark.functions.families import Logistic
 from dask_glm_spark.functions.regularizers import Regularizer
 from dask_glm_spark.plans.layout import (
+    ROWS_PER_KERNEL_TASK,
     ensure_min_parallelism,
-    right_size_kernel_cache,
 )
 
 import logging
@@ -96,7 +105,8 @@ def _cached(df: DataFrame, persist: bool = True):
     """Yield ``(frame, owned)``: ``df`` spread to core count, persisted
     MEMORY_AND_DISK for the block and unpersisted on exit when it was
     cached here. An already-cached frame, or ``persist=False``, passes
-    through unowned."""
+    through unowned. The cache of the sparse (non-ADMM) fits; dense fits
+    read their input once into a ``_Blocks`` cache instead."""
     if not persist or df.is_cached:
         yield df, False
         return
@@ -113,7 +123,7 @@ def _cached(df: DataFrame, persist: bool = True):
 class _Standardizer:
     """Standardize-fit-backtransform (``dask_glm/utils.py:14-39``) for
     (p,) and (p, k) coefficients — the one copy used by ``normalize``, the
-    dense softmax solvers and both batched λ-paths.
+    dense softmax solvers, ``admm`` and both batched λ-paths.
 
     Reference quirks replicated exactly:
     - population std (numpy ddof=0) — Spark's ``stddev`` would be wrong;
@@ -121,31 +131,22 @@ class _Standardizer:
     - when NO constant column exists the mean is treated as zero (scale-only
       standardization) — see ``utils.py:26-30``.
 
-    The moments are ``column_moments_full``'s ``(n_rows, mean, std)`` of
-    ``df`` (weighted by ``weight_col``), computed here unless the caller
-    passes them (mutated in place); ``view`` is the lazily standardized
-    frame (None for ``df=None``: ``admm`` passes the moments its block
-    build folded and standardizes each block in numpy on the executor,
-    ``(X - mean) / std`` — the IEEE operations ``standardize_expr`` runs
-    in the JVM). With ``normalize=False`` (and for every sparse fit) the
-    transform is the identity and ``p`` is probed from ``features_col``
-    unless given.
+    ``moments`` is ``column_moments_full``'s ``(n_rows, mean, std)`` (the
+    fold a block build computes, ``_Blocks.moments``; weighted by the
+    fit's weight column), copied here, so one cache's moments can seed
+    many fits. X itself is standardized as each block is loaded
+    (``_Blocks.scaled``: ``(X - mean) / std`` in numpy, the IEEE
+    operations ``kernels.standardize_expr`` runs in the JVM). With
+    ``moments=None`` (``normalize=False``, and every sparse fit) the
+    transform is the identity over ``p`` coordinates.
     """
 
-    def __init__(
-        self, df, features_col, normalize=True, weight_col=None,
-        moments=None, p=None,
-    ):
+    def __init__(self, moments=None, p=None):
         self.std = None
-        self.view = df
-        if not normalize:
-            self.p = int(p) if p else kernels.infer_p(df, features_col)
-            return
         if moments is None:
-            moments = kernels.column_moments_full(
-                df, features_col, weight_col=weight_col
-            )
-        _, mean, std = moments
+            self.p = int(p)
+            return
+        mean, std = moments[1].copy(), moments[2].copy()
         intercept_idx = np.where(std == 0)[0]
         if len(intercept_idx) > 1:
             raise ValueError("Multiple constant columns detected!")
@@ -155,11 +156,6 @@ class _Standardizer:
             mean = np.zeros_like(mean)
         self.p, self.mean, self.std = len(mean), mean, std
         self.intercept_idx = intercept_idx
-        if df is not None:
-            self.view = df.withColumn(
-                features_col,
-                kernels.standardize_expr(mean, std, features_col),
-            )
 
     def _cols(self, b):
         if b.ndim == 1:
@@ -192,63 +188,60 @@ class _Standardizer:
         return out / std
 
 
+def _fit_blocks(
+    df, blocks, features_col, label_col, weight_col, offset_col, moments,
+):
+    """The block cache of one dense fit: ``blocks`` when a λ-path built
+    it for all its fits, else a fresh ``_dense_blocks`` build of ``df``
+    (with the standardization moments when ``moments``)."""
+    if blocks is not None:
+        return nullcontext(blocks)
+    return _dense_blocks(
+        df, features_col, label_col, weight_col, offset_col, moments
+    )
+
+
 def normalize(algo):
     """Standardize-fit-backtransform wrapper of the dense binary solvers
     (``dask_glm/utils.py:14-39``; the math is ``_Standardizer``) except
-    ``admm``, which standardizes its own blocks.
+    ``admm``, which runs the same steps over its own blocks.
 
-    Also owns persistence: the input is cached here (the moments pass is
-    the first materialization, mirroring the reference's first compute at
-    ``utils.py:19``), and the standardized view is lazy arithmetic over the
-    cache — nothing standardized is ever materialized.
+    Also owns the data: ONE Python pass over the input builds the fit's
+    block cache (``_dense_blocks``), folding the standardization moments
+    (the reference's first compute at ``utils.py:19``) and discovering p
+    on the way; every kernel evaluation of the wrapped solver then maps
+    over those numpy blocks, standardized as each block is loaded — the
+    input frame is never persisted or re-read (``persist`` is accepted
+    and ignored). A λ-path passes the cache it built for all its fits as
+    ``_blocks``.
 
     Warm start (beyond-reference, round 10): a caller-supplied
     ``init_beta`` is in the ORIGINAL feature space (the same space as the
     returned coefficients); ``_Standardizer.forward`` maps it into the
-    standardized space the wrapped solver optimizes in.
+    standardized space the wrapped solver optimizes in. Weighted fits
+    standardize with the WEIGHTED moments (ADVICE r10) — the moments of
+    the row-replicated dataset, so the penalty applies in the same
+    standardized space replication (and MLlib's weighted summarizer)
+    would produce.
     """
 
     @wraps(algo)
     def wrapped(df: DataFrame, *args, **kwargs):
         do_norm = kwargs.pop("normalize", True)
-        # r13: ``_moments`` lets λ-sweep callers (regularization_path)
-        # seed the λ-independent (n_rows, mean, std) from ONE shared scan
-        # instead of re-running the identical moments job per fit. The
-        # seed must be the exact tuple column_moments_full would return
-        # for (df, features_col, weight_col) — callers pass array copies
-        # because mean/std are mutated in place.
-        moments = kwargs.pop("_moments", None)
-        features_col = kwargs.get("features_col", "features")
-        with _cached(df, kwargs.pop("persist", True)) as (df, owned):
-            if not do_norm:
-                return algo(df, *args, **kwargs)
-            # ONE fused preamble job: n/p/mean/std from a single Arrow scan
-            # (round 6); p and n thread into the solver via kwargs so no
-            # solver re-probes them with extra jobs. Weighted fits
-            # standardize with the WEIGHTED moments (ADVICE r10) — the
-            # moments of the row-replicated dataset, so the penalty applies
-            # in the same standardized space replication (and MLlib's
-            # weighted summarizer) would produce.
-            if moments is None:
-                moments = kernels.column_moments_full(
-                    df, features_col, weight_col=kwargs.get("weight_col")
-                )
-            kwargs.setdefault("p", len(moments[1]))
-            # r14 pass 3 (guide §2.2): the moments job just materialized
-            # the cache AND told us n_rows — every subsequent kernel
-            # evaluation then runs over a coalesce VIEW sized to the data
-            # instead of the blanket core-count partitioning (a 600k-row
-            # bench cache pays ~60 ms/evaluation of task scheduling at 32
-            # partitions vs ~10). View only, no re-materialization; the
-            # cached handle is what gets unpersisted.
-            if owned:
-                df = right_size_kernel_cache(df, moments[0])
-            stdz = _Standardizer(df, features_col, moments=moments)
+        kwargs.pop("persist", None)  # the blocks are the cache
+        with _fit_blocks(
+            df, kwargs.pop("_blocks", None),
+            kwargs.get("features_col", "features"),
+            kwargs.get("label_col", "label"), kwargs.get("weight_col"),
+            kwargs.get("offset_col"), do_norm,
+        ) as blocks:
+            stdz = _Standardizer(blocks.moments if do_norm else None, blocks.p)
+            kwargs.setdefault("p", stdz.p)
             if kwargs.get("init_beta") is not None:
                 kwargs["init_beta"] = stdz.forward(kwargs["init_beta"])
-            return stdz.backward(
-                np.array(algo(stdz.view, *args, **kwargs), dtype=np.float64)
-            )
+            return stdz.backward(np.array(
+                algo(blocks.scaled(stdz), *args, **kwargs), dtype=np.float64
+            ))
 
     return wrapped
 
@@ -306,13 +299,6 @@ def _armijo_probe(
             if lf - fval >= armijo_mult * s2 * steplen:
                 return s2, fval, grads[:, i]
     return kept_sizes[-1], func, grads[:, -1]
-
-
-def _resolve_p(df, features_col, kwargs):
-    """p threaded from @normalize's fused moments pass when present
-    (kwargs['p']); direct solver calls (normalize=False) probe it."""
-    p = kwargs.pop("p", None)
-    return int(p) if p else kernels.infer_p(df, features_col)
 
 
 def _reject_offset_col(kwargs, solver_name: str) -> None:
@@ -412,7 +398,8 @@ class _Layout:
     coefficients, an int the k-class softmax over the flattened (p, k)
     matrix (``label_col`` then holds class indices in [0, k)).
 
-    Each method is ONE kernel job over ``df``. Kernels are looked up
+    Each method is ONE kernel job over ``df`` (a dense fit's ``_Blocks``
+    cache, or a sparse fit's persisted frame). Kernels are looked up
     through their module at call time, so a wrapper installed on
     ``kernels`` / ``kernels_sparse`` (a profiler's layer trace) sees
     every call."""
@@ -520,10 +507,10 @@ class _Layout:
 
 
 def _dense_layout(df, family, features_col, label_col, kwargs):
-    """The dense layout of a ``@normalize``d binary solver (pops ``p``,
-    ``weight_col``, ``offset_col`` from its kwargs)."""
+    """The dense layout of a ``@normalize``d binary solver over its block
+    cache (pops ``p``, ``weight_col``, ``offset_col`` from its kwargs)."""
     return _Layout(
-        df, _resolve_p(df, features_col, kwargs), label_col, family,
+        df, int(kwargs.pop("p")), label_col, family,
         kwargs.pop("weight_col", None), kwargs.pop("offset_col", None),
         features_col=features_col,
     )
@@ -549,16 +536,19 @@ def _run_sparse(df, p, kwargs, body, **layout):
 
 
 def _softmax_dense(
-    df, k, features_col, label_col, weight_col, normalize, persist,
+    df, k, features_col, label_col, weight_col, normalize, blocks,
     init_beta, body,
 ):
-    """The dense side of every ``softmax_*`` solver: persist, standardize
-    (columnwise per class on the way back), and run ``body(layout,
-    init)`` in the standardized space."""
-    with _cached(df, persist) as (df, _):
-        stdz = _Standardizer(df, features_col, normalize, weight_col)
+    """The dense side of every ``softmax_*`` solver: build the block
+    cache (or take a λ-path's ``blocks``), standardize (columnwise per
+    class on the way back), and run ``body(layout, init)`` in the
+    standardized space."""
+    with _fit_blocks(
+        df, blocks, features_col, label_col, weight_col, None, normalize,
+    ) as blocks:
+        stdz = _Standardizer(blocks.moments if normalize else None, blocks.p)
         lay = _Layout(
-            stdz.view, stdz.p, label_col, weight_col=weight_col,
+            blocks.scaled(stdz), stdz.p, label_col, weight_col=weight_col,
             features_col=features_col, k=k,
         )
         return stdz.backward(body(lay, stdz.forward(init_beta, k)))
@@ -1007,7 +997,7 @@ def newton(
     a p×p driver lstsq — measured 6.5× lbfgs's per-iteration wall at
     p=1024 (``NEWTON_WIDE_P``; examples/wide_p_probe.py). Past that a
     warning recommends lbfgs (O(p) partials) instead."""
-    p = _resolve_p(df, features_col, kwargs)
+    p = int(kwargs.pop("p"))
     if p > NEWTON_WIDE_P:
         _log.warning(
             "newton at p=%d: the fused Gram partial is p^2 doubles per "
@@ -1450,91 +1440,110 @@ def admm(
     One scan of the input, and the blocks are the cache: the raw frame
     is never persisted (``persist`` is accepted and ignored). The default
     ``nblocks`` reads the row count and width from one JVM-only aggregate
-    (skipped with a ``_moments`` seed or an explicit ``nblocks``). With
-    ``normalize`` on, the block build also folds each batch's
-    ``column_moments_full`` partial, the driver builds a ``_Standardizer``
-    from them, and each round task standardizes its raw block as
-    ``(X - mean) / std`` in numpy (a transient copy). An expensive
-    uncached upstream is computed by the count and by the build, never
-    per round.
+    (skipped with an explicit ``nblocks``). The block build is one job
+    (``_admm_dense_blocks``); with ``normalize`` on it also folds each
+    batch's ``column_moments_full`` partial, the driver builds a
+    ``_Standardizer`` from them, and each round task standardizes its raw
+    block as ``(X - mean) / std`` in numpy (a transient copy). An
+    expensive uncached upstream is computed by the count and by the
+    build, never per round. ``regularization_path`` builds the blocks once
+    for all its λ and passes them as ``_blocks``.
 
-    The blocks come from ``_admm_blocks`` (one numpy block per partition,
-    built once) and the rounds from ``_admm_consensus``; ``admm_sparse``
-    runs both on CSR blocks. Per-round cluster traffic is O(p) per block:
-    z out, (β_i, β̂_i + u_i) back — X never crosses again after the build.
+    The rounds are ``_admm_consensus``; ``admm_sparse`` runs the same
+    builder and rounds on CSR blocks. Per-round cluster traffic is O(p)
+    per block: z out, (β_i, β̂_i + u_i) back — X never crosses again
+    after the build.
     """
     kwargs.pop("persist", None)  # the blocks are the cache
     do_norm = kwargs.pop("normalize", True)
-    moments = kwargs.pop("_moments", None) if do_norm else None
-    p = kwargs.pop("p", None)
-    if moments is not None:
-        n_rows, p = moments[0], len(moments[1])
-    if nblocks is None:
-        if moments is None:
-            n_rows, p = _rows_and_width(df, features_col)
-        # Both caps are min(row cap, byte cap / 8p): identical to the
-        # row-only heuristic at the benched p <= 6, but at wide p (round
-        # 11 probe) the byte caps keep each materialized numpy block
-        # bounded in BYTES, not rows — at p=1000 the max block is ~16k
-        # rows (128 MB), never the 16 GB a 2M-row block would be.
-        row_bytes = 8 * max(p, 1)
-        min_rows = max(1, min(MIN_ADMM_BLOCK_ROWS,
-                              MIN_ADMM_BLOCK_BYTES // row_bytes))
-        max_rows = max(min_rows, min(MAX_ADMM_BLOCK_ROWS,
-                                     MAX_ADMM_BLOCK_BYTES // row_bytes))
-        nblocks = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
-                             n_rows // min_rows))
-        # memory guard: one-block-per-core would make each materialized
-        # numpy block n_rows/cores × p doubles — unbounded in n. Cap block
-        # rows so a huge-n fit raises the block count past core count
-        # (tasks queue; consensus still sees every block each round)
-        # instead of building multi-GB partitions.
-        nblocks = max(nblocks, n_rows // max_rows)
-        # Round-9 A/B note: keeping an already-right-sized input layout to
-        # skip the repartition exchange was tried and MEASURED SLOWER
-        # (interleaved in-process A/B at sf0.1: 3-split input kept = 6.2 s
-        # min vs repartition-to-6 = 4.4 s min). The exchange costs ~0.8 s
-        # once, but the block build (parquet read + numpy block build,
-        # the fit's most CPU-heavy pass) parallelizes nblocks-wide and
-        # dominates — don't "fix" this again.
-    elif p is None and not do_norm:
-        p = kernels.infer_p(df, features_col)
-    with _admm_blocks(
-        df, _DenseBlock(p), [F.col(features_col).cast("array<double>")],
-        label_col, family, nblocks, kwargs,
-        moments=do_norm and moments is None,
-    ) as (blocks, fam, acc):
-        stdz = scale = None
-        if do_norm:
-            stdz = _Standardizer(
-                None, features_col,
-                moments=moments if acc is None else kernels._moments_finish(acc),
-            )
-            p, scale = stdz.p, (stdz.mean, stdz.std)
-            init_beta = stdz.forward(init_beta)
+    weight_col = kwargs.pop("weight_col", None)
+    offset_col = kwargs.pop("offset_col", None)
+    blocks = kwargs.pop("_blocks", None)
+    with nullcontext(blocks) if blocks is not None else _admm_dense_blocks(
+        df, features_col, label_col, weight_col, offset_col, nblocks,
+        do_norm, kwargs.pop("p", None),
+    ) as blocks:
+        stdz = _Standardizer(blocks.moments if do_norm else None, blocks.p)
         z = _admm_consensus(
-            blocks, p, regularizer, lamduh, rho, over_relax, max_iter,
-            abstol, reltol, fam, init_beta, kwargs.pop("fit_info", None),
-            scale,
+            blocks.scaled(stdz), regularizer, lamduh, rho, over_relax,
+            max_iter, abstol, reltol,
+            _block_family(family, weight_col, offset_col),
+            stdz.forward(init_beta), kwargs.pop("fit_info", None),
         )
-    return z if stdz is None else stdz.backward(np.array(z, dtype=np.float64))
+    return stdz.backward(np.array(z, dtype=np.float64))
+
+
+def _admm_dense_blocks(
+    df, features_col, label_col, weight_col, offset_col, nblocks,
+    moments, p=None,
+):
+    """The dense ``admm`` block build (a ``_blocks`` context): ``nblocks``
+    None takes the default count from ``_rows_and_width`` and
+    ``_admm_nblocks``; ``moments`` folds the standardization moments."""
+    if nblocks is None:
+        n_rows, p = _rows_and_width(df, features_col)
+        nblocks = _admm_nblocks(
+            n_rows, p, df.sparkSession.sparkContext.defaultParallelism
+        )
+    return _blocks(
+        df, _DenseBlock(p), [F.col(features_col).cast("array<double>")],
+        label_col, weight_col, offset_col, nblocks, moments, kernel_job=False,
+    )
+
+
+def _admm_nblocks(n_rows: int, p: int, parallelism: int) -> int:
+    """The default dense ADMM block count for ``n_rows`` rows of width
+    ``p`` (see ``admm``)."""
+    # Both caps are min(row cap, byte cap / 8p): identical to the
+    # row-only heuristic at the benched p <= 6, but at wide p (round
+    # 11 probe) the byte caps keep each materialized numpy block
+    # bounded in BYTES, not rows — at p=1000 the max block is ~16k
+    # rows (128 MB), never the 16 GB a 2M-row block would be.
+    row_bytes = 8 * max(p, 1)
+    min_rows = max(1, min(MIN_ADMM_BLOCK_ROWS,
+                          MIN_ADMM_BLOCK_BYTES // row_bytes))
+    max_rows = max(min_rows, min(MAX_ADMM_BLOCK_ROWS,
+                                 MAX_ADMM_BLOCK_BYTES // row_bytes))
+    nblocks = max(1, min(parallelism, n_rows // min_rows))
+    # memory guard: one-block-per-core would make each materialized
+    # numpy block n_rows/cores × p doubles — unbounded in n. Cap block
+    # rows so a huge-n fit raises the block count past core count
+    # (tasks queue; consensus still sees every block each round)
+    # instead of building multi-GB partitions.
+    # Round-9 A/B note: keeping an already-right-sized input layout to
+    # skip the repartition exchange was tried and MEASURED SLOWER
+    # (interleaved in-process A/B at sf0.1: 3-split input kept = 6.2 s
+    # min vs repartition-to-6 = 4.4 s min). The exchange costs ~0.8 s
+    # once, but the block build (parquet read + numpy block build,
+    # the fit's most CPU-heavy pass) parallelizes nblocks-wide and
+    # dominates — don't "fix" this again.
+    return max(nblocks, n_rows // max_rows)
 
 
 def _rows_and_width(df, features_col):
     """``(n_rows, p)`` of a dense features column from one JVM-only
-    aggregate; an empty frame and ragged rows raise ``ValueError``."""
-    width = F.size(features_col)
+    aggregate: the row count and the width of a first row (ragged rows
+    are refused by the block build's readers); an empty frame raises
+    ``ValueError``. The width still makes the scan decode the features
+    column, which a bare count would not (0.22 vs 0.10 s median on a
+    637k x 5 parquet table, ``local[2]`` on a 4-vCPU box); a bare count
+    plus a ``first()`` width probe took 0.18 s but is a second job per
+    fit, and one job with a limited union branch for the width 0.27 s."""
     with kernels.kernel_exec(df.sparkSession):
-        n_rows, lo, hi = df.agg(
-            F.count(F.lit(1)), F.min(width), F.max(width)
+        n_rows, p = df.agg(
+            F.count(F.lit(1)), F.first(F.size(features_col))
         ).collect()[0]
     if n_rows == 0:
         raise ValueError("empty input DataFrame")
-    if lo != hi:
-        raise ValueError(
-            f"features rows must all have the same width; got {lo}..{hi}"
-        )
-    return int(n_rows), int(lo)
+    return int(n_rows), int(p)
+
+
+def _block_family(family, weight_col, offset_col):
+    """The family of the ADMM local solves: ``_AugmentedFamily`` when a
+    weight and/or offset row rides in each block's y."""
+    if weight_col is None and offset_col is None:
+        return family
+    return _AugmentedFamily(family, weight_col is not None, offset_col is not None)
 
 
 def admm_sparse(
@@ -1569,22 +1578,25 @@ def admm_sparse(
     p = p or sparse_p(df, idx_col)
     if nblocks is None:
         nblocks = df.sparkSession.sparkContext.defaultParallelism
-    with _admm_blocks(
+    weight_col = kwargs.pop("weight_col", None)
+    offset_col = kwargs.pop("offset_col", None)
+    with _blocks(
         df, _CSRBlock(p),
         [F.col(idx_col).cast("array<long>"),
          F.col(val_col).cast("array<double>")],
-        label_col, family, nblocks, kwargs,
-    ) as (blocks, fam, _):
+        label_col, weight_col, offset_col, nblocks, kernel_job=False,
+    ) as blocks:
         return _admm_consensus(
-            blocks, p, regularizer, lamduh, rho, over_relax, max_iter,
-            abstol, reltol, fam, init_beta, kwargs.pop("fit_info", None),
+            blocks, regularizer, lamduh, rho, over_relax, max_iter,
+            abstol, reltol, _block_family(family, weight_col, offset_col),
+            init_beta, kwargs.pop("fit_info", None),
         )
 
 
 class _DenseBlock:
-    """ADMM block reader of a dense ``array<double>`` features column:
-    per batch the row-major (n, p) X (``kernels._flat_rows``: every row
-    must have width p — the batch's first row's when p is None), one
+    """Block reader of a dense ``array<double>`` features column: per
+    batch the row-major (n, p) X (``kernels._flat_rows``: every row must
+    have width p — the batch's first row's when p is None), one
     contiguous array per block. Module-level so the block-build closure
     pickles."""
 
@@ -1628,11 +1640,10 @@ class _CSRBlock(_DenseBlock):
 
 
 class _NpyBlock:
-    """A consensus block in the local-disk store (see ``_admm_blocks``):
-    pickles as its ``.npy`` paths and resolves to ``(X, y)`` over
-    read-only memmaps inside the round task, so the data RDD caches
-    O(bytes-of-path) rows and rounds read blocks straight from page
-    cache."""
+    """A block in the local-disk store (see ``_blocks``): pickles as its
+    ``.npy`` paths and resolves to ``(X, y)`` over read-only memmaps
+    inside the task, so the block RDD holds O(bytes-of-path) rows and
+    tasks read blocks straight from page cache."""
 
     __slots__ = ("paths", "reader")
 
@@ -1644,28 +1655,31 @@ class _NpyBlock:
         return self.reader.matrix(xs, y.shape[-1]), y
 
 
+def _scaled(X, scale):
+    """``X`` standardized into a transient copy, ``(X - mean) / std``
+    (``scale = (mean, std)``); ``X`` itself when ``scale`` is None."""
+    return X if scale is None else (X - scale[0]) / scale[1]
+
+
 def _block_xy(blk, scale=None):
-    """A consensus block's (X, y): in-memory blocks are the pair itself;
-    local-disk blocks (``_NpyBlock``) memmap lazily inside the round
-    task. ``scale = (mean, std)`` standardizes X into a transient copy,
-    ``(X - mean) / std``."""
+    """A block's (X, y): in-memory blocks are the pair itself;
+    local-disk blocks (``_NpyBlock``) memmap lazily inside the task.
+    ``scale = (mean, std)`` standardizes X (``_scaled``)."""
     X, y = blk.load() if isinstance(blk, _NpyBlock) else blk
-    if scale is not None:
-        X = (X - scale[0]) / scale[1]
-    return X, y
+    return _scaled(X, scale), y
 
 
 def _build_block(batches, reader, n_x, n_y, blockdir, stats):
-    """mapInArrow body of ``_admm_blocks``: one partition's Arrow batches
+    """mapInArrow body of ``_blocks``: one partition's Arrow batches
     (``n_x`` feature columns, then ``n_y`` label/weight/offset columns)
-    -> ONE row ``(pid, b0, b1, ...)`` holding the block's arrays — the
+    -> ONE row ``(pid, rows, width, b0, b1, ...)`` holding the block's row
+    count, its width (``reader.p``, or X's column count) and arrays — the
     reader's X arrays, then y. Column batches flatten to numpy via buffer
     views, never a per-row Python loop. The y-buffer carries
-    ``vstack([y][, w][, o])`` (``_AugmentedFamily`` splits it). Stored as
-    raw bytes, or (``blockdir`` set) as ``.npy`` files whose paths are
-    the row. With ``stats(xs, ys)`` set (the dense moments partial of one
-    batch), the row also carries the partition's fold of it, in the
-    ``kernels.MOMENT_ZEROS`` columns."""
+    ``vstack([y][, w][, o])``. Stored as raw bytes, or (``blockdir`` set)
+    as ``.npy`` files whose paths are the row. With ``stats(xs, ys)`` set
+    (the dense moments partial of one batch), the row also carries the
+    partition's fold of it, in the ``kernels.MOMENT_ZEROS`` columns."""
     import os
 
     import pyarrow as pa
@@ -1691,15 +1705,15 @@ def _build_block(batches, reader, n_x, n_y, blockdir, stats):
     cols = [np.concatenate(c) for c in zip(*ys)]
     y = np.ascontiguousarray(cols[0] if n_y == 1 else np.vstack(cols))
     arrays = reader.join(xs) + [y]
+    width = reader.p if reader.p is not None else arrays[0].shape[1]
     if blockdir is None:
         out = [pa.array([a.tobytes()], type=pa.large_binary()) for a in arrays]
     else:
         out = []
         for j, a in enumerate(arrays):
             path = os.path.join(blockdir, f"blk_{pid}_{j}.npy")
-            # write-then-rename: a lineage recompute of this partition
-            # (cache eviction) must never leave a concurrent reader a
-            # torn file
+            # write-then-rename: a recompute of this partition must never
+            # leave a concurrent reader a torn file
             np.save(path + ".tmp.npy", a)
             os.replace(path + ".tmp.npy", path)
             out.append(pa.array([path], type=pa.string()))
@@ -1708,54 +1722,144 @@ def _build_block(batches, reader, n_x, n_y, blockdir, stats):
         names += list(kernels.MOMENT_ZEROS)
         out += [pa.array([acc[c]]) for c in kernels.MOMENT_ZEROS]
     yield pa.RecordBatch.from_arrays(
-        [pa.array([pid], type=pa.int64()), *out], names=["pid"] + names,
+        [pa.array([v], type=pa.int64()) for v in (pid, y.shape[-1], width)]
+        + out,
+        names=["pid", "rows", "width"] + names,
+    )
+
+
+class _Blocks:
+    """The block cache of one fit: one numpy block ``(X, y)`` per
+    non-empty build partition, built once by ``_blocks`` (one Python
+    pass over the input) and read by every evaluation or consensus round
+    of the fit, never rebuilt.
+
+    - ``rdd``: ``(pid, block, meta)`` rows, one block per partition (the
+      ADMM rounds map over it). A block is ``(X, y)`` in memory (X an
+      ndarray or ``CSRMatrix``) or an ``_NpyBlock``; y stacks the
+      ``cols`` rows (label, then weight and offset when set).
+    - ``n_rows``, ``p`` (the width the build discovered), ``nparts`` (the
+      build's partition count, which bounds every pid) and ``moments``:
+      ``column_moments_full``'s ``(n_rows, mean, std)`` fold of the
+      build's batches, or None.
+    - ``scale``: ``(mean, std)`` that standardizes X as each block is
+      loaded (``scaled``), or None.
+
+    ``kernels._arrow_partials`` accepts it in place of a DataFrame
+    (``partials``): the kernel's per-batch closures run on each block in
+    slices of ``batch_rows`` rows (the session's Arrow batch size, so a
+    block over the same rows as a scan partition sees the same batch
+    boundaries), over ``rdd`` coalesced to ~``ROWS_PER_KERNEL_TASK`` rows
+    per task."""
+
+    def __init__(self, rdd, cols, nparts, n_rows, p, moments, batch_rows):
+        self.rdd, self.cols, self.nparts = rdd, tuple(cols), nparts
+        self.n_rows, self.p, self.moments = n_rows, p, moments
+        self.batch_rows, self.scale = batch_rows, None
+        target = max(1, -(-n_rows // ROWS_PER_KERNEL_TASK))
+        self.eval_rdd = (
+            rdd.coalesce(target) if target < rdd.getNumPartitions() else rdd
+        )
+
+    def scaled(self, stdz):
+        """This cache with X standardized by ``stdz`` (a ``_Standardizer``;
+        the identity returns the cache itself)."""
+        if stdz.std is None:
+            return self
+        out = copy.copy(self)
+        out.scale = (stdz.mean, stdz.std)
+        return out
+
+    def partials(self, fn, cols):
+        """An RDD of one partial dict per block (its ``pid`` included):
+        ``fn(X, col)`` on each ``batch_rows`` slice of the block's
+        standardized X, ``col(name)`` the slice's float64 ``cols`` row,
+        folded within the block."""
+        missing = [c for c in cols if c not in self.cols]
+        if missing:
+            raise ValueError(
+                f"the fit's blocks hold columns {list(self.cols)}; a kernel "
+                f"asked for {missing}"
+            )
+        names, step, scale = self.cols, self.batch_rows, self.scale
+
+        def run(rows):
+            for pid, blk, _ in rows:
+                X, y = _block_xy(blk)
+                X, Y = np.asarray(X), np.asarray(y).reshape(len(names), -1)
+                acc = None
+                for lo in range(0, len(X), step):
+                    hi = lo + step
+                    ys = dict(zip(names, Y[:, lo:hi]))
+                    acc = kernels._fold_partial(
+                        acc, fn(_scaled(X[lo:hi], scale), ys.__getitem__),
+                        None,
+                    )
+                acc["pid"] = pid
+                yield acc
+
+        return self.eval_rdd.mapPartitions(run)
+
+
+def _dense_blocks(
+    df, features_col="features", label_col="label", weight_col=None,
+    offset_col=None, moments=True,
+):
+    """The block cache of a dense non-ADMM fit (a ``_blocks`` context):
+    one block per input partition, spread to core count first (a
+    single-row-group input would otherwise run every evaluation on one
+    core); ``moments`` folds the standardization moments."""
+    return _blocks(
+        df, _DenseBlock(None), [F.col(features_col).cast("array<double>")],
+        label_col, weight_col, offset_col, None, moments,
     )
 
 
 @contextmanager
-def _admm_blocks(
-    df, reader, x_cols, label_col, family, nblocks, kwargs, moments=False,
+def _blocks(
+    df, reader, x_cols, label_col, weight_col=None, offset_col=None,
+    nblocks=None, moments=False, kernel_job=True,
 ):
-    """Yield ``(blocks, fam, acc)``: the persisted ``(pid, block, _)``
-    RDD of one numpy block per non-empty partition of ``df`` (``nblocks``
-    of them; 0 keeps the input partitioning), the family the local
-    solves use (``_AugmentedFamily`` when the ``weight_col``/
-    ``offset_col`` popped from ``kwargs`` ride in y) and ``acc``.
-    ``reader`` is ``_DenseBlock`` or ``_CSRBlock`` over the ``x_cols``
-    expressions; a block is ``(X, y)`` with X an ndarray or
-    ``CSRMatrix``, or an ``_NpyBlock``. The blocks are unpersisted and
-    the block directory removed on exit, also when the fit raises.
+    """Yield the ``_Blocks`` of ``df``: one numpy block per non-empty
+    partition, ``nblocks`` of them (0 keeps the input partitioning, None
+    spreads to at least core count), built by ONE job. ``reader`` is
+    ``_DenseBlock`` or ``_CSRBlock`` over the ``x_cols`` expressions; the
+    label, ``weight_col`` and ``offset_col`` ride in y. ``moments=True``
+    (dense, standardized fits) also folds each block's moments partial
+    (weighted by ``weight_col``) in pid order — ``column_moments_full``'s
+    fold of the same batches. Empty input and blocks of different widths
+    raise ``ValueError``. Every persisted RDD and the block directory are
+    released on exit, also when the fit raises.
 
-    ``moments=True`` (dense, standardized fits) runs the build as its own
-    job, which also returns each block's moments partial (weighted by
-    ``weight_col``); ``acc`` is their fold in pid order —
-    ``column_moments_full``'s fold of the same batches. Otherwise
-    ``acc`` is None and the first round builds the blocks.
+    ``kernel_job`` plans the build like every kernel job, with AQE off
+    (``kernels.kernel_exec``); the ADMM builds keep the session's setting,
+    as they always ran, because a shuffled input's rows can land in other
+    partitions under the other setting (range bounds are sampled
+    differently), and ADMM's iterates depend on its block boundaries.
 
     Block store (round 13, VERDICT r12 #8): in local mode each block is
-    written as local ``.npy`` files and only the paths are cached — rounds
-    memmap straight from page cache, so the one-time multi-GB pickled
-    block build (the 100× probe's one super-linear component: single-JVM
-    heap/GC pressure) AND the per-round JVM→Python block copy + unpickle
-    both disappear.
-    There one JVM holds every block (the GC effect) and one filesystem
-    guarantees path visibility. On a real cluster the blocks already
-    spread across executor JVMs (heap pressure divides by the executor
-    count) and a round task rescheduled off the writing executor under
-    delay scheduling would not see the file — the JVM block-manager cache
-    of raw-bytes rows stays the robust choice there."""
+    written as local ``.npy`` files and the build's ``toArrow()`` returns
+    only their paths, row counts, widths and moments; the cache is a
+    ``parallelize`` of those descriptors — nothing is persisted, tasks
+    memmap the blocks straight from page cache, so the one-time
+    multi-GB pickled block build (the 100× probe's one super-linear
+    component: single-JVM heap/GC pressure) AND the per-task JVM→Python
+    block copy + unpickle both disappear. There one JVM holds every block
+    (the GC effect) and one filesystem guarantees path visibility. On a
+    real cluster the blocks already spread across executor JVMs (heap
+    pressure divides by the executor count) and a task rescheduled off
+    the writing executor under delay scheduling would not see the file —
+    the JVM block-manager cache of raw-bytes rows stays the robust choice
+    there."""
     import shutil
     import tempfile
 
-    weight_col = kwargs.pop("weight_col", None)
-    offset_col = kwargs.pop("offset_col", None)
     aux_cols = [c for c in (weight_col, offset_col) if c is not None]
-    fam = (
-        _AugmentedFamily(family, weight_col is not None, offset_col is not None)
-        if aux_cols
-        else family
-    )
+    spark = df.sparkSession
+    sc = spark.sparkContext
     cur = df.rdd.getNumPartitions()
+    if nblocks is None:
+        nblocks = max(cur, sc.defaultParallelism)
     if nblocks and cur != nblocks:
         if nblocks < cur:
             # contiguous merge, NO shuffle — each block is a union of
@@ -1775,12 +1879,12 @@ def _admm_blocks(
     def stats(xs, ys):  # one batch's moments partial; w is the y row 1
         return kernels._moments_partial(xs[0], ys[1] if weight_col else None)
 
-    disk = df.sparkSession.sparkContext.master.startswith("local")
+    disk = sc.master.startswith("local")
     blockdir = tempfile.mkdtemp(prefix="dgs-admm-blocks-") if disk else None
     data = None
     try:
         names = [f"b{j}" for j in range(len(reader.dtypes) + 1)]
-        schema = "pid long, " + ", ".join(
+        schema = "pid long, rows long, width long, " + ", ".join(
             f"{n} {'string' if disk else 'binary'}" for n in names
         )
         if moments:
@@ -1794,36 +1898,55 @@ def _admm_blocks(
             ),
             schema=schema,
         )
-
-        def unpack(row):
-            part = (
-                {c: row[c] for c in kernels.MOMENT_ZEROS} if moments else None
-            )
-            if disk:
-                return row.pid, _NpyBlock([row[n] for n in names], reader), part
-            *xs, y = [
-                np.frombuffer(row[n], dtype=dt)
-                for n, dt in zip(names, reader.dtypes + (np.float64,))
-            ]
-            if n_y > 1:
-                y = y.reshape(n_y, -1)
-            return row.pid, (reader.matrix(xs, y.shape[-1]), y), part
-
-        data = packed.rdd.map(unpack, preservesPartitioning=True).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        acc = None
+        meta_cols = ["pid", "rows", "width"]
         if moments:
-            parts = sorted(
-                data.map(lambda r: (r[0], r[2])).collect(), key=lambda t: t[0]
+            meta_cols += list(kernels.MOMENT_ZEROS)
+        if disk:
+            with kernels.kernel_exec(spark) if kernel_job else nullcontext():
+                meta = packed.toArrow().to_pylist()
+            meta.sort(key=lambda m: m["pid"])
+            rdd = sc.parallelize(
+                [(m["pid"], _NpyBlock([m[n] for n in names], reader), None)
+                 for m in meta],
+                max(1, len(meta)),
             )
-            if len({len(part["s"]) for _, part in parts}) > 1:
-                raise ValueError("features rows must all have the same width")
-            acc = kernels._sum_partial_rows(
-                [part for _, part in parts], list(kernels.MOMENT_ZEROS),
-                kernels.MOMENT_MERGES, init=kernels.MOMENT_ZEROS,
-            )
-        yield data, fam, acc
+        else:
+            def unpack(row):
+                *xs, y = [
+                    np.frombuffer(row[n], dtype=dt)
+                    for n, dt in zip(names, reader.dtypes + (np.float64,))
+                ]
+                if n_y > 1:
+                    y = y.reshape(n_y, -1)
+                blk = (reader.matrix(xs, y.shape[-1]), y)
+                return row.pid, blk, {c: row[c] for c in meta_cols}
+
+            with kernels.kernel_exec(spark) if kernel_job else nullcontext():
+                packed_rdd = packed.rdd
+            rdd = data = packed_rdd.map(
+                unpack, preservesPartitioning=True
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            meta = sorted(data.map(lambda r: r[2]).collect(),
+                          key=lambda m: m["pid"])
+        if not meta:
+            raise ValueError("empty input DataFrame")
+        if len({m["width"] for m in meta}) > 1:
+            raise ValueError("features rows must all have the same width")
+        finished = None
+        if moments:
+            finished = kernels._moments_finish(kernels._sum_partial_rows(
+                meta, list(kernels.MOMENT_ZEROS), kernels.MOMENT_MERGES,
+                init=kernels.MOMENT_ZEROS,
+            ))
+        batch_rows = int(spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
+        ))
+        n_rows = sum(m["rows"] for m in meta)
+        yield _Blocks(
+            rdd, [label_col, *aux_cols], nblocks or cur, n_rows,
+            meta[0]["width"], finished,
+            batch_rows if batch_rows > 0 else max(n_rows, 1),
+        )
     finally:
         if data is not None:
             data.unpersist(False)
@@ -1837,19 +1960,18 @@ MAX_DRIVER_STATE_BYTES = 64 * 1024 * 1024
 
 
 def _admm_consensus(
-    data, p, regularizer, lamduh, rho, over_relax,
+    blocks, regularizer, lamduh, rho, over_relax,
     max_iter, abstol, reltol, fam, init_beta=None, fit_info=None,
-    scale=None,
 ):
     """The consensus rounds of ``admm`` and ``admm_sparse`` over the
-    persisted ``(pid, block, _)`` rows of ``_admm_blocks`` (X anything the
+    ``(pid, block, _)`` rows of a ``_Blocks`` cache (X anything the
     family math can ``.dot``: dense ndarray or CSRMatrix), which never
-    change; ``scale`` standardizes each dense block as it is loaded
-    (``_block_xy``). Each round returns ``(β_i, β̂_i + u_i)`` per block,
-    and the driver runs the z-prox, dual update and residual stopping
-    rule (``algorithms.py:224-336``, deterministic pid order). Every RDD
-    the rounds persist is released when the fit ends, by return or by
-    raise.
+    change; ``blocks.scale`` standardizes each dense block as it is
+    loaded (``_block_xy``). Each round returns ``(β_i, β̂_i + u_i)`` per
+    block, and the driver runs the z-prox, dual update and residual
+    stopping rule (``algorithms.py:224-336``, deterministic pid order).
+    Every RDD the rounds persist is released when the fit ends, by
+    return or by raise.
 
     Where β_i/u_i live between rounds is chosen by per-round state size
     (k x 2p floats) — the iterates are the same either way:
@@ -1870,11 +1992,8 @@ def _admm_consensus(
       still O(p) per block.
     """
     regularizer = Regularizer.get(regularizer)
-    # Block count upper bound without a job: each input partition yields at
-    # most one block (admm may request nblocks > defaultParallelism, and
-    # nblocks=0 keeps the caller's partitioning — defaultParallelism would
-    # under-count both).
-    nparts = max(1, data.getNumPartitions())
+    data, p, scale = blocks.rdd, blocks.p, blocks.scale
+    nparts = data.getNumPartitions()
     rounds = (
         _driver_state_rounds if 2 * p * 8 * nparts <= MAX_DRIVER_STATE_BYTES
         else _executor_state_rounds
@@ -1929,10 +2048,9 @@ def _driver_state_rounds(
     values enter every local solve (parity pinned by
     tests/test_admm.py::test_state_layouts_agree).
 
-    Lazy state init (round 9): round 1 returns the pids in its stats
-    (and builds the blocks, unless a standardized fit's build job already
-    did); unknown pids default to the block-build init (beta=ones — or
-    the warm start — and u=zeros)."""
+    Lazy state init (round 9): round 1 returns the pids in its stats;
+    unknown pids default to the block-build init (beta=ones — or the warm
+    start — and u=zeros)."""
     b0_default = None if init_beta is None else _init_vec(init_beta, p)
     betas: dict = {}
     us: dict = {}
@@ -1962,8 +2080,6 @@ def _driver_state_rounds(
 
         stats = data.map(run, preservesPartitioning=True).collect()
         st_bc.unpersist(False)
-        if not stats:
-            raise ValueError("empty input DataFrame")
         stats.sort(key=lambda t: t[0])  # deterministic reduction order
         pids = [t[0] for t in stats]
         if not us:
@@ -1989,9 +2105,6 @@ def _executor_state_rounds(
     ``localCheckpoint``ed instead (the reference's recalcRate rhythm,
     algorithms.py:117) and kept until the fit ends — its rows ARE the
     checkpoint of the later rounds' lineage."""
-    nchunks = data.count()  # empty partitions contribute no block
-    if nchunks == 0:
-        raise ValueError("empty input DataFrame")
     b0 = np.ones(p) if init_beta is None else _init_vec(init_beta, p)
     state = data.map(
         lambda b: (b[0], b0, np.zeros(p), None),
@@ -2059,6 +2172,7 @@ def softmax_lbfgs(
     init_beta=None,
     fit_info=None,
     weight_col: str | None = None,
+    _blocks=None,
 ) -> np.ndarray:
     """True multinomial (softmax) fit: the ``lbfgs`` body over the
     flattened (p, k) coefficient matrix; each objective evaluation is ONE
@@ -2069,10 +2183,12 @@ def softmax_lbfgs(
 
     Standardize-fit-backtransform is ``_Standardizer`` (same reference
     quirks as ``@normalize``), applied columnwise per class on the way
-    back. Returns (p, k); column c is class c's coefficients over the
-    (maybe intercept-extended) features."""
+    back; like every dense fit it reads its input once into a block cache
+    (``persist`` is accepted and ignored; ``_blocks`` takes a λ-path's).
+    Returns (p, k); column c is class c's coefficients over the (maybe
+    intercept-extended) features."""
     return _softmax_dense(
-        df, k, features_col, label_col, weight_col, normalize, persist,
+        df, k, features_col, label_col, weight_col, normalize, _blocks,
         init_beta,
         lambda lay, b0: _lbfgs(
             lay, regularizer, lamduh, max_iter, tol, b0, fit_info
@@ -2125,6 +2241,7 @@ def softmax_proximal(
     init_beta=None,
     fit_info=None,
     weight_col: str | None = None,
+    _blocks=None,
 ) -> np.ndarray:
     """L1/L2-penalized multinomial fit by proximal gradient over the
     flattened (p, k) matrix — round 12 (VERDICT r11 #4: sparse text
@@ -2138,7 +2255,7 @@ def softmax_proximal(
     ``softmax_multi_loss`` probe scans. Standardize-fit-backtransform as
     ``softmax_lbfgs``. Returns (p, k)."""
     return _softmax_dense(
-        df, k, features_col, label_col, weight_col, normalize, persist,
+        df, k, features_col, label_col, weight_col, normalize, _blocks,
         init_beta,
         lambda lay, b0: _proximal(
             lay, regularizer, lamduh, max_iter, tol, b0, fit_info, True
@@ -2200,6 +2317,7 @@ def softmax_newton_cg(
     weight_col: str | None = None,
     cg_tol: float | None = None,
     max_cg_iter: int | None = None,
+    _blocks=None,
 ) -> np.ndarray:
     """Matrix-free truncated Newton for the JOINT multinomial fit —
     round 13 (VERDICT r12 #5). The ``newton_cg`` body over the flattened
@@ -2227,7 +2345,7 @@ def softmax_newton_cg(
     converges to; parity is pinned in tests. Standardize-fit-
     backtransform as ``softmax_lbfgs``. Returns (p, k)."""
     return _softmax_dense(
-        df, k, features_col, label_col, weight_col, normalize, persist,
+        df, k, features_col, label_col, weight_col, normalize, _blocks,
         init_beta,
         lambda lay, b0: _newton_cg(
             lay, max_iter, tol, b0, fit_info, cg_tol, max_cg_iter

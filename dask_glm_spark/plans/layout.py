@@ -16,28 +16,37 @@ is exactly a no-op and scan locality / pushdown shapes are preserved).
 The one-time shuffle of the raw rows is paid only when the alternative is
 running the whole operator on one core.
 
-Applied at the compute-dense entry points only (iterative solver caches,
-dedup shingle projections, TF hashing) — never inside ``load_*`` paths,
-where it would sit between the scan and later filters and break predicate
-pushdown (tests/test_plans.py pins those shapes).
+Applied at the compute-dense entry points only (sparse solver caches,
+dedup shingle projections, TF hashing; a dense fit's block build spreads
+its input the same way) — never inside ``load_*`` paths, where it would
+sit between the scan and later filters and break predicate pushdown
+(tests/test_plans.py pins those shapes).
+
+``ROWS_PER_KERNEL_TASK`` sizes the tasks of iterative kernel jobs:
+``right_size_kernel_cache`` views a sparse fit's cache at that size, and
+a dense fit's block cache (``operators.solvers._Blocks``) groups its
+blocks into tasks of about that many rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Target rows per task for iterative kernel jobs over a cached solver
-# input (r14 pass 3, guide §2.2 "fewer, larger partitions"). An iterative
-# solver pays its cache's task count on EVERY evaluation: at bench scale a
-# 600k-row cache spread over 32 partitions costs ~60 ms/evaluation of pure
-# task scheduling vs the same job over 8-10 partitions (measured
-# loss_gradient 0.22 -> 0.16 s/eval), and a 5k-row python-boundary scan
-# over 32 partitions costs 2x its 1-4 partition form (0.40 -> 0.21
-# s/eval: each task is a separate python-worker round trip). The target
-# is derived from the ROW COUNT the solver's own preamble job already
-# computed — at real scale n/65536 exceeds any core count and the
-# coalesce below never fires, so this is a small-input latency fix, not a
-# local[32] tuning constant.
+# Target rows per task for iterative kernel jobs over a solver's cache
+# (r14 pass 3, guide §2.2 "fewer, larger partitions"): a sparse fit's
+# persisted frame (``right_size_kernel_cache``) or a dense fit's block
+# cache (the blocks are grouped into tasks of about this many rows). An
+# iterative solver pays its cache's task count on EVERY evaluation: at
+# bench scale a 600k-row cache spread over 32 partitions costs ~60
+# ms/evaluation of pure task scheduling vs the same job over 8-10
+# partitions (measured loss_gradient 0.22 -> 0.16 s/eval), and a 5k-row
+# python-boundary scan over 32 partitions costs 2x its 1-4 partition form
+# (0.40 -> 0.21 s/eval: each task is a separate python-worker round
+# trip). The target is derived from the ROW COUNT the solver's own
+# preamble job (the class count, or the block build) already computed —
+# at real scale n/65536 exceeds any core count and the grouping never
+# fires, so this is a small-input latency fix, not a local[32] tuning
+# constant.
 ROWS_PER_KERNEL_TASK = 65536
 
 

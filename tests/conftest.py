@@ -34,3 +34,23 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark(app_name="dask_glm_spark_tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def as_blocks():
+    """``as_blocks(df, label_col=..., weight_col=..., offset_col=...)``:
+    the block cache a dense fit builds from ``df`` (unstandardized), which
+    the kernels accept in place of the frame; released when the test
+    ends."""
+    from contextlib import ExitStack
+
+    from dask_glm_spark.operators import solvers
+
+    with ExitStack() as stack:
+        def make(df, label_col="label", weight_col=None, offset_col=None):
+            return stack.enter_context(solvers._dense_blocks(
+                df, "features", label_col, weight_col, offset_col,
+                moments=False,
+            ))
+
+        yield make

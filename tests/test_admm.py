@@ -105,6 +105,15 @@ def test_fit_releases_blocks(spark, monkeypatch, tmp_path):
     admm(df, normalize=False, nblocks=2, max_iter=10, abstol=0, reltol=0)
     assert persisted() == before
     assert not list(tmp_path.glob("dgs-admm-blocks-*"))
+    # dense lbfgs fits over their block cache: a failing fit (after the
+    # build: a warm start of the wrong width) and a succeeding one
+    with pytest.raises(ValueError, match="init_beta"):
+        S.lbfgs(df, max_iter=2, init_beta=np.zeros(7))
+    assert persisted() == before
+    assert not list(tmp_path.glob("dgs-admm-blocks-*"))
+    assert np.all(np.isfinite(S.lbfgs(df, max_iter=2)))
+    assert persisted() == before
+    assert not list(tmp_path.glob("dgs-admm-blocks-*"))
 
 
 def _split_pair_update(X, Y, beta, z, u, rho, fam, w=None, o=None):
@@ -214,3 +223,30 @@ def test_normalized_fit_scans_input_once(spark, tmp_path):
         assert np.all(np.isfinite(beta))
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
         assert sorted(jsc.getPersistentRDDs().keys()) == before
+
+
+def test_dense_fit_is_one_build_plus_one_job_per_evaluation(spark, tmp_path):
+    """A standardized dense lbfgs fit on an unmaterialized parquet frame
+    runs ONE block build (which folds the moments: no moments job) and
+    then one job per objective evaluation, and persists nothing."""
+    from dask_glm_spark.operators import solvers as S
+
+    df, _, _ = make_classification(
+        spark, n_samples=2000, n_features=4, seed=13, npartitions=2
+    )
+    path = str(tmp_path / "lbfgs_input.parquet")
+    df.write.parquet(path)
+    raw = spark.read.parquet(path)
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    before = sorted(jsc.getPersistentRDDs().keys())
+    info = {}
+    sc.setJobGroup("lbfgs-blocks", "lbfgs-blocks")
+    try:
+        beta = S.lbfgs(raw, max_iter=3, tol=0.0, fit_info=info)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert np.all(np.isfinite(beta))
+    jobs = sc.statusTracker().getJobIdsForGroup("lbfgs-blocks")
+    assert len(jobs) == 1 + info["funcalls"]
+    assert sorted(jsc.getPersistentRDDs().keys()) == before

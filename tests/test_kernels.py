@@ -1,8 +1,9 @@
 """Kernel-layer parity against driver numpy ground truth.
 
 Tests parametrized over ``path`` run the kernel ("arrow", its one physical
-path) or the in-test Spark-SQL reference (``tests/sql_reference.py``,
-"sql") against the same numpy twin."""
+path), the kernel over a dense fit's block cache ("blocks", the
+``as_blocks`` fixture) or the in-test Spark-SQL reference
+(``tests/sql_reference.py``, "sql") against the same numpy twin."""
 
 import numpy as np
 import pytest
@@ -28,11 +29,18 @@ def data(spark):
 BETA = np.array([0.3, -0.7, 0.11, 0.52])
 
 
+def _source(path, df, as_blocks, **cols):
+    """The kernel module and input of a ``path`` case."""
+    if path == "sql":
+        return sql_reference, df
+    return kernels, as_blocks(df, **cols) if path == "blocks" else df
+
+
 @pytest.mark.parametrize("family", list(FAMILIES.values()))
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_loss_gradient_matches_numpy(data, family, path):
-    k = kernels if path == "arrow" else sql_reference
+@pytest.mark.parametrize("path", ["sql", "arrow", "blocks"])
+def test_loss_gradient_matches_numpy(data, family, path, as_blocks):
     df, X, y = data
+    k, df = _source(path, df, as_blocks)
     yy = np.clip(y, 0, None) if family.name == "poisson" else y
     loss, grad = k.loss_gradient(df, family, BETA)
     xb = X @ BETA
@@ -41,10 +49,10 @@ def test_loss_gradient_matches_numpy(data, family, path):
 
 
 @pytest.mark.parametrize("family", list(FAMILIES.values()))
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_gradient_hessian_matches_numpy(data, family, path):
-    k = kernels if path == "arrow" else sql_reference
+@pytest.mark.parametrize("path", ["sql", "arrow", "blocks"])
+def test_gradient_hessian_matches_numpy(data, family, path, as_blocks):
     df, X, y = data
+    k, df = _source(path, df, as_blocks)
     grad, hess = k.gradient_hessian(df, family, BETA)
     xb = X @ BETA
     w = family.hess_weight_np(xb)
@@ -53,10 +61,10 @@ def test_gradient_hessian_matches_numpy(data, family, path):
     np.testing.assert_allclose(hess, hess.T)  # symmetry
 
 
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_multi_loss(data, path):
-    k = kernels if path == "arrow" else sql_reference
+@pytest.mark.parametrize("path", ["sql", "arrow", "blocks"])
+def test_multi_loss(data, path, as_blocks):
     df, X, y = data
+    k, df = _source(path, df, as_blocks)
     betas = [BETA, BETA * 0.5, np.zeros(4)]
     losses = k.multi_loss(df, Logistic, betas)
     expected = [Logistic.loglike_np(X @ b, y) for b in betas]
@@ -106,6 +114,39 @@ def test_tree_merge_matches_single_level(data, monkeypatch):
         np.testing.assert_allclose(grad, single_grad, rtol=1e-12)
     assert tree_runs[0][0] == tree_runs[1][0]
     np.testing.assert_array_equal(tree_runs[0][1], tree_runs[1][1])
+
+
+def test_block_fold_and_tree_merge(data, monkeypatch, as_blocks):
+    """The block cache folds one partial per block in pid order: over the
+    frame's own partitions (5 blocks, one Arrow batch each) it matches
+    the frame's scan, and with the tree merge forced — by partial-row
+    count, then by the driver-pull byte budget — the sums equal the
+    single-level fold."""
+    df, X, y = data
+    blocks = as_blocks(df)
+    assert blocks.nparts == 5 and blocks.rdd.count() == 5
+
+    def evaluate():
+        loss, grad = kernels.loss_gradient(blocks, Logistic, BETA)
+        g, h = kernels.gradient_hessian(blocks, Logistic, BETA)
+        return [np.array([loss]), grad, g, h.ravel()]
+
+    single = evaluate()
+    for got, want in zip(single, [
+        np.array([kernels.loss_gradient(df, Logistic, BETA)[0]]),
+        kernels.loss_gradient(df, Logistic, BETA)[1],
+        *[a.ravel() for a in kernels.gradient_hessian(df, Logistic, BETA)],
+    ]):
+        np.testing.assert_allclose(got, want, rtol=1e-13)
+    for name, value in (
+        ("TREE_MERGE_THRESHOLD", 2), ("DRIVER_PULL_BUDGET_BYTES", 16 * 8),
+    ):
+        with monkeypatch.context() as m:
+            m.setattr(kernels, name, value)
+            m.setattr(kernels, "TREE_FANIN", 2)
+            assert kernels._merge_levels(blocks.nparts, None, 1 + len(BETA))
+            for got, want in zip(evaluate(), single):
+                np.testing.assert_allclose(got, want, rtol=1e-12)
 
 
 def test_tree_merge_gradient_hessian(data, monkeypatch):

@@ -67,12 +67,12 @@ def test_path_input_order_preserved(data):
 
 @pytest.mark.slow
 def test_path_hoisted_moments_bit_exact(data):
-    """r13: regularization_path seeds every fit's @normalize with ONE
-    shared moments scan (the ``_moments`` hook) instead of a per-fit
-    moments job. The seed holds the identical floats each per-fit scan
-    would compute over the same cached frame, so the path must equal a
-    manual warm-started per-fit loop (which still runs its own moments
-    job per fit) BIT-exactly — not merely to tolerance."""
+    """regularization_path builds ONE block cache (its moments folded in)
+    and passes it to every fit as ``_blocks`` instead of a per-fit build.
+    The cache holds the identical blocks and moments each per-fit build
+    would compute over the same frame, so the path must equal a manual
+    warm-started per-fit loop (which still builds per fit) BIT-exactly —
+    not merely to tolerance."""
     lams = [0.3, 0.1]
     path = regularization_path(
         data, lams, solver="proximal_grad", regularizer="l1", max_iter=7,

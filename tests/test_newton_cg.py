@@ -77,18 +77,19 @@ def clf_data(spark):
 
 
 @pytest.mark.parametrize("family", [Logistic, Normal, Poisson])
-def test_hvp_matches_numpy_twin(clf_data, family):
+def test_hvp_matches_numpy_twin(clf_data, family, as_blocks):
     df, X, y = clf_data
     rng = np.random.RandomState(7)
     beta = rng.randn(X.shape[1]) * 0.3
     v = rng.randn(X.shape[1])
     hw = family.hess_weight_np(X @ beta)
     expected = X.T @ (hw * (X @ v))
-    got = kernels.hessian_vector_product(df, family, beta, v)
-    np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
+    for src in (df, as_blocks(df)):  # the frame and a fit's block cache
+        got = kernels.hessian_vector_product(src, family, beta, v)
+        np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
 
 
-def test_hvp_weighted_offset(spark):
+def test_hvp_weighted_offset(spark, as_blocks):
     import pandas as pd
 
     rng = np.random.RandomState(42)
@@ -106,10 +107,11 @@ def test_hvp_weighted_offset(spark):
     v = rng.randn(p)
     hw = w * Logistic.hess_weight_np(X @ beta + o)
     expected = X.T @ (hw * (X @ v))
-    got = kernels.hessian_vector_product(
-        df, Logistic, beta, v, weight_col="w", offset_col="o"
-    )
-    np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
+    for src in (df, as_blocks(df, weight_col="w", offset_col="o")):
+        got = kernels.hessian_vector_product(
+            src, Logistic, beta, v, weight_col="w", offset_col="o"
+        )
+        np.testing.assert_allclose(got, expected, rtol=1e-10, atol=1e-10)
 
 
 # ---------------------------------------------------------------------------
@@ -306,21 +308,22 @@ def _np_softmax_hvp(X, B, V, w=None):
     return X.T @ M
 
 
-def test_softmax_hvp_matches_numpy_twin(softmax_data):
+def test_softmax_hvp_matches_numpy_twin(softmax_data, as_blocks):
     df, X, y, k = softmax_data
     rng = np.random.RandomState(3)
     B = rng.randn(X.shape[1], k) * 0.3
     V = rng.randn(X.shape[1], k)
-    got = kernels.softmax_hessian_vector_product(df, B, V)
-    np.testing.assert_allclose(
-        got, _np_softmax_hvp(X, B, V), rtol=1e-10, atol=1e-10
-    )
-    # output columns sum to zero per feature (range(H) is orthogonal to
-    # the softmax shift null space) — the identification invariant
-    np.testing.assert_allclose(got.sum(axis=1), 0.0, atol=1e-10)
+    for src in (df, as_blocks(df)):  # the frame and a fit's block cache
+        got = kernels.softmax_hessian_vector_product(src, B, V)
+        np.testing.assert_allclose(
+            got, _np_softmax_hvp(X, B, V), rtol=1e-10, atol=1e-10
+        )
+        # output columns sum to zero per feature (range(H) is orthogonal
+        # to the softmax shift null space) — the identification invariant
+        np.testing.assert_allclose(got.sum(axis=1), 0.0, atol=1e-10)
 
 
-def test_softmax_hvp_weighted(spark):
+def test_softmax_hvp_weighted(spark, as_blocks):
     import pandas as pd
 
     rng = np.random.RandomState(21)
@@ -333,10 +336,13 @@ def test_softmax_hvp_weighted(spark):
     ).repartition(3)
     B = rng.randn(p, k) * 0.2
     V = rng.randn(p, k)
-    got = kernels.softmax_hessian_vector_product(df, B, V, weight_col="w")
-    np.testing.assert_allclose(
-        got, _np_softmax_hvp(X, B, V, w), rtol=1e-10, atol=1e-10
-    )
+    for src in (df, as_blocks(df, weight_col="w")):
+        got = kernels.softmax_hessian_vector_product(
+            src, B, V, weight_col="w"
+        )
+        np.testing.assert_allclose(
+            got, _np_softmax_hvp(X, B, V, w), rtol=1e-10, atol=1e-10
+        )
 
 
 def test_softmax_hvp_sparse_matches_dense(softmax_data):

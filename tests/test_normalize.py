@@ -6,6 +6,18 @@ import pytest
 from dask_glm_spark.operators.solvers import normalize
 
 
+def _standardized_rows(blocks):
+    """The rows of the standardized X a wrapped solver evaluates over —
+    its block cache, standardized as each block is loaded — sorted."""
+    from dask_glm_spark.operators import solvers
+
+    X = np.vstack([
+        solvers._block_xy(blk, blocks.scale)[0]
+        for _, blk, _ in blocks.rdd.collect()
+    ])
+    return X[np.lexsort(X.T[::-1])]
+
+
 def _df_from(spark, X, y):
     rows = [(i, [float(v) for v in X[i]], float(y[i])) for i in range(len(y))]
     return spark.createDataFrame(
@@ -58,14 +70,14 @@ def test_normalize_no_constant_column_scales_only(spark):
 
     @normalize
     def spy(df, **kwargs):
-        captured["first"] = df.select("features").orderBy("id").first()["features"]
+        captured["rows"] = _standardized_rows(df)
         return np.zeros(2)
 
     X = np.array([[1.0, 10.0], [3.0, 30.0]])
     df = _df_from(spark, X, np.zeros(2))
     spy(df)
-    # scale-only: first row = X[0]/std = [1/1, 10/10] = [1, 1]
-    np.testing.assert_allclose(captured["first"], [1.0, 1.0])
+    # scale-only: row i = X[i]/std with std = [1, 10]: [1, 1] and [3, 3]
+    np.testing.assert_allclose(captured["rows"], [[1.0, 1.0], [3.0, 3.0]])
 
 
 def test_constant_nonone_column_detected_exactly(spark):
@@ -87,16 +99,15 @@ def test_constant_nonone_column_detected_exactly(spark):
 
     @normalize
     def spy(df_, **kwargs):
-        captured["first"] = (
-            df_.select("features").orderBy("id").first()["features"]
-        )
+        captured["rows"] = _standardized_rows(df_)
         return np.zeros(2)
 
     spy(df)
     # col 0 constant: mean->0, std->1 (untouched); col 1 standardized
-    got = np.asarray(captured["first"])
+    s1 = np.sqrt(8.0 / 3.0)
     np.testing.assert_allclose(
-        got, [0.1, (2.0 - 4.0) / np.sqrt(8.0 / 3.0)]
+        captured["rows"], [[0.1, -2.0 / s1], [0.1, 0.0], [0.1, 2.0 / s1]],
+        atol=1e-15,
     )
 
 

@@ -48,11 +48,14 @@ def pdata(spark):
     df.unpersist()
 
 
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_kernel_numpy_twin(pdata, path):
-    """"arrow" runs the kernels, "sql" the in-test Spark-SQL reference."""
-    k = kernels if path == "arrow" else sql_reference
+@pytest.mark.parametrize("path", ["sql", "arrow", "blocks"])
+def test_kernel_numpy_twin(pdata, path, as_blocks):
+    """"arrow" runs the kernels, "blocks" the kernels over a dense fit's
+    block cache, "sql" the in-test Spark-SQL reference."""
+    k = kernels if path != "sql" else sql_reference
     df, X, y, o = pdata
+    if path == "blocks":
+        df = as_blocks(df, offset_col="off")
     beta = np.array([0.3, -0.1])
     loss, grad = k.loss_gradient(
         df, Poisson, beta, offset_col="off"

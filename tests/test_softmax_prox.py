@@ -167,7 +167,7 @@ def test_estimator_proximal_grad_sparse_dispatch(data):
     np.testing.assert_allclose(es.coefs_, ed.coefs_, atol=1e-6)
 
 
-def test_softmax_multi_loss_kernels_match(data):
+def test_softmax_multi_loss_kernels_match(data, as_blocks):
     from dask_glm_spark.functions import kernels, kernels_sparse
 
     df, X, y = data
@@ -175,32 +175,36 @@ def test_softmax_multi_loss_kernels_match(data):
     rng = np.random.RandomState(7)
     cands = [rng.standard_normal((P, K)) * 0.2 for _ in range(3)]
     dense = kernels.softmax_multi_loss(df, cands)
+    blocks = kernels.softmax_multi_loss(as_blocks(df), cands)
     sparse = kernels_sparse.softmax_multi_loss_sparse(sd, cands, P)
     expected = np.array(
         [_np_softmax_loss_grad(np.ravel(c), X, y)[0] for c in cands]
     )
     np.testing.assert_allclose(dense, expected, rtol=1e-10)
+    np.testing.assert_allclose(blocks, expected, rtol=1e-10)
     np.testing.assert_allclose(sparse, expected, rtol=1e-10)
 
 
-def test_softmax_multi_loss_gradient_kernels_match(data):
+def test_softmax_multi_loss_gradient_kernels_match(data, as_blocks):
     # round 13: the fused multi-candidate loss+gradient (the batched-λ
     # FISTA evaluation kernel) against the numpy oracle, and the c=1
     # column against the single-candidate kernel (same per-candidate
-    # arithmetic → exact equality)
+    # arithmetic → exact equality); over the frame and over a dense
+    # fit's block cache
     from dask_glm_spark.functions import kernels
 
     df, X, y = data
     rng = np.random.RandomState(11)
     cands = [rng.standard_normal((P, K)) * 0.2 for _ in range(3)]
-    dl, dg = kernels.softmax_multi_loss_gradient(df, cands)
-    for i, c in enumerate(cands):
-        el, eg = _np_softmax_loss_grad(np.ravel(c), X, y)
-        np.testing.assert_allclose(dl[i], el, rtol=1e-10)
-        np.testing.assert_allclose(dg[:, i], eg, rtol=1e-8)
-    l1, g1 = kernels.softmax_loss_gradient(df, cands[0])
-    assert dl[0] == l1
-    assert np.array_equal(dg[:, 0], np.ravel(g1))
+    for src in (df, as_blocks(df)):
+        dl, dg = kernels.softmax_multi_loss_gradient(src, cands)
+        for i, c in enumerate(cands):
+            el, eg = _np_softmax_loss_grad(np.ravel(c), X, y)
+            np.testing.assert_allclose(dl[i], el, rtol=1e-10)
+            np.testing.assert_allclose(dg[:, i], eg, rtol=1e-8)
+        l1, g1 = kernels.softmax_loss_gradient(src, cands[0])
+        assert dl[0] == l1
+        assert np.array_equal(dg[:, 0], np.ravel(g1))
 
 
 @pytest.mark.slow

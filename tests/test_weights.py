@@ -92,11 +92,14 @@ def test_weighted_equals_replicated_gd_prox(wdata):
     np.testing.assert_allclose(bw, br, atol=5e-2, rtol=0)
 
 
-@pytest.mark.parametrize("path", ["sql", "arrow"])
-def test_kernel_numpy_twin(wdata, path):
-    """"arrow" runs the kernels, "sql" the in-test Spark-SQL reference."""
-    k = kernels if path == "arrow" else sql_reference
+@pytest.mark.parametrize("path", ["sql", "arrow", "blocks"])
+def test_kernel_numpy_twin(wdata, path, as_blocks):
+    """"arrow" runs the kernels, "blocks" the kernels over a dense fit's
+    block cache, "sql" the in-test Spark-SQL reference."""
+    k = kernels if path != "sql" else sql_reference
     df, _, X, y, w = wdata
+    if path == "blocks":
+        df = as_blocks(df, weight_col="w")
     beta = np.array([0.3, -0.2, 0.1])
     loss, grad = k.loss_gradient(
         df, Logistic, beta, weight_col="w"
